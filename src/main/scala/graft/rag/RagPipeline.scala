@@ -193,7 +193,7 @@ object RagPipeline {
     * codes (compressed scan + exact re-rank), re-attach chunk metadata.
     */
   private def sq8Serve(
-      h: graft.sources.AnnIndex.Sq8Handle,
+      h: graft.sources.AnnIndex.CodesHandle,
       queries: DataFrame,
       index: DataFrame,
       k: Int,

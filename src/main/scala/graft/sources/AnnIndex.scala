@@ -239,12 +239,16 @@ object AnnIndex {
     */
   private[sources] def sweepOrphanTombs(spark: SparkSession, base: String,
       table: String): Unit =
-    if (!tombsCommitted(base)) {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      val d = Paths.get(base, "tombs")
-      if (Files.exists(d))
-        org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
-    }
+    if (!tombsCommitted(base)) dropTombs(spark, base, table)
+
+  /** Drop a layout's tombstones: the registration and the dir. */
+  private def dropTombs(spark: SparkSession, base: String,
+      table: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val d = Paths.get(base, "tombs")
+    if (Files.exists(d))
+      org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
+  }
 
   private def lshBase(spark: SparkSession, tag: String) =
     s"${annBase(spark)}/graft_ann_lsh_$tag"
@@ -308,20 +312,15 @@ object AnnIndex {
     val priorDelBatch = readMeta(base).get("last_del_batch_id")
     // a rebuild serves exactly its source: tombstones are cleared (the
     // ensureSq8 discipline); the delete replay-skip window survives
-    spark.sql(s"DROP TABLE IF EXISTS graft_lsh_tombs_$tag")
-    val tombDir = Paths.get(base, "tombs")
-    if (Files.exists(tombDir))
-      org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
+    dropTombs(spark, base, s"graft_lsh_tombs_$tag")
     spark.sql(s"DROP TABLE IF EXISTS graft_lsh_buckets_$tag")
     lshBucketRows(index, tables, bits).write.mode(SaveMode.Overwrite)
       .option("path", s"$base/buckets")
       .bucketBy(storageBuckets, "tb").sortBy("tb")
       .format("parquet").saveAsTable(s"graft_lsh_buckets_$tag")
     spark.sql(s"DROP TABLE IF EXISTS graft_lsh_vecs_$tag")
-    index.select("vec_id", "embedding").write.mode(SaveMode.Overwrite)
-      .option("path", s"$base/vecs")
-      .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-      .format("parquet").saveAsTable(s"graft_lsh_vecs_$tag")
+    saveByVecId(index.select("vec_id", "embedding"), s"graft_lsh_vecs_$tag",
+      storageBuckets, Some(s"$base/vecs"))
     writeMetaFull(base,
       Seq("tables" -> tables.toLong, "bits" -> bits.toLong,
         "buckets" -> storageBuckets.toLong, "n_rows" -> n, "checksum" -> fp) ++
@@ -331,7 +330,7 @@ object AnnIndex {
         snapshotId.map("snapshot_id" -> _).toSeq)
   }
 
-  /** The served LSH view (the [[sq8Handle]] discipline): when a
+  /** The served LSH view (the [[flatHandle]] discipline): when a
     * tombstone table exists both sides anti-join it on vec_id — the
     * vecs side shares the bucketing (exchange-free); the buckets table
     * is bucketed by `tb`, so its anti-join rides a broadcast of the
@@ -499,9 +498,8 @@ object AnnIndex {
     lshBucketRows(newVecs, tables, bits).write.mode(SaveMode.Append)
       .bucketBy(storageBuckets, "tb").sortBy("tb")
       .format("parquet").saveAsTable(s"graft_lsh_buckets_$tag")
-    newVecs.select("vec_id", "embedding").write.mode(SaveMode.Append)
-      .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-      .format("parquet").saveAsTable(s"graft_lsh_vecs_$tag")
+    saveByVecId(newVecs.select("vec_id", "embedding"),
+      s"graft_lsh_vecs_$tag", storageBuckets)
     writeMetaFull(base,
       Seq("tables" -> tables.toLong, "bits" -> bits.toLong,
         "buckets" -> storageBuckets.toLong,
@@ -682,12 +680,7 @@ object AnnIndex {
     compactBucketed(spark, base, s"graft_lsh_vecs_$tag", "vecs",
       "vec_id", sb,
       Some(tombFilter(spark.table(s"graft_lsh_vecs_$tag"))))
-    if (folding) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_lsh_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
-    }
+    if (folding) dropTombs(spark, base, s"graft_lsh_tombs_$tag")
     attachLsh(spark, tag, sb)
     if (folding) {
       val (n, fp) = fingerprint(spark.table(s"graft_lsh_vecs_$tag")
@@ -991,10 +984,7 @@ object AnnIndex {
     if (!metaFresh) {
       // the rebuild clears deletions ("serve exactly this source");
       // the delete replay-skip window survives
-      spark.sql(s"DROP TABLE IF EXISTS graft_ivf_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
+      dropTombs(spark, base, s"graft_ivf_tombs_$tag")
       val cents = SimilaritySearch.kMeansCentroids(index, lists, iters)
       cents.write.mode(SaveMode.Overwrite).parquet(centsPath)
       val assigned = SimilaritySearch
@@ -1225,10 +1215,7 @@ object AnnIndex {
         spark.catalog.tableExists(listsTable), () => attach())
     if (!combinedFresh) {
       // the rebuild clears deletions (the ensureIvf discipline)
-      spark.sql(s"DROP TABLE IF EXISTS graft_ivf_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
+      dropTombs(spark, base, s"graft_ivf_tombs_$tag")
       val cents = SimilaritySearch.kMeansCentroids(baseRows, lists, iters)
       cents.write.mode(SaveMode.Overwrite).parquet(centsPath)
       val assigned = SimilaritySearch
@@ -1295,51 +1282,178 @@ object AnnIndex {
     SimilaritySearch.rerankWithVecs(cand, queries, k)
   }
 
-  // ---------------------------------------------------------------- SQ8
+  // ------------------------------------------------------ SQ8 / BQ codecs
 
-  /** Persisted scalar-quantized (int8) index: `codes` is the scan table
-    * (vec_id, codes binary, qscale, qnorm — 4× smaller than the float
-    * table, the bandwidth the quantized scan saves at 100 TB); `vecs`
-    * keeps the float vectors for the exact re-rank, fetched for the m
-    * winners per query only.
+  /** A per-row vector codec of the quantized serving layouts: flat
+    * SQ8/BQ and the composed IVF-SQ8/IVF-BQ. Encoding reads no global
+    * statistics (unlike IVF centroids or a trained product-quantizer
+    * codebook), so encoding new rows is EXACTLY a rebuild restricted to
+    * them — every upsert ≡ rebuild argument below rests on this. The
+    * codec names its stores (`graft_ann_<stem>_<tag>`, catalog tables
+    * `graft_<stem>_<table>_<tag>`; the IVF form prefixes `ivf`) and the
+    * verb suffix and label its error messages carry.
     */
-  final case class Sq8Handle(codes: DataFrame, vecs: DataFrame)
-
-  private def sq8Base(spark: SparkSession, tag: String) =
-    s"${annBase(spark)}/graft_ann_sq8_$tag"
-
-  private def sq8Registered(spark: SparkSession, tag: String): Boolean =
-    spark.catalog.tableExists(s"graft_sq8_codes_$tag") &&
-      spark.catalog.tableExists(s"graft_sq8_vecs_$tag")
-
-  private def attachSq8(spark: SparkSession, tag: String,
-      storageBuckets: Int): Unit = {
-    val base = sq8Base(spark, tag)
-    spark.sql(s"DROP TABLE IF EXISTS graft_sq8_codes_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_sq8_vecs_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_sq8_tombs_$tag")
-    registerExternal(spark, s"graft_sq8_codes_$tag", s"$base/codes",
-      clusteredBy = Some(("vec_id", storageBuckets)))
-    registerExternal(spark, s"graft_sq8_vecs_$tag", s"$base/vecs",
-      clusteredBy = Some(("vec_id", storageBuckets)))
-    if (tombsServable(spark, base))
-      registerExternal(spark, s"graft_sq8_tombs_$tag", s"$base/tombs",
-        clusteredBy = Some(("vec_id", storageBuckets)))
+  private sealed abstract class Codec(val stem: String, val verb: String,
+      val label: String) {
+    /** (vec_id, embedding) → the flat layout's `codes` rows. */
+    def encode(index: DataFrame): DataFrame
+    /** (vec_id, embedding) → the IVF layout's `lists` rows: each vector
+      * assigned to its nearest of `centroids` and encoded — the float
+      * embedding never reaches the list layout.
+      */
+    def assign(index: DataFrame, centroids: DataFrame): DataFrame
   }
 
-  /** Attach the tombstone table when its dir exists in the store but
-    * this session's catalog lacks the registration (tombs written by
-    * another session while codes/vecs were already registered here).
-    * No-op when already registered or no tombs dir exists.
+  /** int8 scalar quantization: (vec_id, codes binary, qscale, qnorm) —
+    * 4× smaller than the float table, the bandwidth the quantized scan
+    * saves at 100 TB.
     */
-  private def ensureTombsRegistered(spark: SparkSession, tag: String,
-      storageBuckets: Int): Unit = {
-    val base = sq8Base(spark, tag)
-    if (!spark.catalog.tableExists(s"graft_sq8_tombs_$tag") &&
-        tombsServable(spark, base))
-      registerExternal(spark, s"graft_sq8_tombs_$tag", s"$base/tombs",
-        clusteredBy = Some(("vec_id", storageBuckets)))
+  private case object Sq8 extends Codec("sq8", "Sq8", "SQ8") {
+    def encode(index: DataFrame): DataFrame =
+      SimilaritySearch.quantizeIndex(index)
+    def assign(index: DataFrame, centroids: DataFrame): DataFrame =
+      SimilaritySearch.assignQuantized(index, centroids)
   }
+
+  /** 1-bit sign packing: (vec_id, bcodes) — ⌈dim/8⌉ bytes per row, 32×
+    * under float32 and 8× under SQ8.
+    */
+  private case object Bq extends Codec("bq", "Bq", "BQ") {
+    def encode(index: DataFrame): DataFrame =
+      SimilaritySearch.binarizeIndex(index)
+    def assign(index: DataFrame, centroids: DataFrame): DataFrame =
+      SimilaritySearch.assignBinary(index, centroids)
+  }
+
+  /** One codec layout over `sourceDir`: the flat form (`codes` bucketed
+    * by vec_id) or the IVF form (`lists` partitioned by centroid_id,
+    * plus plain-parquet `centroids`). Both keep `vecs` — the float
+    * vectors bucketed by vec_id for the exact re-rank, fetched for the
+    * m winners per query only — and merge-on-read `tombs`.
+    */
+  private final class CodecLayout(spark: SparkSession, c: Codec,
+      sourceDir: String, ivf: Boolean) {
+    private val stem = (if (ivf) "ivf" else "") + c.stem
+    private val tag = IndexStore.pathTag(sourceDir)
+    val verb = (if (ivf) "Ivf" else "") + c.verb
+    val label = (if (ivf) "IVF-" else "") + c.label
+    val base = s"${annBase(spark)}/graft_ann_${stem}_$tag"
+    private val sub = if (ivf) "lists" else "codes"
+    val scan = s"graft_${stem}_${sub}_$tag"
+    val vecs = s"graft_${stem}_vecs_$tag"
+    val tombs = s"graft_${stem}_tombs_$tag"
+    val centroids = s"$base/centroids"
+    /** The dirs a servable layout holds readable parquet in. */
+    val dataDirs = Seq(s"$base/$sub", s"$base/vecs") ++
+      (if (ivf) Seq(centroids) else Nil)
+
+    def built(meta: Map[String, Long]): Boolean =
+      (!ivf || meta.contains("lists")) && meta.contains("buckets")
+
+    def registered: Boolean =
+      spark.catalog.tableExists(scan) && spark.catalog.tableExists(vecs)
+
+    def requireReadable(before: String): Unit =
+      require(dataDirs.forall(parquetReadable(spark, _)),
+        s"persisted $label layout for '$sourceDir' is unreadable — run " +
+          s"ensure$verb to rebuild$before")
+
+    /** Attach the on-disk layout written by an earlier process: DDL
+      * only. Tombs register only when the meta committed them.
+      */
+    def attach(storageBuckets: Int): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS $scan")
+      spark.sql(s"DROP TABLE IF EXISTS $vecs")
+      spark.sql(s"DROP TABLE IF EXISTS $tombs")
+      if (ivf)
+        registerExternal(spark, scan, s"$base/lists",
+          partitionedBy = Some("centroid_id"))
+      else
+        registerExternal(spark, scan, s"$base/codes",
+          clusteredBy = Some(("vec_id", storageBuckets)))
+      registerExternal(spark, vecs, s"$base/vecs",
+        clusteredBy = Some(("vec_id", storageBuckets)))
+      if (tombsServable(spark, base))
+        registerExternal(spark, tombs, s"$base/tombs",
+          clusteredBy = Some(("vec_id", storageBuckets)))
+    }
+
+    /** The read-only open, WITHOUT a freshness probe — the reader's path
+      * while a writer (e.g. a
+      * [[graft.streaming.StreamOps.streamingSq8Upsert]] or
+      * [[graft.streaming.StreamOps.streamingIvfSq8Upsert]] stream)
+      * appends concurrently: no fingerprint scan, no rebuild decision,
+      * just a catalog attach, or a relation-cache refresh so another
+      * session's appends become visible.
+      */
+    def open(): Unit = {
+      val meta = readMeta(base)
+      require(built(meta),
+        s"no persisted $label index for '$sourceDir' ($base)")
+      requireReadable("")
+      if (!registered) attach(meta("buckets").toInt)
+      else {
+        spark.catalog.refreshTable(scan)
+        spark.catalog.refreshTable(vecs)
+        // tombstones may have (dis)appeared under another session's
+        // delete or fold — align with the store, DDL only on a change
+        syncTombs(spark, base, tombs,
+          clusteredBy = Some(("vec_id", meta("buckets").toInt)))
+      }
+    }
+  }
+
+  /** Land `df` in a vec_id-bucketed catalog table: with `path` a build
+    * (Overwrite at that dir), without one an append of one more file set.
+    */
+  private def saveByVecId(df: DataFrame, table: String, buckets: Int,
+      path: Option[String] = None): Unit =
+    path.fold(df.write.mode(SaveMode.Append))(p =>
+        df.write.mode(SaveMode.Overwrite).option("path", p))
+      .bucketBy(buckets, "vec_id").sortBy("vec_id")
+      .format("parquet").saveAsTable(table)
+
+  /** Attach the tombstone table when the meta committed it but this
+    * session's catalog lacks the registration (tombs written by another
+    * session while the layout's other tables were already registered
+    * here). No-op when already registered or nothing is committed.
+    */
+  private def registerCommittedTombs(spark: SparkSession,
+      base: String, table: String, storageBuckets: Int): Unit =
+    if (!spark.catalog.tableExists(table) && tombsServable(spark, base))
+      registerExternal(spark, table, s"$base/tombs",
+        clusteredBy = Some(("vec_id", storageBuckets)))
+
+  /** Append-only + tombstone contract of the upsert verbs: re-adding a
+    * deleted id would be silently swallowed by the tombstone anti-join —
+    * fail loudly; fold the tombstones first (`compact<verb>`) if
+    * re-insertion is intended. The tombs may have been committed by
+    * ANOTHER session while this one already held the layout's
+    * registration, so the registration is re-derived first. The probe
+    * is batch-sized (broadcast semi-join), not index-sized.
+    */
+  private def refuseTombstoned(spark: SparkSession, base: String,
+      table: String, verb: String, meta: Map[String, Long],
+      newVecs: DataFrame, storageBuckets: Int): Unit =
+    if (meta.get("tomb_rows").exists(_ > 0L)) {
+      registerCommittedTombs(spark, base, table, storageBuckets)
+      val clash = spark.table(table)
+        .join(newVecs.select("vec_id"), Seq("vec_id"), "left_semi").count()
+      require(clash == 0L,
+        s"upsert$verb: $clash incoming vec_id(s) are tombstoned — run " +
+          s"compact$verb to fold deletions before re-inserting those ids")
+    }
+
+  // --------------------------------------------- flat SQ8 / BQ lifecycle
+
+  /** Persisted flat quantized index (SQ8 or BQ): `codes` is the scan
+    * table of codec rows, `vecs` the float vectors co-bucketed by vec_id
+    * for the exact re-rank.
+    */
+  final case class CodesHandle(codes: DataFrame, vecs: DataFrame)
+
+  private def flatLayout(c: Codec, spark: SparkSession, sourceDir: String) =
+    new CodecLayout(spark, c, sourceDir, ivf = false)
 
   /** The served view: when a tombstone table exists, BOTH sides carry
     * the anti-join against it (the codes side is what excludes deleted
@@ -1347,146 +1461,108 @@ object AnnIndex {
     * the float table honest too). Tombs share the vec_id bucketing, so
     * the anti-joins are shuffle-free on the index side.
     */
-  private def sq8Handle(spark: SparkSession, tag: String): Sq8Handle = {
-    val codes = spark.table(s"graft_sq8_codes_$tag")
-    val vecs = spark.table(s"graft_sq8_vecs_$tag")
-    if (spark.catalog.tableExists(s"graft_sq8_tombs_$tag")) {
-      val tombs = spark.table(s"graft_sq8_tombs_$tag")
-      Sq8Handle(codes.join(tombs, Seq("vec_id"), "left_anti"),
+  private def flatHandle(spark: SparkSession, l: CodecLayout): CodesHandle = {
+    val codes = spark.table(l.scan)
+    val vecs = spark.table(l.vecs)
+    if (spark.catalog.tableExists(l.tombs)) {
+      val tombs = spark.table(l.tombs)
+      CodesHandle(codes.join(tombs, Seq("vec_id"), "left_anti"),
         vecs.join(tombs, Seq("vec_id"), "left_anti"))
-    } else Sq8Handle(codes, vecs)
+    } else CodesHandle(codes, vecs)
   }
 
-  /** Build (or reuse) the persisted SQ8 layout over `index(vec_id,
-    * embedding)`: quantization is one per-row projection pass; both
-    * tables land bucketed by vec_id through the catalog (co-located, so
-    * the re-rank id-join against `vecs` is shuffle-free on the index
-    * side). Freshness follows the `ensureLsh` discipline — O(1)
-    * snapshot-id trust when the caller names an immutable source
-    * snapshot, else the content fingerprint; the shared `servable`
-    * recovery probe; meta committed atomically after the data.
-    * [[upsertSq8]] drops a stored snapshot id (the layout moves ahead
-    * of the snapshot that id named).
+  /** Build (or reuse) the persisted flat layout over `index(vec_id,
+    * embedding)`: encoding is one per-row projection pass; both tables
+    * land bucketed by vec_id through the catalog (co-located, so the
+    * re-rank id-join against `vecs` is shuffle-free on the index side).
+    * Freshness follows the `ensureLsh` discipline — O(1) snapshot-id
+    * trust when the caller names an immutable source snapshot, else the
+    * content fingerprint; the shared `servable` recovery probe (a
+    * crashed compaction's unreadable layout reads as STALE and
+    * rebuilds); meta committed atomically after the data. A tombstoned
+    * layout fails freshness ("serve exactly this source") and rebuilds,
+    * clearing the deletions. [[upsertFlat]] and [[deleteFlat]] drop a
+    * stored snapshot id (the layout moves past the snapshot that id
+    * named).
     */
-  def ensureSq8(
-      spark: SparkSession,
-      sourceDir: String,
-      index: DataFrame,
-      storageBuckets: Int = 8,
-      snapshotId: Option[String] = None): Sq8Handle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = sq8Base(spark, tag)
-    // a tombstoned layout no longer equals quantize(source): ensure's
-    // contract is "serve exactly this source", so deletions force a
-    // rebuild (which clears them) — deleteSq8 also drops the stored
-    // snapshot_id, this tomb check is the content-path twin
+  private def ensureFlat(c: Codec, spark: SparkSession, sourceDir: String,
+      index: DataFrame, storageBuckets: Int,
+      snapshotId: Option[String]): CodesHandle = {
+    val l = flatLayout(c, spark, sourceDir)
+    val base = l.base
+    def serv(): Boolean = servable(spark, l.dataDirs, l.registered,
+      () => l.attach(storageBuckets))
+    // a tombstoned layout no longer equals encode(source): deleteFlat
+    // also drops the stored snapshot_id, this is the content-path twin
     def tombFree = readMeta(base).get("tomb_rows").forall(_ == 0L)
     val snapFresh = snapshotId.exists { id =>
       readMetaStrs(base).get("snapshot_id").contains(id) &&
         readMeta(base).get("buckets").contains(storageBuckets.toLong)
     } && tombFree
-    if (snapFresh && servable(spark, Seq(s"$base/codes", s"$base/vecs"),
-        sq8Registered(spark, tag),
-        () => attachSq8(spark, tag, storageBuckets)))
-      return sq8Handle(spark, tag)
+    if (snapFresh && serv()) return flatHandle(spark, l)
     val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
     val metaFresh = {
       val meta = readMeta(base)
       meta.get("buckets").contains(storageBuckets.toLong) &&
         meta.get("n_rows").contains(n) &&
         meta.get("checksum").contains(fp)
-    } && tombFree && servable(spark, Seq(s"$base/codes", s"$base/vecs"),
-      sq8Registered(spark, tag),
-      () => attachSq8(spark, tag, storageBuckets))
+    } && tombFree && serv()
     if (!metaFresh) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_sq8_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
-      spark.sql(s"DROP TABLE IF EXISTS graft_sq8_codes_$tag")
-      SimilaritySearch.quantizeIndex(index.select("vec_id", "embedding"))
-        .write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/codes")
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(s"graft_sq8_codes_$tag")
-      spark.sql(s"DROP TABLE IF EXISTS graft_sq8_vecs_$tag")
-      index.select("vec_id", "embedding").write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/vecs")
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(s"graft_sq8_vecs_$tag")
+      dropTombs(spark, base, l.tombs)
+      spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
+      saveByVecId(c.encode(index.select("vec_id", "embedding")), l.scan,
+        storageBuckets, Some(s"$base/codes"))
+      spark.sql(s"DROP TABLE IF EXISTS ${l.vecs}")
+      saveByVecId(index.select("vec_id", "embedding"), l.vecs,
+        storageBuckets, Some(s"$base/vecs"))
     }
     // (re)commit the meta when we rebuilt, OR when unchanged content
     // arrives under a new snapshot name — recording the id makes the
-    // NEXT ensure at this snapshot O(1). last_batch_id is carried
-    // through rebuilds unconditionally (the buildLsh discipline: a
-    // rebuild between a streaming crash and its replay must not reopen
-    // the replay-skip window).
+    // NEXT ensure at this snapshot O(1)
     if (!metaFresh || snapshotId.isDefined) {
       val old = readMeta(base)
       writeMetaFull(base,
         Seq("buckets" -> storageBuckets.toLong,
           "n_rows" -> n, "checksum" -> fp) ++
-          old.get("last_batch_id").map("last_batch_id" -> _).toSeq ++
           // both replay-skip windows survive a rebuild (the buildLsh
-          // discipline) — tomb_rows does NOT (the rebuild cleared them)
+          // discipline: a rebuild between a streaming crash and its
+          // replay must not reopen them) — tomb_rows does NOT (the
+          // rebuild cleared them)
+          old.get("last_batch_id").map("last_batch_id" -> _).toSeq ++
           old.get("last_del_batch_id").map("last_del_batch_id" -> _).toSeq,
         snapshotId.map("snapshot_id" -> _).toSeq)
     }
-    sq8Handle(spark, tag)
+    flatHandle(spark, l)
   }
 
-  /** Incremental add into an existing persisted SQ8 index. Quantization
-    * is strictly per-row (no global statistics, unlike IVF centroids or
-    * a trained product-quantizer codebook), so an upsert is EXACTLY a
-    * rebuild restricted to the new rows: quantize the new vectors,
-    * append to both tables, xor-compose the checksum — O(new) per
-    * batch, upsert ≡ rebuild row-identically by construction.
-    * Append-only contract and `batchId` replay-skip as in
+  /** Incremental add into an existing persisted flat index: the codec
+    * is per-row, so an upsert is EXACTLY a rebuild restricted to the new
+    * rows — encode the new vectors, append to both tables, xor-compose
+    * the checksum: O(new) per batch, upsert ≡ rebuild row-identically
+    * by construction. Append-only contract (a tombstoned id is refused,
+    * see [[refuseTombstoned]]) and `batchId` replay-skip as in
     * [[upsertLsh]].
     */
-  def upsertSq8(
-      spark: SparkSession,
-      sourceDir: String,
-      newVecs: DataFrame,
-      storageBuckets: Int = 8,
-      batchId: Option[Long] = None): Sq8Handle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = sq8Base(spark, tag)
-    val meta = readMeta(base)
+  private def upsertFlat(c: Codec, spark: SparkSession, sourceDir: String,
+      newVecs: DataFrame, storageBuckets: Int,
+      batchId: Option[Long]): CodesHandle = {
+    val l = flatLayout(c, spark, sourceDir)
+    val meta = readMeta(l.base)
     require(meta.get("buckets").contains(storageBuckets.toLong),
-      s"upsertSq8 needs an existing index at the same layout " +
+      s"upsert${l.verb} needs an existing index at the same layout " +
         s"(buckets=$storageBuckets); found $meta")
-    require(parquetReadable(spark, s"$base/codes") &&
-      parquetReadable(spark, s"$base/vecs"),
-      s"persisted SQ8 layout for '$sourceDir' is unreadable — run " +
-        "ensureSq8 to rebuild before upserting")
-    if (!sq8Registered(spark, tag)) attachSq8(spark, tag, storageBuckets)
-    val replayed = batchId.exists(id =>
-      meta.get("last_batch_id").exists(id <= _))
-    if (replayed) return sq8Handle(spark, tag)
-    // append-only + tombstone contract: re-adding a deleted id would be
-    // silently swallowed by the tombstone anti-join — fail loudly; fold
-    // the tombstones first (compactSq8) if re-insertion is intended.
-    // The probe is batch-sized (broadcast semi-join), not index-sized.
-    if (meta.get("tomb_rows").exists(_ > 0L)) {
-      // the tombs may have been written by ANOTHER session while this
-      // one already held the codes/vecs registration — re-derive
-      ensureTombsRegistered(spark, tag, storageBuckets)
-      val clash = spark.table(s"graft_sq8_tombs_$tag")
-        .join(newVecs.select("vec_id"), Seq("vec_id"), "left_semi").count()
-      require(clash == 0L,
-        s"upsertSq8: $clash incoming vec_id(s) are tombstoned — run " +
-          "compactSq8 to fold deletions before re-inserting those ids")
-    }
+    l.requireReadable(" before upserting")
+    if (!l.registered) l.attach(storageBuckets)
+    if (batchId.exists(id => meta.get("last_batch_id").exists(id <= _)))
+      return flatHandle(spark, l)
+    refuseTombstoned(spark, l.base, l.tombs, l.verb, meta, newVecs,
+      storageBuckets)
     val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
-    SimilaritySearch.quantizeIndex(newVecs.select("vec_id", "embedding"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-      .format("parquet").saveAsTable(s"graft_sq8_codes_$tag")
-    newVecs.select("vec_id", "embedding").write.mode(SaveMode.Append)
-      .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-      .format("parquet").saveAsTable(s"graft_sq8_vecs_$tag")
-    writeMetaFull(base,
+    saveByVecId(c.encode(newVecs.select("vec_id", "embedding")), l.scan,
+      storageBuckets)
+    saveByVecId(newVecs.select("vec_id", "embedding"), l.vecs,
+      storageBuckets)
+    writeMetaFull(l.base,
       Seq("buckets" -> storageBuckets.toLong,
         "n_rows" -> (meta("n_rows") + nNew),
         "checksum" -> (meta("checksum") ^ fpNew)) ++
@@ -1495,68 +1571,47 @@ object AnnIndex {
         meta.get("tomb_rows").map("tomb_rows" -> _).toSeq ++
         meta.get("last_del_batch_id").map("last_del_batch_id" -> _).toSeq,
       Nil)
-    sq8Handle(spark, tag)
+    flatHandle(spark, l)
   }
 
-  /** Delete by id from the persisted SQ8 index — the vector-store
+  /** Delete by id from the persisted flat index — the vector-store
     * lifecycle verb the reference's stack exposes as Pinecone's
     * `delete(ids=...)` (public API). Merge-on-read tombstones, the only
     * delete that scales: the batch of ids is APPENDED to a tombstone
     * table co-bucketed with the codes/vecs pair (O(batch) work, no
-    * index rewrite), and every served handle anti-joins it —
-    * shuffle-free on the index side thanks to the shared bucketing.
-    * [[compactSq8]] later folds tombstones into the base (physically
-    * removes the rows and resets the live fingerprint); until then
-    * re-inserting a deleted id fails loudly in [[upsertSq8]].
+    * index rewrite, see [[writeTombs]]), and every served handle
+    * anti-joins it — shuffle-free on the index side thanks to the shared
+    * bucketing. [[compactFlat]] later folds tombstones into the base
+    * (physically removes the rows and resets the live fingerprint);
+    * until then re-inserting a deleted id fails loudly in
+    * [[upsertFlat]].
     *
     * Deleting ids absent from the index (or already deleted) is a
     * semantic no-op — the anti-join ignores them. A delete moves the
     * layout past any named snapshot (stored `snapshot_id` is dropped)
-    * and past the source content (`ensureSq8` over the original source
+    * and past the source content (`ensure*` over the original source
     * rebuilds — "serve exactly this source" clears deletions by
     * contract). `batchId` gives streaming delete feeds the same
-    * replay-skip contract as [[upsertSq8]], on its own counter
+    * replay-skip contract as [[upsertFlat]], on its own counter
     * (`last_del_batch_id`) so interleaved upsert/delete streams don't
     * mask each other.
     */
-  def deleteSq8(
-      spark: SparkSession,
-      sourceDir: String,
-      ids: DataFrame,
-      batchId: Option[Long] = None): Sq8Handle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = sq8Base(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("buckets"),
-      s"deleteSq8 needs an existing persisted SQ8 index for '$sourceDir'" +
-        s" — run ensureSq8 first")
+  private def deleteFlat(c: Codec, spark: SparkSession, sourceDir: String,
+      ids: DataFrame, batchId: Option[Long]): CodesHandle = {
+    val l = flatLayout(c, spark, sourceDir)
+    val meta = readMeta(l.base)
+    require(l.built(meta),
+      s"delete${l.verb} needs an existing persisted ${l.label} index for " +
+        s"'$sourceDir' — run ensure${l.verb} first")
     val storageBuckets = meta("buckets").toInt
-    require(parquetReadable(spark, s"$base/codes") &&
-      parquetReadable(spark, s"$base/vecs"),
-      s"persisted SQ8 layout for '$sourceDir' is unreadable — run " +
-        "ensureSq8 to rebuild before deleting")
-    if (!sq8Registered(spark, tag)) attachSq8(spark, tag, storageBuckets)
-    val replayed = batchId.exists(id =>
-      meta.get("last_del_batch_id").exists(id <= _))
-    if (replayed) return sq8Handle(spark, tag)
+    l.requireReadable(" before deleting")
+    if (!l.registered) l.attach(storageBuckets)
+    if (batchId.exists(id => meta.get("last_del_batch_id").exists(id <= _)))
+      return flatHandle(spark, l)
     val batch = ids.select("vec_id").distinct()
     val nDel = batch.count()
-    // meta is the tombstone commit point (sweep crashed-delete
-    // orphans); tombs COMMITTED by another session must attach BEFORE
-    // the exists-check: the create-new branch would otherwise
-    // overwrite (lose) their rows
-    sweepOrphanTombs(spark, base, s"graft_sq8_tombs_$tag")
-    ensureTombsRegistered(spark, tag, storageBuckets)
-    if (spark.catalog.tableExists(s"graft_sq8_tombs_$tag"))
-      batch.write.mode(SaveMode.Append)
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(s"graft_sq8_tombs_$tag")
-    else
-      batch.write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/tombs")
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(s"graft_sq8_tombs_$tag")
-    writeMetaFull(base,
+    writeTombs(spark, l.base, l.tombs, batch, storageBuckets)
+    writeMetaFull(l.base,
       Seq("buckets" -> meta("buckets"),
         "n_rows" -> meta("n_rows"),
         "checksum" -> meta("checksum"),
@@ -1565,107 +1620,76 @@ object AnnIndex {
         batchId.orElse(meta.get("last_del_batch_id"))
           .map("last_del_batch_id" -> _).toSeq,
       Nil) // snapshot_id intentionally dropped: the layout moved past it
-    sq8Handle(spark, tag)
+    flatHandle(spark, l)
   }
 
-  /** True iff a persisted SQ8 layout exists for `sourceDir` (meta
+  /** True iff a persisted flat layout exists for `sourceDir` (meta
     * present — no readability or freshness probe). Lets callers branch
-    * build-vs-open explicitly instead of catching [[openSq8]]'s
+    * build-vs-open explicitly instead of catching the open verb's
     * deliberately fail-loud errors, which must keep distinguishing
     * "never built" from "unreadable crashed layout".
     */
-  def sq8Exists(spark: SparkSession, sourceDir: String): Boolean =
-    readMeta(sq8Base(spark, IndexStore.pathTag(sourceDir)))
-      .contains("buckets")
+  private def existsFlat(c: Codec, spark: SparkSession,
+      sourceDir: String): Boolean =
+    readMeta(flatLayout(c, spark, sourceDir).base).contains("buckets")
 
-  /** Open an existing persisted SQ8 index read-only, WITHOUT a
-    * freshness probe — the reader's path while a writer (e.g. a
-    * [[graft.streaming.StreamOps.streamingSq8Upsert]] stream) appends
-    * concurrently: no fingerprint scan, no rebuild decision, just a
-    * catalog attach (or a relation-cache refresh so another session's
-    * appends become visible).
-    */
-  def openSq8(spark: SparkSession, sourceDir: String): Sq8Handle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = sq8Base(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("buckets"),
-      s"no persisted SQ8 index for '$sourceDir' ($base)")
-    require(parquetReadable(spark, s"$base/codes") &&
-      parquetReadable(spark, s"$base/vecs"),
-      s"persisted SQ8 layout for '$sourceDir' is unreadable — run " +
-        "ensureSq8 to rebuild")
-    if (!sq8Registered(spark, tag))
-      attachSq8(spark, tag, meta("buckets").toInt)
-    else {
-      spark.catalog.refreshTable(s"graft_sq8_codes_$tag")
-      spark.catalog.refreshTable(s"graft_sq8_vecs_$tag")
-      // tombstones may have (dis)appeared under another session's
-      // delete or fold — align with the store, DDL only on a change
-      syncTombs(spark, base, s"graft_sq8_tombs_$tag",
-        clusteredBy = Some(("vec_id", meta("buckets").toInt)))
-    }
-    sq8Handle(spark, tag)
+  private def openFlat(c: Codec, spark: SparkSession,
+      sourceDir: String): CodesHandle = {
+    val l = flatLayout(c, spark, sourceDir)
+    l.open()
+    flatHandle(spark, l)
   }
 
-  /** Compact the persisted SQ8 layout: [[upsertSq8]] /
-    * [[graft.streaming.StreamOps.streamingSq8Upsert]] append one file
-    * set per micro-batch into each bucketed table, and after thousands
-    * of triggers file count — not row count — is what erodes scan
-    * planning (the codes scan's whole point is bandwidth; a
-    * small-files layout gives that back in open/seek overhead).
-    * Rewrites both tables' IDENTICAL rows at the same (bucketing, sort)
-    * spec; the meta (n_rows, checksum, last_batch_id) is untouched, so
-    * every freshness and replay contract keeps holding.
+  /** Compact the persisted flat layout: upserts and streamed
+    * micro-batches append one file set per batch into each bucketed
+    * table, and after thousands of triggers file count — not row count —
+    * is what erodes scan planning (the codes scan's whole point is
+    * bandwidth; a small-files layout gives that back in open/seek
+    * overhead). Rewrites both tables' rows at the same (bucketing,
+    * sort) spec; without tombstones the meta (n_rows, checksum,
+    * last_batch_id) is untouched, so every freshness and replay contract
+    * keeps holding.
+    *
+    * Tombstone FOLD: physically drops deleted rows while rewriting,
+    * then recomputes the live fingerprint from the folded vecs (upsert
+    * checksum composition stays coherent), resets tomb_rows; both
+    * replay-skip windows survive.
     *
     * Crash safety (the [[compactLsh]] / [[KeywordIndex.compactPostings]]
     * discipline): each compacted copy lands in a SIDE directory and
     * swaps in by rename. A crash between the two tables' swaps leaves a
-    * mixed but logically identical layout; a crash inside one rename
-    * window leaves that dir missing — [[openSq8]] and [[upsertSq8]]
-    * fail loudly, and [[ensureSq8]]'s `servable` probe reads the
-    * unreadable layout as STALE and rebuilds (the recovery path);
-    * leftover side/old dirs are swept by the next compaction. Not safe
-    * concurrent with a writer — run between ingest windows.
+    * mixed but logically identical layout (the still-present tombstone
+    * anti-join keeps serving correctly); a crash inside one rename
+    * window leaves that dir missing — open and upsert fail loudly, and
+    * ensure's `servable` probe reads the unreadable layout as STALE and
+    * rebuilds (the recovery path); after the tomb removal but before
+    * the meta rewrite the data is fully folded and the stale meta
+    * (tomb_rows > 0) makes the next ensure rebuild. Every window is
+    * correct-serving or rebuild-triggering; leftover side/old dirs are
+    * swept by the next compaction. Not safe concurrent with a writer —
+    * run between ingest windows.
     */
-  def compactSq8(spark: SparkSession, sourceDir: String): Sq8Handle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = sq8Base(spark, tag)
-    openSq8(spark, sourceDir) // validates meta + attaches + refreshes
+  private def compactFlat(c: Codec, spark: SparkSession,
+      sourceDir: String): CodesHandle = {
+    val l = flatLayout(c, spark, sourceDir)
+    val base = l.base
+    l.open() // validates meta + attaches + refreshes
     val meta = readMeta(base)
     val sb = meta("buckets").toInt
-    // tombstone FOLD: physically drop deleted rows while rewriting.
-    // Crash-window shape: after one swap the layout is mixed but the
-    // still-present tombstone anti-join keeps serving correctly; after
-    // the tomb removal but before the meta rewrite, the data is fully
-    // folded and the stale meta (tomb_rows > 0) makes the next ensure
-    // rebuild — every window is correct-serving or rebuild-triggering.
     val folding = meta.get("tomb_rows").exists(_ > 0L) &&
-      spark.catalog.tableExists(s"graft_sq8_tombs_$tag")
+      spark.catalog.tableExists(l.tombs)
     val tombFilter = (df: DataFrame) =>
-      if (folding)
-        df.join(spark.table(s"graft_sq8_tombs_$tag"), Seq("vec_id"),
-          "left_anti")
+      if (folding) df.join(spark.table(l.tombs), Seq("vec_id"), "left_anti")
       else df
-    compactBucketed(spark, base, s"graft_sq8_codes_$tag", "codes",
-      "vec_id", sb,
-      Some(tombFilter(spark.table(s"graft_sq8_codes_$tag"))))
-    compactBucketed(spark, base, s"graft_sq8_vecs_$tag", "vecs",
-      "vec_id", sb,
-      Some(tombFilter(spark.table(s"graft_sq8_vecs_$tag"))))
+    compactBucketed(spark, base, l.scan, "codes", "vec_id", sb,
+      Some(tombFilter(spark.table(l.scan))))
+    compactBucketed(spark, base, l.vecs, "vecs", "vec_id", sb,
+      Some(tombFilter(spark.table(l.vecs))))
+    if (folding) dropTombs(spark, base, l.tombs)
+    l.attach(sb)
     if (folding) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_sq8_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
-    }
-    attachSq8(spark, tag, sb)
-    if (folding) {
-      // the live fingerprint changed: recompute from the folded vecs so
-      // upsert checksum composition stays coherent; replay-skip windows
-      // survive, tomb_rows resets
       val (n, fp) = fingerprint(
-        spark.table(s"graft_sq8_vecs_$tag").select("vec_id", "embedding"))
+        spark.table(l.vecs).select("vec_id", "embedding"))
       writeMetaFull(base,
         Seq("buckets" -> sb.toLong, "n_rows" -> n, "checksum" -> fp) ++
           meta.get("last_batch_id").map("last_batch_id" -> _).toSeq ++
@@ -1673,8 +1697,46 @@ object AnnIndex {
             .map("last_del_batch_id" -> _).toSeq,
         Nil)
     }
-    sq8Handle(spark, tag)
+    flatHandle(spark, l)
   }
+
+  // ---------------------------------------------------------------- SQ8
+
+  /** The persisted SQ8 layout: the flat lifecycle ([[ensureFlat]],
+    * [[upsertFlat]], [[deleteFlat]], [[existsFlat]], [[openFlat]],
+    * [[compactFlat]]) with the [[Sq8]] codec.
+    */
+  def ensureSq8(
+      spark: SparkSession,
+      sourceDir: String,
+      index: DataFrame,
+      storageBuckets: Int = 8,
+      snapshotId: Option[String] = None): CodesHandle =
+    ensureFlat(Sq8, spark, sourceDir, index, storageBuckets, snapshotId)
+
+  def upsertSq8(
+      spark: SparkSession,
+      sourceDir: String,
+      newVecs: DataFrame,
+      storageBuckets: Int = 8,
+      batchId: Option[Long] = None): CodesHandle =
+    upsertFlat(Sq8, spark, sourceDir, newVecs, storageBuckets, batchId)
+
+  def deleteSq8(
+      spark: SparkSession,
+      sourceDir: String,
+      ids: DataFrame,
+      batchId: Option[Long] = None): CodesHandle =
+    deleteFlat(Sq8, spark, sourceDir, ids, batchId)
+
+  def sq8Exists(spark: SparkSession, sourceDir: String): Boolean =
+    existsFlat(Sq8, spark, sourceDir)
+
+  def openSq8(spark: SparkSession, sourceDir: String): CodesHandle =
+    openFlat(Sq8, spark, sourceDir)
+
+  def compactSq8(spark: SparkSession, sourceDir: String): CodesHandle =
+    compactFlat(Sq8, spark, sourceDir)
 
   // ----------------------------------------------------------------- PQ
 
@@ -1782,10 +1844,8 @@ object AnnIndex {
         .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
         .format("parquet").saveAsTable(s"graft_pq_codes_$tag")
       spark.sql(s"DROP TABLE IF EXISTS graft_pq_vecs_$tag")
-      index.select("vec_id", "embedding").write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/vecs")
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(s"graft_pq_vecs_$tag")
+      saveByVecId(index.select("vec_id", "embedding"), s"graft_pq_vecs_$tag",
+        storageBuckets, Some(s"$base/vecs"))
     }
     if (!metaFresh || snapshotId.isDefined)
       writeMetaFull(base,
@@ -2000,10 +2060,8 @@ object AnnIndex {
         .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
         .format("parquet").saveAsTable(s"graft_opq_codes_$tag")
       spark.sql(s"DROP TABLE IF EXISTS graft_opq_vecs_$tag")
-      index.select("vec_id", "embedding").write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/vecs")
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(s"graft_opq_vecs_$tag")
+      saveByVecId(index.select("vec_id", "embedding"), s"graft_opq_vecs_$tag",
+        storageBuckets, Some(s"$base/vecs"))
     }
     if (!metaFresh || snapshotId.isDefined)
       writeMetaFull(base,
@@ -2326,125 +2384,97 @@ object AnnIndex {
     openOpqIvfPq(spark, sourceDir)
   }
 
-  // ------------------------------------------------------------- IVF-SQ8
+  // ------------------------------------------- IVF-SQ8 / IVF-BQ lifecycle
 
-  /** Persisted COMPOSED index — int8 codes INSIDE the probed inverted
-    * lists, the production 100 TB ANN serving layout (faiss's
-    * `IVFx,SQ8` factory string, public): `lists` holds (vec_id, codes,
-    * qscale, qnorm) partitioned by `centroid_id`, so a query prunes
-    * BOTH dimensions of scan cost at once — probed-lists row pruning
-    * (IVF) × 4×-smaller bytes per scanned row (SQ8), multiplying the
-    * two separately-measured wins. `vecs` keeps the float vectors
-    * bucketed by vec_id for the exact re-rank of the m winners.
+  /** Persisted COMPOSED index — codec rows INSIDE the probed inverted
+    * lists (IVF-SQ8 is faiss's `IVFx,SQ8` factory string, the production
+    * 100 TB ANN serving layout; IVF-BQ is the Qdrant/Weaviate "binary
+    * quantization inside the index" layout — both public): `lists`
+    * holds the codec rows partitioned by `centroid_id`, so a query
+    * prunes BOTH dimensions of scan cost at once — probed-lists row
+    * pruning (IVF) × fewer bytes per scanned row (the codec),
+    * multiplying the two separately-measured wins. `vecs` keeps the
+    * float vectors bucketed by vec_id for the exact re-rank of the m
+    * winners.
     */
-  final case class IvfSq8Handle(centroids: DataFrame, lists: DataFrame,
+  final case class IvfCodesHandle(centroids: DataFrame, lists: DataFrame,
       vecs: DataFrame)
 
-  private def ivfSq8Base(spark: SparkSession, tag: String) =
-    s"${annBase(spark)}/graft_ann_ivfsq8_$tag"
+  private def ivfLayout(c: Codec, spark: SparkSession, sourceDir: String) =
+    new CodecLayout(spark, c, sourceDir, ivf = true)
 
-  private def ivfSq8Registered(spark: SparkSession, tag: String): Boolean =
-    spark.catalog.tableExists(s"graft_ivfsq8_lists_$tag") &&
-      spark.catalog.tableExists(s"graft_ivfsq8_vecs_$tag")
+  private def ivfOpPoint(meta: Map[String, Long], lists: Int, iters: Int,
+      storageBuckets: Int): Boolean =
+    meta.get("lists").contains(lists.toLong) &&
+      meta.get("iters").contains(iters.toLong) &&
+      meta.get("buckets").contains(storageBuckets.toLong)
 
-  private def attachIvfSq8(spark: SparkSession, tag: String,
-      storageBuckets: Int): Unit = {
-    val base = ivfSq8Base(spark, tag)
-    spark.sql(s"DROP TABLE IF EXISTS graft_ivfsq8_lists_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_ivfsq8_vecs_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_ivfsq8_tombs_$tag")
-    registerExternal(spark, s"graft_ivfsq8_lists_$tag", s"$base/lists",
-      partitionedBy = Some("centroid_id"))
-    registerExternal(spark, s"graft_ivfsq8_vecs_$tag", s"$base/vecs",
-      clusteredBy = Some(("vec_id", storageBuckets)))
-    if (tombsServable(spark, base))
-      registerExternal(spark, s"graft_ivfsq8_tombs_$tag", s"$base/tombs",
-        clusteredBy = Some(("vec_id", storageBuckets)))
-  }
-
-  /** The served IVF-SQ8 view (the [[sq8Handle]] discipline): when a
+  /** The served IVF view (the [[flatHandle]] discipline): when a
     * tombstone table exists, the lists side anti-joins on (centroid_id,
     * vec_id) — tombstones are co-keyed by centroid at delete time, so
     * a probed-list scan prunes its tombstones with it and never pays a
     * full tombstone pass per probe — and the vecs side anti-joins on
     * the shared vec_id bucketing (shuffle-free on the index side).
     */
-  private def ivfSq8Handle(spark: SparkSession, tag: String): IvfSq8Handle = {
-    val cents = ParquetIO.read(spark, s"${ivfSq8Base(spark, tag)}/centroids")
-    val lists = spark.table(s"graft_ivfsq8_lists_$tag")
-    val vecs = spark.table(s"graft_ivfsq8_vecs_$tag")
-    if (spark.catalog.tableExists(s"graft_ivfsq8_tombs_$tag")) {
-      val tombs = spark.table(s"graft_ivfsq8_tombs_$tag")
-      IvfSq8Handle(cents,
+  private def ivfCodesHandle(spark: SparkSession,
+      l: CodecLayout): IvfCodesHandle = {
+    val cents = ParquetIO.read(spark, l.centroids)
+    val lists = spark.table(l.scan)
+    val vecs = spark.table(l.vecs)
+    if (spark.catalog.tableExists(l.tombs)) {
+      val tombs = spark.table(l.tombs)
+      IvfCodesHandle(cents,
         lists.join(tombs, Seq("centroid_id", "vec_id"), "left_anti"),
         vecs.join(tombs.select("vec_id"), Seq("vec_id"), "left_anti"))
-    } else IvfSq8Handle(cents, lists, vecs)
+    } else IvfCodesHandle(cents, lists, vecs)
   }
 
-  /** Build (or reuse) the persisted IVF-SQ8 layout: k-means centroids
+  /** Build (or reuse) the persisted composed layout: k-means centroids
     * train on the float vectors (same deterministic hash-draw + Lloyd
     * recipe and operating point as [[ensureIvf]]); the inverted lists
-    * land QUANTIZED (one per-row projection over the assignment — the
-    * float embedding never reaches the list layout); the float table
-    * lands bucketed by vec_id for the shuffle-free re-rank join.
+    * land ENCODED (one per-row codec projection over the assignment —
+    * the float embedding never reaches the list layout); the float
+    * table lands bucketed by vec_id for the shuffle-free re-rank join.
     * Freshness follows the `ensureLsh` discipline (O(1) snapshot-id
     * trust, content fingerprint fallback, shared `servable` recovery
-    * probe, meta committed after the data).
+    * probe, meta committed after the data); a tombstoned layout no
+    * longer equals assign(source), so it rebuilds, clearing the
+    * deletions.
     */
-  def ensureIvfSq8(
-      spark: SparkSession,
-      sourceDir: String,
-      index: DataFrame,
-      lists: Int = 64,
-      iters: Int = 5,
-      storageBuckets: Int = 8,
-      snapshotId: Option[String] = None): IvfSq8Handle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfSq8Base(spark, tag)
-    val listsTable = s"graft_ivfsq8_lists_$tag"
-    val vecsTable = s"graft_ivfsq8_vecs_$tag"
-    val centsPath = s"$base/centroids"
-    def serv(): Boolean = servable(spark,
-      Seq(s"$base/lists", s"$base/vecs", centsPath),
-      ivfSq8Registered(spark, tag),
-      () => attachIvfSq8(spark, tag, storageBuckets))
+  private def ensureIvfCodes(c: Codec, spark: SparkSession,
+      sourceDir: String, index: DataFrame, lists: Int, iters: Int,
+      storageBuckets: Int, snapshotId: Option[String]): IvfCodesHandle = {
+    val l = ivfLayout(c, spark, sourceDir)
+    val base = l.base
+    def serv(): Boolean = servable(spark, l.dataDirs, l.registered,
+      () => l.attach(storageBuckets))
     def opFresh(meta: Map[String, Long]): Boolean =
-      meta.get("lists").contains(lists.toLong) &&
-        meta.get("iters").contains(iters.toLong) &&
-        meta.get("buckets").contains(storageBuckets.toLong)
-    // a tombstoned layout no longer equals quantize-and-assign(source):
-    // ensure's contract is "serve exactly this source", so deletions
-    // force a rebuild which clears them (the ensureSq8 discipline)
+      ivfOpPoint(meta, lists, iters, storageBuckets)
     def tombFree = readMeta(base).get("tomb_rows").forall(_ == 0L)
     val snapFresh = snapshotId.exists(id =>
       readMetaStrs(base).get("snapshot_id").contains(id) &&
         opFresh(readMeta(base))) && tombFree
-    if (snapFresh && serv()) return ivfSq8Handle(spark, tag)
+    if (snapFresh && serv()) return ivfCodesHandle(spark, l)
     val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
     val meta = readMeta(base)
     val metaFresh = opFresh(meta) &&
       meta.get("n_rows").contains(n) &&
       meta.get("checksum").contains(fp) && tombFree && serv()
     if (!metaFresh) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_ivfsq8_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
+      dropTombs(spark, base, l.tombs)
       val cents = SimilaritySearch.kMeansCentroids(
         index.select("vec_id", "embedding"), lists, iters)
-      cents.write.mode(SaveMode.Overwrite).parquet(centsPath)
-      val qlists = SimilaritySearch.assignQuantized(
-        index.select("vec_id", "embedding"), ParquetIO.read(spark, centsPath))
-      spark.sql(s"DROP TABLE IF EXISTS $listsTable")
-      qlists.write.mode(SaveMode.Overwrite)
+      cents.write.mode(SaveMode.Overwrite).parquet(l.centroids)
+      val encoded = c.assign(index.select("vec_id", "embedding"),
+        ParquetIO.read(spark, l.centroids))
+      spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
+      encoded.write.mode(SaveMode.Overwrite)
         .option("path", s"$base/lists")
         .partitionBy("centroid_id")
-        .format("parquet").saveAsTable(listsTable)
-      spark.sql(s"DROP TABLE IF EXISTS $vecsTable")
-      index.select("vec_id", "embedding").write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/vecs")
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(vecsTable)
+        .format("parquet").saveAsTable(l.scan)
+      spark.sql(s"DROP TABLE IF EXISTS ${l.vecs}")
+      saveByVecId(index.select("vec_id", "embedding"), l.vecs,
+        storageBuckets, Some(s"$base/vecs"))
     }
     if (!metaFresh || snapshotId.isDefined)
       writeMetaFull(base,
@@ -2455,81 +2485,56 @@ object AnnIndex {
           readMeta(base).get("last_batch_id")
             .map("last_batch_id" -> _).toSeq ++
           // the delete replay-skip window survives a rebuild (the
-          // ensureSq8 discipline) — tomb_rows does NOT (just cleared)
+          // ensureFlat discipline) — tomb_rows does NOT (just cleared)
           readMeta(base).get("last_del_batch_id")
             .map("last_del_batch_id" -> _).toSeq,
         snapshotId.map("snapshot_id" -> _).toSeq)
-    ivfSq8Handle(spark, tag)
+    ivfCodesHandle(spark, l)
   }
 
-  /** Incremental add into an existing persisted IVF-SQ8 index: new
-    * vectors are assigned to the STORED centroids and appended quantized
+  /** Incremental add into an existing persisted composed index: new
+    * vectors are assigned to the STORED centroids and appended encoded
     * into the partitioned lists (plus float rows into `vecs`) — O(new)
     * per batch. Inherits BOTH parents' contracts: [[upsertIvf]]'s
     * centroid-drift gate (`spark.graft.ann.ivf.maxTailRatio` — the
-    * SQ8 layer itself is per-row and drift-free, the centroids are
-    * not) and [[upsertSq8]]'s batchId replay-skip; the meta checksum
-    * xor-composes. Any stored snapshot id is dropped (the layout moves
-    * ahead of the snapshot that id named).
+    * codec layer itself is per-row and drift-free, the centroids are
+    * not) and [[upsertFlat]]'s tombstone refusal and batchId
+    * replay-skip; the meta checksum xor-composes. Any stored snapshot id
+    * is dropped (the layout moves ahead of the snapshot that id named).
     */
-  def upsertIvfSq8(
-      spark: SparkSession,
-      sourceDir: String,
-      newVecs: DataFrame,
-      lists: Int = 64,
-      iters: Int = 5,
-      storageBuckets: Int = 8,
-      batchId: Option[Long] = None): IvfSq8Handle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfSq8Base(spark, tag)
-    val centsPath = s"$base/centroids"
-    val meta = readMeta(base)
-    require(meta.get("lists").contains(lists.toLong) &&
-      meta.get("iters").contains(iters.toLong) &&
-      meta.get("buckets").contains(storageBuckets.toLong),
-      s"upsertIvfSq8 needs an existing index at the same operating point " +
+  private def upsertIvfCodes(c: Codec, spark: SparkSession,
+      sourceDir: String, newVecs: DataFrame, lists: Int, iters: Int,
+      storageBuckets: Int, batchId: Option[Long]): IvfCodesHandle = {
+    val l = ivfLayout(c, spark, sourceDir)
+    val meta = readMeta(l.base)
+    require(ivfOpPoint(meta, lists, iters, storageBuckets),
+      s"upsert${l.verb} needs an existing index at the same operating point " +
         s"(lists=$lists iters=$iters buckets=$storageBuckets); found $meta")
-    require(parquetReadable(spark, s"$base/lists") &&
-      parquetReadable(spark, s"$base/vecs") &&
-      parquetReadable(spark, centsPath),
-      s"persisted IVF-SQ8 layout for '$sourceDir' is unreadable — run " +
-        "ensureIvfSq8 to rebuild before upserting")
-    if (!ivfSq8Registered(spark, tag))
-      attachIvfSq8(spark, tag, storageBuckets)
-    val replayed = batchId.exists(id =>
-      meta.get("last_batch_id").exists(id <= _))
-    if (replayed) return ivfSq8Handle(spark, tag)
-    // append-only + tombstone contract (the upsertSq8 discipline):
-    // re-adding a deleted id would be silently swallowed by the
-    // tombstone anti-join — fail loudly; compactIvfSq8 folds first
-    if (meta.get("tomb_rows").exists(_ > 0L) &&
-        spark.catalog.tableExists(s"graft_ivfsq8_tombs_$tag")) {
-      val clash = spark.table(s"graft_ivfsq8_tombs_$tag")
-        .join(newVecs.select("vec_id"), Seq("vec_id"), "left_semi").count()
-      require(clash == 0L,
-        s"upsertIvfSq8: $clash incoming vec_id(s) are tombstoned — run " +
-          "compactIvfSq8 to fold deletions before re-inserting those ids")
-    }
+    l.requireReadable(" before upserting")
+    if (!l.registered) l.attach(storageBuckets)
+    if (batchId.exists(id => meta.get("last_batch_id").exists(id <= _)))
+      return ivfCodesHandle(spark, l)
+    refuseTombstoned(spark, l.base, l.tombs, l.verb, meta, newVecs,
+      storageBuckets)
     val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
     val nBase = meta.getOrElse("n_base", meta("n_rows"))
     val tailAfter = meta("n_rows") + nNew - nBase
     val maxRatio = ivfMaxTailRatio(spark)
     if (nBase > 0 && tailAfter > maxRatio * nBase)
       throw new IllegalStateException(
-        f"upsertIvfSq8 drift gate: upserted tail would reach $tailAfter " +
+        f"upsert${l.verb} drift gate: upserted tail would reach $tailAfter " +
           f"rows against a trained base of $nBase " +
           f"(ratio ${tailAfter.toDouble / nBase}%.2f > $maxRatio%.2f). " +
-          "Rebuild with ensureIvfSq8 to retrain centroids, or raise " +
+          s"Rebuild with ensure${l.verb} to retrain centroids, or raise " +
           "spark.graft.ann.ivf.maxTailRatio.")
-    SimilaritySearch.assignQuantized(
-        newVecs.select("vec_id", "embedding"), ParquetIO.read(spark, centsPath))
+    c.assign(newVecs.select("vec_id", "embedding"),
+        ParquetIO.read(spark, l.centroids))
       .write.mode(SaveMode.Append)
       .partitionBy("centroid_id")
-      .format("parquet").saveAsTable(s"graft_ivfsq8_lists_$tag")
-    newVecs.select("vec_id", "embedding").write.mode(SaveMode.Append)
-      .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-      .format("parquet").saveAsTable(s"graft_ivfsq8_vecs_$tag")
-    writeMetaFull(base,
+      .format("parquet").saveAsTable(l.scan)
+    saveByVecId(newVecs.select("vec_id", "embedding"), l.vecs,
+      storageBuckets)
+    writeMetaFull(l.base,
       Seq("lists" -> lists.toLong, "iters" -> iters.toLong,
         "buckets" -> storageBuckets.toLong,
         "n_rows" -> (meta("n_rows") + nNew),
@@ -2540,81 +2545,178 @@ object AnnIndex {
         meta.get("tomb_rows").map("tomb_rows" -> _).toSeq ++
         meta.get("last_del_batch_id").map("last_del_batch_id" -> _).toSeq,
       Nil)
-    ivfSq8Handle(spark, tag)
+    ivfCodesHandle(spark, l)
   }
 
-  /** Delete by id from the persisted IVF-SQ8 index — [[deleteSq8]]'s
-    * composed-layout twin, the verb the 100 TB serving layout was
-    * missing (a production user must remove vectors without an
-    * ensure-rebuild). Merge-on-read tombstones CO-KEYED BY CENTROID:
-    * the batch of ids joins the bucketed float `vecs` table (O(batch),
-    * shuffle-free on the index side) to fetch embeddings, re-derives
-    * each id's nearest stored centroid — the SAME deterministic
-    * assignment that placed its list row, so (centroid_id, vec_id)
-    * names exactly the stored row — and appends to a tombstone table.
-    * The served handle anti-joins the probed lists on (centroid_id,
-    * vec_id), so a probe prunes its tombstones together with its
-    * lists, and the vecs side on the shared vec_id bucketing.
+  /** Delete by id from the persisted composed index — [[deleteFlat]]'s
+    * twin, the verb the 100 TB serving layout needs (a production user
+    * must remove vectors without an ensure-rebuild). Merge-on-read
+    * tombstones CO-KEYED BY CENTROID: the batch of ids joins the
+    * bucketed float `vecs` table (O(batch), shuffle-free on the index
+    * side) to fetch embeddings, re-derives each id's nearest stored
+    * centroid — the SAME deterministic assignment that placed its list
+    * row, so (centroid_id, vec_id) names exactly the stored row — and
+    * appends to a tombstone table. The served handle anti-joins the
+    * probed lists on (centroid_id, vec_id), so a probe prunes its
+    * tombstones together with its lists, and the vecs side on the
+    * shared vec_id bucketing.
     *
-    * Ids absent from the index (no vecs row) are a semantic no-op.
-    * [[compactIvfSq8]] folds tombstones into the base; until then
-    * re-inserting a deleted id fails loudly in [[upsertIvfSq8]]. A
-    * delete moves the layout past any named snapshot (stored
-    * `snapshot_id` dropped) and past the source content (`ensureIvfSq8`
-    * over the original source rebuilds). `batchId` gives streaming
-    * delete feeds the replay-skip contract on its own counter
-    * (`last_del_batch_id`), as [[deleteSq8]].
+    * Same contracts as [[deleteFlat]]: absent ids are a semantic no-op;
+    * [[compactIvfCodes]] folds; re-inserting a deleted id fails loudly
+    * in [[upsertIvfCodes]] until then; the stored `snapshot_id` drops
+    * and `ensure*` over the original source rebuilds; `batchId`
+    * replay-skips on its own counter (`last_del_batch_id`).
     */
-  def deleteIvfSq8(
-      spark: SparkSession,
-      sourceDir: String,
-      ids: DataFrame,
-      batchId: Option[Long] = None): IvfSq8Handle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfSq8Base(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("lists") && meta.contains("buckets"),
-      s"deleteIvfSq8 needs an existing persisted IVF-SQ8 index for " +
-        s"'$sourceDir' — run ensureIvfSq8 first")
+  private def deleteIvfCodes(c: Codec, spark: SparkSession,
+      sourceDir: String, ids: DataFrame,
+      batchId: Option[Long]): IvfCodesHandle = {
+    val l = ivfLayout(c, spark, sourceDir)
+    val meta = readMeta(l.base)
+    require(l.built(meta),
+      s"delete${l.verb} needs an existing persisted ${l.label} index for " +
+        s"'$sourceDir' — run ensure${l.verb} first")
     val storageBuckets = meta("buckets").toInt
-    require(parquetReadable(spark, s"$base/lists") &&
-      parquetReadable(spark, s"$base/vecs") &&
-      parquetReadable(spark, s"$base/centroids"),
-      s"persisted IVF-SQ8 layout for '$sourceDir' is unreadable — run " +
-        "ensureIvfSq8 to rebuild before deleting")
-    if (!ivfSq8Registered(spark, tag))
-      attachIvfSq8(spark, tag, storageBuckets)
-    val replayed = batchId.exists(id =>
-      meta.get("last_del_batch_id").exists(id <= _))
-    if (replayed) return ivfSq8Handle(spark, tag)
+    l.requireReadable(" before deleting")
+    if (!l.registered) l.attach(storageBuckets)
+    if (batchId.exists(id => meta.get("last_del_batch_id").exists(id <= _)))
+      return ivfCodesHandle(spark, l)
     // co-key each deleted id by its stored centroid: embeddings come
     // from the bucketed vecs table (batch-sized semi-ish join), the
     // assignment is the same deterministic nearest-centroid max_by that
     // placed the list row — identical input, identical tie-break,
     // identical centroid_id
     val batch = SimilaritySearch.assignWithVecs(
-        spark.table(s"graft_ivfsq8_vecs_$tag")
+        spark.table(l.vecs)
           .join(ids.select("vec_id").distinct(), Seq("vec_id"),
             "left_semi"),
-        ParquetIO.read(spark, s"$base/centroids"))
+        ParquetIO.read(spark, l.centroids))
       .select("centroid_id", "vec_id")
     val nDel = batch.count()
-    writeTombs(spark, base, s"graft_ivfsq8_tombs_$tag", batch,
-      storageBuckets)
-    writeMetaFull(base,
+    writeTombs(spark, l.base, l.tombs, batch, storageBuckets)
+    writeMetaFull(l.base,
       (meta - "tomb_rows" - "last_del_batch_id").toSeq ++
         Seq("tomb_rows" -> (meta.getOrElse("tomb_rows", 0L) + nDel)) ++
         batchId.orElse(meta.get("last_del_batch_id"))
           .map("last_del_batch_id" -> _).toSeq,
       Nil) // snapshot_id intentionally dropped: the layout moved past it
-    ivfSq8Handle(spark, tag)
+    ivfCodesHandle(spark, l)
   }
 
-  /** Append a tombstone batch to `table` at `$base/tombs` (creating the
-    * layout on first delete) — shared by the composed layouts' delete
-    * verbs. Rows land bucketed by vec_id so the float-table anti-join
-    * stays shuffle-free on the index side.
+  /** True iff a persisted composed layout exists for `sourceDir` AT the
+    * given operating point (meta check only — no readability or
+    * freshness probe; the [[existsFlat]] contract). Lets callers branch
+    * build-vs-open explicitly — the delete-serving lifecycle needs
+    * this, since a tombstoned layout deliberately fails `ensure*`'s
+    * freshness ("serve exactly this source") and must be OPENED, not
+    * re-ensured, to keep serving its deletions.
     */
+  private def existsIvfCodes(c: Codec, spark: SparkSession,
+      sourceDir: String, lists: Int, iters: Int,
+      storageBuckets: Int): Boolean =
+    ivfOpPoint(readMeta(ivfLayout(c, spark, sourceDir).base), lists, iters,
+      storageBuckets)
+
+  private def openIvfCodes(c: Codec, spark: SparkSession,
+      sourceDir: String): IvfCodesHandle = {
+    val l = ivfLayout(c, spark, sourceDir)
+    l.open()
+    ivfCodesHandle(spark, l)
+  }
+
+  /** Compact the persisted composed layout: streamed upserts append one
+    * file set per micro-batch into every probed PARTITION of the lists
+    * table (and into the bucketed vecs table) — after thousands of
+    * triggers the per-partition small files erode exactly the pruned
+    * scan the layout exists to serve. Rewrites the encoded lists at the
+    * same partitioning and the vecs at the same bucketing; meta
+    * untouched without tombstones (the [[compactLsh]]/[[compactFlat]]
+    * crash-safety recipe — side dir, rename swap, stale sweep;
+    * unreadable mid-window layouts read as STALE by `ensure*` and
+    * rebuild). Tombstone FOLD as [[compactFlat]]: every crash window
+    * either keeps serving correctly (tombs still present) or triggers a
+    * rebuild (stale tomb_rows meta over folded data). Not safe
+    * concurrent with a writer.
+    */
+  private def compactIvfCodes(c: Codec, spark: SparkSession,
+      sourceDir: String): IvfCodesHandle = {
+    val l = ivfLayout(c, spark, sourceDir)
+    val base = l.base
+    l.open() // validates meta + attaches + refreshes
+    val meta = readMeta(base)
+    val sb = meta("buckets").toInt
+    val folding = meta.get("tomb_rows").exists(_ > 0L) &&
+      spark.catalog.tableExists(l.tombs)
+    val tombs = if (folding) Some(spark.table(l.tombs)) else None
+    compactPartitioned(spark, base, l.scan, "lists", "centroid_id",
+      tombs.map(t => spark.table(l.scan)
+        .join(t, Seq("centroid_id", "vec_id"), "left_anti")))
+    compactBucketed(spark, base, l.vecs, "vecs", "vec_id", sb,
+      tombs.map(t => spark.table(l.vecs)
+        .join(t.select("vec_id"), Seq("vec_id"), "left_anti")))
+    if (folding) dropTombs(spark, base, l.tombs)
+    l.attach(sb)
+    if (folding) {
+      // the live fingerprint changed: recompute from the folded vecs so
+      // upsert checksum composition stays coherent; replay-skip windows
+      // survive, tomb_rows resets. n_base is NOT reduced — the
+      // centroids were trained on the original base, and shrinking
+      // n_base would only tighten the drift gate spuriously.
+      val (n, fp) = fingerprint(spark.table(l.vecs)
+        .select("vec_id", "embedding"))
+      writeMetaFull(base,
+        (meta - "n_rows" - "checksum" - "tomb_rows").toSeq ++
+          Seq("n_rows" -> n, "checksum" -> fp),
+        Nil)
+    }
+    ivfCodesHandle(spark, l)
+  }
+
+  // ------------------------------------------------------------- IVF-SQ8
+
+  /** The persisted IVF-SQ8 layout: the composed lifecycle
+    * ([[ensureIvfCodes]], [[upsertIvfCodes]], [[deleteIvfCodes]],
+    * [[existsIvfCodes]], [[openIvfCodes]], [[compactIvfCodes]]) with the
+    * [[Sq8]] codec.
+    */
+  def ensureIvfSq8(
+      spark: SparkSession,
+      sourceDir: String,
+      index: DataFrame,
+      lists: Int = 64,
+      iters: Int = 5,
+      storageBuckets: Int = 8,
+      snapshotId: Option[String] = None): IvfCodesHandle =
+    ensureIvfCodes(Sq8, spark, sourceDir, index, lists, iters,
+      storageBuckets, snapshotId)
+
+  def upsertIvfSq8(
+      spark: SparkSession,
+      sourceDir: String,
+      newVecs: DataFrame,
+      lists: Int = 64,
+      iters: Int = 5,
+      storageBuckets: Int = 8,
+      batchId: Option[Long] = None): IvfCodesHandle =
+    upsertIvfCodes(Sq8, spark, sourceDir, newVecs, lists, iters,
+      storageBuckets, batchId)
+
+  def deleteIvfSq8(
+      spark: SparkSession,
+      sourceDir: String,
+      ids: DataFrame,
+      batchId: Option[Long] = None): IvfCodesHandle =
+    deleteIvfCodes(Sq8, spark, sourceDir, ids, batchId)
+
+  def ivfSq8Exists(spark: SparkSession, sourceDir: String,
+      lists: Int = 64, iters: Int = 5, storageBuckets: Int = 8): Boolean =
+    existsIvfCodes(Sq8, spark, sourceDir, lists, iters, storageBuckets)
+
+  def openIvfSq8(spark: SparkSession, sourceDir: String): IvfCodesHandle =
+    openIvfCodes(Sq8, spark, sourceDir)
+
+  def compactIvfSq8(spark: SparkSession, sourceDir: String): IvfCodesHandle =
+    compactIvfCodes(Sq8, spark, sourceDir)
+
   /** Shared doc-id tombstone COMMIT for the unbucketed layouts (plaid,
     * impacts): orphan sweep, idempotent fold of already-tombstoned ids,
     * append-or-create, meta commit with tomb_rows + the caller's
@@ -2653,6 +2755,11 @@ object AnnIndex {
     total
   }
 
+  /** Append a tombstone batch to `table` at `$base/tombs` (creating the
+    * layout on first delete) — shared by the vec_id-bucketed layouts'
+    * delete verbs. Rows land bucketed by vec_id so the float-table
+    * anti-join stays shuffle-free on the index side.
+    */
   private[sources] def writeTombs(spark: SparkSession, base: String, table: String,
       batch: DataFrame, storageBuckets: Int): Unit = {
     // meta is the tombstone commit point: sweep any orphan dir a
@@ -2662,122 +2769,9 @@ object AnnIndex {
     // tombs COMMITTED by another session must attach BEFORE the
     // exists-check: the create-new branch would otherwise overwrite
     // (lose) their rows
-    if (!spark.catalog.tableExists(table) &&
-        tombsServable(spark, base))
-      registerExternal(spark, table, s"$base/tombs",
-        clusteredBy = Some(("vec_id", storageBuckets)))
-    if (spark.catalog.tableExists(table))
-      batch.write.mode(SaveMode.Append)
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(table)
-    else
-      batch.write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/tombs")
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(table)
-  }
-
-  /** True iff a persisted IVF-SQ8 layout exists for `sourceDir` AT the
-    * given operating point (meta check only — no readability or
-    * freshness probe; the [[sq8Exists]] contract). Lets callers branch
-    * build-vs-open explicitly — the delete-serving lifecycle needs
-    * this, since a tombstoned layout deliberately fails `ensure*`'s
-    * freshness ("serve exactly this source") and must be OPENED, not
-    * re-ensured, to keep serving its deletions.
-    */
-  def ivfSq8Exists(spark: SparkSession, sourceDir: String,
-      lists: Int = 64, iters: Int = 5, storageBuckets: Int = 8): Boolean = {
-    val meta = readMeta(ivfSq8Base(spark, IndexStore.pathTag(sourceDir)))
-    meta.get("lists").contains(lists.toLong) &&
-      meta.get("iters").contains(iters.toLong) &&
-      meta.get("buckets").contains(storageBuckets.toLong)
-  }
-
-  /** Open an existing persisted IVF-SQ8 index read-only, WITHOUT a
-    * freshness probe — the reader's path while a
-    * [[graft.streaming.StreamOps.streamingIvfSq8Upsert]] stream appends
-    * concurrently: meta read + catalog attach (or relation-cache
-    * refresh so another session's appends become visible), no
-    * fingerprint scan, no rebuild decision.
-    */
-  def openIvfSq8(spark: SparkSession, sourceDir: String): IvfSq8Handle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfSq8Base(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("lists") && meta.contains("buckets"),
-      s"no persisted IVF-SQ8 index for '$sourceDir' ($base)")
-    require(parquetReadable(spark, s"$base/lists") &&
-      parquetReadable(spark, s"$base/vecs") &&
-      parquetReadable(spark, s"$base/centroids"),
-      s"persisted IVF-SQ8 layout for '$sourceDir' is unreadable — run " +
-        "ensureIvfSq8 to rebuild")
-    if (!ivfSq8Registered(spark, tag))
-      attachIvfSq8(spark, tag, meta("buckets").toInt)
-    else {
-      spark.catalog.refreshTable(s"graft_ivfsq8_lists_$tag")
-      spark.catalog.refreshTable(s"graft_ivfsq8_vecs_$tag")
-      // tombstones may have (dis)appeared under another session's
-      // delete or fold — align with the store, DDL only on a change
-      syncTombs(spark, base, s"graft_ivfsq8_tombs_$tag",
-        clusteredBy = Some(("vec_id", meta("buckets").toInt)))
-    }
-    ivfSq8Handle(spark, tag)
-  }
-
-  /** Compact the persisted IVF-SQ8 layout: streamed upserts append one
-    * file set per micro-batch into every probed PARTITION of the lists
-    * table (and into the bucketed vecs table) — after thousands of
-    * triggers the per-partition small files erode exactly the pruned
-    * scan the layout exists to serve. Rewrites the quantized lists at
-    * the same partitioning and the vecs at the same bucketing; meta
-    * untouched (the [[compactLsh]]/[[compactSq8]] crash-safety recipe —
-    * side dir, rename swap, stale sweep; unreadable mid-window layouts
-    * read as STALE by `ensureIvfSq8` and rebuild). Not safe concurrent
-    * with a writer.
-    */
-  def compactIvfSq8(spark: SparkSession, sourceDir: String): IvfSq8Handle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfSq8Base(spark, tag)
-    openIvfSq8(spark, sourceDir) // validates meta + attaches + refreshes
-    val meta = readMeta(base)
-    val sb = meta("buckets").toInt
-    // tombstone FOLD (the compactSq8 discipline): physically drop
-    // deleted rows while rewriting; every crash window either keeps
-    // serving correctly (tombs still present) or triggers a rebuild
-    // (stale tomb_rows meta over folded data)
-    val folding = meta.get("tomb_rows").exists(_ > 0L) &&
-      spark.catalog.tableExists(s"graft_ivfsq8_tombs_$tag")
-    val tombs =
-      if (folding) Some(spark.table(s"graft_ivfsq8_tombs_$tag")) else None
-    compactPartitioned(spark, base, s"graft_ivfsq8_lists_$tag", "lists",
-      "centroid_id",
-      tombs.map(t => spark.table(s"graft_ivfsq8_lists_$tag")
-        .join(t, Seq("centroid_id", "vec_id"), "left_anti")))
-    compactBucketed(spark, base, s"graft_ivfsq8_vecs_$tag", "vecs",
-      "vec_id", sb,
-      tombs.map(t => spark.table(s"graft_ivfsq8_vecs_$tag")
-        .join(t.select("vec_id"), Seq("vec_id"), "left_anti")))
-    if (folding) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_ivfsq8_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
-    }
-    attachIvfSq8(spark, tag, sb)
-    if (folding) {
-      // the live fingerprint changed: recompute from the folded vecs so
-      // upsert checksum composition stays coherent; replay-skip windows
-      // survive, tomb_rows resets. n_base is NOT reduced — the
-      // centroids were trained on the original base, and shrinking
-      // n_base would only tighten the drift gate spuriously.
-      val (n, fp) = fingerprint(spark.table(s"graft_ivfsq8_vecs_$tag")
-        .select("vec_id", "embedding"))
-      writeMetaFull(base,
-        (meta - "n_rows" - "checksum" - "tomb_rows").toSeq ++
-          Seq("n_rows" -> n, "checksum" -> fp),
-        Nil)
-    }
-    ivfSq8Handle(spark, tag)
+    registerCommittedTombs(spark, base, table, storageBuckets)
+    saveByVecId(batch, table, storageBuckets,
+      if (spark.catalog.tableExists(table)) None else Some(s"$base/tombs"))
   }
 
   /** [[compactIvfSq8]]'s float-IVF twin: rewrites the partitioned
@@ -2808,12 +2802,7 @@ object AnnIndex {
           broadcast(spark.table(s"graft_ivf_tombs_$tag")), Seq("vec_id"),
           "left_anti"))
       else None)
-    if (folding) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_ivf_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
-    }
+    if (folding) dropTombs(spark, base, s"graft_ivf_tombs_$tag")
     spark.sql(s"DROP TABLE IF EXISTS $listsTable")
     registerExternal(spark, listsTable, s"$base/lists",
       partitionedBy = Some("centroid_id"))
@@ -2910,7 +2899,7 @@ object AnnIndex {
     */
   def queryIvfSq8(
       queries: DataFrame,
-      handle: IvfSq8Handle,
+      handle: IvfCodesHandle,
       k: Int = 4,
       nProbe: Int = 24,
       m: Int = 32): DataFrame = {
@@ -2939,7 +2928,7 @@ object AnnIndex {
     */
   def queryIvfSq8Filtered(
       queries: DataFrame,
-      handle: IvfSq8Handle,
+      handle: IvfCodesHandle,
       allowed: DataFrame,
       k: Int = 4,
       nProbe: Int = 24,
@@ -2963,7 +2952,7 @@ object AnnIndex {
     */
   def querySq8(
       queries: DataFrame,
-      handle: Sq8Handle,
+      handle: CodesHandle,
       k: Int = 4,
       m: Int = 32): DataFrame =
     querySq8Core(queries, handle.codes, handle.vecs, k, m)
@@ -2989,7 +2978,7 @@ object AnnIndex {
     */
   def querySq8Filtered(
       queries: DataFrame,
-      handle: Sq8Handle,
+      handle: CodesHandle,
       allowed: DataFrame,
       k: Int = 4,
       m: Int = 32): DataFrame =
@@ -3077,7 +3066,7 @@ object AnnIndex {
   }
 
   /** The served IVF-PQ view — tombstone anti-joins exactly as
-    * [[ivfSq8Handle]]: lists on (centroid_id, vec_id) so probes prune
+    * [[ivfCodesHandle]]: lists on (centroid_id, vec_id) so probes prune
     * their tombstones with their lists, vecs on the shared vec_id
     * bucketing.
     */
@@ -3144,10 +3133,7 @@ object AnnIndex {
       meta.get("n_rows").contains(n) &&
       meta.get("checksum").contains(fp) && tombFree && serv()
     if (!metaFresh) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_ivfpq_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
+      dropTombs(spark, base, s"graft_ivfpq_tombs_$tag")
       val idx = index.select("vec_id", "embedding")
       val cents = SimilaritySearch.kMeansCentroids(idx, lists, iters)
       cents.write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")
@@ -3163,10 +3149,7 @@ object AnnIndex {
         .partitionBy("centroid_id")
         .format("parquet").saveAsTable(listsTable)
       spark.sql(s"DROP TABLE IF EXISTS $vecsTable")
-      idx.write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/vecs")
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(vecsTable)
+      saveByVecId(idx, vecsTable, storageBuckets, Some(s"$base/vecs"))
     }
     if (!metaFresh || snapshotId.isDefined)
       writeMetaFull(base,
@@ -3216,16 +3199,8 @@ object AnnIndex {
     val replayed = batchId.exists(id =>
       meta.get("last_batch_id").exists(id <= _))
     if (replayed) return ivfPqHandle(spark, tag, meta)
-    // tombstone clash guard (the upsertSq8/upsertIvfSq8 discipline):
-    // re-adding a deleted id would be silently swallowed — fail loudly
-    if (meta.get("tomb_rows").exists(_ > 0L) &&
-        spark.catalog.tableExists(s"graft_ivfpq_tombs_$tag")) {
-      val clash = spark.table(s"graft_ivfpq_tombs_$tag")
-        .join(newVecs.select("vec_id"), Seq("vec_id"), "left_semi").count()
-      require(clash == 0L,
-        s"upsertIvfPq: $clash incoming vec_id(s) are tombstoned — run " +
-          "compactIvfPq to fold deletions before re-inserting those ids")
-    }
+    refuseTombstoned(spark, base, s"graft_ivfpq_tombs_$tag", "IvfPq", meta,
+      newVecs, meta("buckets").toInt)
     val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
     val nBase = meta.getOrElse("n_base", meta("n_rows"))
     val tailAfter = meta("n_rows") + nNew - nBase
@@ -3247,9 +3222,8 @@ object AnnIndex {
       .write.mode(SaveMode.Append)
       .partitionBy("centroid_id")
       .format("parquet").saveAsTable(s"graft_ivfpq_lists_$tag")
-    newVecs.select("vec_id", "embedding").write.mode(SaveMode.Append)
-      .bucketBy(meta("buckets").toInt, "vec_id").sortBy("vec_id")
-      .format("parquet").saveAsTable(s"graft_ivfpq_vecs_$tag")
+    saveByVecId(newVecs.select("vec_id", "embedding"),
+      s"graft_ivfpq_vecs_$tag", meta("buckets").toInt)
     writeMetaFull(base,
       (meta - "n_rows" - "checksum" - "last_batch_id").toSeq ++
         Seq("n_rows" -> (meta("n_rows") + nNew),
@@ -3378,12 +3352,7 @@ object AnnIndex {
       "vec_id", sb,
       tombs.map(t => spark.table(s"graft_ivfpq_vecs_$tag")
         .join(t.select("vec_id"), Seq("vec_id"), "left_anti")))
-    if (folding) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_ivfpq_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
-    }
+    if (folding) dropTombs(spark, base, s"graft_ivfpq_tombs_$tag")
     attachIvfPq(spark, tag, sb)
     if (folding) {
       val (n, fp) = fingerprint(spark.table(s"graft_ivfpq_vecs_$tag")
@@ -3450,302 +3419,46 @@ object AnnIndex {
 
   // ------------------------------------------------------------------ BQ
 
-  /** Persisted binary-quantized layout — the 1-bit extreme of the
-    * quantized serving family and the biggest scan-I/O lever in the
-    * house (⌈dim/8⌉ bytes per row: 32× under float32, 8× under SQ8).
-    * `codes` holds (vec_id, bcodes), `vecs` the float vectors
-    * co-bucketed by vec_id for the exact re-rank join. Inherits
+  /** The persisted BQ layout — the 1-bit extreme of the quantized
+    * serving family and the biggest scan-I/O lever in the house: the
+    * flat lifecycle ([[ensureFlat]] … [[compactFlat]]) with the [[Bq]]
+    * codec, so `codes` holds (vec_id, bcodes). Inherits
     * [[binaryTopK]]'s deploy contract: high ambient dimension is a
     * PRECONDITION (the measured 64-dim negative control never reaches
     * identity — `AnnTune bq`), and the (k, m) point must be certified
     * against exact kNN before serving (q162 pins 1536-dim, m=256).
-    */
-  final case class BqHandle(codes: DataFrame, vecs: DataFrame)
-
-  private def bqBase(spark: SparkSession, tag: String) =
-    s"${annBase(spark)}/graft_ann_bq_$tag"
-
-  private def bqRegistered(spark: SparkSession, tag: String): Boolean =
-    spark.catalog.tableExists(s"graft_bq_codes_$tag") &&
-      spark.catalog.tableExists(s"graft_bq_vecs_$tag")
-
-  private def attachBq(spark: SparkSession, tag: String,
-      storageBuckets: Int): Unit = {
-    val base = bqBase(spark, tag)
-    spark.sql(s"DROP TABLE IF EXISTS graft_bq_codes_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_bq_vecs_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_bq_tombs_$tag")
-    registerExternal(spark, s"graft_bq_codes_$tag", s"$base/codes",
-      clusteredBy = Some(("vec_id", storageBuckets)))
-    registerExternal(spark, s"graft_bq_vecs_$tag", s"$base/vecs",
-      clusteredBy = Some(("vec_id", storageBuckets)))
-    if (tombsServable(spark, base))
-      registerExternal(spark, s"graft_bq_tombs_$tag", s"$base/tombs",
-        clusteredBy = Some(("vec_id", storageBuckets)))
-  }
-
-  /** The served BQ view (the [[sq8Handle]] discipline): when a
-    * tombstone table exists both sides anti-join it on the shared
-    * vec_id bucketing — shuffle-free on the index side.
-    */
-  private def bqHandle(spark: SparkSession, tag: String): BqHandle = {
-    val codes = spark.table(s"graft_bq_codes_$tag")
-    val vecs = spark.table(s"graft_bq_vecs_$tag")
-    if (spark.catalog.tableExists(s"graft_bq_tombs_$tag")) {
-      val tombs = spark.table(s"graft_bq_tombs_$tag")
-      BqHandle(codes.join(tombs, Seq("vec_id"), "left_anti"),
-        vecs.join(tombs, Seq("vec_id"), "left_anti"))
-    } else BqHandle(codes, vecs)
-  }
-
-  /** Build (or reuse) the persisted BQ layout over `index(vec_id,
-    * embedding)`: sign-packing is one per-row projection pass (no
-    * global statistics — the [[ensureSq8]] shape, not IVF's), both
-    * tables land bucketed by vec_id through the catalog. Freshness
-    * follows the `ensureLsh` discipline — O(1) snapshot-id trust,
-    * content-fingerprint fallback, the shared `servable` recovery
-    * probe, meta committed atomically after the data. A tombstoned
-    * layout fails freshness ("serve exactly this source") and
-    * rebuilds, clearing the deletions.
     */
   def ensureBq(
       spark: SparkSession,
       sourceDir: String,
       index: DataFrame,
       storageBuckets: Int = 8,
-      snapshotId: Option[String] = None): BqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = bqBase(spark, tag)
-    def tombFree = readMeta(base).get("tomb_rows").forall(_ == 0L)
-    val snapFresh = snapshotId.exists { id =>
-      readMetaStrs(base).get("snapshot_id").contains(id) &&
-        readMeta(base).get("buckets").contains(storageBuckets.toLong)
-    } && tombFree
-    if (snapFresh && servable(spark, Seq(s"$base/codes", s"$base/vecs"),
-        bqRegistered(spark, tag),
-        () => attachBq(spark, tag, storageBuckets)))
-      return bqHandle(spark, tag)
-    val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
-    val metaFresh = {
-      val meta = readMeta(base)
-      meta.get("buckets").contains(storageBuckets.toLong) &&
-        meta.get("n_rows").contains(n) &&
-        meta.get("checksum").contains(fp)
-    } && tombFree && servable(spark, Seq(s"$base/codes", s"$base/vecs"),
-      bqRegistered(spark, tag),
-      () => attachBq(spark, tag, storageBuckets))
-    if (!metaFresh) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_bq_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
-      spark.sql(s"DROP TABLE IF EXISTS graft_bq_codes_$tag")
-      SimilaritySearch.binarizeIndex(index.select("vec_id", "embedding"))
-        .write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/codes")
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(s"graft_bq_codes_$tag")
-      spark.sql(s"DROP TABLE IF EXISTS graft_bq_vecs_$tag")
-      index.select("vec_id", "embedding").write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/vecs")
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(s"graft_bq_vecs_$tag")
-    }
-    if (!metaFresh || snapshotId.isDefined) {
-      val old = readMeta(base)
-      writeMetaFull(base,
-        Seq("buckets" -> storageBuckets.toLong,
-          "n_rows" -> n, "checksum" -> fp) ++
-          // both replay-skip windows survive a rebuild (the buildLsh
-          // discipline) — tomb_rows does NOT (the rebuild cleared them)
-          old.get("last_batch_id").map("last_batch_id" -> _).toSeq ++
-          old.get("last_del_batch_id").map("last_del_batch_id" -> _).toSeq,
-        snapshotId.map("snapshot_id" -> _).toSeq)
-    }
-    bqHandle(spark, tag)
-  }
+      snapshotId: Option[String] = None): CodesHandle =
+    ensureFlat(Bq, spark, sourceDir, index, storageBuckets, snapshotId)
 
-  /** Incremental add into an existing persisted BQ index. Sign-packing
-    * is strictly per-row, so an upsert is EXACTLY a rebuild restricted
-    * to the new rows — O(new) per batch, upsert ≡ rebuild
-    * row-identically by construction. Append-only contract, tombstone
-    * clash refusal, and `batchId` replay-skip as in [[upsertSq8]].
-    */
   def upsertBq(
       spark: SparkSession,
       sourceDir: String,
       newVecs: DataFrame,
       storageBuckets: Int = 8,
-      batchId: Option[Long] = None): BqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = bqBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.get("buckets").contains(storageBuckets.toLong),
-      s"upsertBq needs an existing index at the same layout " +
-        s"(buckets=$storageBuckets); found $meta")
-    require(parquetReadable(spark, s"$base/codes") &&
-      parquetReadable(spark, s"$base/vecs"),
-      s"persisted BQ layout for '$sourceDir' is unreadable — run " +
-        "ensureBq to rebuild before upserting")
-    if (!bqRegistered(spark, tag)) attachBq(spark, tag, storageBuckets)
-    val replayed = batchId.exists(id =>
-      meta.get("last_batch_id").exists(id <= _))
-    if (replayed) return bqHandle(spark, tag)
-    if (meta.get("tomb_rows").exists(_ > 0L)) {
-      if (!spark.catalog.tableExists(s"graft_bq_tombs_$tag") &&
-          tombsServable(spark, base))
-        registerExternal(spark, s"graft_bq_tombs_$tag", s"$base/tombs",
-          clusteredBy = Some(("vec_id", storageBuckets)))
-      val clash = spark.table(s"graft_bq_tombs_$tag")
-        .join(newVecs.select("vec_id"), Seq("vec_id"), "left_semi").count()
-      require(clash == 0L,
-        s"upsertBq: $clash incoming vec_id(s) are tombstoned — run " +
-          "compactBq to fold deletions before re-inserting those ids")
-    }
-    val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
-    SimilaritySearch.binarizeIndex(newVecs.select("vec_id", "embedding"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-      .format("parquet").saveAsTable(s"graft_bq_codes_$tag")
-    newVecs.select("vec_id", "embedding").write.mode(SaveMode.Append)
-      .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-      .format("parquet").saveAsTable(s"graft_bq_vecs_$tag")
-    writeMetaFull(base,
-      Seq("buckets" -> storageBuckets.toLong,
-        "n_rows" -> (meta("n_rows") + nNew),
-        "checksum" -> (meta("checksum") ^ fpNew)) ++
-        batchId.orElse(meta.get("last_batch_id"))
-          .map("last_batch_id" -> _).toSeq ++
-        meta.get("tomb_rows").map("tomb_rows" -> _).toSeq ++
-        meta.get("last_del_batch_id").map("last_del_batch_id" -> _).toSeq,
-      Nil)
-    bqHandle(spark, tag)
-  }
+      batchId: Option[Long] = None): CodesHandle =
+    upsertFlat(Bq, spark, sourceDir, newVecs, storageBuckets, batchId)
 
-  /** Delete by id from the persisted BQ index — [[deleteSq8]]'s 1-bit
-    * twin: merge-on-read tombstones co-bucketed with codes/vecs
-    * (O(batch) work, no index rewrite), every served handle anti-joins
-    * them shuffle-free. Ids absent from the index are a semantic
-    * no-op; [[compactBq]] folds; re-inserting a deleted id fails
-    * loudly in [[upsertBq]]; a delete moves the layout past any named
-    * snapshot; `batchId` replay-skip on its own counter
-    * (`last_del_batch_id`).
-    */
   def deleteBq(
       spark: SparkSession,
       sourceDir: String,
       ids: DataFrame,
-      batchId: Option[Long] = None): BqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = bqBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("buckets"),
-      s"deleteBq needs an existing persisted BQ index for '$sourceDir'" +
-        s" — run ensureBq first")
-    val storageBuckets = meta("buckets").toInt
-    require(parquetReadable(spark, s"$base/codes") &&
-      parquetReadable(spark, s"$base/vecs"),
-      s"persisted BQ layout for '$sourceDir' is unreadable — run " +
-        "ensureBq to rebuild before deleting")
-    if (!bqRegistered(spark, tag)) attachBq(spark, tag, storageBuckets)
-    val replayed = batchId.exists(id =>
-      meta.get("last_del_batch_id").exists(id <= _))
-    if (replayed) return bqHandle(spark, tag)
-    val batch = ids.select("vec_id").distinct()
-    val nDel = batch.count()
-    writeTombs(spark, base, s"graft_bq_tombs_$tag", batch, storageBuckets)
-    writeMetaFull(base,
-      Seq("buckets" -> meta("buckets"),
-        "n_rows" -> meta("n_rows"),
-        "checksum" -> meta("checksum"),
-        "tomb_rows" -> (meta.getOrElse("tomb_rows", 0L) + nDel)) ++
-        meta.get("last_batch_id").map("last_batch_id" -> _).toSeq ++
-        batchId.orElse(meta.get("last_del_batch_id"))
-          .map("last_del_batch_id" -> _).toSeq,
-      Nil) // snapshot_id intentionally dropped: the layout moved past it
-    bqHandle(spark, tag)
-  }
+      batchId: Option[Long] = None): CodesHandle =
+    deleteFlat(Bq, spark, sourceDir, ids, batchId)
 
-  /** True iff a persisted BQ layout exists for `sourceDir` (meta
-    * presence only — the [[sq8Exists]] contract).
-    */
   def bqExists(spark: SparkSession, sourceDir: String): Boolean =
-    readMeta(bqBase(spark, IndexStore.pathTag(sourceDir)))
-      .contains("buckets")
+    existsFlat(Bq, spark, sourceDir)
 
-  /** Open an existing persisted BQ index read-only, WITHOUT a
-    * freshness probe (the [[openSq8]] contract — the reader's path
-    * while a writer appends concurrently).
-    */
-  def openBq(spark: SparkSession, sourceDir: String): BqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = bqBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("buckets"),
-      s"no persisted BQ index for '$sourceDir' ($base)")
-    require(parquetReadable(spark, s"$base/codes") &&
-      parquetReadable(spark, s"$base/vecs"),
-      s"persisted BQ layout for '$sourceDir' is unreadable — run " +
-        "ensureBq to rebuild")
-    if (!bqRegistered(spark, tag))
-      attachBq(spark, tag, meta("buckets").toInt)
-    else {
-      spark.catalog.refreshTable(s"graft_bq_codes_$tag")
-      spark.catalog.refreshTable(s"graft_bq_vecs_$tag")
-      // tombstones may have (dis)appeared under another session's
-      // delete or fold — align with the store, DDL only on a change
-      syncTombs(spark, base, s"graft_bq_tombs_$tag",
-        clusteredBy = Some(("vec_id", meta("buckets").toInt)))
-    }
-    bqHandle(spark, tag)
-  }
+  def openBq(spark: SparkSession, sourceDir: String): CodesHandle =
+    openFlat(Bq, spark, sourceDir)
 
-  /** Compact the persisted BQ layout — [[compactSq8]]'s 1-bit twin:
-    * rewrites both bucketed tables at the same (bucketing, sort) spec
-    * (side dir + rename swap, stale sweep), FOLDS tombstones when
-    * present (physically drops deleted rows, recomputes the live
-    * fingerprint so upsert checksum composition stays coherent,
-    * resets tomb_rows; replay-skip windows survive). Not safe
-    * concurrent with a writer.
-    */
-  def compactBq(spark: SparkSession, sourceDir: String): BqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = bqBase(spark, tag)
-    openBq(spark, sourceDir) // validates meta + attaches + refreshes
-    val meta = readMeta(base)
-    val sb = meta("buckets").toInt
-    val folding = meta.get("tomb_rows").exists(_ > 0L) &&
-      spark.catalog.tableExists(s"graft_bq_tombs_$tag")
-    val tombFilter = (df: DataFrame) =>
-      if (folding)
-        df.join(spark.table(s"graft_bq_tombs_$tag"), Seq("vec_id"),
-          "left_anti")
-      else df
-    compactBucketed(spark, base, s"graft_bq_codes_$tag", "codes",
-      "vec_id", sb,
-      Some(tombFilter(spark.table(s"graft_bq_codes_$tag"))))
-    compactBucketed(spark, base, s"graft_bq_vecs_$tag", "vecs",
-      "vec_id", sb,
-      Some(tombFilter(spark.table(s"graft_bq_vecs_$tag"))))
-    if (folding) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_bq_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
-    }
-    attachBq(spark, tag, sb)
-    if (folding) {
-      val (n, fp) = fingerprint(
-        spark.table(s"graft_bq_vecs_$tag").select("vec_id", "embedding"))
-      writeMetaFull(base,
-        Seq("buckets" -> sb.toLong, "n_rows" -> n, "checksum" -> fp) ++
-          meta.get("last_batch_id").map("last_batch_id" -> _).toSeq ++
-          meta.get("last_del_batch_id")
-            .map("last_del_batch_id" -> _).toSeq,
-        Nil)
-    }
-    bqHandle(spark, tag)
-  }
+  def compactBq(spark: SparkSession, sourceDir: String): CodesHandle =
+    compactFlat(Bq, spark, sourceDir)
 
   /** Query the persisted BQ index: XOR+popcount Hamming over the
     * stored 1-bit codes selects `m` candidates per query (bounded
@@ -3759,7 +3472,7 @@ object AnnIndex {
     */
   def queryBq(
       queries: DataFrame,
-      handle: BqHandle,
+      handle: CodesHandle,
       k: Int = 4,
       m: Int = 256): DataFrame = {
     require(m >= k, s"candidate count m ($m) must be >= k ($k)")
@@ -3775,7 +3488,7 @@ object AnnIndex {
     */
   def queryBqFiltered(
       queries: DataFrame,
-      handle: BqHandle,
+      handle: CodesHandle,
       allowed: DataFrame,
       k: Int = 4,
       m: Int = 256): DataFrame = {
@@ -3789,65 +3502,14 @@ object AnnIndex {
 
   // -------------------------------------------------------------- IVF-BQ
 
-  /** Persisted IVF-BQ — 1-bit codes inside centroid-partitioned
-    * inverted lists (the Qdrant/Weaviate "binary quantization inside
-    * the index" serving layout, public): `lists` holds (vec_id,
-    * bcodes) partitioned by centroid_id, float `vecs` co-bucketed for
-    * the exact re-rank. A query prunes probed-list rows (DPP) AND
-    * reads each probed row at ⌈dim/8⌉ bytes — the two scan reductions
-    * multiply, 8× past even IVF-SQ8's bytes, paid for with the fatter
-    * re-rank margin the binary family needs (q168's certified
-    * nProbe/m point).
-    */
-  final case class IvfBqHandle(centroids: DataFrame, lists: DataFrame,
-      vecs: DataFrame)
-
-  private def ivfBqBase(spark: SparkSession, tag: String) =
-    s"${annBase(spark)}/graft_ann_ivfbq_$tag"
-
-  private def ivfBqRegistered(spark: SparkSession, tag: String): Boolean =
-    spark.catalog.tableExists(s"graft_ivfbq_lists_$tag") &&
-      spark.catalog.tableExists(s"graft_ivfbq_vecs_$tag")
-
-  private def attachIvfBq(spark: SparkSession, tag: String,
-      storageBuckets: Int): Unit = {
-    val base = ivfBqBase(spark, tag)
-    spark.sql(s"DROP TABLE IF EXISTS graft_ivfbq_lists_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_ivfbq_vecs_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_ivfbq_tombs_$tag")
-    registerExternal(spark, s"graft_ivfbq_lists_$tag", s"$base/lists",
-      partitionedBy = Some("centroid_id"))
-    registerExternal(spark, s"graft_ivfbq_vecs_$tag", s"$base/vecs",
-      clusteredBy = Some(("vec_id", storageBuckets)))
-    if (tombsServable(spark, base))
-      registerExternal(spark, s"graft_ivfbq_tombs_$tag", s"$base/tombs",
-        clusteredBy = Some(("vec_id", storageBuckets)))
-  }
-
-  /** The served IVF-BQ view (the [[ivfSq8Handle]] discipline):
-    * tombstones are co-keyed by centroid, so a probed-list scan prunes
-    * its tombstones with it; the vecs side anti-joins on the shared
-    * vec_id bucketing.
-    */
-  private def ivfBqHandle(spark: SparkSession, tag: String): IvfBqHandle = {
-    val cents = ParquetIO.read(spark, s"${ivfBqBase(spark, tag)}/centroids")
-    val lists = spark.table(s"graft_ivfbq_lists_$tag")
-    val vecs = spark.table(s"graft_ivfbq_vecs_$tag")
-    if (spark.catalog.tableExists(s"graft_ivfbq_tombs_$tag")) {
-      val tombs = spark.table(s"graft_ivfbq_tombs_$tag")
-      IvfBqHandle(cents,
-        lists.join(tombs, Seq("centroid_id", "vec_id"), "left_anti"),
-        vecs.join(tombs.select("vec_id"), Seq("vec_id"), "left_anti"))
-    } else IvfBqHandle(cents, lists, vecs)
-  }
-
-  /** Build (or reuse) the persisted IVF-BQ layout: k-means centroids
-    * train on the float vectors (same deterministic recipe as
-    * [[ensureIvf]]); the inverted lists land SIGN-PACKED (one per-row
-    * projection over the assignment — the float embedding never
-    * reaches the list layout); the float table lands bucketed by
-    * vec_id for the shuffle-free re-rank. Freshness per the
-    * `ensureLsh` discipline; a tombstoned layout rebuilds.
+  /** The persisted IVF-BQ layout — 1-bit codes inside the
+    * centroid-partitioned inverted lists: the composed lifecycle
+    * ([[ensureIvfCodes]] … [[compactIvfCodes]]) with the [[Bq]] codec,
+    * so `lists` holds (vec_id, bcodes). A query prunes probed-list rows
+    * (DPP) AND reads each probed row at ⌈dim/8⌉ bytes — the two scan
+    * reductions multiply, 8× past even IVF-SQ8's bytes, paid for with
+    * the fatter re-rank margin the binary family needs (q168's
+    * certified nProbe/m point).
     */
   def ensureIvfBq(
       spark: SparkSession,
@@ -3856,72 +3518,10 @@ object AnnIndex {
       lists: Int = 64,
       iters: Int = 5,
       storageBuckets: Int = 8,
-      snapshotId: Option[String] = None): IvfBqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfBqBase(spark, tag)
-    val listsTable = s"graft_ivfbq_lists_$tag"
-    val vecsTable = s"graft_ivfbq_vecs_$tag"
-    val centsPath = s"$base/centroids"
-    def serv(): Boolean = servable(spark,
-      Seq(s"$base/lists", s"$base/vecs", centsPath),
-      ivfBqRegistered(spark, tag),
-      () => attachIvfBq(spark, tag, storageBuckets))
-    def opFresh(meta: Map[String, Long]): Boolean =
-      meta.get("lists").contains(lists.toLong) &&
-        meta.get("iters").contains(iters.toLong) &&
-        meta.get("buckets").contains(storageBuckets.toLong)
-    def tombFree = readMeta(base).get("tomb_rows").forall(_ == 0L)
-    val snapFresh = snapshotId.exists(id =>
-      readMetaStrs(base).get("snapshot_id").contains(id) &&
-        opFresh(readMeta(base))) && tombFree
-    if (snapFresh && serv()) return ivfBqHandle(spark, tag)
-    val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
-    val meta = readMeta(base)
-    val metaFresh = opFresh(meta) &&
-      meta.get("n_rows").contains(n) &&
-      meta.get("checksum").contains(fp) && tombFree && serv()
-    if (!metaFresh) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_ivfbq_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
-      val cents = SimilaritySearch.kMeansCentroids(
-        index.select("vec_id", "embedding"), lists, iters)
-      cents.write.mode(SaveMode.Overwrite).parquet(centsPath)
-      val blists = SimilaritySearch.assignBinary(
-        index.select("vec_id", "embedding"), ParquetIO.read(spark, centsPath))
-      spark.sql(s"DROP TABLE IF EXISTS $listsTable")
-      blists.write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/lists")
-        .partitionBy("centroid_id")
-        .format("parquet").saveAsTable(listsTable)
-      spark.sql(s"DROP TABLE IF EXISTS $vecsTable")
-      index.select("vec_id", "embedding").write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/vecs")
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(vecsTable)
-    }
-    if (!metaFresh || snapshotId.isDefined)
-      writeMetaFull(base,
-        Seq("lists" -> lists.toLong, "iters" -> iters.toLong,
-          "buckets" -> storageBuckets.toLong,
-          "n_rows" -> n, "checksum" -> fp,
-          "n_base" -> (if (metaFresh) meta.getOrElse("n_base", n) else n)) ++
-          readMeta(base).get("last_batch_id")
-            .map("last_batch_id" -> _).toSeq ++
-          readMeta(base).get("last_del_batch_id")
-            .map("last_del_batch_id" -> _).toSeq,
-        snapshotId.map("snapshot_id" -> _).toSeq)
-    ivfBqHandle(spark, tag)
-  }
+      snapshotId: Option[String] = None): IvfCodesHandle =
+    ensureIvfCodes(Bq, spark, sourceDir, index, lists, iters,
+      storageBuckets, snapshotId)
 
-  /** Incremental add into an existing persisted IVF-BQ index: new
-    * vectors are assigned to the STORED centroids and appended
-    * sign-packed into the partitioned lists (plus float rows into
-    * `vecs`) — O(new) per batch. Inherits [[upsertIvf]]'s
-    * centroid-drift gate (the BQ layer is per-row and drift-free, the
-    * centroids are not) and [[upsertSq8]]'s batchId replay-skip.
-    */
   def upsertIvfBq(
       spark: SparkSession,
       sourceDir: String,
@@ -3929,194 +3529,26 @@ object AnnIndex {
       lists: Int = 64,
       iters: Int = 5,
       storageBuckets: Int = 8,
-      batchId: Option[Long] = None): IvfBqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfBqBase(spark, tag)
-    val centsPath = s"$base/centroids"
-    val meta = readMeta(base)
-    require(meta.get("lists").contains(lists.toLong) &&
-      meta.get("iters").contains(iters.toLong) &&
-      meta.get("buckets").contains(storageBuckets.toLong),
-      s"upsertIvfBq needs an existing index at the same operating point " +
-        s"(lists=$lists iters=$iters buckets=$storageBuckets); found $meta")
-    require(parquetReadable(spark, s"$base/lists") &&
-      parquetReadable(spark, s"$base/vecs") &&
-      parquetReadable(spark, centsPath),
-      s"persisted IVF-BQ layout for '$sourceDir' is unreadable — run " +
-        "ensureIvfBq to rebuild before upserting")
-    if (!ivfBqRegistered(spark, tag))
-      attachIvfBq(spark, tag, storageBuckets)
-    val replayed = batchId.exists(id =>
-      meta.get("last_batch_id").exists(id <= _))
-    if (replayed) return ivfBqHandle(spark, tag)
-    if (meta.get("tomb_rows").exists(_ > 0L) &&
-        spark.catalog.tableExists(s"graft_ivfbq_tombs_$tag")) {
-      val clash = spark.table(s"graft_ivfbq_tombs_$tag")
-        .join(newVecs.select("vec_id"), Seq("vec_id"), "left_semi").count()
-      require(clash == 0L,
-        s"upsertIvfBq: $clash incoming vec_id(s) are tombstoned — run " +
-          "compactIvfBq to fold deletions before re-inserting those ids")
-    }
-    val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
-    val nBase = meta.getOrElse("n_base", meta("n_rows"))
-    val tailAfter = meta("n_rows") + nNew - nBase
-    val maxRatio = ivfMaxTailRatio(spark)
-    if (nBase > 0 && tailAfter > maxRatio * nBase)
-      throw new IllegalStateException(
-        f"upsertIvfBq drift gate: upserted tail would reach $tailAfter " +
-          f"rows against a trained base of $nBase " +
-          f"(ratio ${tailAfter.toDouble / nBase}%.2f > $maxRatio%.2f). " +
-          "Rebuild with ensureIvfBq to retrain centroids, or raise " +
-          "spark.graft.ann.ivf.maxTailRatio.")
-    SimilaritySearch.assignBinary(
-        newVecs.select("vec_id", "embedding"), ParquetIO.read(spark, centsPath))
-      .write.mode(SaveMode.Append)
-      .partitionBy("centroid_id")
-      .format("parquet").saveAsTable(s"graft_ivfbq_lists_$tag")
-    newVecs.select("vec_id", "embedding").write.mode(SaveMode.Append)
-      .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-      .format("parquet").saveAsTable(s"graft_ivfbq_vecs_$tag")
-    writeMetaFull(base,
-      Seq("lists" -> lists.toLong, "iters" -> iters.toLong,
-        "buckets" -> storageBuckets.toLong,
-        "n_rows" -> (meta("n_rows") + nNew),
-        "checksum" -> (meta("checksum") ^ fpNew),
-        "n_base" -> nBase) ++
-        batchId.orElse(meta.get("last_batch_id"))
-          .map("last_batch_id" -> _).toSeq ++
-        meta.get("tomb_rows").map("tomb_rows" -> _).toSeq ++
-        meta.get("last_del_batch_id").map("last_del_batch_id" -> _).toSeq,
-      Nil)
-    ivfBqHandle(spark, tag)
-  }
+      batchId: Option[Long] = None): IvfCodesHandle =
+    upsertIvfCodes(Bq, spark, sourceDir, newVecs, lists, iters,
+      storageBuckets, batchId)
 
-  /** Delete by id from the persisted IVF-BQ index — [[deleteIvfSq8]]'s
-    * 1-bit twin: the batch's embeddings come from the bucketed float
-    * table, each id's nearest STORED centroid re-derives
-    * deterministically (identical input, identical tie-break → the
-    * exact (centroid_id, vec_id) the list row carries), tombstones
-    * append co-keyed by centroid. Same no-op/fold/snapshot/replay
-    * contracts as the SQ8 form.
-    */
   def deleteIvfBq(
       spark: SparkSession,
       sourceDir: String,
       ids: DataFrame,
-      batchId: Option[Long] = None): IvfBqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfBqBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("lists") && meta.contains("buckets"),
-      s"deleteIvfBq needs an existing persisted IVF-BQ index for " +
-        s"'$sourceDir' — run ensureIvfBq first")
-    val storageBuckets = meta("buckets").toInt
-    require(parquetReadable(spark, s"$base/lists") &&
-      parquetReadable(spark, s"$base/vecs") &&
-      parquetReadable(spark, s"$base/centroids"),
-      s"persisted IVF-BQ layout for '$sourceDir' is unreadable — run " +
-        "ensureIvfBq to rebuild before deleting")
-    if (!ivfBqRegistered(spark, tag))
-      attachIvfBq(spark, tag, storageBuckets)
-    val replayed = batchId.exists(id =>
-      meta.get("last_del_batch_id").exists(id <= _))
-    if (replayed) return ivfBqHandle(spark, tag)
-    val batch = SimilaritySearch.assignWithVecs(
-        spark.table(s"graft_ivfbq_vecs_$tag")
-          .join(ids.select("vec_id").distinct(), Seq("vec_id"),
-            "left_semi"),
-        ParquetIO.read(spark, s"$base/centroids"))
-      .select("centroid_id", "vec_id")
-    val nDel = batch.count()
-    writeTombs(spark, base, s"graft_ivfbq_tombs_$tag", batch,
-      storageBuckets)
-    writeMetaFull(base,
-      (meta - "tomb_rows" - "last_del_batch_id").toSeq ++
-        Seq("tomb_rows" -> (meta.getOrElse("tomb_rows", 0L) + nDel)) ++
-        batchId.orElse(meta.get("last_del_batch_id"))
-          .map("last_del_batch_id" -> _).toSeq,
-      Nil) // snapshot_id intentionally dropped: the layout moved past it
-    ivfBqHandle(spark, tag)
-  }
+      batchId: Option[Long] = None): IvfCodesHandle =
+    deleteIvfCodes(Bq, spark, sourceDir, ids, batchId)
 
-  /** True iff a persisted IVF-BQ layout exists for `sourceDir` AT the
-    * given operating point (meta check only — the [[ivfSq8Exists]]
-    * contract; a tombstoned layout must be OPENED, not re-ensured).
-    */
   def ivfBqExists(spark: SparkSession, sourceDir: String,
-      lists: Int = 64, iters: Int = 5, storageBuckets: Int = 8): Boolean = {
-    val meta = readMeta(ivfBqBase(spark, IndexStore.pathTag(sourceDir)))
-    meta.get("lists").contains(lists.toLong) &&
-      meta.get("iters").contains(iters.toLong) &&
-      meta.get("buckets").contains(storageBuckets.toLong)
-  }
+      lists: Int = 64, iters: Int = 5, storageBuckets: Int = 8): Boolean =
+    existsIvfCodes(Bq, spark, sourceDir, lists, iters, storageBuckets)
 
-  /** Open an existing persisted IVF-BQ index read-only, WITHOUT a
-    * freshness probe (the [[openIvfSq8]] contract).
-    */
-  def openIvfBq(spark: SparkSession, sourceDir: String): IvfBqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfBqBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("lists") && meta.contains("buckets"),
-      s"no persisted IVF-BQ index for '$sourceDir' ($base)")
-    require(parquetReadable(spark, s"$base/lists") &&
-      parquetReadable(spark, s"$base/vecs") &&
-      parquetReadable(spark, s"$base/centroids"),
-      s"persisted IVF-BQ layout for '$sourceDir' is unreadable — run " +
-        "ensureIvfBq to rebuild")
-    if (!ivfBqRegistered(spark, tag))
-      attachIvfBq(spark, tag, meta("buckets").toInt)
-    else {
-      spark.catalog.refreshTable(s"graft_ivfbq_lists_$tag")
-      spark.catalog.refreshTable(s"graft_ivfbq_vecs_$tag")
-      // align with the store, DDL only on a change
-      syncTombs(spark, base, s"graft_ivfbq_tombs_$tag",
-        clusteredBy = Some(("vec_id", meta("buckets").toInt)))
-    }
-    ivfBqHandle(spark, tag)
-  }
+  def openIvfBq(spark: SparkSession, sourceDir: String): IvfCodesHandle =
+    openIvfCodes(Bq, spark, sourceDir)
 
-  /** Compact the persisted IVF-BQ layout ([[compactIvfSq8]]'s 1-bit
-    * twin): rewrites the sign-packed lists at the same partitioning
-    * and the vecs at the same bucketing; FOLDS tombstones when present
-    * (n_base deliberately NOT reduced — the centroids trained on the
-    * original base). Not safe concurrent with a writer.
-    */
-  def compactIvfBq(spark: SparkSession, sourceDir: String): IvfBqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfBqBase(spark, tag)
-    openIvfBq(spark, sourceDir) // validates meta + attaches + refreshes
-    val meta = readMeta(base)
-    val sb = meta("buckets").toInt
-    val folding = meta.get("tomb_rows").exists(_ > 0L) &&
-      spark.catalog.tableExists(s"graft_ivfbq_tombs_$tag")
-    val tombs =
-      if (folding) Some(spark.table(s"graft_ivfbq_tombs_$tag")) else None
-    compactPartitioned(spark, base, s"graft_ivfbq_lists_$tag", "lists",
-      "centroid_id",
-      tombs.map(t => spark.table(s"graft_ivfbq_lists_$tag")
-        .join(t, Seq("centroid_id", "vec_id"), "left_anti")))
-    compactBucketed(spark, base, s"graft_ivfbq_vecs_$tag", "vecs",
-      "vec_id", sb,
-      tombs.map(t => spark.table(s"graft_ivfbq_vecs_$tag")
-        .join(t.select("vec_id"), Seq("vec_id"), "left_anti")))
-    if (folding) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_ivfbq_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
-    }
-    attachIvfBq(spark, tag, sb)
-    if (folding) {
-      val (n, fp) = fingerprint(spark.table(s"graft_ivfbq_vecs_$tag")
-        .select("vec_id", "embedding"))
-      writeMetaFull(base,
-        (meta - "n_rows" - "checksum" - "tomb_rows").toSeq ++
-          Seq("n_rows" -> n, "checksum" -> fp),
-        Nil)
-    }
-    ivfBqHandle(spark, tag)
-  }
+  def compactIvfBq(spark: SparkSession, sourceDir: String): IvfCodesHandle =
+    compactIvfCodes(Bq, spark, sourceDir)
 
   /** Query the persisted IVF-BQ index: rank centroids per query
     * (broadcast, tiny), Hamming-scan ONLY the probed lists' 1-bit
@@ -4131,7 +3563,7 @@ object AnnIndex {
     */
   def queryIvfBq(
       queries: DataFrame,
-      handle: IvfBqHandle,
+      handle: IvfCodesHandle,
       k: Int = 4,
       nProbe: Int = 24,
       m: Int = 256): DataFrame = {
@@ -4149,7 +3581,7 @@ object AnnIndex {
     */
   def queryIvfBqFiltered(
       queries: DataFrame,
-      handle: IvfBqHandle,
+      handle: IvfCodesHandle,
       allowed: DataFrame,
       k: Int = 4,
       nProbe: Int = 24,

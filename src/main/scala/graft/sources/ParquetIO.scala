@@ -95,7 +95,9 @@ private[graft] object ParquetIO {
     * job: footer-derived data columns plus the caller-declared
     * partition columns (the columns `partitionBy` dropped from the
     * files; directory discovery still binds their VALUES — only the
-    * inference pass is skipped). Falls back to the plain read when no
+    * inference pass is skipped). Partition columns the caller does not
+    * declare are still discovered and appended, with inferred types
+    * (pinned by ParquetIOSpec). Falls back to the plain read when no
     * footer is readable so absent-layout errors keep their shape.
     */
   def read(spark: SparkSession, dir: String,

@@ -2,7 +2,8 @@ package graft.sources
 
 import graft.{Tables, TestSpark}
 import graft.operators.SimilaritySearch
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,6 +30,79 @@ class AnnIndexSpec extends AnyFunSuite {
 
   // unique layout locations per suite run so reruns never see stale meta
   private val runTag = java.util.UUID.randomUUID.toString.take(8)
+
+  /** One codec of the flat quantized layouts: its public verbs and its
+    * fixture. The lifecycle tests written once below run per codec; BQ
+    * runs on the 1536-dim fixture of the BQ / IVF-BQ family.
+    */
+  private case class FlatCodec(label: String, stem: String,
+      rows: () => DataFrame, qs: () => DataFrame,
+      ensure: (String, DataFrame, Option[String]) => AnnIndex.CodesHandle,
+      open: String => AnnIndex.CodesHandle,
+      query: (DataFrame, AnnIndex.CodesHandle) => DataFrame)
+
+  private val flatCodecs = Seq(
+    FlatCodec("SQ8", "sq8", () => emb, () => queries,
+      (src, rows, snap) => AnnIndex.ensureSq8(spark, src, rows,
+        snapshotId = snap),
+      src => AnnIndex.openSq8(spark, src),
+      (q, h) => AnnIndex.querySq8(q, h, k = 4, m = 32)),
+    FlatCodec("BQ", "bq", () => tiled1536, () => tQueries,
+      (src, rows, snap) => AnnIndex.ensureBq(spark, src, rows,
+        snapshotId = snap),
+      src => AnnIndex.openBq(spark, src),
+      (q, h) => AnnIndex.queryBq(q, h, k = 4, m = 256)))
+
+  /** One codec of the composed IVF layouts (lists = 8, iters = 3,
+    * nProbe = 3 throughout): its public and streaming verbs, its
+    * in-memory twin and list assigner, and its fixture.
+    */
+  private case class IvfCodec(verb: String, label: String, stem: String,
+      encoding: String, rows: () => DataFrame, qs: () => DataFrame,
+      ensure: (String, DataFrame) => AnnIndex.IvfCodesHandle,
+      upsert: (String, DataFrame, Option[Long]) => AnnIndex.IvfCodesHandle,
+      open: String => AnnIndex.IvfCodesHandle,
+      compact: String => AnnIndex.IvfCodesHandle,
+      query: (DataFrame, AnnIndex.IvfCodesHandle) => DataFrame,
+      inMemory: (DataFrame, DataFrame, DataFrame) => DataFrame,
+      assign: (DataFrame, DataFrame) => DataFrame,
+      streamUpsert: (DataFrame, String) => DataStreamWriter[Row],
+      streamRetrieve: (DataFrame, String, (DataFrame, Long) => Unit) =>
+        DataStreamWriter[Row])
+
+  private val ivfCodecs = Seq(
+    IvfCodec("Sq8", "IVF-SQ8", "ivfsq8", "quantized", () => emb,
+      () => queries,
+      (src, rows) => AnnIndex.ensureIvfSq8(spark, src, rows, lists = 8,
+        iters = 3),
+      (src, rows, b) => AnnIndex.upsertIvfSq8(spark, src, rows, lists = 8,
+        iters = 3, batchId = b),
+      src => AnnIndex.openIvfSq8(spark, src),
+      src => AnnIndex.compactIvfSq8(spark, src),
+      (q, h) => AnnIndex.queryIvfSq8(q, h, k = 4, nProbe = 3, m = 16),
+      (q, rows, cents) => SimilaritySearch.ivfSq8TopK(q, rows, cents,
+        k = 4, nProbe = 3, m = 16),
+      SimilaritySearch.assignQuantized,
+      (df, src) => graft.streaming.StreamOps.streamingIvfSq8Upsert(df, src,
+        lists = 8, iters = 3),
+      (df, src, sink) => graft.streaming.StreamOps.streamingIvfSq8Retrieve(
+        df, src, k = 4, nProbe = 3, m = 16)(sink)),
+    IvfCodec("Bq", "IVF-BQ", "ivfbq", "binary", () => tiled1536,
+      () => tQueries,
+      (src, rows) => AnnIndex.ensureIvfBq(spark, src, rows, lists = 8,
+        iters = 3),
+      (src, rows, b) => AnnIndex.upsertIvfBq(spark, src, rows, lists = 8,
+        iters = 3, batchId = b),
+      src => AnnIndex.openIvfBq(spark, src),
+      src => AnnIndex.compactIvfBq(spark, src),
+      (q, h) => AnnIndex.queryIvfBq(q, h, k = 4, nProbe = 3, m = 256),
+      (q, rows, cents) => SimilaritySearch.ivfBqTopK(q, rows, cents,
+        k = 4, nProbe = 3, m = 256),
+      SimilaritySearch.assignBinary,
+      (df, src) => graft.streaming.StreamOps.streamingIvfBqUpsert(df, src,
+        lists = 8, iters = 3),
+      (df, src, sink) => graft.streaming.StreamOps.streamingIvfBqRetrieve(
+        df, src, k = 4, nProbe = 3, m = 256)(sink)))
 
   test("persisted queryLsh is row-identical to the in-memory lshTopK") {
     val h = AnnIndex.ensureLsh(spark, s"spec-$runTag-a", emb,
@@ -315,18 +389,20 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(h3.codes.count() === fewer.count())
   }
 
-  test("SQ8 snapshot-id freshness mirrors the LSH contract") {
-    val src = s"spec-$runTag-sq8snap"
-    val rows1 = emb.filter(col("vec_id") < 200)
-    val h1 = AnnIndex.ensureSq8(spark, src, rows1, snapshotId = Some("v1"))
-    assert(h1.codes.count() === rows1.count())
-    // different content, SAME id: trusted without a scan — no rebuild
-    val rows2 = emb.filter(col("vec_id") < 300)
-    val h2 = AnnIndex.ensureSq8(spark, src, rows2, snapshotId = Some("v1"))
-    assert(h2.codes.count() === rows1.count())
-    // a NEW id re-fingerprints and rebuilds on the real change
-    val h3 = AnnIndex.ensureSq8(spark, src, rows2, snapshotId = Some("v2"))
-    assert(h3.codes.count() === rows2.count())
+  flatCodecs.foreach { c =>
+    test(s"${c.label} snapshot-id freshness mirrors the LSH contract") {
+      val src = s"spec-$runTag-${c.stem}snap"
+      val rows1 = c.rows().filter(col("vec_id") < 200)
+      val h1 = c.ensure(src, rows1, Some("v1"))
+      assert(h1.codes.count() === rows1.count())
+      // different content, SAME id: trusted without a scan — no rebuild
+      val rows2 = c.rows().filter(col("vec_id") < 300)
+      val h2 = c.ensure(src, rows2, Some("v1"))
+      assert(h2.codes.count() === rows1.count())
+      // a NEW id re-fingerprints and rebuilds on the real change
+      val h3 = c.ensure(src, rows2, Some("v2"))
+      assert(h3.codes.count() === rows2.count())
+    }
   }
 
   test("querySq8Filtered: pre-filter semantics — top-k within the " +
@@ -395,22 +471,25 @@ class AnnIndexSpec extends AnyFunSuite {
       "live append into the compacted table failed")
   }
 
-  test("a crashed SQ8 compaction's rename window (live dir missing under " +
-      "a matching meta) is recovered by ensureSq8 as a rebuild") {
-    val src = s"spec-$runTag-sq8m"
-    val h0 = AnnIndex.ensureSq8(spark, src, emb)
-    val expected = hits(AnnIndex.querySq8(queries, h0, k = 4, m = 32))
-    val tag = IndexStore.pathTag(src)
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      java.nio.file.Paths.get(s"/tmp/graft_ann_sq8_$tag/codes").toFile)
-    // openSq8 / upsertSq8 must fail loudly on the gutted layout…
-    val e = intercept[IllegalArgumentException] {
-      AnnIndex.openSq8(spark, src)
+  flatCodecs.foreach { c =>
+    test(s"a crashed ${c.label} compaction's rename window (live dir missing " +
+        s"under a matching meta) is recovered by ensure${c.stem.capitalize} " +
+        "as a rebuild") {
+      val src = s"spec-$runTag-${c.stem}m"
+      val h0 = c.ensure(src, c.rows(), None)
+      val expected = hits(c.query(c.qs(), h0))
+      val tag = IndexStore.pathTag(src)
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        java.nio.file.Paths.get(s"/tmp/graft_ann_${c.stem}_$tag/codes").toFile)
+      // open / upsert must fail loudly on the gutted layout…
+      val e = intercept[IllegalArgumentException] {
+        c.open(src)
+      }
+      assert(e.getMessage.contains("unreadable"))
+      // …and ensure treats it as stale and rebuilds
+      val h = c.ensure(src, c.rows(), None)
+      assert(hits(c.query(c.qs(), h)) === expected)
     }
-    assert(e.getMessage.contains("unreadable"))
-    // …and ensureSq8 treats it as stale and rebuilds
-    val h = AnnIndex.ensureSq8(spark, src, emb)
-    assert(hits(AnnIndex.querySq8(queries, h, k = 4, m = 32)) === expected)
   }
 
   test("persisted IVF-SQ8 equals the in-memory composed path AND the " +
@@ -435,101 +514,103 @@ class AnnIndexSpec extends AnyFunSuite {
       "quantized lists must not carry the float vectors")
   }
 
-  test("upserted IVF-SQ8 lists equal a full quantized assignment against " +
-      "the stored centroids, and the drift gate fires") {
-    val src = s"spec-$runTag-ivfsq8up"
-    val baseRows = emb.filter(col("vec_id") % 10 =!= 7)
-    val tailRows = emb.filter(col("vec_id") % 10 === 7)
-    AnnIndex.ensureIvfSq8(spark, src, baseRows, lists = 8, iters = 3)
-    val h = AnnIndex.upsertIvfSq8(spark, src, tailRows, lists = 8, iters = 3)
-    val expected = SimilaritySearch.assignQuantized(emb, h.centroids)
-      .select("centroid_id", "vec_id")
-    val stored = h.lists.select("centroid_id", "vec_id")
-    assert(expected.exceptAll(stored).count() === 0, "missing assignments")
-    assert(stored.exceptAll(expected).count() === 0, "extra assignments")
-    assert(h.vecs.count() === emb.count())
-    // replayed batch id is a no-op
-    val n1 = h.lists.count()
-    val h2 = AnnIndex.upsertIvfSq8(spark, src,
-      tailRows.select((col("vec_id") + 700000L).as("vec_id"),
-        col("embedding")), lists = 8, iters = 3, batchId = Some(0L))
-    AnnIndex.upsertIvfSq8(spark, src,
-      tailRows.select((col("vec_id") + 700000L).as("vec_id"),
-        col("embedding")), lists = 8, iters = 3, batchId = Some(0L))
-    assert(h2.lists.count() === n1 + tailRows.count(),
-      "replayed batch must be skipped")
-    // drift gate: a tail overwhelming the trained base fails loudly
-    val e = intercept[IllegalStateException] {
-      AnnIndex.upsertIvfSq8(spark, src,
-        emb.select((col("vec_id") + 800000L).as("vec_id"), col("embedding"))
-          .unionByName(emb.select((col("vec_id") + 900000L).as("vec_id"),
-            col("embedding"))),
-        lists = 8, iters = 3)
+  ivfCodecs.foreach { c =>
+    test(s"upserted ${c.label} lists equal a full ${c.encoding} assignment " +
+        "against the stored centroids, and the drift gate fires") {
+      val emb = c.rows()
+      val src = s"spec-$runTag-${c.stem}up"
+      val baseRows = emb.filter(col("vec_id") % 10 =!= 7)
+      val tailRows = emb.filter(col("vec_id") % 10 === 7)
+      c.ensure(src, baseRows)
+      val h = c.upsert(src, tailRows, None)
+      val expected = c.assign(emb, h.centroids)
+        .select("centroid_id", "vec_id")
+      val stored = h.lists.select("centroid_id", "vec_id")
+      assert(expected.exceptAll(stored).count() === 0, "missing assignments")
+      assert(stored.exceptAll(expected).count() === 0, "extra assignments")
+      assert(h.vecs.count() === emb.count())
+      // replayed batch id is a no-op
+      val n1 = h.lists.count()
+      val h2 = c.upsert(src,
+        tailRows.select((col("vec_id") + 700000L).as("vec_id"),
+          col("embedding")), Some(0L))
+      c.upsert(src,
+        tailRows.select((col("vec_id") + 700000L).as("vec_id"),
+          col("embedding")), Some(0L))
+      assert(h2.lists.count() === n1 + tailRows.count(),
+        "replayed batch must be skipped")
+      // drift gate: a tail overwhelming the trained base fails loudly
+      val e = intercept[IllegalStateException] {
+        c.upsert(src,
+          emb.select((col("vec_id") + 800000L).as("vec_id"), col("embedding"))
+            .unionByName(emb.select((col("vec_id") + 900000L).as("vec_id"),
+              col("embedding"))),
+          None)
+      }
+      assert(e.getMessage.contains("drift"))
     }
-    assert(e.getMessage.contains("drift"))
   }
 
-  test("compactIvfSq8 rewrites upserted appends into few files with " +
-      "identical answers; streaming ingest + retrieve serve the " +
-      "composed layout end-to-end") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = s"spec-$runTag-ivfsq8s"
-    val baseRows = emb.filter(col("vec_id") % 10 =!= 7)
-    AnnIndex.ensureIvfSq8(spark, src, baseRows, lists = 8, iters = 3)
-    // stream the 10% tail in two micro-batches through the composed
-    // upsert (assignment to stored centroids + quantization per batch)
-    val tail = emb.filter(col("vec_id") % 10 === 7)
-      .select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val (tail1, tail2) = tail.splitAt(tail.length / 2)
-    val mem = MemoryStream[(Long, Array[Float])]
-    val q = graft.streaming.StreamOps.streamingIvfSq8Upsert(
-      mem.toDF().toDF("vec_id", "embedding"), src, lists = 8, iters = 3)
-      .start()
-    mem.addData(tail1.toIndexedSeq: _*)
-    q.processAllAvailable()
-    mem.addData(tail2.toIndexedSeq: _*)
-    q.processAllAvailable()
-    q.stop()
-    val before = AnnIndex.openIvfSq8(spark, src)
-    assert(before.vecs.count() === emb.count())
-    val beforeHits = hits(AnnIndex.queryIvfSq8(queries, before, k = 4,
-      nProbe = 3, m = 16))
-    // streamed layout answers exactly like the in-memory composed path
-    // over the full set at the same centroids
-    assert(beforeHits === hits(SimilaritySearch.ivfSq8TopK(queries, emb,
-      before.centroids, k = 4, nProbe = 3, m = 16)))
-    // streaming retrieve serves the same answers from the stored layout
-    val qmem = MemoryStream[(Long, Array[Float])]
-    var streamed = Set.empty[(Long, Int, Long)]
-    val rq = graft.streaming.StreamOps.streamingIvfSq8Retrieve(
-      qmem.toDF().toDF("query_id", "query_vec"), src, k = 4, nProbe = 3,
-      m = 16) { (df, _) => streamed = hits(df) }
-      .start()
-    qmem.addData(queries.collect().map(r =>
-      (r.getLong(0), r.getSeq[Float](1).toArray)).toIndexedSeq: _*)
-    rq.processAllAvailable()
-    rq.stop()
-    assert(streamed === beforeHits)
-    // compaction: fewer files, identical answers, replay guard intact
-    val beforeFiles = before.lists.inputFiles.length +
-      before.vecs.inputFiles.length
-    val h = AnnIndex.compactIvfSq8(spark, src)
-    assert(h.lists.inputFiles.length + h.vecs.inputFiles.length
-      < beforeFiles,
-      s"no file-count win ($beforeFiles -> ${
-        h.lists.inputFiles.length + h.vecs.inputFiles.length})")
-    assert(hits(AnnIndex.queryIvfSq8(queries, h, k = 4, nProbe = 3,
-      m = 16)) === beforeHits)
-    val n1 = h.lists.count()
-    AnnIndex.upsertIvfSq8(spark, src,
-      tail.take(5).map(r => (r._1 + 910000L, r._2)).toSeq
-        .toDF("vec_id", "embedding"),
-      lists = 8, iters = 3, batchId = Some(0L))
-    assert(AnnIndex.openIvfSq8(spark, src).lists.count() === n1,
-      "replay guard lost by compaction")
+  ivfCodecs.foreach { c =>
+    test(s"compactIvf${c.verb} rewrites upserted appends into few files with " +
+        "identical answers; streaming ingest + retrieve serve the " +
+        "composed layout end-to-end") {
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val emb = c.rows()
+      val queries = c.qs()
+      val src = s"spec-$runTag-${c.stem}s"
+      val baseRows = emb.filter(col("vec_id") % 10 =!= 7)
+      c.ensure(src, baseRows)
+      // stream the 10% tail in two micro-batches through the composed
+      // upsert (assignment to stored centroids + quantization per batch)
+      val tail = emb.filter(col("vec_id") % 10 === 7)
+        .select("vec_id", "embedding").collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      val (tail1, tail2) = tail.splitAt(tail.length / 2)
+      val mem = MemoryStream[(Long, Array[Float])]
+      val q = c.streamUpsert(mem.toDF().toDF("vec_id", "embedding"), src)
+        .start()
+      mem.addData(tail1.toIndexedSeq: _*)
+      q.processAllAvailable()
+      mem.addData(tail2.toIndexedSeq: _*)
+      q.processAllAvailable()
+      q.stop()
+      val before = c.open(src)
+      assert(before.vecs.count() === emb.count())
+      val beforeHits = hits(c.query(queries, before))
+      // streamed layout answers exactly like the in-memory composed path
+      // over the full set at the same centroids
+      assert(beforeHits === hits(c.inMemory(queries, emb, before.centroids)))
+      // streaming retrieve serves the same answers from the stored layout
+      val qmem = MemoryStream[(Long, Array[Float])]
+      var streamed = Set.empty[(Long, Int, Long)]
+      val rq = c.streamRetrieve(qmem.toDF().toDF("query_id", "query_vec"),
+        src, (df, _) => streamed = hits(df))
+        .start()
+      qmem.addData(queries.collect().map(r =>
+        (r.getLong(0), r.getSeq[Float](1).toArray)).toIndexedSeq: _*)
+      rq.processAllAvailable()
+      rq.stop()
+      assert(streamed === beforeHits)
+      // compaction: fewer files, identical answers, replay guard intact
+      val beforeFiles = before.lists.inputFiles.length +
+        before.vecs.inputFiles.length
+      val h = c.compact(src)
+      assert(h.lists.inputFiles.length + h.vecs.inputFiles.length
+        < beforeFiles,
+        s"no file-count win ($beforeFiles -> ${
+          h.lists.inputFiles.length + h.vecs.inputFiles.length})")
+      assert(hits(c.query(queries, h)) === beforeHits)
+      val n1 = h.lists.count()
+      c.upsert(src,
+        tail.take(5).map(r => (r._1 + 910000L, r._2)).toSeq
+          .toDF("vec_id", "embedding"),
+        Some(0L))
+      assert(c.open(src).lists.count() === n1,
+        "replay guard lost by compaction")
+    }
   }
 
   test("compactIvf rewrites the partitioned lists with identical " +

@@ -126,6 +126,43 @@ class CatalogHygieneSpec extends AnyFunSuite {
       s"tombstoned open did not stabilize: ${evs2.mkString(", ")}")
   }
 
+  // the IVF upserts re-derive the tombs registration before their
+  // tombstone clash check: a delete another session committed while
+  // this one held the lists/vecs registration must still refuse the
+  // re-insert (the anti-join would silently swallow it)
+  Seq[(String, String, String => Any, String => Any, String => Any)](
+    ("IVF-SQ8", "ivfsq8",
+      key => AnnIndex.ensureIvfSq8(spark, key, vecs(64), lists = 4,
+        iters = 2),
+      key => AnnIndex.deleteIvfSq8(spark, key, Seq(5L).toDF("vec_id")),
+      key => AnnIndex.upsertIvfSq8(spark, key,
+        vecs(64).filter(col("vec_id") === 5L), lists = 4, iters = 2)),
+    ("IVF-BQ", "ivfbq",
+      key => AnnIndex.ensureIvfBq(spark, key, vecs(64), lists = 4,
+        iters = 2),
+      key => AnnIndex.deleteIvfBq(spark, key, Seq(5L).toDF("vec_id")),
+      key => AnnIndex.upsertIvfBq(spark, key,
+        vecs(64).filter(col("vec_id") === 5L), lists = 4, iters = 2)),
+    ("IVF-PQ", "ivfpq",
+      key => AnnIndex.ensureIvfPq(spark, key, vecs(64), lists = 4,
+        iters = 2, numSub = 2, ksub = 4),
+      key => AnnIndex.deleteIvfPq(spark, key, Seq(5L).toDF("vec_id")),
+      key => AnnIndex.upsertIvfPq(spark, key,
+        vecs(64).filter(col("vec_id") === 5L)))
+  ).foreach { case (label, layout, ensure, delete, upsert) =>
+    test(s"$label upsert refuses an id tombstoned by another session") {
+      val key = s"hyg-$runTag-$layout-x"
+      ensure(key)
+      delete(key)
+      // simulate a foreign session's delete commit by dropping only the
+      // local tombs registration
+      spark.sql(s"DROP TABLE IF EXISTS graft_${layout}_tombs_" +
+        IndexStore.pathTag(key))
+      val e = intercept[IllegalArgumentException] { upsert(key) }
+      assert(e.getMessage.contains("tombstoned"))
+    }
+  }
+
   test("second openSq8 and openIvf issue zero catalog DDL") {
     val key = s"hyg-$runTag-q"
     AnnIndex.ensureSq8(spark, key, vecs(64))

@@ -67,6 +67,17 @@ class ParquetIOSpec extends AnyFunSuite {
       spark.read.parquet(store).orderBy("id").collect().toSeq)
   }
 
+  test("read without declared partition cols still discovers a " +
+      "partitioned dir's partition columns") {
+    val store = tmp("undeclared")
+    Seq((1L, "a", 0), (2L, "b", 1), (3L, "c", 0))
+      .toDF("id", "s", "hb").write.partitionBy("hb").parquet(store)
+    val viaIo = ParquetIO.read(spark, store)
+    assert(viaIo.schema == spark.read.parquet(store).schema)
+    assert(viaIo.orderBy("id").collect().toSeq ==
+      spark.read.parquet(store).orderBy("id").collect().toSeq)
+  }
+
   test("footer schema == inferred schema on every fixture table") {
     graft.Tables.ensureNanosAsLong(spark)
     graft.Tables.names.foreach { n =>
