@@ -1,8 +1,10 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.{Column, GraftExprBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -59,16 +61,27 @@ object VectorExpressions {
   def logistic_prob(vec: Column, weights: Array[Float], bias: Double): Column =
     col(LogisticProbF(ex(vec), weights, bias))
 
-  /** Ordinal (0-based row index into `centroids`, a k×dim flat array)
-    * of the max-cosine centroid for `vec`; ties keep the LOWEST
-    * ordinal — exactly the `max_by(struct(csim, -centroid_id))`
-    * assignment rule of the Lloyd loop, with the cosine accumulated in
-    * the same order as [[CosineF]] so the scores (and therefore the
-    * argmax) are bit-identical to the old crossJoin+max_by form.
+  /** A double model constant as a codegen REFERENCE OBJECT, not a
+    * literal: a literal is inlined into the generated Java, so every new
+    * value (a corpus statistic after each upsert, a bias after each GD
+    * step) re-keys the codegen cache and recompiles the stage. Never
+    * constant-folded (it would turn back into a literal); evaluates to
+    * exactly `value`.
+    */
+  def double_ref(value: Double): Column = col(DoubleRefF(value))
+
+  /** Id of the max-cosine centroid for `vec`: row j of `centroids` (a
+    * k×dim flat array, k = ids.length) is centroid `ids(j)`. Ties keep
+    * the LOWEST row, so with rows sorted by id this is exactly the
+    * `max_by(centroid_id, struct(csim, -centroid_id))` assignment rule,
+    * with the cosine accumulated in the same order as [[CosineF]] — the
+    * scores (and therefore the argmax) are bit-identical to a crossJoin
+    * of [[cosine_f]] against the centroid relation. `idType` is the
+    * centroid id column's type (int or bigint).
     */
   def nearest_centroid_cos(vec: Column, centroids: Array[Double],
-      k: Int): Column =
-    col(NearestCentroidCosF(ex(vec), centroids, k))
+      ids: Array[Long], idType: DataType): Column =
+    col(NearestCentroidCosF(ex(vec), centroids, ids, idType))
 
   /** Symmetric per-vector int8 quantization codes: round(x_i · 127 /
     * max|x|) packed as BINARY (one byte per component; all-zero input →
@@ -384,19 +397,38 @@ case class LogisticProbF(child: Expression, weights: Array[Float],
     copy(child = newChild)
 }
 
-/** argmax-cosine centroid assignment against a k-bounded model array —
-  * the Lloyd-training inner kernel (model parameters embedded as a
-  * reference object, the [[graft.functions.expressions.PqExpressions]]
-  * codebook discipline). Build-side one-pass expression; interpreted
-  * eval like `PqEncodeF`.
+/** A double constant held as a reference object (see
+  * [[VectorExpressions.double_ref]]) — the one-element-array idiom of
+  * [[LogisticProbF]]'s bias.
+  */
+case class DoubleRefF(value: Double) extends LeafExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("value", Array(value), "double[]")
+    ev.copy(code = code"final double ${ev.value} = $ref[0];",
+      isNull = FalseLiteral)
+  }
+}
+
+/** argmax-cosine centroid assignment against a k-bounded model — the
+  * Lloyd-training and inverted-list placement kernel. The centroid
+  * array and the row → id map ride as reference objects (the
+  * [[graft.functions.expressions.PqExpressions]] codebook discipline),
+  * and k and dim are read off them, so the generated source does not
+  * depend on the model: the codegen cache hits across Lloyd rounds,
+  * builds and upserts.
   */
 case class NearestCentroidCosF(child: Expression, centroids: Array[Double],
-    k: Int)
+    ids: Array[Long], dataType: DataType)
     extends UnaryExpression {
+  private val k = ids.length
   require(k >= 1 && centroids.length % k == 0 && centroids.nonEmpty,
     s"centroids length ${centroids.length} is not a positive multiple of k=$k")
+  require(dataType == IntegerType || dataType == LongType,
+    s"centroid ids must be int or bigint, got $dataType")
   private val dim = centroids.length / k
-  override def dataType: DataType = IntegerType
 
   override def nullSafeEval(a: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -417,19 +449,19 @@ case class NearestCentroidCosF(child: Expression, centroids: Array[Double],
       }
       val denom = math.sqrt(na) * math.sqrt(nb)
       val s = if (denom == 0.0) 0.0 else d / denom
-      if (s > bestS) { bestS = s; bestJ = j } // strict > keeps lowest ordinal on ties
+      if (s > bestS) { bestS = s; bestJ = j } // strict > keeps lowest row on ties
       j += 1
     }
-    bestJ
+    if (dataType == IntegerType) ids(bestJ).toInt else ids(bestJ)
   }
 
-  // codegen'd k·dim loop (the model array rides as a reference object):
-  // the Lloyd assignment scans the WHOLE index every round, so an
-  // interpreted kernel would put a 10×+ constant on the hottest pass
-  // of every k-means training call
+  // codegen'd k·dim loop: the assignment scans the WHOLE index (every
+  // Lloyd round, every list build), so an interpreted kernel would put
+  // a 10×+ constant on the hottest pass
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
       val cents = ctx.addReferenceObj("centroids", centroids, "double[]")
+      val idArr = ctx.addReferenceObj("ids", ids, "long[]")
       val n = ctx.freshName("n")
       val j = ctx.freshName("j")
       val i = ctx.freshName("i")
@@ -443,12 +475,15 @@ case class NearestCentroidCosF(child: Expression, centroids: Array[Double],
       val s = ctx.freshName("s")
       val bestJ = ctx.freshName("bestJ")
       val bestS = ctx.freshName("bestS")
+      val dm = ctx.freshName("dim")
+      val jt = CodeGenerator.javaType(dataType)
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $dim);
+         |int $dm = $cents.length / $idArr.length;
+         |int $n = java.lang.Math.min($a.numElements(), $dm);
          |int $bestJ = 0;
          |double $bestS = java.lang.Double.NEGATIVE_INFINITY;
-         |for (int $j = 0; $j < $k; $j++) {
-         |  int $base = $j * $dim;
+         |for (int $j = 0; $j < $idArr.length; $j++) {
+         |  int $base = $j * $dm;
          |  double $d = 0.0; double $na = 0.0; double $nb = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
          |    double $xv = ${VecKernels.jGet(child, a, i)};
@@ -459,7 +494,7 @@ case class NearestCentroidCosF(child: Expression, centroids: Array[Double],
          |  double $s = ($den == 0.0) ? 0.0 : $d / $den;
          |  if ($s > $bestS) { $bestS = $s; $bestJ = $j; }
          |}
-         |${ev.value} = $bestJ;
+         |${ev.value} = ($jt) $idArr[$bestJ];
        """.stripMargin
     })
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -115,9 +115,12 @@ object KeywordSearch {
     // either way, see [[Bm25Stats]].
     val withStats: DataFrame => DataFrame = stats match {
       case Some(st) =>
+        // reference objects, not literals: inlined values would re-key
+        // the scoring stage's codegen cache after every upsert/delete
+        import graft.functions.expressions.VectorExpressions.double_ref
         df => df
-          .withColumn("n_docs", lit(st.nDocs.toDouble))
-          .withColumn("avgdl", lit(st.sumDl.toDouble / st.nDocs.toDouble))
+          .withColumn("n_docs", double_ref(st.nDocs.toDouble))
+          .withColumn("avgdl", double_ref(st.sumDl.toDouble / st.nDocs.toDouble))
       case None =>
         val derived = postings.select("doc_id", "dl").groupBy("doc_id")
           .agg(first("dl").as("dl"))

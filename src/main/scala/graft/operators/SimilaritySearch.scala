@@ -4,6 +4,7 @@ import graft.functions.VectorOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType}
 
 /** Approximate/exact nearest-neighbor search over an embedding column —
   * the Spark-native analogue of the reference's Pinecone cosine index
@@ -280,14 +281,12 @@ object SimilaritySearch {
 
   /** Per-subspace L2 k-means codebooks for product quantization:
     * (sub_id 0-based, centroid_id 0-based < ksub, centroid_vec of
-    * dim/numSub doubles). All `numSub` subspaces train JOINTLY — one
-    * exploded (sub_id, vec_id, subvec) relation, assignment is a
-    * broadcast join against the numSub·ksub-row centroid set collapsed
-    * map-side by min_by (no window), the re-average one (sub, centroid,
-    * dim) aggregate — so a Lloyd round is two shuffles total no matter
-    * how many subspaces, and lineage is checkpoint-truncated per round
-    * like [[kMeansRefine]]. Seeds: the subvectors of the `ksub` index
-    * vectors with smallest xxhash64(vec_id) — the same stable draw as
+    * dim/numSub doubles). All `numSub` subspaces train JOINTLY: a Lloyd
+    * round is ONE map-only job ([[lloydStep]]) — the per-row encode
+    * assigns every subvector, each task sums its rows into model-sized
+    * per-(sub, centroid) arrays, the driver folds them — no matter how
+    * many subspaces. Seeds: the subvectors of the `ksub` index vectors
+    * with smallest xxhash64(vec_id) — the same stable draw as
     * [[kMeansCentroids]], shared across subspaces. An emptied centroid
     * keeps its previous position (same guard as kMeansRefine).
     *
@@ -304,18 +303,13 @@ object SimilaritySearch {
     import spark.implicits._
     // Lloyd state is MODEL-SIZED (numSub · ksub · dsub doubles — the
     // same bound collectCodebook relies on), so the whole training loop
-    // keeps the codebook on the driver and pays ONE Spark job per
-    // round: assignment as a map-side expression over the raw vectors
-    // (pq_encode_codes — the same argmin-L2/lowest-id kernel the old
-    // broadcast-join + min_by computed, now with no join and no
-    // per-round broadcast build) feeding ONE (sub, centroid, dim)
-    // partial-aggregated avg whose model-bounded result is collected
-    // and folded on the driver. The old loop paid, per round: a
-    // broadcast build, the assignment exchange, the refresh exchange,
-    // an empty-cluster anti-join and an EAGER checkpoint — JobProfile
-    // attributed 11 s of q121 to exactly those stages (guide §1.2 step
-    // 1: remove passes; §5: the driver should hold model state, not
-    // row state).
+    // keeps the codebook on the driver and pays ONE map-only Spark job
+    // per round: assignment as a map-side expression over the raw
+    // vectors (pq_encode_codes — argmin-L2, lowest id on ties) feeding
+    // the per-task sums of [[lloydStep]]. No row ever crosses a
+    // shuffle: an exploded (sub, centroid, dim) aggregate would ship
+    // n·dim rows per round; model state stays on the Spark driver, row
+    // state on the executors.
     val seedRows = index
       .withColumn("h", xxhash64(col("vec_id")))
       .orderBy("h", "vec_id").limit(ksub)
@@ -337,38 +331,11 @@ object SimilaritySearch {
     for { ((_, v), cid) <- seedRows.sortBy(_._1).zipWithIndex
           s <- 0 until numSub; i <- 0 until dsub }
       flat((s * effK + cid) * dsub + i) = v(s * dsub + i)
-    for (_ <- 1 to iters) {
-      // one job: encode per row (no shuffle), posexplode to
-      // (sub, centroid, dim, x), ONE partial-aggregated avg exchange,
-      // model-bounded collect
-      // encode in its OWN projection BELOW the explode (see
-      // kMeansRefine: a generator sibling would re-evaluate the
-      // numSub·ksub·dsub kernel once per exploded dim)
-      val rows = index
-        .select(pq_encode_codes(col("embedding"), flat, numSub, effK)
-            .as("codes"),
-          VectorOps.toDouble(col("embedding")).as("v"))
-        .select(col("codes"), posexplode(col("v")).as(Seq("i", "x")))
-        .select((col("i") / lit(dsub)).cast("int").as("sub_id"),
-          pmod(col("i"), lit(dsub)).cast("int").as("d"),
-          col("codes"), col("x"))
-        .select(col("sub_id"),
-          element_at(col("codes"), col("sub_id") + 1).as("centroid_id"),
-          col("d"), col("x"))
-        .groupBy("sub_id", "centroid_id", "d")
-        .agg(avg(col("x")).as("m"))
-        .collect()
-      // empty-cluster rule, driver-side: a (sub, centroid) slot with no
-      // assigned vectors keeps its previous position (absent from the
-      // aggregate) so it can re-capture vectors — same as the old
-      // anti-join union
-      val next = flat.clone()
-      rows.foreach { r =>
-        val s = r.getInt(0); val cid = r.getInt(1); val d = r.getInt(2)
-        next((s * effK + cid) * dsub + d) = r.getDouble(3)
-      }
-      flat = next
-    }
+    for (_ <- 1 to iters)
+      flat = lloydStep(index.select(
+          pq_encode_codes(col("embedding"), flat, numSub, effK).as("slots"),
+          col("embedding")),
+        flat, numSub, effK, dsub)
     // ONE partition: this is a model-sized relation the stores write
     // verbatim — parallelized local rows would land one tiny file per
     // slice (guide §6 small files; and maintain()'s path-derived floor
@@ -430,9 +397,8 @@ object SimilaritySearch {
     * on the broadcast side; map-side bounded TopKAgg ships
     * O(partitions · queries · m); float vectors are touched only for
     * the m winners per query (id equi-join). Training cost is `iters`
-    * two-shuffle rounds over the exploded subvector relation — run once
-    * and reuse via the `codebooks` parameter (the index-once/query-many
-    * shape).
+    * map-only passes over the index — run once and reuse via the
+    * `codebooks` parameter (the index-once/query-many shape).
     */
   def pqTopK(queries: DataFrame, index: DataFrame, k: Int = 4,
       m: Int = 32, numSub: Int = 16, ksub: Int = 16, iters: Int = 5,
@@ -660,8 +626,8 @@ object SimilaritySearch {
         col("hit.id").as("vec_id"), col("hit.score").as("score"))
 
   /** IVF: centroids = per-label means by default (the fixture ships labeled
-    * vectors); assignment + probing are broadcast joins on the tiny
-    * centroid set.
+    * vectors); assignment is a map-side kernel against the collected
+    * centroids, probing a broadcast join on the tiny probe set.
     */
   def ivfTopK(
       queries: DataFrame,
@@ -671,40 +637,60 @@ object SimilaritySearch {
       nProbe: Int = 2): DataFrame =
     rerank(ivfCandidates(queries, index, centroids, nProbe), queries, index, k)
 
-  /** IVF candidate ids: index vectors in the `nProbe` inverted lists
-    * closest to each query. Assignment and probing are broadcast joins on
-    * the tiny centroid set; the list join ships id rows only.
+  /** Nearest-centroid id of `embedding` against the centroid relation
+    * `centroids` (centroid_id int or bigint, centroid_vec): the
+    * relation is collected — k-bounded model parameters, like the
+    * Lloyd loops' seeds — sorted by id and embedded as reference
+    * objects in ONE per-row kernel ([[graft.functions.expressions
+    * .NearestCentroidCosF]]). Ties: greatest cosine, then least
+    * centroid_id — bit-identical to `max_by(centroid_id, struct(csim,
+    * -centroid_id))` over the crossJoin, which the kernel replaces:
+    * no join, no broadcast build and no n × k relation, and the
+    * placement is a projection that keeps the input's partitioning.
+    * One output row per input row: vec_id uniqueness is the caller's
+    * contract, as for every layout table; a duplicate id yields one row
+    * per copy.
     */
-  /** Nearest-centroid assignment of every index vector (ties: greatest
-    * csim, then least centroid_id). Formulated as max_by partial
-    * aggregation, NOT a row_number window: the map side collapses the
-    * C candidate rows per vector to one before the exchange, so the
-    * shuffle carries one row per vector and nothing is sorted — this is
-    * the full-index side, the one that matters at 100 TB.
+  private[graft] def nearestCentroid(embedding: Column,
+      centroids: DataFrame): Column = {
+    import graft.functions.expressions.VectorExpressions.nearest_centroid_cos
+    val idType = centroids.schema("centroid_id").dataType
+    val rows = centroids
+      .select(col("centroid_id").cast(LongType),
+        VectorOps.toDouble(col("centroid_vec")))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+      .sortBy(_._1) // k-bounded model collect
+    require(rows.nonEmpty, "nearest-centroid assignment: empty centroid set")
+    val dim = rows.head._2.length
+    require(rows.forall(_._2.length == dim),
+      "nearest-centroid assignment: centroids of different dimensions")
+    nearest_centroid_cos(embedding, rows.flatMap(_._2), rows.map(_._1), idType)
+  }
+
+  /** Nearest-centroid assignment of every index vector:
+    * (vec_id, centroid_id), one map-side projection ([[nearestCentroid]]).
     */
   private def assignToCentroids(index: DataFrame, centroids: DataFrame): DataFrame =
-    index.crossJoin(broadcast(centroids))
-      .withColumn("csim", VectorOps.cosine(col("embedding"), col("centroid_vec")))
-      .groupBy("vec_id")
-      .agg(max_by(col("centroid_id"),
-        struct(col("csim"), (-col("centroid_id")).as("neg_cid")))
-        .as("centroid_id"))
+    index.select(col("vec_id"),
+      nearestCentroid(col("embedding"), centroids).as("centroid_id"))
 
   /** Nearest-centroid assignment CARRYING each vector — the inverted-list
     * materialization shape (one row per vector with its embedding, ready
-    * to persist partitioned by centroid). Same max_by partial-agg
-    * formulation as `assignToCentroids`.
+    * to persist partitioned by centroid). Same kernel as
+    * `assignToCentroids`; one row per input row, so the input's vec_ids
+    * must be unique (a duplicate id lands in its list twice).
     */
   private[graft] def assignWithVecs(
       index: DataFrame, centroids: DataFrame): DataFrame =
-    index.crossJoin(broadcast(centroids))
-      .withColumn("csim", VectorOps.cosine(col("embedding"), col("centroid_vec")))
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("centroid_id"), col("embedding")),
-        struct(col("csim"), (-col("centroid_id")).as("neg_cid"))).as("w"))
-      .select(col("vec_id"), col("w.centroid_id").as("centroid_id"),
-        col("w.embedding").as("embedding"))
+    index.select(col("vec_id"),
+      nearestCentroid(col("embedding"), centroids).as("centroid_id"),
+      col("embedding"))
 
+  /** IVF candidate ids: index vectors in the `nProbe` inverted lists
+    * closest to each query. Assignment is a map-side kernel against the
+    * collected centroids; the probe set is a broadcast of the tiny
+    * (query, centroid) frame.
+    */
   def ivfCandidates(
       queries: DataFrame,
       index: DataFrame,
@@ -947,9 +933,7 @@ object SimilaritySearch {
 
   /** Deterministic Lloyd refinement: start from the given centroids (e.g.
     * label means), run `iters` rounds of nearest-centroid assignment +
-    * per-cluster re-averaging. Pure DataFrame ops — assignment is a
-    * broadcast join, the re-average is one (centroid, dim) aggregate; the
-    * lineage is checkpoint-truncated per round like `Dedup.clusters`.
+    * per-cluster re-averaging, each ONE map-only job ([[lloydStep]]).
     * Sharper centroids raise IVF recall at the same nProbe.
     */
   def kMeansRefine(index: DataFrame, centroids: DataFrame, iters: Int): DataFrame = {
@@ -959,51 +943,111 @@ object SimilaritySearch {
     import spark.implicits._
     // Lloyd state is MODEL-SIZED (k × dim doubles — the same bound the
     // seed collects rely on), so the loop keeps the centroids on the
-    // driver and pays ONE Spark job per round: assignment as a map-side
-    // expression (NearestCentroidCosF — bit-identical cosine and tie
-    // rule to the old crossJoin + max_by), then ONE (centroid, dim)
-    // partial-aggregated avg whose k·dim-bounded result is collected
-    // and folded on the driver (empty clusters keep their previous
-    // position, the old anti-join rule). The old loop paid, per round:
-    // a broadcast build, the assignment exchange, meanVectors' TWO
-    // exchanges ((key, dim) avg then collect_list reassembly), the
-    // anti-join and an EAGER checkpoint — JobProfile attributed ~6 s of
-    // q197 to those stages (guide §1.2 step 1; §5 — model state lives
-    // on the driver, row state on the executors).
+    // Spark driver: assignment is a map-side expression
+    // (NearestCentroidCosF — bit-identical cosine and tie rule to a
+    // crossJoin + max_by) and the re-average is [[lloydStep]]'s
+    // per-task sums, folded on the driver (empty clusters keep their
+    // previous position). Nothing is shuffled, broadcast or
+    // checkpointed per round.
     val init = centroids.select(col("centroid_id"), col("centroid_vec"))
       .as[(Int, Seq[Double])].collect().sortBy(_._1) // k-bounded model collect
     require(init.nonEmpty, "kMeansRefine: empty centroid set")
     val dim = init.head._2.length
     val k = init.length
     val ids = init.map(_._1)
+    val ords = Array.tabulate(k)(_.toLong)
     var flat = new Array[Double](k * dim)
     for (((_, v), j) <- init.zipWithIndex; i <- 0 until dim)
       flat(j * dim + i) = v(i)
-    for (_ <- 1 to iters) {
-      // the assignment is computed in its OWN projection BELOW the
-      // explode — a generator expression in the same select would put
-      // the k·dim kernel in the Project ABOVE the Generate, evaluating
-      // it once per (row, dim) instead of once per row (measured: a
-      // dim× blow-up that turned q197's training into minutes)
-      val rows = index
-        .select(nearest_centroid_cos(col("embedding"), flat, k).as("ord"),
-          VectorOps.toDouble(col("embedding")).as("v"))
-        .select(col("ord"), posexplode(col("v")).as(Seq("d", "x")))
-        .groupBy("ord", "d")
-        .agg(avg(col("x")).as("m"))
-        .collect()
-      val next = flat.clone()
-      rows.foreach { r =>
-        next(r.getInt(0) * dim + r.getInt(1)) = r.getDouble(2)
-      }
-      flat = next
-    }
+    for (_ <- 1 to iters)
+      flat = lloydStep(index.select(
+          array(nearest_centroid_cos(col("embedding"), flat, ords, IntegerType))
+            .as("slots"),
+          col("embedding")),
+        flat, 1, k, dim)
     // ONE partition — model-sized output the IVF stores write verbatim
     // (see pqCodebooks' note on file counts and the maintain floor)
     ids.zipWithIndex.map { case (id, j) =>
       (id, (0 until dim).map(i => flat(j * dim + i)))
     }.toSeq.toDF("centroid_id", "centroid_vec")
       .coalesce(1)
+  }
+
+  /** One Lloyd re-average as ONE map-only job. `assigned` is
+    * (slots array<int>, embedding): row r adds subvector s (dims
+    * [s·dsub, (s+1)·dsub)) to slot (s, slots(s)) — k-means is the
+    * numSub = 1 case. Each task returns model-sized (sum, count) arrays
+    * and the driver folds them in PARTITION order as they arrive, so
+    * every mean is bit-identical to a per-(slot, dim) `avg` aggregate
+    * over the same partitions: a partial `avg` sums a partition's rows
+    * from 0.0 in row order, and its final merge adds those partials
+    * from 0.0 in map-partition order — exactly these two loops. A slot
+    * no row chose keeps its `prev` position (the empty-cluster rule).
+    * Rows with a null embedding contribute nothing.
+    */
+  private def lloydStep(assigned: DataFrame, prev: Array[Double],
+      numSub: Int, k: Int, dsub: Int): Array[Double] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val isDouble = assigned.schema(1).dataType match {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    }
+    val slots = numSub * k
+    val dim = numSub * dsub
+    val partial = (rows: Iterator[InternalRow]) => {
+      val sum = new Array[Double](slots * dsub)
+      val cnt = new Array[Long](slots)
+      rows.foreach { r =>
+        if (!r.isNullAt(1)) {
+          val codes = r.getArray(0)
+          val v = r.getArray(1)
+          if (v.numElements() != dim) throw new IllegalArgumentException(
+            s"Lloyd round: vector dimension ${v.numElements()} != model " +
+              s"dimension $dim")
+          var s = 0
+          while (s < numSub) {
+            val slot = s * k + codes.getInt(s)
+            cnt(slot) += 1
+            val base = slot * dsub
+            val off = s * dsub
+            var i = 0
+            while (i < dsub) {
+              sum(base + i) +=
+                (if (isDouble) v.getDouble(off + i) else v.getFloat(off + i).toDouble)
+              i += 1
+            }
+            s += 1
+          }
+        }
+      }
+      (sum, cnt)
+    }
+    val total = new Array[Double](slots * dsub)
+    val count = new Array[Long](slots)
+    val arrived = scala.collection.mutable.Map.empty[Int, (Array[Double], Array[Long])]
+    var nextPart = 0
+    // result handlers run one at a time on the driver, in completion order
+    assigned.sparkSession.sparkContext.runJob(assigned.queryExecution.toRdd,
+      partial, (p: Int, res: (Array[Double], Array[Long])) => {
+        arrived(p) = res
+        while (arrived.contains(nextPart)) {
+          val (sum, cnt) = arrived.remove(nextPart).get
+          var slot = 0
+          while (slot < slots) {
+            if (cnt(slot) > 0) {
+              count(slot) += cnt(slot)
+              var i = slot * dsub
+              while (i < (slot + 1) * dsub) { total(i) += sum(i); i += 1 }
+            }
+            slot += 1
+          }
+          nextPart += 1
+        }
+      })
+    val next = prev.clone()
+    for (slot <- 0 until slots if count(slot) > 0; i <- 0 until dsub)
+      next(slot * dsub + i) = total(slot * dsub + i) / count(slot).toDouble
+    next
   }
 
   /** Deterministic k-means: seeds are the k index vectors with the
@@ -1091,22 +1135,17 @@ object SimilaritySearch {
     kMeansRefine(index, seeds, iters)
   }
 
-  /** Element-wise mean vector per key: posexplode + two-level agg — one
-    * shuffle on (key, dim), then array reassembly in dim order. Shared by
-    * the A8 label centroid and every Lloyd re-average round.
+  /** Per-label centroid (operator A8): element-wise mean vector per
+    * label — posexplode + two-level agg, one shuffle on (label, dim),
+    * then array reassembly in dim order.
     */
-  private def meanVectors(
-      df: DataFrame, keyCol: String, vecCol: String, outCol: String): DataFrame =
-    df.select(col(keyCol), posexplode(col(vecCol)).as(Seq("dim", "v")))
-      .groupBy(keyCol, "dim")
-      .agg(avg("v").as("mean_v"))
-      .groupBy(keyCol)
-      .agg(array_sort(collect_list(struct(col("dim"), col("mean_v"))))
-        .getField("mean_v").as(outCol))
-
-  /** Per-label centroid (operator A8). */
   def labelCentroids(embeddings: DataFrame): DataFrame =
-    meanVectors(embeddings, "label", "embedding", "centroid_vec")
+    embeddings.select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
+      .groupBy("label", "dim")
+      .agg(avg("v").as("mean_v"))
+      .groupBy("label")
+      .agg(array_sort(collect_list(struct(col("dim"), col("mean_v"))))
+        .getField("mean_v").as("centroid_vec"))
       .withColumnRenamed("label", "centroid_id")
 
   /** Energy-compacting rotation model: rows of `rot` (row-major d×d)

@@ -324,7 +324,7 @@ object PipelineQueries {
     // assignment of the FULL set against the same centroids — complete
     // (nothing missing: n_missed = 0) and sound (nothing extra or
     // misassigned: n_extra = 0). Assignment ties break deterministically
-    // (max_by on (csim, -centroid_id)), so the comparison is exact.
+    // (highest cosine, then lowest centroid_id), so the comparison is exact.
     "q72_ivf_upsert" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val baseRows = emb.filter(col("vec_id") % 10 =!= 7)

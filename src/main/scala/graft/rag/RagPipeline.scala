@@ -390,14 +390,18 @@ object RagPipeline {
     * loop the reference implies (its retriever answers from the
     * persisted Pinecone index, `/root/reference/AI.py:138`, and its
     * adaptation conditions that SAME retrieval on history,
-    * `AI.py:168-173`). The blend `alpha·cos(c,q) + (1−alpha)·cos(c,p)`
-    * is bounded above by `max(cos(c,q), cos(c,p))`, so a chunk in the
-    * blended top-k is near the top by at least ONE of the two cosines —
-    * probing the bucket table with BOTH vectors and exact-reranking the
-    * candidate union by the blend therefore holds the operating point's
-    * recall (q89 pins output identity with [[adaptiveRetrieve]] at every
-    * fixture scale; alpha = 1 and no-history rows degrade to the plain
-    * single-vector probe by the same short-circuit as the batch form).
+    * `AI.py:168-173`). The bucket table is probed with BOTH vectors and
+    * the candidate union is exact-reranked by the blend. That union is
+    * NOT guaranteed to hold the blended top-k: the blend `alpha·cos(c,q)
+    * + (1−alpha)·cos(c,p)` is one cosine against the blended direction
+    * `alpha·q̂ + (1−alpha)·p̂`, and a chunk near that direction can sit
+    * far from both q and p (below the top of either probe) and still top
+    * the blend. The LSH probe fans are wide enough that this has not
+    * shown at the shipped operating point: q89 pins output identity with
+    * [[adaptiveRetrieve]] at every fixture scale, an empirical identity
+    * like the other ANN certifications, not a bound. alpha = 1 and
+    * no-history rows degrade to the plain single-vector probe by the
+    * same short-circuit as the batch form.
     *
     * Scale: the profile aggregate touches only the small history frame;
     * both probe sets are (broadcast) query-side explodes; the index side
@@ -475,20 +479,23 @@ object RagPipeline {
     * PERSISTED SQ8 codes — the quantized serving form of the adaptive
     * blend, completing what [[hybridRetrieveQuantized]] did for the
     * hybrid surface (the round-8 verdict's "the 4× compressed-scan win
-    * never reaches the flagship serving paths"). The same bounding
-    * argument as the LSH form: the blend `alpha·cos(c,q) +
-    * (1−alpha)·cos(c,p)` is ≤ max of the two cosines, so a blended
-    * top-k chunk is near the top by at least ONE cosine — and the int8
-    * approximate ranking is output-identical to the exact ranking at
-    * the certified margin (the q105 identity argument), so the top-m
-    * candidate UNION of the two probes contains the exact blended
-    * top-k; the float re-rank then reproduces [[adaptiveRetrieve]]
-    * exactly (q151 pins zero symmetric difference at every fixture
-    * scale, plus the alpha = 1 → plain-retrieve degeneracy).
+    * never reaches the flagship serving paths"). The blend is itself
+    * ONE cosine: `alpha·cos(c,q) + (1−alpha)·cos(c,p) = ĉ·b` with the
+    * blended direction `b = alpha·q̂ + (1−alpha)·p̂`, so the codes are
+    * probed once, with `b` (with q̂ for a query with no history or at
+    * alpha = 1), and the int8 approximate ranking of that one cosine
+    * is output-identical to its exact ranking at the certified margin
+    * (the q105 identity argument). The top-m candidates therefore
+    * contain the exact blended top-k, and the float re-rank reproduces
+    * [[adaptiveRetrieve]] exactly (q151 pins zero symmetric difference
+    * at every fixture scale, plus the alpha = 1 → plain-retrieve
+    * degeneracy). Probing q and p separately and re-ranking the union
+    * is NOT equivalent: a chunk can sit below the top m on both
+    * cosines and still top the blend.
     *
-    * Scale: TWO compressed scans of the codes table (4× less I/O each
-    * than a float scan) + one candidate-bounded rerank join; profiles
-    * ride the broadcast query side.
+    * Scale: ONE compressed scan of the codes table (4× less I/O than a
+    * float scan) + one candidate-bounded rerank join; profiles ride the
+    * broadcast query side.
     */
   def adaptiveRetrieveQuantized(
       spark: SparkSession,
@@ -528,13 +535,19 @@ object RagPipeline {
     val h = graft.sources.AnnIndex.ensureSq8(spark, sourceDir,
       index.select(col("chunk_id").as("vec_id"), col("embedding")),
       snapshotId = snapshotId)
-    val qProbe = q.select("query_id", "query_vec")
-    val pProbe = q
-      .filter(col("profile_vec").isNotNull && size(col("profile_vec")) > 0)
-      .select(col("query_id"), col("profile_vec").as("query_vec"))
-    val cands = graft.sources.AnnIndex.sq8Candidates(qProbe, h.codes, m)
-      .unionByName(graft.sources.AnnIndex.sq8Candidates(pProbe, h.codes, m))
-      .dropDuplicates("query_id", "vec_id")
+    // unit(v)·w, a zero vector staying zero (its cosines are 0 anyway)
+    def unitScaled(v: String, w: Double) = {
+      val n = VectorOps.l2Norm(col(v))
+      transform(col(v), x => x * when(n === 0.0, lit(0.0))
+        .otherwise(lit(w) / n))
+    }
+    val blended = q.select(col("query_id"),
+      when(col("profile_vec").isNull || size(col("profile_vec")) === 0
+          || lit(alpha == 1.0), VectorOps.toDouble(col("query_vec")))
+        .otherwise(zip_with(unitScaled("query_vec", alpha),
+          unitScaled("profile_vec", 1.0 - alpha), _ + _))
+        .as("query_vec"))
+    val cands = graft.sources.AnnIndex.sq8Candidates(blended, h.codes, m)
     // the same bit-exact short-circuit as adaptiveRetrieve: alpha = 1 /
     // no-history scores must equal the plain query cosine exactly
     val scored = cands

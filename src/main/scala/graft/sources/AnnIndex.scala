@@ -314,13 +314,11 @@ object AnnIndex {
     // ensureSq8 discipline); the delete replay-skip window survives
     dropTombs(spark, base, s"graft_lsh_tombs_$tag")
     spark.sql(s"DROP TABLE IF EXISTS graft_lsh_buckets_$tag")
-    lshBucketRows(index, tables, bits).write.mode(SaveMode.Overwrite)
-      .option("path", s"$base/buckets")
-      .bucketBy(storageBuckets, "tb").sortBy("tb")
-      .format("parquet").saveAsTable(s"graft_lsh_buckets_$tag")
+    writeBucketed(lshBucketRows(index, tables, bits),
+      s"graft_lsh_buckets_$tag", "tb", storageBuckets, Some(s"$base/buckets"))
     spark.sql(s"DROP TABLE IF EXISTS graft_lsh_vecs_$tag")
-    saveByVecId(index.select("vec_id", "embedding"), s"graft_lsh_vecs_$tag",
-      storageBuckets, Some(s"$base/vecs"))
+    writeBucketed(index.select("vec_id", "embedding"),
+      s"graft_lsh_vecs_$tag", "vec_id", storageBuckets, Some(s"$base/vecs"))
     writeMetaFull(base,
       Seq("tables" -> tables.toLong, "bits" -> bits.toLong,
         "buckets" -> storageBuckets.toLong, "n_rows" -> n, "checksum" -> fp) ++
@@ -495,11 +493,10 @@ object AnnIndex {
           "compactLsh to fold deletions before re-inserting those ids")
     }
     val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
-    lshBucketRows(newVecs, tables, bits).write.mode(SaveMode.Append)
-      .bucketBy(storageBuckets, "tb").sortBy("tb")
-      .format("parquet").saveAsTable(s"graft_lsh_buckets_$tag")
-    saveByVecId(newVecs.select("vec_id", "embedding"),
-      s"graft_lsh_vecs_$tag", storageBuckets)
+    writeBucketed(lshBucketRows(newVecs, tables, bits),
+      s"graft_lsh_buckets_$tag", "tb", storageBuckets)
+    writeBucketed(newVecs.select("vec_id", "embedding"),
+      s"graft_lsh_vecs_$tag", "vec_id", storageBuckets)
     writeMetaFull(base,
       Seq("tables" -> tables.toLong, "bits" -> bits.toLong,
         "buckets" -> storageBuckets.toLong,
@@ -990,10 +987,7 @@ object AnnIndex {
       val assigned = SimilaritySearch
         .assignWithVecs(index, ParquetIO.read(spark, centsPath))
       spark.sql(s"DROP TABLE IF EXISTS $listsTable")
-      assigned.write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/lists")
-        .partitionBy("centroid_id")
-        .format("parquet").saveAsTable(listsTable)
+      writeLists(assigned, listsTable, Some(s"$base/lists"))
       writeMetaFull(base,
         Seq("lists" -> lists.toLong, "iters" -> iters.toLong,
           "n_rows" -> n, "checksum" -> fp, "n_base" -> n) ++
@@ -1071,9 +1065,7 @@ object AnnIndex {
     }
     val assigned = SimilaritySearch
       .assignWithVecs(newVecs, ParquetIO.read(spark, centsPath))
-    assigned.write.mode(SaveMode.Append)
-      .partitionBy("centroid_id")
-      .format("parquet").saveAsTable(listsTable)
+    writeLists(assigned, listsTable)
     writeMeta(base, (Seq("lists" -> lists.toLong, "iters" -> iters.toLong,
       "n_rows" -> (meta("n_rows") + nNew),
       "checksum" -> (meta("checksum") ^ fpNew),
@@ -1221,10 +1213,7 @@ object AnnIndex {
       val assigned = SimilaritySearch
         .assignWithVecs(baseRows, ParquetIO.read(spark, centsPath))
       spark.sql(s"DROP TABLE IF EXISTS $listsTable")
-      assigned.write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/lists")
-        .partitionBy("centroid_id")
-        .format("parquet").saveAsTable(listsTable)
+      writeLists(assigned, listsTable, Some(s"$base/lists"))
       writeMeta(base, (Seq("lists" -> lists.toLong,
         "iters" -> iters.toLong,
         "n_rows" -> nb, "checksum" -> fb, "n_base" -> nb) ++
@@ -1403,15 +1392,44 @@ object AnnIndex {
     }
   }
 
-  /** Land `df` in a vec_id-bucketed catalog table: with `path` a build
-    * (Overwrite at that dir), without one an append of one more file set.
+  /** Land `df` in a catalog table bucketed and sorted on `key`, ONE
+    * file per bucket: with `path` a build (Overwrite at that dir),
+    * without one an append of one more file set. A bucketed write
+    * splits each TASK's rows into per-bucket files, so writing a
+    * many-task frame directly lands tasks × buckets files (and a
+    * compaction that rewrote without reducing the file count); the
+    * rows are first hash-partitioned on the key into exactly `buckets`
+    * tasks, and a bucket id IS that hash partition.
     */
-  private def saveByVecId(df: DataFrame, table: String, buckets: Int,
-      path: Option[String] = None): Unit =
-    path.fold(df.write.mode(SaveMode.Append))(p =>
-        df.write.mode(SaveMode.Overwrite).option("path", p))
-      .bucketBy(buckets, "vec_id").sortBy("vec_id")
+  private[sources] def writeBucketed(df: DataFrame, table: String,
+      key: String, buckets: Int, path: Option[String] = None): Unit = {
+    val w = df.repartition(buckets, col(key)).write
+    path.fold(w.mode(SaveMode.Append))(p =>
+        w.mode(SaveMode.Overwrite).option("path", p))
+      .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(table)
+  }
+
+  /** Land `df` in a catalog table partitioned by `centroid_id` (the
+    * inverted lists), ONE file per list: with `path` a build
+    * (Overwrite at that dir), without one an append. Without the
+    * repartition every input task re-emits its rows into every list
+    * dir it touches (tasks × lists files); hash-partitioning on the
+    * list id first lands each list in exactly one task. The explicit
+    * partition count keeps the lists spread over
+    * `spark.sql.shuffle.partitions` writer tasks — the coalescible
+    * `repartition(col)` form lets adaptive execution fold a small
+    * layout into ONE serial writer task.
+    */
+  private[sources] def writeLists(df: DataFrame, table: String,
+      path: Option[String] = None): Unit = {
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
+    val w = df.repartition(n, col("centroid_id")).write
+    path.fold(w.mode(SaveMode.Append))(p =>
+        w.mode(SaveMode.Overwrite).option("path", p))
+      .partitionBy("centroid_id")
+      .format("parquet").saveAsTable(table)
+  }
 
   /** Attach the tombstone table when the meta committed it but this
     * session's catalog lacks the registration (tombs written by another
@@ -1510,10 +1528,10 @@ object AnnIndex {
     if (!metaFresh) {
       dropTombs(spark, base, l.tombs)
       spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
-      saveByVecId(c.encode(index.select("vec_id", "embedding")), l.scan,
-        storageBuckets, Some(s"$base/codes"))
+      writeBucketed(c.encode(index.select("vec_id", "embedding")), l.scan,
+        "vec_id", storageBuckets, Some(s"$base/codes"))
       spark.sql(s"DROP TABLE IF EXISTS ${l.vecs}")
-      saveByVecId(index.select("vec_id", "embedding"), l.vecs,
+      writeBucketed(index.select("vec_id", "embedding"), l.vecs, "vec_id",
         storageBuckets, Some(s"$base/vecs"))
     }
     // (re)commit the meta when we rebuilt, OR when unchanged content
@@ -1558,9 +1576,9 @@ object AnnIndex {
     refuseTombstoned(spark, l.base, l.tombs, l.verb, meta, newVecs,
       storageBuckets)
     val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
-    saveByVecId(c.encode(newVecs.select("vec_id", "embedding")), l.scan,
-      storageBuckets)
-    saveByVecId(newVecs.select("vec_id", "embedding"), l.vecs,
+    writeBucketed(c.encode(newVecs.select("vec_id", "embedding")), l.scan,
+      "vec_id", storageBuckets)
+    writeBucketed(newVecs.select("vec_id", "embedding"), l.vecs, "vec_id",
       storageBuckets)
     writeMetaFull(l.base,
       Seq("buckets" -> storageBuckets.toLong,
@@ -1836,16 +1854,13 @@ object AnnIndex {
       val flat = SimilaritySearch.collectCodebook(
         spark.table(s"graft_pq_codebook_$tag"), numSub, ksub)
       spark.sql(s"DROP TABLE IF EXISTS graft_pq_codes_$tag")
-      index.select(col("vec_id"),
+      writeBucketed(index.select(col("vec_id"),
           pq_encode(col("embedding"), flat, numSub, ksub).as("pqcodes"),
-          graft.functions.VectorOps.l2Norm(col("embedding")).as("pnorm"))
-        .write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/codes")
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(s"graft_pq_codes_$tag")
+          graft.functions.VectorOps.l2Norm(col("embedding")).as("pnorm")),
+        s"graft_pq_codes_$tag", "vec_id", storageBuckets, Some(s"$base/codes"))
       spark.sql(s"DROP TABLE IF EXISTS graft_pq_vecs_$tag")
-      saveByVecId(index.select("vec_id", "embedding"), s"graft_pq_vecs_$tag",
-        storageBuckets, Some(s"$base/vecs"))
+      writeBucketed(index.select("vec_id", "embedding"),
+        s"graft_pq_vecs_$tag", "vec_id", storageBuckets, Some(s"$base/vecs"))
     }
     if (!metaFresh || snapshotId.isDefined)
       writeMetaFull(base,
@@ -2052,16 +2067,13 @@ object AnnIndex {
       val flat = SimilaritySearch.collectCodebook(
         spark.table(s"graft_opq_codebook_$tag"), numSub, ksub)
       spark.sql(s"DROP TABLE IF EXISTS graft_opq_codes_$tag")
-      rotated.select(col("vec_id"),
+      writeBucketed(rotated.select(col("vec_id"),
           pq_encode(col("embedding"), flat, numSub, ksub).as("pqcodes"),
-          graft.functions.VectorOps.l2Norm(col("embedding")).as("pnorm"))
-        .write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/codes")
-        .bucketBy(storageBuckets, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(s"graft_opq_codes_$tag")
+          graft.functions.VectorOps.l2Norm(col("embedding")).as("pnorm")),
+        s"graft_opq_codes_$tag", "vec_id", storageBuckets, Some(s"$base/codes"))
       spark.sql(s"DROP TABLE IF EXISTS graft_opq_vecs_$tag")
-      saveByVecId(index.select("vec_id", "embedding"), s"graft_opq_vecs_$tag",
-        storageBuckets, Some(s"$base/vecs"))
+      writeBucketed(index.select("vec_id", "embedding"),
+        s"graft_opq_vecs_$tag", "vec_id", storageBuckets, Some(s"$base/vecs"))
     }
     if (!metaFresh || snapshotId.isDefined)
       writeMetaFull(base,
@@ -2468,12 +2480,9 @@ object AnnIndex {
       val encoded = c.assign(index.select("vec_id", "embedding"),
         ParquetIO.read(spark, l.centroids))
       spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
-      encoded.write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/lists")
-        .partitionBy("centroid_id")
-        .format("parquet").saveAsTable(l.scan)
+      writeLists(encoded, l.scan, Some(s"$base/lists"))
       spark.sql(s"DROP TABLE IF EXISTS ${l.vecs}")
-      saveByVecId(index.select("vec_id", "embedding"), l.vecs,
+      writeBucketed(index.select("vec_id", "embedding"), l.vecs, "vec_id",
         storageBuckets, Some(s"$base/vecs"))
     }
     if (!metaFresh || snapshotId.isDefined)
@@ -2527,12 +2536,9 @@ object AnnIndex {
           f"(ratio ${tailAfter.toDouble / nBase}%.2f > $maxRatio%.2f). " +
           s"Rebuild with ensure${l.verb} to retrain centroids, or raise " +
           "spark.graft.ann.ivf.maxTailRatio.")
-    c.assign(newVecs.select("vec_id", "embedding"),
-        ParquetIO.read(spark, l.centroids))
-      .write.mode(SaveMode.Append)
-      .partitionBy("centroid_id")
-      .format("parquet").saveAsTable(l.scan)
-    saveByVecId(newVecs.select("vec_id", "embedding"), l.vecs,
+    writeLists(c.assign(newVecs.select("vec_id", "embedding"),
+      ParquetIO.read(spark, l.centroids)), l.scan)
+    writeBucketed(newVecs.select("vec_id", "embedding"), l.vecs, "vec_id",
       storageBuckets)
     writeMetaFull(l.base,
       Seq("lists" -> lists.toLong, "iters" -> iters.toLong,
@@ -2582,9 +2588,9 @@ object AnnIndex {
       return ivfCodesHandle(spark, l)
     // co-key each deleted id by its stored centroid: embeddings come
     // from the bucketed vecs table (batch-sized semi-ish join), the
-    // assignment is the same deterministic nearest-centroid max_by that
-    // placed the list row — identical input, identical tie-break,
-    // identical centroid_id
+    // assignment is the same NearestCentroidCosF kernel that placed the
+    // list row (same cosine arithmetic, lowest-id tie rule) — identical
+    // input, identical tie-break, identical centroid_id
     val batch = SimilaritySearch.assignWithVecs(
         spark.table(l.vecs)
           .join(ids.select("vec_id").distinct(), Seq("vec_id"),
@@ -2647,7 +2653,7 @@ object AnnIndex {
     val folding = meta.get("tomb_rows").exists(_ > 0L) &&
       spark.catalog.tableExists(l.tombs)
     val tombs = if (folding) Some(spark.table(l.tombs)) else None
-    compactPartitioned(spark, base, l.scan, "lists", "centroid_id",
+    compactPartitioned(spark, base, l.scan, "lists",
       tombs.map(t => spark.table(l.scan)
         .join(t, Seq("centroid_id", "vec_id"), "left_anti")))
     compactBucketed(spark, base, l.vecs, "vecs", "vec_id", sb,
@@ -2770,7 +2776,7 @@ object AnnIndex {
     // exists-check: the create-new branch would otherwise overwrite
     // (lose) their rows
     registerCommittedTombs(spark, base, table, storageBuckets)
-    saveByVecId(batch, table, storageBuckets,
+    writeBucketed(batch, table, "vec_id", storageBuckets,
       if (spark.catalog.tableExists(table)) None else Some(s"$base/tombs"))
   }
 
@@ -2796,7 +2802,7 @@ object AnnIndex {
     // tombstone FOLD (the compactSq8 discipline)
     val folding = meta.get("tomb_rows").exists(_ > 0L) &&
       ivfTombsRegistered(spark, tag)
-    compactPartitioned(spark, base, listsTable, "lists", "centroid_id",
+    compactPartitioned(spark, base, listsTable, "lists",
       if (folding)
         Some(spark.table(listsTable).join(
           broadcast(spark.table(s"graft_ivf_tombs_$tag")), Seq("vec_id"),
@@ -2820,25 +2826,19 @@ object AnnIndex {
     ivfServedHandle(spark, tag)
   }
 
-  /** One partitioned table's compaction step (side-dir + swap): shared
-    * by [[compactIvf]] and [[compactIvfSq8]].
+  /** One inverted-list table's compaction step (side-dir + swap):
+    * shared by [[compactIvf]], [[compactIvfSq8]], [[compactIvfPq]] and
+    * PLAID. `content` overrides what gets written (default: the table's
+    * current rows).
     */
   private[sources] def compactPartitioned(spark: SparkSession, base: String,
-      table: String, sub: String, partCol: String,
+      table: String, sub: String,
       content: Option[DataFrame] = None): Unit = {
     sweepStaleCompaction(base, sub)
     val side = s"$base/${sub}_compact_${ProcessHandle.current.pid}"
     val tmp = s"${table}_compact"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    // repartition ON the partition column: without it every input task
-    // re-emits its rows into every partition dir it touches, and the
-    // compacted layout keeps the old file count; with it each list
-    // lands in exactly one task → one file per partition dir
-    content.getOrElse(spark.table(table)).repartition(col(partCol))
-      .write.mode(SaveMode.Overwrite)
-      .option("path", side)
-      .partitionBy(partCol)
-      .format("parquet").saveAsTable(tmp)
+    writeLists(content.getOrElse(spark.table(table)), tmp, Some(side))
     spark.sql(s"DROP TABLE $tmp") // external: catalog entry only
     spark.sql(s"DROP TABLE IF EXISTS $table")
     swapDir(s"$base/$sub", side)
@@ -2857,27 +2857,17 @@ object AnnIndex {
     val side = s"$base/${sub}_compact_${ProcessHandle.current.pid}"
     val tmp = s"${table}_compact"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    // ONE task per bucket, or the fold never happens: a bucketed write
-    // splits each TASK's rows into per-bucket files, so writing the
-    // accumulated many-task layout directly lands tasks × buckets
-    // files (caught by the round-13 maintenance driver's idempotence
-    // gate — compaction was rewriting WITHOUT reducing file counts).
-    // The repartition on the bucket key collapses to the bucketed
-    // scan's own partitioning — but the planner's auto-disable then
-    // reverts the scan to per-file partitions with the exchange
-    // already elided, resurrecting the fan-out; pinning the bucketed
-    // scan on for the rewrite keeps partitions ≡ buckets.
+    // the rewrite reads a table bucketed the same way, so writeBucketed's
+    // repartition collapses to the scan's own partitioning — but the
+    // planner's auto-disable then reverts the scan to per-file partitions
+    // with the exchange already elided, resurrecting the tasks × buckets
+    // fan-out; pinning the bucketed scan on keeps partitions ≡ buckets
     val autoScanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val priorAutoScan = spark.conf.getOption(autoScanKey)
     spark.conf.set(autoScanKey, "false")
-    try {
-      content.getOrElse(spark.table(table))
-        .repartition(buckets, col(key))
-        .write.mode(SaveMode.Overwrite)
-        .option("path", side)
-        .bucketBy(buckets, key).sortBy(key)
-        .format("parquet").saveAsTable(tmp)
-    } finally priorAutoScan match {
+    try writeBucketed(content.getOrElse(spark.table(table)), tmp, key,
+      buckets, Some(side))
+    finally priorAutoScan match {
       case Some(v) => spark.conf.set(autoScanKey, v)
       case None => spark.conf.unset(autoScanKey)
     }
@@ -3144,12 +3134,9 @@ object AnnIndex {
       val plists = SimilaritySearch.assignPqEncoded(idx,
         ParquetIO.read(spark, s"$base/centroids"), flat, numSub, ksub)
       spark.sql(s"DROP TABLE IF EXISTS $listsTable")
-      plists.write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/lists")
-        .partitionBy("centroid_id")
-        .format("parquet").saveAsTable(listsTable)
+      writeLists(plists, listsTable, Some(s"$base/lists"))
       spark.sql(s"DROP TABLE IF EXISTS $vecsTable")
-      saveByVecId(idx, vecsTable, storageBuckets, Some(s"$base/vecs"))
+      writeBucketed(idx, vecsTable, "vec_id", storageBuckets, Some(s"$base/vecs"))
     }
     if (!metaFresh || snapshotId.isDefined)
       writeMetaFull(base,
@@ -3216,14 +3203,12 @@ object AnnIndex {
     val ksub = meta("ksub").toInt
     val flat = SimilaritySearch.collectCodebook(
       ParquetIO.read(spark, s"$base/codebook"), numSub, ksub)
-    SimilaritySearch.assignPqEncoded(
+    writeLists(SimilaritySearch.assignPqEncoded(
         newVecs.select("vec_id", "embedding"),
-        ParquetIO.read(spark, s"$base/centroids"), flat, numSub, ksub)
-      .write.mode(SaveMode.Append)
-      .partitionBy("centroid_id")
-      .format("parquet").saveAsTable(s"graft_ivfpq_lists_$tag")
-    saveByVecId(newVecs.select("vec_id", "embedding"),
-      s"graft_ivfpq_vecs_$tag", meta("buckets").toInt)
+        ParquetIO.read(spark, s"$base/centroids"), flat, numSub, ksub),
+      s"graft_ivfpq_lists_$tag")
+    writeBucketed(newVecs.select("vec_id", "embedding"),
+      s"graft_ivfpq_vecs_$tag", "vec_id", meta("buckets").toInt)
     writeMetaFull(base,
       (meta - "n_rows" - "checksum" - "last_batch_id").toSeq ++
         Seq("n_rows" -> (meta("n_rows") + nNew),
@@ -3345,7 +3330,6 @@ object AnnIndex {
     val tombs =
       if (folding) Some(spark.table(s"graft_ivfpq_tombs_$tag")) else None
     compactPartitioned(spark, base, s"graft_ivfpq_lists_$tag", "lists",
-      "centroid_id",
       tombs.map(t => spark.table(s"graft_ivfpq_lists_$tag")
         .join(t, Seq("centroid_id", "vec_id"), "left_anti")))
     compactBucketed(spark, base, s"graft_ivfpq_vecs_$tag", "vecs",

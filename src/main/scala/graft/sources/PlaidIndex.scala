@@ -77,22 +77,16 @@ object PlaidIndex {
         s"${plaidBase(spark, tag)}/tombs")
   }
 
-  /** Argmax-cosine assignment with the assignWithVecs tie convention
-    * (csim desc, centroid_id asc), doc_id riding along — ONE definition
-    * so build-time and upsert-time placement can never disagree.
+  /** Argmax-cosine assignment with the assignWithVecs kernel and tie
+    * convention (csim desc, centroid_id asc), doc_id riding along — ONE
+    * definition so build-time and upsert-time placement can never
+    * disagree.
     */
   private def assignToCentroids(docVectors: DataFrame,
       stored: DataFrame): DataFrame =
-    docVectors.crossJoin(broadcast(stored))
-      .withColumn("csim",
-        VectorOps.cosine(col("embedding"), col("centroid_vec")))
-      .groupBy("vec_id")
-      .agg(max_by(
-        struct(col("centroid_id"), col("doc_id"), col("embedding")),
-        struct(col("csim"), (-col("centroid_id")).as("neg_cid"))).as("w"))
-      .select(col("w.doc_id").as("doc_id"), col("vec_id"),
-        col("w.embedding").as("embedding"),
-        col("w.centroid_id").as("centroid_id"))
+    docVectors.select(col("doc_id"), col("vec_id"), col("embedding"),
+      SimilaritySearch.nearestCentroid(col("embedding"), stored)
+        .as("centroid_id"))
 
   /** SQ8 codes beside the float chunk vectors ([[SimilaritySearch
     * .quantizeIndex]] semantics) — the quantized-stage-1 columns of
@@ -181,10 +175,7 @@ object PlaidIndex {
       val stored = ParquetIO.read(spark, s"$base/centroids")
       val assigned = withCodes(assignToCentroids(docVectors, stored))
       spark.sql(s"DROP TABLE IF EXISTS ${listsName(tag)}")
-      assigned.write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/lists")
-        .partitionBy("centroid_id")
-        .format("parquet").saveAsTable(listsName(tag))
+      AnnIndex.writeLists(assigned, listsName(tag), Some(s"$base/lists"))
       // doc → centroid membership (id-only, one row per distinct pair):
       // ALL stage 1 ever reads — chunk vectors stay untouched until the
       // candidate rerank
@@ -515,9 +506,7 @@ object PlaidIndex {
     assigned.select("doc_id", "centroid_id").distinct()
       .write.mode(SaveMode.Append).format("parquet")
       .saveAsTable(doccentName(tag))
-    assigned.write.mode(SaveMode.Append)
-      .partitionBy("centroid_id")
-      .format("parquet").saveAsTable(listsName(tag))
+    AnnIndex.writeLists(assigned, listsName(tag))
     writeMetaFull(base,
       Seq("lists" -> meta("lists"), "iters" -> meta("iters"),
         "n_rows" -> (meta("n_rows") + nNew),
@@ -610,7 +599,6 @@ object PlaidIndex {
         "ensurePlaid to rebuild")
     if (!registered(spark, tag)) attach(spark, tag)
     AnnIndex.compactPartitioned(spark, base, listsName(tag), "lists",
-      "centroid_id",
       content = Some(spark.table(listsName(tag))
         .dropDuplicates("doc_id", "vec_id")))
     AnnIndex.sweepStaleCompaction(base, "doccent")

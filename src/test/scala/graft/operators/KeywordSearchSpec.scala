@@ -61,6 +61,58 @@ class KeywordSearchSpec extends AnyFunSuite {
     assert(indexed === direct)
   }
 
+  test("stored BM25 corpus stats ride as reference objects: two stats " +
+      "share one generated source, scores equal the literal form") {
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val d = docs(
+      1L -> "apple banana apple",
+      2L -> "banana cherry",
+      3L -> "durian apple kiwi",
+      4L -> "kiwi kiwi banana")
+    val q = queries(1L -> "apple kiwi", 2L -> "banana durian")
+    val post = KeywordSearch.bm25Postings(d).cache()
+    post.count() // both plans plan against a materialized cache
+    val dfs = post.groupBy("term").agg(count(lit(1)).as("df"))
+    val stats = Seq(KeywordSearch.Bm25Stats(4L, 10L, dfs),
+      KeywordSearch.Bm25Stats(901L, 18211L, dfs))
+    // the literal formulation the stats used to be inlined with
+    def literal(st: KeywordSearch.Bm25Stats) = {
+      val qt = q.select(col("query_id"),
+        explode(KeywordSearch.tokens(col("query_text"))).as("term")).distinct()
+      val dfr = st.dfs.join(broadcast(qt.select("term").distinct()), Seq("term"))
+        .groupBy("term").agg(sum("df").cast("double").as("df"))
+      post.join(broadcast(qt), Seq("term")).join(broadcast(dfr), Seq("term"))
+        .withColumn("n_docs", lit(st.nDocs.toDouble))
+        .withColumn("avgdl", lit(st.sumDl.toDouble / st.nDocs.toDouble))
+        .withColumn("contrib",
+          log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5))
+              / (col("df") + lit(0.5)))
+            * col("tf") * lit(1.2 + 1.0)
+            / (col("tf")
+              + lit(1.2) * (lit(1.0 - 0.75) + lit(0.75) * col("dl") / col("avgdl"))))
+        .groupBy("query_id", "doc_id").agg(round(sum("contrib"), 6).as("score"))
+        .as[(Long, Long, Double)].collect().toSet
+    }
+    val plans = stats.map(st =>
+      KeywordSearch.bm25TopKFromPostings(q, post, k = 10, stats = Some(st)))
+    stats.zip(plans).foreach { case (st, p) =>
+      assert(p.select("query_id", "doc_id", "score")
+        .as[(Long, Long, Double)].collect().toSet === literal(st))
+    }
+    // the generated source of the stage that evaluates the BM25 formula
+    // (the executed adaptive plans; other stages' shapes may follow
+    // runtime statistics)
+    val sources = plans.map { p =>
+      p.collect()
+      codegenStringSeq(p.queryExecution.executedPlan).map(_._2)
+        .filter(_.contains("Math.log(")).sorted
+    }
+    assert(sources.head.nonEmpty)
+    assert(sources.head === sources(1),
+      "a corpus statistic leaked into the generated source")
+    post.unpersist()
+  }
+
   test("tokenJaccardTopK scores exact token-set overlap") {
     val d = docs(
       1L -> "red green blue",   // ∩ {red, blue} = 2, ∪ = 3 → 2/3

@@ -743,4 +743,61 @@ class PlanInvariantsSpec extends AnyFunSuite {
       allowed, k = 2, nProbe = 2, mDocs = 4)
       .queryExecution.executedPlan.toString, "filtered quantized rerank")
   }
+
+  test("IVF list placement is one map-side kernel: the assignment plan " +
+      "has no exchange and no nested-loop join") {
+    import graft.Tables
+    import graft.functions.VectorOps
+    import graft.operators.SimilaritySearch
+    import org.apache.spark.sql.functions.col
+    val emb = Tables.load(spark, TestSpark.Sf0001, "embeddings")
+      .select("vec_id", "embedding")
+    val cents = emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").cast("int").as("centroid_id"),
+        VectorOps.toDouble(col("embedding")).as("centroid_vec"))
+    val p = SimilaritySearch.assignWithVecs(emb, cents)
+      .queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    assert(p.contains("NearestCentroidCosF") ||
+      p.toLowerCase.contains("nearestcentroidcos"), p)
+  }
+
+  test("Lloyd and PQ training rounds are map-only: every job of " +
+      "kMeansRefine and pqCodebooks runs ONE stage and shuffles nothing") {
+    import graft.Tables
+    import graft.functions.VectorOps
+    import graft.operators.SimilaritySearch
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.functions.col
+    val emb = Tables.load(spark, TestSpark.Sf0001, "embeddings")
+      .select("vec_id", "embedding")
+    val cents = emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").cast("int").as("centroid_id"),
+        VectorOps.toDouble(col("embedding")).as("centroid_vec"))
+      .collect().toSeq
+      .map(r => (r.getInt(0), r.getSeq[Double](1)))
+    val stagesPerJob = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        stagesPerJob.add(e.stageInfos.size)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    import spark.implicits._
+    val init = cents.toDF("centroid_id", "centroid_vec")
+    spark.sparkContext.addSparkListener(l)
+    try {
+      SimilaritySearch.kMeansRefine(emb, init, iters = 3)
+      SimilaritySearch.pqCodebooks(emb, numSub = 16, ksub = 16, iters = 3)
+      Thread.sleep(1000) // listener events are async
+    } finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    val jobs = stagesPerJob.asScala.toSeq
+    assert(jobs.size >= 6, s"expected one job per round, saw $jobs")
+    assert(jobs.forall(_ == 1), s"a training job ran more than one stage: $jobs")
+    assert(shuffled.get === 0L, s"training shuffled ${shuffled.get} bytes")
+  }
 }

@@ -74,6 +74,40 @@ class RagPipelineSpec extends AnyFunSuite {
     index.unpersist()
   }
 
+  test("adaptiveRetrieveQuantized finds a blend winner that is below the " +
+      "candidate margin on BOTH the query and the profile cosine") {
+    import spark.implicits._
+    val text = "vector index scan fast"
+    val qv = Embedder.embed(text).map(_.toDouble)
+    def unit(v: Array[Double]) = { val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n) }
+    val qh = unit(qv)
+    // a profile direction orthogonal to the query
+    val r = Embedder.embed("spark join shuffle partition").map(_.toDouble)
+    val rq = r.zip(qh).map { case (a, b) => a * b }.sum
+    val ph = unit(r.zip(qh).map { case (a, b) => a - rq * b })
+    def mix(a: Double, b: Double) =
+      qh.zip(ph).map { case (x, y) => (a * x + b * y).toFloat }
+    // m = 2: two chunks beat the target on the query cosine alone, two
+    // on the profile cosine alone, yet the target tops the 50/50 blend
+    val index = Seq(
+      (1L, mix(0.70, 0.70)), // target: cos 0.71 / 0.71, blend 0.71
+      (2L, mix(0.90, -0.43)), (3L, mix(0.88, -0.47)),
+      (4L, mix(-0.43, 0.90)), (5L, mix(-0.47, 0.88)),
+      (6L, mix(-0.60, -0.60)))
+      .map { case (id, v) => (id, id, s"chunk $id", v) }
+      .toDF("chunk_id", "doc_id", "text", "embedding")
+    val q = Seq((1L, 7L, text)).toDF("query_id", "user_id", "query_text")
+    val prof = Seq((7L, ph.toSeq)).toDF("user_id", "profile_vec")
+    def top(df: org.apache.spark.sql.DataFrame) =
+      df.select("rank", "chunk_id").as[(Int, Long)].collect().toSeq.sorted
+    val exact = top(RagPipeline.adaptiveRetrieveWithProfiles(q, prof, index,
+      k = 1, alpha = 0.5))
+    assert(exact === Seq((1, 1L)))
+    assert(top(RagPipeline.adaptiveRetrieveQuantizedWithProfiles(spark,
+      s"spec-blend-${java.util.UUID.randomUUID.toString.take(8)}", q, prof,
+      index, k = 1, alpha = 0.5, m = 2)) === exact)
+  }
+
   test("retrieveAnn equals exact retrieve at the shipped operating point") {
     val docs = Tables.load(spark, TestSpark.Sf0001, "documents")
     val index = RagPipeline.buildIndex(spark, docs, chunkSize = 200).cache()

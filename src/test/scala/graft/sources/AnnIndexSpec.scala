@@ -1477,4 +1477,52 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(flags.forall(_ == false),
       "stale must only fire on an impacts layout whose twin diverged")
   }
+
+  test("layout writes land one file per bucket and one file per list: " +
+      "ensure/upsert of SQ8 and IVF-PQ over a 4-partition input") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    // data files per directory under `dir` (a bucketed table is one
+    // directory; a list layout has one directory per centroid_id)
+    def filesByDir(dir: String): Map[String, Int] = {
+      val walk = Files.walk(Paths.get(dir))
+      try walk.iterator().asScala
+        .filter(p => p.getFileName.toString.startsWith("part-"))
+        .toSeq.groupBy((p: Path) => p.getParent.toString)
+        .map { case (d, fs) => d -> fs.size }
+      finally walk.close()
+    }
+    def added(before: Map[String, Int], after: Map[String, Int]) =
+      after.map { case (d, n) => d -> (n - before.getOrElse(d, 0)) }
+        .filter(_._2 > 0)
+    val buckets = 8
+    val base = emb.filter(col("vec_id") % 10 =!= 7).repartition(4)
+    val tail = emb.filter(col("vec_id") % 10 === 7).repartition(4)
+    assert(base.rdd.getNumPartitions === 4 && tail.rdd.getNumPartitions === 4)
+    val sq8 = s"/tmp/graft_ann_sq8_${IndexStore.pathTag(s"spec-$runTag-files")}"
+    AnnIndex.ensureSq8(spark, s"spec-$runTag-files", base,
+      storageBuckets = buckets)
+    val sq8Built = Seq("codes", "vecs").map(t => filesByDir(s"$sq8/$t"))
+    sq8Built.foreach(f => assert(f.values.sum <= buckets, f))
+    AnnIndex.upsertSq8(spark, s"spec-$runTag-files", tail,
+      storageBuckets = buckets)
+    Seq("codes", "vecs").zip(sq8Built).foreach { case (t, before) =>
+      val add = added(before, filesByDir(s"$sq8/$t"))
+      assert(add.values.sum <= buckets, s"$t upsert added $add")
+    }
+    val pq = s"/tmp/graft_ann_ivfpq_${IndexStore.pathTag(s"spec-$runTag-filespq")}"
+    AnnIndex.ensureIvfPq(spark, s"spec-$runTag-filespq", base, lists = 8,
+      iters = 2, numSub = 16, ksub = 16, pqIters = 2,
+      storageBuckets = buckets)
+    val lists = filesByDir(s"$pq/lists")
+    assert(lists.nonEmpty && lists.values.forall(_ == 1),
+      s"a list dir holds more than one file: $lists")
+    val vecs = filesByDir(s"$pq/vecs")
+    assert(vecs.values.sum <= buckets, vecs)
+    AnnIndex.upsertIvfPq(spark, s"spec-$runTag-filespq", tail)
+    val listsAdd = added(lists, filesByDir(s"$pq/lists"))
+    assert(listsAdd.nonEmpty && listsAdd.values.forall(_ == 1),
+      s"an upsert added more than one file to a list: $listsAdd")
+    assert(added(vecs, filesByDir(s"$pq/vecs")).values.sum <= buckets)
+  }
 }
