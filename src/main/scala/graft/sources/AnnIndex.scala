@@ -24,6 +24,13 @@ import java.nio.file.{Files, Paths}
   *    inverted lists `(centroid_id, vec_id, embedding)` partitioned by
   *    `centroid_id` — probing nProbe lists per query is partition
   *    pruning, the classic inverted-file read pattern.
+  *  - Quantized codec layouts, two lifecycles written once over a
+  *    private `Codec`: the FLAT one (`codes` bucketed by vec_id) serves
+  *    SQ8 and BQ; the IVF one (encoded `lists` partitioned by
+  *    centroid_id, plus the centroids and any trained codec model such
+  *    as the PQ codebook) serves IVF-SQ8, IVF-BQ and IVF-PQ. Both keep
+  *    the float vectors bucketed by vec_id for the exact re-rank, and
+  *    merge-on-read tombstones.
   *
   * Freshness contract: `ensure*` rebuilds when the stored meta (operating
   * point + row count) no longer matches the source frame; the layout is
@@ -913,15 +920,33 @@ object AnnIndex {
     else IvfHandle(cents, lists)
   }
 
-  /** Drift gate for [[upsertIvf]]: centroids are trained at build time
-    * only, so recall erodes as the upserted tail grows relative to the
-    * trained base (`n_base` in the meta). The gate bounds that
-    * tail/base ratio (`spark.graft.ann.ivf.maxTailRatio`, default 1.0)
-    * and fails LOUDLY when an upsert would cross it — a silently
-    * degraded serving index is worse than a failed ingest batch.
+  /** The drift gate of every upsert into a centroid-partitioned
+    * layout (IVF, the IVF codec layouts, PLAID): centroids and any codec
+    * model are trained at build time only, so recall erodes as the
+    * upserted tail grows relative to the trained base (`n_base` in the
+    * meta). The gate bounds that tail/base ratio
+    * (`spark.graft.ann.ivf.maxTailRatio`, default 1.0) and fails LOUDLY
+    * when adding `nNew` rows would cross it — a silently degraded
+    * serving index is worse than a failed ingest batch. Returns the
+    * trained base to commit as `n_base`: a pre-n_base meta (an older
+    * layout) treats its current size as the base, and the gate bounds
+    * growth from there.
     */
-  private[sources] def ivfMaxTailRatio(spark: SparkSession): Double =
-    spark.conf.get("spark.graft.ann.ivf.maxTailRatio", "1.0").toDouble
+  private[sources] def driftGate(spark: SparkSession, verb: String,
+      meta: Map[String, Long], nNew: Long): Long = {
+    val nBase = meta.getOrElse("n_base", meta("n_rows"))
+    val tailAfter = meta("n_rows") + nNew - nBase
+    val maxRatio =
+      spark.conf.get("spark.graft.ann.ivf.maxTailRatio", "1.0").toDouble
+    if (nBase > 0 && tailAfter > maxRatio * nBase)
+      throw new IllegalStateException(
+        f"upsert$verb drift gate: upserted tail would reach $tailAfter " +
+          f"rows against a trained base of $nBase " +
+          f"(ratio ${tailAfter.toDouble / nBase}%.2f > $maxRatio%.2f). " +
+          s"Rebuild with ensure$verb to retrain, or raise " +
+          "spark.graft.ann.ivf.maxTailRatio.")
+    nBase
+  }
 
   /** Build (or reuse) the persisted IVF index: k-means centroids
     * (deterministic hash-draw seeding + Lloyd rounds, see
@@ -1043,17 +1068,7 @@ object AnnIndex {
         partitionedBy = Some("centroid_id"))
     }
     val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
-    // drift gate: pre-n_base metas (older layouts) treat the current
-    // size as the trained base — the gate then bounds growth from here
-    val nBase = meta.getOrElse("n_base", meta("n_rows"))
-    val tailAfter = meta("n_rows") + nNew - nBase
-    val maxRatio = ivfMaxTailRatio(spark)
-    if (nBase > 0 && tailAfter > maxRatio * nBase)
-      throw new IllegalStateException(
-        f"upsertIvf drift gate: upserted tail would reach $tailAfter rows " +
-          f"against a trained base of $nBase (ratio ${tailAfter.toDouble / nBase}%.2f " +
-          f"> $maxRatio%.2f). Rebuild with ensureIvf to retrain centroids, " +
-          "or raise spark.graft.ann.ivf.maxTailRatio.")
+    val nBase = driftGate(spark, "Ivf", meta, nNew)
     // append-only + tombstone contract (the upsertSq8 discipline)
     if (meta.get("tomb_rows").exists(_ > 0L) &&
         ivfTombsRegistered(spark, tag)) {
@@ -1271,54 +1286,104 @@ object AnnIndex {
     SimilaritySearch.rerankWithVecs(cand, queries, k)
   }
 
-  // ------------------------------------------------------ SQ8 / BQ codecs
+  // ------------------------------------------------- SQ8 / BQ / PQ codecs
 
-  /** A per-row vector codec of the quantized serving layouts: flat
-    * SQ8/BQ and the composed IVF-SQ8/IVF-BQ. Encoding reads no global
-    * statistics (unlike IVF centroids or a trained product-quantizer
-    * codebook), so encoding new rows is EXACTLY a rebuild restricted to
-    * them — every upsert ≡ rebuild argument below rests on this. The
-    * codec names its stores (`graft_ann_<stem>_<tag>`, catalog tables
-    * `graft_<stem>_<table>_<tag>`; the IVF form prefixes `ivf`) and the
-    * verb suffix and label its error messages carry.
+  /** A vector codec of the quantized serving layouts: flat SQ8/BQ and
+    * the composed IVF-SQ8/IVF-BQ/IVF-PQ. The codec names its stores
+    * (`graft_ann_<stem>_<tag>`, catalog tables
+    * `graft_<stem>_<table>_<tag>`; the IVF form prefixes `ivf`), the
+    * verb suffix and label its error messages carry, and any
+    * operating-point keys and trained model of its own.
     */
   private sealed abstract class Codec(val stem: String, val verb: String,
       val label: String) {
+    /** The codec's own operating point as meta entries, checked and
+      * committed next to the partition's (IVF: lists/iters/buckets).
+      */
+    def point: Seq[(String, Long)] = Nil
+    /** The dirs under the layout dir that hold the trained model. */
+    def modelDirs: Seq[String] = Nil
+    /** Train the model on the build's (vec_id, embedding) and persist
+      * it under `base` — a build step, run after the centroids land.
+      */
+    def train(index: DataFrame, base: String): Unit = ()
+    /** (vec_id, embedding) → the IVF layout's `lists` rows: each vector
+      * assigned to its nearest of `centroids` and encoded with the
+      * model persisted under `base` — the float embedding never reaches
+      * the list layout.
+      */
+    def assign(index: DataFrame, centroids: DataFrame,
+        base: String): DataFrame
+  }
+
+  /** A per-row codec, which also encodes the flat layout. Encoding
+    * reads no global statistics (unlike IVF centroids or a trained
+    * product-quantizer codebook), so encoding new rows is EXACTLY a
+    * rebuild restricted to them — every upsert ≡ rebuild argument
+    * below rests on this.
+    */
+  private sealed abstract class RowCodec(stem: String, verb: String,
+      label: String) extends Codec(stem, verb, label) {
     /** (vec_id, embedding) → the flat layout's `codes` rows. */
     def encode(index: DataFrame): DataFrame
-    /** (vec_id, embedding) → the IVF layout's `lists` rows: each vector
-      * assigned to its nearest of `centroids` and encoded — the float
-      * embedding never reaches the list layout.
-      */
-    def assign(index: DataFrame, centroids: DataFrame): DataFrame
   }
 
   /** int8 scalar quantization: (vec_id, codes binary, qscale, qnorm) —
     * 4× smaller than the float table, the bandwidth the quantized scan
     * saves at 100 TB.
     */
-  private case object Sq8 extends Codec("sq8", "Sq8", "SQ8") {
+  private case object Sq8 extends RowCodec("sq8", "Sq8", "SQ8") {
     def encode(index: DataFrame): DataFrame =
       SimilaritySearch.quantizeIndex(index)
-    def assign(index: DataFrame, centroids: DataFrame): DataFrame =
+    def assign(index: DataFrame, centroids: DataFrame,
+        base: String): DataFrame =
       SimilaritySearch.assignQuantized(index, centroids)
   }
 
   /** 1-bit sign packing: (vec_id, bcodes) — ⌈dim/8⌉ bytes per row, 32×
     * under float32 and 8× under SQ8.
     */
-  private case object Bq extends Codec("bq", "Bq", "BQ") {
+  private case object Bq extends RowCodec("bq", "Bq", "BQ") {
     def encode(index: DataFrame): DataFrame =
       SimilaritySearch.binarizeIndex(index)
-    def assign(index: DataFrame, centroids: DataFrame): DataFrame =
+    def assign(index: DataFrame, centroids: DataFrame,
+        base: String): DataFrame =
       SimilaritySearch.assignBinary(index, centroids)
+  }
+
+  /** Product quantization at (numSub, ksub, pqIters): (vec_id, pqcodes,
+    * pnorm) — `numSub` bytes per row. The per-subspace codebook trains
+    * on the build's float vectors and lands under `codebook`; every
+    * assignment encodes with that persisted model read back (faiss's
+    * `add()`-after-`train()` contract), so codes and stored model can
+    * never diverge. The model is distribution-bound like the centroids:
+    * the drift gate covers both.
+    */
+  private final case class Pq(numSub: Int, ksub: Int, pqIters: Int)
+      extends Codec("pq", "Pq", "PQ") {
+    override def point: Seq[(String, Long)] =
+      Seq("num_sub" -> numSub.toLong, "ksub" -> ksub.toLong,
+        "pq_iters" -> pqIters.toLong)
+    override def modelDirs: Seq[String] = Seq("codebook")
+    override def train(index: DataFrame, base: String): Unit =
+      SimilaritySearch.pqCodebooks(index, numSub, ksub, pqIters)
+        .write.mode(SaveMode.Overwrite).parquet(s"$base/codebook")
+    def assign(index: DataFrame, centroids: DataFrame,
+        base: String): DataFrame =
+      SimilaritySearch.assignPqEncoded(index, centroids,
+        SimilaritySearch.collectCodebook(
+          ParquetIO.read(centroids.sparkSession, s"$base/codebook"),
+          numSub, ksub),
+        numSub, ksub)
   }
 
   /** One codec layout over `sourceDir`: the flat form (`codes` bucketed
     * by vec_id) or the IVF form (`lists` partitioned by centroid_id,
     * plus plain-parquet `centroids`). Both keep `vecs` — the float
     * vectors bucketed by vec_id for the exact re-rank, fetched for the
-    * m winners per query only — and merge-on-read `tombs`.
+    * m winners per query only — merge-on-read `tombs`, and the codec's
+    * model dirs. Names depend on the codec's stem alone, never on its
+    * operating point.
     */
   private final class CodecLayout(spark: SparkSession, c: Codec,
       sourceDir: String, ivf: Boolean) {
@@ -1334,10 +1399,12 @@ object AnnIndex {
     val centroids = s"$base/centroids"
     /** The dirs a servable layout holds readable parquet in. */
     val dataDirs = Seq(s"$base/$sub", s"$base/vecs") ++
-      (if (ivf) Seq(centroids) else Nil)
+      (if (ivf) Seq(centroids) else Nil) ++
+      c.modelDirs.map(d => s"$base/$d")
 
     def built(meta: Map[String, Long]): Boolean =
-      (!ivf || meta.contains("lists")) && meta.contains("buckets")
+      (!ivf || meta.contains("lists")) && meta.contains("buckets") &&
+        c.point.forall { case (k, _) => meta.contains(k) }
 
     def registered: Boolean =
       spark.catalog.tableExists(scan) && spark.catalog.tableExists(vecs)
@@ -1503,7 +1570,7 @@ object AnnIndex {
     * stored snapshot id (the layout moves past the snapshot that id
     * named).
     */
-  private def ensureFlat(c: Codec, spark: SparkSession, sourceDir: String,
+  private def ensureFlat(c: RowCodec, spark: SparkSession, sourceDir: String,
       index: DataFrame, storageBuckets: Int,
       snapshotId: Option[String]): CodesHandle = {
     val l = flatLayout(c, spark, sourceDir)
@@ -1561,7 +1628,7 @@ object AnnIndex {
     * see [[refuseTombstoned]]) and `batchId` replay-skip as in
     * [[upsertLsh]].
     */
-  private def upsertFlat(c: Codec, spark: SparkSession, sourceDir: String,
+  private def upsertFlat(c: RowCodec, spark: SparkSession, sourceDir: String,
       newVecs: DataFrame, storageBuckets: Int,
       batchId: Option[Long]): CodesHandle = {
     val l = flatLayout(c, spark, sourceDir)
@@ -2201,8 +2268,7 @@ object AnnIndex {
       // pre-[[deleteOpqIvfPq]] path — never touched the outer
       // checksum, so without this probe an ensure over the pre-delete
       // corpus would reuse a layout serving survivors only
-      readMeta(ivfPqBase(spark, IndexStore.pathTag(innerKey)))
-        .get("tomb_rows").forall(_ == 0L)
+      ivfPqMeta(spark, innerKey).get("tomb_rows").forall(_ == 0L)
     if (!fresh) {
       val model = SimilaritySearch.rotationModel(
         index.select("vec_id", "embedding"))
@@ -2323,8 +2389,7 @@ object AnnIndex {
         s"'$sourceDir' — run ensureOpqIvfPq first")
     val innerKey = opqIvfPqInnerKey(sourceDir)
     val replayed = batchId.exists(id =>
-      readMeta(ivfPqBase(spark, IndexStore.pathTag(innerKey)))
-        .get("last_batch_id").exists(id <= _))
+      ivfPqMeta(spark, innerKey).get("last_batch_id").exists(id <= _))
     if (replayed) return openOpqIvfPq(spark, sourceDir)
     val model = loadRotation(ParquetIO.read(spark, s"$base/rotation"))
     val rotated = SimilaritySearch.rotate(
@@ -2396,7 +2461,7 @@ object AnnIndex {
     openOpqIvfPq(spark, sourceDir)
   }
 
-  // ------------------------------------------- IVF-SQ8 / IVF-BQ lifecycle
+  // ---------------------------------- IVF-SQ8 / IVF-BQ / IVF-PQ lifecycle
 
   /** Persisted COMPOSED index — codec rows INSIDE the probed inverted
     * lists (IVF-SQ8 is faiss's `IVFx,SQ8` factory string, the production
@@ -2415,11 +2480,17 @@ object AnnIndex {
   private def ivfLayout(c: Codec, spark: SparkSession, sourceDir: String) =
     new CodecLayout(spark, c, sourceDir, ivf = true)
 
-  private def ivfOpPoint(meta: Map[String, Long], lists: Int, iters: Int,
-      storageBuckets: Int): Boolean =
-    meta.get("lists").contains(lists.toLong) &&
-      meta.get("iters").contains(iters.toLong) &&
-      meta.get("buckets").contains(storageBuckets.toLong)
+  /** An IVF layout's operating point as meta entries: the partition's
+    * lists and iters, the codec's own keys, the storage bucketing.
+    */
+  private def ivfPoint(c: Codec, lists: Int, iters: Int,
+      storageBuckets: Int): Seq[(String, Long)] =
+    Seq("lists" -> lists.toLong, "iters" -> iters.toLong) ++ c.point :+
+      ("buckets" -> storageBuckets.toLong)
+
+  private def atPoint(meta: Map[String, Long],
+      point: Seq[(String, Long)]): Boolean =
+    point.forall { case (k, v) => meta.get(k).contains(v) }
 
   /** The served IVF view (the [[flatHandle]] discipline): when a
     * tombstone table exists, the lists side anti-joins on (centroid_id,
@@ -2443,10 +2514,12 @@ object AnnIndex {
 
   /** Build (or reuse) the persisted composed layout: k-means centroids
     * train on the float vectors (same deterministic hash-draw + Lloyd
-    * recipe and operating point as [[ensureIvf]]); the inverted lists
-    * land ENCODED (one per-row codec projection over the assignment —
-    * the float embedding never reaches the list layout); the float
-    * table lands bucketed by vec_id for the shuffle-free re-rank join.
+    * recipe and operating point as [[ensureIvf]]), then any codec model
+    * (the PQ codebook) persists next to them; the inverted lists land
+    * ENCODED with the just-persisted model (one codec projection over
+    * the assignment — the float embedding never reaches the list
+    * layout); the float table lands bucketed by vec_id for the
+    * shuffle-free re-rank join.
     * Freshness follows the `ensureLsh` discipline (O(1) snapshot-id
     * trust, content fingerprint fallback, shared `servable` recovery
     * probe, meta committed after the data); a tombstoned layout no
@@ -2460,16 +2533,15 @@ object AnnIndex {
     val base = l.base
     def serv(): Boolean = servable(spark, l.dataDirs, l.registered,
       () => l.attach(storageBuckets))
-    def opFresh(meta: Map[String, Long]): Boolean =
-      ivfOpPoint(meta, lists, iters, storageBuckets)
+    val point = ivfPoint(c, lists, iters, storageBuckets)
     def tombFree = readMeta(base).get("tomb_rows").forall(_ == 0L)
     val snapFresh = snapshotId.exists(id =>
       readMetaStrs(base).get("snapshot_id").contains(id) &&
-        opFresh(readMeta(base))) && tombFree
+        atPoint(readMeta(base), point)) && tombFree
     if (snapFresh && serv()) return ivfCodesHandle(spark, l)
     val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
     val meta = readMeta(base)
-    val metaFresh = opFresh(meta) &&
+    val metaFresh = atPoint(meta, point) &&
       meta.get("n_rows").contains(n) &&
       meta.get("checksum").contains(fp) && tombFree && serv()
     if (!metaFresh) {
@@ -2477,8 +2549,9 @@ object AnnIndex {
       val cents = SimilaritySearch.kMeansCentroids(
         index.select("vec_id", "embedding"), lists, iters)
       cents.write.mode(SaveMode.Overwrite).parquet(l.centroids)
+      c.train(index.select("vec_id", "embedding"), base)
       val encoded = c.assign(index.select("vec_id", "embedding"),
-        ParquetIO.read(spark, l.centroids))
+        ParquetIO.read(spark, l.centroids), base)
       spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
       writeLists(encoded, l.scan, Some(s"$base/lists"))
       spark.sql(s"DROP TABLE IF EXISTS ${l.vecs}")
@@ -2487,9 +2560,7 @@ object AnnIndex {
     }
     if (!metaFresh || snapshotId.isDefined)
       writeMetaFull(base,
-        Seq("lists" -> lists.toLong, "iters" -> iters.toLong,
-          "buckets" -> storageBuckets.toLong,
-          "n_rows" -> n, "checksum" -> fp,
+        point ++ Seq("n_rows" -> n, "checksum" -> fp,
           "n_base" -> (if (metaFresh) meta.getOrElse("n_base", n) else n)) ++
           readMeta(base).get("last_batch_id")
             .map("last_batch_id" -> _).toSeq ++
@@ -2503,22 +2574,32 @@ object AnnIndex {
 
   /** Incremental add into an existing persisted composed index: new
     * vectors are assigned to the STORED centroids and appended encoded
-    * into the partitioned lists (plus float rows into `vecs`) — O(new)
-    * per batch. Inherits BOTH parents' contracts: [[upsertIvf]]'s
-    * centroid-drift gate (`spark.graft.ann.ivf.maxTailRatio` — the
-    * codec layer itself is per-row and drift-free, the centroids are
-    * not) and [[upsertFlat]]'s tombstone refusal and batchId
-    * replay-skip; the meta checksum xor-composes. Any stored snapshot id
-    * is dropped (the layout moves ahead of the snapshot that id named).
+    * with the STORED codec model into the partitioned lists (plus float
+    * rows into `vecs`) — O(new) per batch. Inherits BOTH parents'
+    * contracts: [[upsertIvf]]'s drift gate ([[driftGate]] — the
+    * centroids and any codec model are distribution-bound) and
+    * [[upsertFlat]]'s tombstone refusal and batchId replay-skip; the
+    * meta checksum xor-composes. `at` (lists, iters, buckets) is the
+    * operating point the caller expects; without one the stored point
+    * is trusted. Any stored snapshot id is dropped (the layout moves
+    * ahead of the snapshot that id named).
     */
   private def upsertIvfCodes(c: Codec, spark: SparkSession,
-      sourceDir: String, newVecs: DataFrame, lists: Int, iters: Int,
-      storageBuckets: Int, batchId: Option[Long]): IvfCodesHandle = {
+      sourceDir: String, newVecs: DataFrame, at: Option[(Int, Int, Int)],
+      batchId: Option[Long]): IvfCodesHandle = {
     val l = ivfLayout(c, spark, sourceDir)
     val meta = readMeta(l.base)
-    require(ivfOpPoint(meta, lists, iters, storageBuckets),
-      s"upsert${l.verb} needs an existing index at the same operating point " +
-        s"(lists=$lists iters=$iters buckets=$storageBuckets); found $meta")
+    at match {
+      case Some((lists, iters, sb)) =>
+        require(atPoint(meta, ivfPoint(c, lists, iters, sb)),
+          s"upsert${l.verb} needs an existing index at the same operating " +
+            s"point (lists=$lists iters=$iters buckets=$sb); found $meta")
+      case None =>
+        require(l.built(meta),
+          s"upsert${l.verb} needs an existing persisted ${l.label} index " +
+            s"for '$sourceDir' — run ensure${l.verb} first")
+    }
+    val storageBuckets = meta("buckets").toInt
     l.requireReadable(" before upserting")
     if (!l.registered) l.attach(storageBuckets)
     if (batchId.exists(id => meta.get("last_batch_id").exists(id <= _)))
@@ -2526,26 +2607,17 @@ object AnnIndex {
     refuseTombstoned(spark, l.base, l.tombs, l.verb, meta, newVecs,
       storageBuckets)
     val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
-    val nBase = meta.getOrElse("n_base", meta("n_rows"))
-    val tailAfter = meta("n_rows") + nNew - nBase
-    val maxRatio = ivfMaxTailRatio(spark)
-    if (nBase > 0 && tailAfter > maxRatio * nBase)
-      throw new IllegalStateException(
-        f"upsert${l.verb} drift gate: upserted tail would reach $tailAfter " +
-          f"rows against a trained base of $nBase " +
-          f"(ratio ${tailAfter.toDouble / nBase}%.2f > $maxRatio%.2f). " +
-          s"Rebuild with ensure${l.verb} to retrain centroids, or raise " +
-          "spark.graft.ann.ivf.maxTailRatio.")
+    val nBase = driftGate(spark, l.verb, meta, nNew)
     writeLists(c.assign(newVecs.select("vec_id", "embedding"),
-      ParquetIO.read(spark, l.centroids)), l.scan)
+      ParquetIO.read(spark, l.centroids), l.base), l.scan)
     writeBucketed(newVecs.select("vec_id", "embedding"), l.vecs, "vec_id",
       storageBuckets)
     writeMetaFull(l.base,
-      Seq("lists" -> lists.toLong, "iters" -> iters.toLong,
-        "buckets" -> storageBuckets.toLong,
-        "n_rows" -> (meta("n_rows") + nNew),
-        "checksum" -> (meta("checksum") ^ fpNew),
-        "n_base" -> nBase) ++
+      ivfPoint(c, meta("lists").toInt, meta("iters").toInt,
+        storageBuckets) ++
+        Seq("n_rows" -> (meta("n_rows") + nNew),
+          "checksum" -> (meta("checksum") ^ fpNew),
+          "n_base" -> nBase) ++
         batchId.orElse(meta.get("last_batch_id"))
           .map("last_batch_id" -> _).toSeq ++
         meta.get("tomb_rows").map("tomb_rows" -> _).toSeq ++
@@ -2619,8 +2691,8 @@ object AnnIndex {
   private def existsIvfCodes(c: Codec, spark: SparkSession,
       sourceDir: String, lists: Int, iters: Int,
       storageBuckets: Int): Boolean =
-    ivfOpPoint(readMeta(ivfLayout(c, spark, sourceDir).base), lists, iters,
-      storageBuckets)
+    atPoint(readMeta(ivfLayout(c, spark, sourceDir).base),
+      ivfPoint(c, lists, iters, storageBuckets))
 
   private def openIvfCodes(c: Codec, spark: SparkSession,
       sourceDir: String): IvfCodesHandle = {
@@ -2703,8 +2775,8 @@ object AnnIndex {
       iters: Int = 5,
       storageBuckets: Int = 8,
       batchId: Option[Long] = None): IvfCodesHandle =
-    upsertIvfCodes(Sq8, spark, sourceDir, newVecs, lists, iters,
-      storageBuckets, batchId)
+    upsertIvfCodes(Sq8, spark, sourceDir, newVecs,
+      Some((lists, iters, storageBuckets)), batchId)
 
   def deleteIvfSq8(
       spark: SparkSession,
@@ -3033,55 +3105,46 @@ object AnnIndex {
   final case class IvfPqHandle(centroids: DataFrame, codebook: DataFrame,
       lists: DataFrame, vecs: DataFrame, numSub: Int, ksub: Int)
 
-  private def ivfPqBase(spark: SparkSession, tag: String) =
-    s"${annBase(spark)}/graft_ann_ivfpq_$tag"
-
-  private def ivfPqRegistered(spark: SparkSession, tag: String): Boolean =
-    spark.catalog.tableExists(s"graft_ivfpq_lists_$tag") &&
-      spark.catalog.tableExists(s"graft_ivfpq_vecs_$tag")
-
-  private def attachIvfPq(spark: SparkSession, tag: String,
-      storageBuckets: Int): Unit = {
-    val base = ivfPqBase(spark, tag)
-    spark.sql(s"DROP TABLE IF EXISTS graft_ivfpq_lists_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_ivfpq_vecs_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_ivfpq_tombs_$tag")
-    registerExternal(spark, s"graft_ivfpq_lists_$tag", s"$base/lists",
-      partitionedBy = Some("centroid_id"))
-    registerExternal(spark, s"graft_ivfpq_vecs_$tag", s"$base/vecs",
-      clusteredBy = Some(("vec_id", storageBuckets)))
-    if (tombsServable(spark, base))
-      registerExternal(spark, s"graft_ivfpq_tombs_$tag", s"$base/tombs",
-        clusteredBy = Some(("vec_id", storageBuckets)))
-  }
-
-  /** The served IVF-PQ view — tombstone anti-joins exactly as
-    * [[ivfCodesHandle]]: lists on (centroid_id, vec_id) so probes prune
-    * their tombstones with their lists, vecs on the shared vec_id
-    * bucketing.
+  /** The committed meta of `sourceDir`'s IVF-PQ layout. Layout names
+    * depend on the codec stem alone, so a zero `Pq` locates it.
     */
-  private def ivfPqHandle(spark: SparkSession, tag: String,
-      meta: Map[String, Long]): IvfPqHandle = {
-    val cents = ParquetIO.read(spark, s"${ivfPqBase(spark, tag)}/centroids")
-    val cb = ParquetIO.read(spark, s"${ivfPqBase(spark, tag)}/codebook")
-    val lists = spark.table(s"graft_ivfpq_lists_$tag")
-    val vecs = spark.table(s"graft_ivfpq_vecs_$tag")
-    if (spark.catalog.tableExists(s"graft_ivfpq_tombs_$tag")) {
-      val tombs = spark.table(s"graft_ivfpq_tombs_$tag")
-      IvfPqHandle(cents, cb,
-        lists.join(tombs, Seq("centroid_id", "vec_id"), "left_anti"),
-        vecs.join(tombs.select("vec_id"), Seq("vec_id"), "left_anti"),
-        meta("num_sub").toInt, meta("ksub").toInt)
-    } else IvfPqHandle(cents, cb, lists, vecs,
-      meta("num_sub").toInt, meta("ksub").toInt)
+  private def ivfPqMeta(spark: SparkSession,
+      sourceDir: String): Map[String, Long] =
+    readMeta(ivfLayout(Pq(0, 0, 0), spark, sourceDir).base)
+
+  /** The served IVF-PQ view: the shared IVF handle ([[ivfCodesHandle]]
+    * — its tombstone anti-joins included) plus the stored codebook and
+    * the sub-quantizer shape.
+    */
+  private def ivfPqServed(spark: SparkSession, c: Pq, sourceDir: String,
+      h: IvfCodesHandle): IvfPqHandle = {
+    val base = ivfLayout(c, spark, sourceDir).base
+    IvfPqHandle(h.centroids, ParquetIO.read(spark, s"$base/codebook"),
+      h.lists, h.vecs, c.numSub, c.ksub)
   }
 
-  /** Build (or reuse) the persisted IVF-PQ layout: k-means centroids
-    * AND per-subspace PQ codebooks train on the float vectors (the
-    * ensureIvfSq8 centroid recipe + the ensurePq codebook recipe), the
-    * inverted lists land PQ-ENCODED with the just-persisted codebook
-    * (codes and stored model can never diverge), float vecs bucketed by
-    * vec_id. Freshness: the shared `ensureLsh` discipline.
+  /** Run a lifecycle verb that takes no operating point with IVF-PQ at
+    * the one its layout's meta records, and serve the result. An
+    * unbuilt layout yields zeros, which the lifecycle's `built` check
+    * refuses before the codec is used.
+    */
+  private def atStoredPq(spark: SparkSession, sourceDir: String)(
+      verb: Pq => IvfCodesHandle): IvfPqHandle = {
+    val meta = ivfPqMeta(spark, sourceDir)
+    def at(k: String) = meta.getOrElse(k, 0L).toInt
+    val c = Pq(at("num_sub"), at("ksub"), at("pq_iters"))
+    ivfPqServed(spark, c, sourceDir, verb(c))
+  }
+
+  /** The persisted IVF-PQ layout: the composed lifecycle
+    * ([[ensureIvfCodes]], [[upsertIvfCodes]], [[deleteIvfCodes]],
+    * [[existsIvfCodes]], [[openIvfCodes]], [[compactIvfCodes]]) with the
+    * [[Pq]] codec — k-means centroids AND per-subspace PQ codebooks
+    * train on the float vectors (the ensureIvfSq8 centroid recipe + the
+    * ensurePq codebook recipe). Upsert, delete, open and compact run at
+    * the STORED operating point: an upsert encodes with the stored
+    * centroids and codebook under the drift gate (both models are
+    * distribution-bound), compaction never touches the trained model.
     */
   def ensureIvfPq(
       spark: SparkSession,
@@ -3094,260 +3157,38 @@ object AnnIndex {
       pqIters: Int = 2,
       storageBuckets: Int = 8,
       snapshotId: Option[String] = None): IvfPqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfPqBase(spark, tag)
-    val listsTable = s"graft_ivfpq_lists_$tag"
-    val vecsTable = s"graft_ivfpq_vecs_$tag"
-    def serv(): Boolean = servable(spark,
-      Seq(s"$base/lists", s"$base/vecs", s"$base/centroids",
-        s"$base/codebook"),
-      ivfPqRegistered(spark, tag),
-      () => attachIvfPq(spark, tag, storageBuckets))
-    def opFresh(meta: Map[String, Long]): Boolean =
-      meta.get("lists").contains(lists.toLong) &&
-        meta.get("iters").contains(iters.toLong) &&
-        meta.get("num_sub").contains(numSub.toLong) &&
-        meta.get("ksub").contains(ksub.toLong) &&
-        meta.get("pq_iters").contains(pqIters.toLong) &&
-        meta.get("buckets").contains(storageBuckets.toLong)
-    // tombstoned layout ⇒ stale under ensure's "serve exactly this
-    // source" contract (the ensureSq8/ensureIvfSq8 discipline)
-    def tombFree = readMeta(base).get("tomb_rows").forall(_ == 0L)
-    val snapFresh = snapshotId.exists(id =>
-      readMetaStrs(base).get("snapshot_id").contains(id) &&
-        opFresh(readMeta(base))) && tombFree
-    if (snapFresh && serv()) return ivfPqHandle(spark, tag, readMeta(base))
-    val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
-    val meta = readMeta(base)
-    val metaFresh = opFresh(meta) &&
-      meta.get("n_rows").contains(n) &&
-      meta.get("checksum").contains(fp) && tombFree && serv()
-    if (!metaFresh) {
-      dropTombs(spark, base, s"graft_ivfpq_tombs_$tag")
-      val idx = index.select("vec_id", "embedding")
-      val cents = SimilaritySearch.kMeansCentroids(idx, lists, iters)
-      cents.write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")
-      val cb = SimilaritySearch.pqCodebooks(idx, numSub, ksub, pqIters)
-      cb.write.mode(SaveMode.Overwrite).parquet(s"$base/codebook")
-      val flat = SimilaritySearch.collectCodebook(
-        ParquetIO.read(spark, s"$base/codebook"), numSub, ksub)
-      val plists = SimilaritySearch.assignPqEncoded(idx,
-        ParquetIO.read(spark, s"$base/centroids"), flat, numSub, ksub)
-      spark.sql(s"DROP TABLE IF EXISTS $listsTable")
-      writeLists(plists, listsTable, Some(s"$base/lists"))
-      spark.sql(s"DROP TABLE IF EXISTS $vecsTable")
-      writeBucketed(idx, vecsTable, "vec_id", storageBuckets, Some(s"$base/vecs"))
-    }
-    if (!metaFresh || snapshotId.isDefined)
-      writeMetaFull(base,
-        Seq("lists" -> lists.toLong, "iters" -> iters.toLong,
-          "num_sub" -> numSub.toLong, "ksub" -> ksub.toLong,
-          "pq_iters" -> pqIters.toLong,
-          "buckets" -> storageBuckets.toLong,
-          "n_rows" -> n, "checksum" -> fp,
-          "n_base" -> (if (metaFresh) meta.getOrElse("n_base", n) else n)) ++
-          readMeta(base).get("last_batch_id")
-            .map("last_batch_id" -> _).toSeq ++
-          // delete replay-skip survives a rebuild; tomb_rows does not
-          readMeta(base).get("last_del_batch_id")
-            .map("last_del_batch_id" -> _).toSeq,
-        snapshotId.map("snapshot_id" -> _).toSeq)
-    ivfPqHandle(spark, tag, readMeta(base))
+    val c = Pq(numSub, ksub, pqIters)
+    ivfPqServed(spark, c, sourceDir, ensureIvfCodes(c, spark, sourceDir,
+      index, lists, iters, storageBuckets, snapshotId))
   }
 
-  /** Incremental add into an existing persisted IVF-PQ index: new
-    * vectors are assigned to the STORED centroids and encoded with the
-    * STORED codebook (faiss's `add()`-after-`train()` contract, public)
-    * — O(new) per batch, batchId replay-skip. BOTH model artifacts are
-    * distribution-bound, so the [[upsertIvf]] drift gate applies: a
-    * tail that overwhelms the trained base fails loudly
-    * (`spark.graft.ann.ivf.maxTailRatio`) instead of silently eroding
-    * recall through stale centroids AND stale codebooks.
-    */
   def upsertIvfPq(
       spark: SparkSession,
       sourceDir: String,
       newVecs: DataFrame,
-      batchId: Option[Long] = None): IvfPqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfPqBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("lists") && meta.contains("num_sub"),
-      s"upsertIvfPq needs an existing persisted IVF-PQ index for " +
-        s"'$sourceDir' — run ensureIvfPq first")
-    require(parquetReadable(spark, s"$base/lists") &&
-      parquetReadable(spark, s"$base/vecs") &&
-      parquetReadable(spark, s"$base/centroids") &&
-      parquetReadable(spark, s"$base/codebook"),
-      s"persisted IVF-PQ layout for '$sourceDir' is unreadable — run " +
-        "ensureIvfPq to rebuild before upserting")
-    if (!ivfPqRegistered(spark, tag))
-      attachIvfPq(spark, tag, meta("buckets").toInt)
-    val replayed = batchId.exists(id =>
-      meta.get("last_batch_id").exists(id <= _))
-    if (replayed) return ivfPqHandle(spark, tag, meta)
-    refuseTombstoned(spark, base, s"graft_ivfpq_tombs_$tag", "IvfPq", meta,
-      newVecs, meta("buckets").toInt)
-    val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
-    val nBase = meta.getOrElse("n_base", meta("n_rows"))
-    val tailAfter = meta("n_rows") + nNew - nBase
-    val maxRatio = ivfMaxTailRatio(spark)
-    if (nBase > 0 && tailAfter > maxRatio * nBase)
-      throw new IllegalStateException(
-        f"upsertIvfPq drift gate: upserted tail would reach $tailAfter " +
-          f"rows against a trained base of $nBase " +
-          f"(ratio ${tailAfter.toDouble / nBase}%.2f > $maxRatio%.2f). " +
-          "Rebuild with ensureIvfPq to retrain centroids + codebook, or " +
-          "raise spark.graft.ann.ivf.maxTailRatio.")
-    val numSub = meta("num_sub").toInt
-    val ksub = meta("ksub").toInt
-    val flat = SimilaritySearch.collectCodebook(
-      ParquetIO.read(spark, s"$base/codebook"), numSub, ksub)
-    writeLists(SimilaritySearch.assignPqEncoded(
-        newVecs.select("vec_id", "embedding"),
-        ParquetIO.read(spark, s"$base/centroids"), flat, numSub, ksub),
-      s"graft_ivfpq_lists_$tag")
-    writeBucketed(newVecs.select("vec_id", "embedding"),
-      s"graft_ivfpq_vecs_$tag", "vec_id", meta("buckets").toInt)
-    writeMetaFull(base,
-      (meta - "n_rows" - "checksum" - "last_batch_id").toSeq ++
-        Seq("n_rows" -> (meta("n_rows") + nNew),
-          "checksum" -> (meta("checksum") ^ fpNew)) ++
-        batchId.orElse(meta.get("last_batch_id"))
-          .map("last_batch_id" -> _).toSeq,
-      Nil)
-    ivfPqHandle(spark, tag, readMeta(base))
-  }
+      batchId: Option[Long] = None): IvfPqHandle =
+    atStoredPq(spark, sourceDir)(
+      upsertIvfCodes(_, spark, sourceDir, newVecs, None, batchId))
 
-  /** Delete by id from the persisted IVF-PQ index — [[deleteIvfSq8]]'s
-    * PQ twin, completing the delete verb across every composed serving
-    * layout. Tombstones co-keyed by centroid (same derivation: batch
-    * ids join the bucketed float vecs, nearest-STORED-centroid
-    * assignment reproduces the stored list placement deterministically)
-    * with the same contracts: absent ids are a no-op, re-insert fails
-    * loudly until [[compactIvfPq]] folds, snapshot_id drops, `batchId`
-    * replay-skips on `last_del_batch_id`.
-    */
   def deleteIvfPq(
       spark: SparkSession,
       sourceDir: String,
       ids: DataFrame,
-      batchId: Option[Long] = None): IvfPqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfPqBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("lists") && meta.contains("num_sub"),
-      s"deleteIvfPq needs an existing persisted IVF-PQ index for " +
-        s"'$sourceDir' — run ensureIvfPq first")
-    val storageBuckets = meta("buckets").toInt
-    require(Seq("lists", "vecs", "centroids", "codebook")
-        .forall(d => parquetReadable(spark, s"$base/$d")),
-      s"persisted IVF-PQ layout for '$sourceDir' is unreadable — run " +
-        "ensureIvfPq to rebuild before deleting")
-    if (!ivfPqRegistered(spark, tag))
-      attachIvfPq(spark, tag, storageBuckets)
-    val replayed = batchId.exists(id =>
-      meta.get("last_del_batch_id").exists(id <= _))
-    if (replayed) return ivfPqHandle(spark, tag, meta)
-    val batch = SimilaritySearch.assignWithVecs(
-        spark.table(s"graft_ivfpq_vecs_$tag")
-          .join(ids.select("vec_id").distinct(), Seq("vec_id"),
-            "left_semi"),
-        ParquetIO.read(spark, s"$base/centroids"))
-      .select("centroid_id", "vec_id")
-    val nDel = batch.count()
-    writeTombs(spark, base, s"graft_ivfpq_tombs_$tag", batch,
-      storageBuckets)
-    writeMetaFull(base,
-      (meta - "tomb_rows" - "last_del_batch_id").toSeq ++
-        Seq("tomb_rows" -> (meta.getOrElse("tomb_rows", 0L) + nDel)) ++
-        batchId.orElse(meta.get("last_del_batch_id"))
-          .map("last_del_batch_id" -> _).toSeq,
-      Nil) // snapshot_id intentionally dropped: the layout moved past it
-    ivfPqHandle(spark, tag, readMeta(base))
-  }
+      batchId: Option[Long] = None): IvfPqHandle =
+    atStoredPq(spark, sourceDir)(
+      deleteIvfCodes(_, spark, sourceDir, ids, batchId))
 
-  /** [[ivfSq8Exists]]'s IVF-PQ twin: meta-only operating-point check,
-    * for the build-vs-open branch a tombstone-serving caller needs. */
   def ivfPqExists(spark: SparkSession, sourceDir: String,
       lists: Int = 64, iters: Int = 5, numSub: Int = 16, ksub: Int = 64,
-      pqIters: Int = 2, storageBuckets: Int = 8): Boolean = {
-    val meta = readMeta(ivfPqBase(spark, IndexStore.pathTag(sourceDir)))
-    meta.get("lists").contains(lists.toLong) &&
-      meta.get("iters").contains(iters.toLong) &&
-      meta.get("num_sub").contains(numSub.toLong) &&
-      meta.get("ksub").contains(ksub.toLong) &&
-      meta.get("pq_iters").contains(pqIters.toLong) &&
-      meta.get("buckets").contains(storageBuckets.toLong)
-  }
+      pqIters: Int = 2, storageBuckets: Int = 8): Boolean =
+    existsIvfCodes(Pq(numSub, ksub, pqIters), spark, sourceDir, lists,
+      iters, storageBuckets)
 
-  /** Open an existing persisted IVF-PQ index read-only, WITHOUT a
-    * freshness probe (the openSq8/openIvfSq8 contract). */
-  def openIvfPq(spark: SparkSession, sourceDir: String): IvfPqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfPqBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("lists") && meta.contains("num_sub"),
-      s"no persisted IVF-PQ index for '$sourceDir' ($base)")
-    require(Seq("lists", "vecs", "centroids", "codebook")
-        .forall(d => parquetReadable(spark, s"$base/$d")),
-      s"persisted IVF-PQ layout for '$sourceDir' is unreadable — run " +
-        "ensureIvfPq to rebuild")
-    if (!ivfPqRegistered(spark, tag))
-      attachIvfPq(spark, tag, meta("buckets").toInt)
-    else {
-      spark.catalog.refreshTable(s"graft_ivfpq_lists_$tag")
-      spark.catalog.refreshTable(s"graft_ivfpq_vecs_$tag")
-      // tombstones may have (dis)appeared under another session's
-      // delete or fold — align with the store, DDL only on a change
-      syncTombs(spark, base, s"graft_ivfpq_tombs_$tag",
-        clusteredBy = Some(("vec_id", meta("buckets").toInt)))
-    }
-    ivfPqHandle(spark, tag, meta)
-  }
+  def openIvfPq(spark: SparkSession, sourceDir: String): IvfPqHandle =
+    atStoredPq(spark, sourceDir)(openIvfCodes(_, spark, sourceDir))
 
-  /** Compact the persisted IVF-PQ layout — the lifecycle-parity verb
-    * the layout was missing (a long-streamed IVF-PQ index accumulated
-    * small files with no remedy short of rebuild): rewrites the
-    * PQ-coded lists at the same partitioning and the float vecs at the
-    * same bucketing (the [[compactIvfSq8]] side-dir + rename-swap
-    * crash recipe — mid-window unreadable layouts read as STALE by
-    * `ensureIvfPq` and rebuild), folding any tombstones into the base
-    * as it goes (drop deleted rows, reset tomb_rows, recompute the
-    * live fingerprint; replay-skip counters survive). Centroids and
-    * codebook (tiny model artifacts) are untouched — compaction
-    * changes files, never the trained model. Not safe concurrent with
-    * a writer.
-    */
-  def compactIvfPq(spark: SparkSession, sourceDir: String): IvfPqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfPqBase(spark, tag)
-    openIvfPq(spark, sourceDir) // validates meta + attaches + refreshes
-    val meta = readMeta(base)
-    val sb = meta("buckets").toInt
-    val folding = meta.get("tomb_rows").exists(_ > 0L) &&
-      spark.catalog.tableExists(s"graft_ivfpq_tombs_$tag")
-    val tombs =
-      if (folding) Some(spark.table(s"graft_ivfpq_tombs_$tag")) else None
-    compactPartitioned(spark, base, s"graft_ivfpq_lists_$tag", "lists",
-      tombs.map(t => spark.table(s"graft_ivfpq_lists_$tag")
-        .join(t, Seq("centroid_id", "vec_id"), "left_anti")))
-    compactBucketed(spark, base, s"graft_ivfpq_vecs_$tag", "vecs",
-      "vec_id", sb,
-      tombs.map(t => spark.table(s"graft_ivfpq_vecs_$tag")
-        .join(t.select("vec_id"), Seq("vec_id"), "left_anti")))
-    if (folding) dropTombs(spark, base, s"graft_ivfpq_tombs_$tag")
-    attachIvfPq(spark, tag, sb)
-    if (folding) {
-      val (n, fp) = fingerprint(spark.table(s"graft_ivfpq_vecs_$tag")
-        .select("vec_id", "embedding"))
-      writeMetaFull(base,
-        (meta - "n_rows" - "checksum" - "tomb_rows").toSeq ++
-          Seq("n_rows" -> n, "checksum" -> fp),
-        Nil)
-    }
-    ivfPqHandle(spark, tag, readMeta(base))
-  }
+  def compactIvfPq(spark: SparkSession, sourceDir: String): IvfPqHandle =
+    atStoredPq(spark, sourceDir)(compactIvfCodes(_, spark, sourceDir))
 
   /** Query the persisted IVF-PQ index: rank centroids per query
     * (broadcast, tiny), ADC-scan ONLY the probed lists' PQ codes (the
@@ -3514,8 +3355,8 @@ object AnnIndex {
       iters: Int = 5,
       storageBuckets: Int = 8,
       batchId: Option[Long] = None): IvfCodesHandle =
-    upsertIvfCodes(Bq, spark, sourceDir, newVecs, lists, iters,
-      storageBuckets, batchId)
+    upsertIvfCodes(Bq, spark, sourceDir, newVecs,
+      Some((lists, iters, storageBuckets)), batchId)
 
   def deleteIvfBq(
       spark: SparkSession,

@@ -479,16 +479,7 @@ object PlaidIndex {
     }
     val (nNew, fpNew) = fingerprint(
       newVectors.select("doc_id", "vec_id", "embedding"))
-    val nBase = meta.getOrElse("n_base", meta("n_rows"))
-    val tailAfter = meta("n_rows") + nNew - nBase
-    val maxRatio = AnnIndex.ivfMaxTailRatio(spark)
-    if (nBase > 0 && tailAfter > maxRatio * nBase)
-      throw new IllegalStateException(
-        f"upsertPlaid drift gate: upserted tail would reach $tailAfter " +
-          f"chunk rows against a clustered base of $nBase " +
-          f"(ratio ${tailAfter.toDouble / nBase}%.2f > $maxRatio%.2f). " +
-          "Rebuild with ensurePlaid to re-cluster, or raise " +
-          "spark.graft.ann.ivf.maxTailRatio.")
+    val nBase = AnnIndex.driftGate(spark, "Plaid", meta, nNew)
     val assigned = withCodes(assignToCentroids(
         newVectors.select("doc_id", "vec_id", "embedding"),
         ParquetIO.read(spark, s"$base/centroids")))

@@ -492,6 +492,42 @@ class AnnIndexSpec extends AnyFunSuite {
     }
   }
 
+  // the IVF codec layouts' crash window: per layout the dirs a crashed
+  // compaction (or a lost model dir) leaves missing, and its ensure +
+  // query reduced to the answers served
+  (ivfCodecs.map(c => (c.label, c.stem, Seq("lists"),
+      (src: String) => hits(c.query(c.qs(), c.ensure(src, c.rows()))),
+      (src: String) => c.open(src),
+      (src: String) => c.upsert(src, c.rows().filter(col("vec_id") === 0L)
+        .select((col("vec_id") + 990000L).as("vec_id"), col("embedding")),
+        None))) :+
+    (("IVF-PQ", "ivfpq", Seq("lists", "codebook"),
+      (src: String) => hits(AnnIndex.queryIvfPq(queries,
+        AnnIndex.ensureIvfPq(spark, src, emb, lists = 8, iters = 2),
+        k = 4, nProbe = 3, m = 64)),
+      (src: String) => AnnIndex.openIvfPq(spark, src),
+      (src: String) => AnnIndex.upsertIvfPq(spark, src,
+        emb.filter(col("vec_id") === 0L)
+          .select((col("vec_id") + 990000L).as("vec_id"), col("embedding")))))
+  ).foreach { case (label, stem, lost, serve, open, upsert) =>
+    test(s"a crashed $label layout (${lost.mkString(" + ")} missing under " +
+        "a matching meta) fails open and upsert loudly and is recovered " +
+        "by ensure as a rebuild") {
+      val src = s"spec-$runTag-${stem}m"
+      val expected = serve(src)
+      val base = s"/tmp/graft_ann_${stem}_${IndexStore.pathTag(src)}"
+      lost.foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(
+        java.nio.file.Paths.get(base, d).toFile))
+      Seq(open, upsert).foreach { verb =>
+        val e = intercept[IllegalArgumentException] { verb(src) }
+        assert(e.getMessage.contains("unreadable"))
+      }
+      assert(serve(src) === expected)
+      lost.foreach(d =>
+        assert(java.nio.file.Files.exists(java.nio.file.Paths.get(base, d))))
+    }
+  }
+
   test("persisted IVF-SQ8 equals the in-memory composed path AND the " +
       "float IVF at the same operating point") {
     val src = s"spec-$runTag-ivfsq8"

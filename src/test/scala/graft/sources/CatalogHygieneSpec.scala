@@ -126,30 +126,38 @@ class CatalogHygieneSpec extends AnyFunSuite {
       s"tombstoned open did not stabilize: ${evs2.mkString(", ")}")
   }
 
-  // the IVF upserts re-derive the tombs registration before their
-  // tombstone clash check: a delete another session committed while
-  // this one held the lists/vecs registration must still refuse the
-  // re-insert (the anti-join would silently swallow it)
-  Seq[(String, String, String => Any, String => Any, String => Any)](
+  /** The IVF codec layouts: label, stem, and ensure / delete / upsert /
+    * open verbs over a 64-row fixture (the upsert re-adds deleted id 5).
+    */
+  private val ivfCodecs = Seq[(String, String, String => Any, String => Any,
+      String => Any, String => Any)](
     ("IVF-SQ8", "ivfsq8",
       key => AnnIndex.ensureIvfSq8(spark, key, vecs(64), lists = 4,
         iters = 2),
       key => AnnIndex.deleteIvfSq8(spark, key, Seq(5L).toDF("vec_id")),
       key => AnnIndex.upsertIvfSq8(spark, key,
-        vecs(64).filter(col("vec_id") === 5L), lists = 4, iters = 2)),
+        vecs(64).filter(col("vec_id") === 5L), lists = 4, iters = 2),
+      key => AnnIndex.openIvfSq8(spark, key)),
     ("IVF-BQ", "ivfbq",
       key => AnnIndex.ensureIvfBq(spark, key, vecs(64), lists = 4,
         iters = 2),
       key => AnnIndex.deleteIvfBq(spark, key, Seq(5L).toDF("vec_id")),
       key => AnnIndex.upsertIvfBq(spark, key,
-        vecs(64).filter(col("vec_id") === 5L), lists = 4, iters = 2)),
+        vecs(64).filter(col("vec_id") === 5L), lists = 4, iters = 2),
+      key => AnnIndex.openIvfBq(spark, key)),
     ("IVF-PQ", "ivfpq",
       key => AnnIndex.ensureIvfPq(spark, key, vecs(64), lists = 4,
         iters = 2, numSub = 2, ksub = 4),
       key => AnnIndex.deleteIvfPq(spark, key, Seq(5L).toDF("vec_id")),
       key => AnnIndex.upsertIvfPq(spark, key,
-        vecs(64).filter(col("vec_id") === 5L)))
-  ).foreach { case (label, layout, ensure, delete, upsert) =>
+        vecs(64).filter(col("vec_id") === 5L)),
+      key => AnnIndex.openIvfPq(spark, key)))
+
+  // the IVF upserts re-derive the tombs registration before their
+  // tombstone clash check: a delete another session committed while
+  // this one held the lists/vecs registration must still refuse the
+  // re-insert (the anti-join would silently swallow it)
+  ivfCodecs.foreach { case (label, layout, ensure, delete, upsert, _) =>
     test(s"$label upsert refuses an id tombstoned by another session") {
       val key = s"hyg-$runTag-$layout-x"
       ensure(key)
@@ -173,5 +181,23 @@ class CatalogHygieneSpec extends AnyFunSuite {
     AnnIndex.openIvf(spark, key)
     val e2 = ddlDuring { AnnIndex.openIvf(spark, key) }
     assert(e2.isEmpty, s"got: ${e2.mkString(", ")}")
+  }
+
+  // the IVF codec layouts share one open path: zero DDL on a clean
+  // layout, and again once a delete's tombs registration has settled
+  ivfCodecs.foreach { case (label, layout, ensure, delete, _, open) =>
+    test(s"second open of the $label layout issues zero catalog DDL — " +
+        "clean AND tombstoned layouts") {
+      val key = s"hyg-$runTag-$layout-o"
+      ensure(key)
+      open(key)
+      val evs = ddlDuring { open(key) }
+      assert(evs.isEmpty, s"expected zero DDL, got: ${evs.mkString(", ")}")
+      delete(key)
+      open(key)
+      val evs2 = ddlDuring { open(key) }
+      assert(evs2.isEmpty,
+        s"tombstoned open did not stabilize: ${evs2.mkString(", ")}")
+    }
   }
 }
