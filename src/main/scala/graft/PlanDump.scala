@@ -52,7 +52,7 @@ object PlanDump {
       "q228_maxsim" -> "late-interaction MaxSim: token'd query side on a BroadcastExchange over the chunk scan, inner per-token max as a PARTIAL aggregate keyed (query, doc, token) — map-side combine collapses chunk rows before any exchange; every post-similarity exchange carries 24-byte keyed doubles, never vectors",
       "q237_maxsim_quantized" -> "quantized two-stage MaxSim: the int8 approximate stage scans SQ8 codes (4× fewer bytes on the chunk-per-vector layout) through the same partial-max shape, bounded top_k doc shortlist, exact float MaxSim only over the candidates' chunks via the doc-id semi-join",
       "q238_embedding_drift" -> "embedding drift: one VectorMeanAgg pass per snapshot (bounded d-double buffers), the cosine-to-centroid projection fused per-row against a literal centroid (no join), PSI over a ≤-buckets-row aggregate — nothing corpus-keyed ever shuffles",
-      "q81_bm25_persisted" -> "persisted BM25 with STORED stats: exactly ONE FileScan of graft_kw_postings_* (the scoring join) — corpus stats are literals from the meta and the query-term df comes from the vocabulary-sized graft_kw_dfs_* side table on a BroadcastExchange; the round-12 per-call full-postings stats/df aggregates are gone from the plan (PlanInvariantsSpec pins the scan count)",
+      "q81_bm25_persisted" -> "persisted BM25 with STORED stats: exactly ONE FileScan of graft_kw_postings_* (the scoring join) — corpus stats are reference objects from the meta, and the query side is a driver-built local relation carrying each query term's df, fetched by one eager lookup over the vocabulary-sized graft_kw_dfs_* side table before this plan is built; the round-12 per-call full-postings stats/df aggregates are gone from the plan (PlanInvariantsSpec pins the scan count and the lookup)",
       "q240_bm25_wand" -> "block-max WAND serving: theta phase scans ONLY the top impact bands (PartitionFilters: block < p1Bands on the band-partitioned graft_kwbmw_impacts_* table), the essential-terms window and band-survivor test run over query-batch-sized broadcast frames, and the exact-rescore scan's per-(query,doc) aggregate receives candidate rows only — the exhaustive path's sum-over-every-posting exchange is the thing this plan deletes",
       "q242_plaid_maxsim" -> "PLAID-clustered MaxSim (invariant query — carries the full-scan verification branch too): the probed/candidate centroid sets (bounded by the LIST count, ≤32 here) land as static partition LITERALS on the graft_plaid_lists_* scans — PartitionFilters shows centroid_id IN (…)/= and the file index lists ONLY the named centroid_id= directories; stage 1 reads probed lists' bytes only, stage 2's exact rerank reads only the partitions named by the candidates' doc-to-centroid membership rows (the round-13 isnotnull-only full-directory read is gone; PlanInvariantsSpec pins the pruned shape)",
       "q247_plaidq_maxsim" -> "QUANTIZED PLAID serving (invariant query — carries the full-scan branch): the stage-1 shortlist is an eager checkpoint built from the probed partitions' int8 columns only (its scan's ReadSchema carries codes/qscale/qnorm, never the float embedding — the 4× byte cut multiplying the partition literals; PlanInvariantsSpec pins both), so the graft_plaid_lists_* scans visible in THIS plan are the exact float rerank's, restricted to the candidates' membership partitions via centroid_id literals",

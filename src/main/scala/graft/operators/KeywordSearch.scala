@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** Keyword (lexical) retrieval and rank fusion — the half of hybrid
   * search the reference's vector-only retriever lacks (reference:
@@ -18,10 +19,11 @@ import org.apache.spark.sql.functions._
   *     hence one partition, so partial aggregation finishes the count
   *     before the exchange; the shuffle carries one row per DISTINCT
   *     (doc, term), not per token);
-  *   - query terms are broadcast (a query is a handful of terms), so
-  *     candidate generation is a map-side hash join against the
-  *     postings — the only corpus-sized exchange in the whole plan is
-  *     the postings build itself, which at 100 TB you materialize once
+  *   - query terms are tokenized on the driver and broadcast as a
+  *     local relation (a query is a handful of terms), so candidate
+  *     generation is a map-side hash join against the postings — the
+  *     only corpus-sized exchange in the whole plan is the postings
+  *     build itself, which at 100 TB you materialize once
   *     (`bm25TopKFromPostings`) exactly like [[graft.sources.AnnIndex]]
   *     persists the vector buckets;
   *   - scoring shuffles only candidate `(query, doc)` rows, and the
@@ -39,7 +41,9 @@ object KeywordSearch {
     * length, and a per-term document-frequency frame `(term, df)` —
     * possibly appended DELTAS (the read side sums per term), which is
     * the persisted-layout shape [[graft.sources.KeywordIndex]] maintains
-    * incrementally at ensure/upsert time. Serving from these replaces
+    * incrementally at ensure/upsert/delete time. A delete appends
+    * NEGATIVE deltas, so a single row's `df` can be below zero; only the
+    * per-term sum is a document frequency. Serving from these replaces
     * the two FULL-POSTINGS aggregates (corpus stats + query-term df)
     * the derived path pays per call — at 100 TB those are corpus-sized
     * scans per query batch; the stats frame is vocabulary-sized.
@@ -93,9 +97,20 @@ object KeywordSearch {
     bm25TopKFromPostings(queries, bm25Postings(docs, idCol, textCol), k, k1, b)
 
   /** BM25 over a prebuilt postings frame ([[bm25Postings]] — persist it
-    * once per corpus and query many times; the per-call work is then two
-    * small aggregates over the postings (corpus stats + query-term df)
-    * plus the candidate join, never a re-tokenization of the corpus.
+    * once per corpus and query many times; the per-call work is then the
+    * candidate join over the postings, never a re-tokenization of the
+    * corpus).
+    *
+    * The query side runs on the driver: the queries' tokens are collected
+    * through [[tokens]] (the rows the query-term broadcast would collect
+    * anyway) and the distinct `(query_id, term)` pairs and terms enter the
+    * plan as local relations, so no shuffle or re-tokenization of the
+    * query batch is shipped to Spark. With `stats` the stored `df` of
+    * exactly those terms is fetched by ONE eager lookup job over the
+    * [[Bm25Stats]] side table and summed per term on the driver; the
+    * returned plan then scans the postings once. Without `stats` the
+    * corpus statistics and `df` stay two aggregates over the postings in
+    * the returned plan.
     */
   def bm25TopKFromPostings(
       queries: DataFrame,
@@ -104,41 +119,55 @@ object KeywordSearch {
       k1: Double = 1.2,
       b: Double = 0.75,
       stats: Option[Bm25Stats] = None): DataFrame = {
-    import graft.functions.expressions.TopKAgg.top_k
-    val qt = queries
-      .select(col("query_id"), explode(tokens(col("query_text"))).as("term"))
-      .distinct()
-    // corpus stats and query-term document frequency: from the stored
-    // [[Bm25Stats]] when provided (vocabulary-sized work — the
-    // persisted-index serving path), else derived from the postings
-    // (two corpus-sized aggregates — the ad-hoc path). Same doubles
-    // either way, see [[Bm25Stats]].
-    val withStats: DataFrame => DataFrame = stats match {
+    import scala.jdk.CollectionConverters._
+    val spark = postings.sparkSession
+    val toks = queries
+      .select(col("query_id"), tokens(col("query_text")).as("toks"))
+    val pairs = toks.collect().toSeq.flatMap { r =>
+      Option(r.getSeq[String](1)).getOrElse(Nil).map(t => (r.get(0), t))
+    }.distinct
+    val terms = pairs.map(_._2).distinct
+    val termField = StructField("term", StringType, nullable = false)
+    def local(fields: Seq[StructField], rows: Seq[Row]): DataFrame =
+      spark.createDataFrame(rows.asJava, StructType(fields))
+    val qtFields = Seq(toks.schema("query_id"), termField)
+    // query-term df and corpus stats: from the stored [[Bm25Stats]] when
+    // provided (a vocabulary lookup; the df rides in the query-term
+    // relation and the corpus stats as reference objects — inlined
+    // literals would re-key the scoring stage's codegen cache after every
+    // upsert/delete), else derived from the postings (two corpus-sized
+    // aggregates — the ad-hoc path). Same doubles either way, see
+    // [[Bm25Stats]].
+    val candidates = stats match {
       case Some(st) =>
-        // reference objects, not literals: inlined values would re-key
-        // the scoring stage's codegen cache after every upsert/delete
         import graft.functions.expressions.VectorExpressions.double_ref
-        df => df
+        val dfOf =
+          if (terms.isEmpty) Map.empty[String, Long]
+          else st.dfs.filter(col("term").isin(terms: _*))
+            .select("term", "df").collect()
+            .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
+        val qtd = local(qtFields :+ StructField("df", DoubleType, false),
+          pairs.flatMap { case (q, t) =>
+            dfOf.get(t).map(d => Row(q, t, d.toDouble)) })
+        postings.join(broadcast(qtd), Seq("term"))
           .withColumn("n_docs", double_ref(st.nDocs.toDouble))
-          .withColumn("avgdl", double_ref(st.sumDl.toDouble / st.nDocs.toDouble))
+          .withColumn("avgdl",
+            double_ref(st.sumDl.toDouble / st.nDocs.toDouble))
       case None =>
+        val qt = local(qtFields, pairs.map { case (q, t) => Row(q, t) })
+        val dfr = postings
+          .join(broadcast(local(Seq(termField), terms.map(Row(_)))),
+            Seq("term"))
+          .groupBy("term").agg(count(lit(1)).cast("double").as("df"))
         val derived = postings.select("doc_id", "dl").groupBy("doc_id")
           .agg(first("dl").as("dl"))
           .agg(count(lit(1)).cast("double").as("n_docs"),
             avg("dl").as("avgdl"))
-        df => df.crossJoin(broadcast(derived))
+        postings.join(broadcast(qt), Seq("term"))
+          .join(broadcast(dfr), Seq("term"))
+          .crossJoin(broadcast(derived))
     }
-    val dfr = stats match {
-      case Some(st) => st.dfs
-        .join(broadcast(qt.select("term").distinct()), Seq("term"))
-        .groupBy("term").agg(sum("df").cast("double").as("df"))
-      case None => postings
-        .join(broadcast(qt.select("term").distinct()), Seq("term"))
-        .groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    }
-    val scored = withStats(postings
-      .join(broadcast(qt), Seq("term"))
-      .join(broadcast(dfr), Seq("term")))
+    val scored = candidates
       .withColumn("contrib",
         log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5))
             / (col("df") + lit(0.5)))

@@ -628,8 +628,12 @@ object RagPipeline {
     *     [[retrieveRanked]];
     *   - the lexical ranking scores the persisted BM25 postings
     *     ([[graft.sources.KeywordIndex.ensurePostings]]) — EXACTLY
-    *     equal to the direct ranking by construction (df/avgdl/N derive
-    *     from the postings at query time, the q81 contract);
+    *     equal to the direct ranking by construction (df/avgdl/N come
+    *     from the stored stats, which equal the postings' own, the q81
+    *     contract). Its query side runs on the driver inside this call:
+    *     the queries are tokenized there and the stored `df` of their
+    *     terms is fetched by one eager lookup job, so the returned plan
+    *     scans the postings once and shuffles no query rows;
     *   - the fusion is the same [[graft.operators.KeywordSearch.rrfFuse]].
     *
     * So at the shipped operating point the output is IDENTICAL to
@@ -760,6 +764,16 @@ object RagPipeline {
     * fixture scale; the lexical half is exact by the delete ≡ rebuild
     * invariant, the dense half by the q116 tombstoned-SQ8 identity at
     * the certified margin).
+    *
+    * This is the per-answer serving call, so it keeps fixed overhead
+    * off the corpus: the lexical half resolves its query side on the
+    * driver (tokens, and the stored `df` of the query terms through one
+    * eager lookup job — [[graft.operators.KeywordSearch
+    * .bm25TopKFromPostings]]), and serves the stored corpus stats
+    * even after deletes, because [[graft.sources.KeywordIndex
+    * .deletePostings]] subtracts the deleted chunks from them. The
+    * returned plan scans the postings once and shuffles only corpus-side
+    * candidate rows.
     */
   def hybridRetrieveQuantizedOpen(
       spark: SparkSession,

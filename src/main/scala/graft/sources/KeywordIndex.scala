@@ -2,8 +2,9 @@ package graft.sources
 
 import graft.operators.KeywordSearch
 import graft.operators.KeywordSearch.Bm25Stats
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Persisted BM25 postings — the lexical twin of [[AnnIndex]]'s vector
   * layouts, completing the index-once/upsert-many/query-many lifecycle
@@ -19,11 +20,13 @@ import org.apache.spark.sql.functions._
   * Cross-process re-attach is DDL-only.
   *
   * Unlike the ANN indexes there is NO approximation anywhere in this
-  * lifecycle: document frequency and corpus stats are derived from the
-  * merged postings at query time, and a document's postings rows depend
-  * on that document alone — so an upserted index is ROW-IDENTICAL to a
-  * full rebuild (q82 hash-matches the full-corpus oracle), with none of
-  * the centroid-drift caveat the IVF upsert carries.
+  * lifecycle: a document's postings rows depend on that document alone,
+  * and document frequency and corpus stats are either derived from the
+  * served postings at query time or read from stored stats that every
+  * upsert and delete keeps equal to that derivation ([[statsFor]]) — so
+  * an upserted index is ROW-IDENTICAL to a full rebuild (q82
+  * hash-matches the full-corpus oracle), with none of the centroid-drift
+  * caveat the IVF upsert carries.
   */
 object KeywordIndex {
 
@@ -65,9 +68,10 @@ object KeywordIndex {
   }
 
   /** The SERVED view: when a tombstone table exists the postings
-    * anti-join it on doc_id. Because df/avgdl/N derive at QUERY time
-    * from the merged postings ([[KeywordSearch.bm25TopKFromPostings]]),
-    * the anti-joined view answers IDENTICALLY to a rebuild from the
+    * anti-join it on doc_id. Because df/avgdl/N derive from the served
+    * postings ([[KeywordSearch.bm25TopKFromPostings]]) or from stored
+    * stats that [[deletePostings]] reduces by the deleted documents, the
+    * anti-joined view answers IDENTICALLY to a rebuild from the
     * surviving documents — delete ≡ rebuild exactly, the lexical twin
     * of the upsert ≡ rebuild invariant. The tombstone side is a doc-id
     * list (bounded by deletions, broadcast at query time).
@@ -362,6 +366,8 @@ object KeywordIndex {
         batchId.orElse(meta.get("last_batch_id"))
           .map("last_batch_id" -> _).toSeq ++
         meta.get("tomb_rows").map("tomb_rows" -> _).toSeq ++
+        (if (statsKept) meta.get("stats_tomb_rows")
+          .map("stats_tomb_rows" -> _).toSeq else Nil) ++
         meta.get("last_del_batch_id")
           .map("last_del_batch_id" -> _).toSeq,
       Nil)
@@ -375,10 +381,19 @@ object KeywordIndex {
     * documents vanish from vector results but keep surfacing through
     * BM25 fusion). Merge-on-read tombstones: the id batch APPENDS to a
     * doc-id tombstone table (O(batch), no postings rewrite) and every
-    * served view anti-joins it. Because corpus statistics derive at
-    * query time from the merged postings, the tombstoned view answers
-    * EXACTLY like a rebuild from the survivors — delete ≡ rebuild with
-    * no recall caveat (q194 hash-matches the survivor-rebuilt oracle).
+    * served view anti-joins it, so the tombstoned view answers EXACTLY
+    * like a rebuild from the survivors — delete ≡ rebuild with no recall
+    * caveat (q194 hash-matches the survivor-rebuilt oracle).
+    *
+    * Stored stats stay exact: one batch-sized collect of the deleted
+    * documents' still-live postings gives the decrements — negative `df`
+    * deltas appended to the side table (readers sum per term), and lower
+    * `n_docs_stat`/`sum_dl` in the meta — so [[statsFor]] keeps serving
+    * the survivors' statistics. Crash window: the stats are invalidated
+    * in the meta before any data is touched and re-admitted by the final
+    * meta commit (the [[upsertPostings]] rule), so a crash in between
+    * leaves a stats-less layout served via the derived path (correct
+    * numbers, slower plan) until the next ensure or compaction re-seeds.
     *
     * Deleting absent or already-deleted ids is a semantic no-op. A
     * delete moves the layout past any named snapshot (stored
@@ -407,15 +422,40 @@ object KeywordIndex {
     val replayed = batchId.exists(id =>
       meta.get("last_del_batch_id").exists(id <= _))
     if (replayed) return served(spark, tag)
-    val batch = ids.select(ids(idCol).as("doc_id")).distinct()
-    val nDel = batch.count()
+    // the distinct id batch is collected (an in-memory id frame without
+    // a job): it counts the tombstones, selects the batch's postings
+    // below and is written as the tombs append
+    val picked = ids.select(ids(idCol).as("doc_id"))
+    val batchIds = picked.collect().toSeq.distinct
+    val nDel = batchIds.size.toLong
+    val batch = spark.createDataFrame(batchIds.asJava, picked.schema)
+      .coalesce(1)
     // meta is the tombstone commit point (sweep crashed-delete
     // orphans); tombs COMMITTED by another session must attach BEFORE
     // the exists-check (the AnnIndex.writeTombs rule)
     AnnIndex.sweepOrphanTombs(spark, base, tombsName(tag))
-    if (!spark.catalog.tableExists(tombsName(tag)) &&
-        AnnIndex.tombsServable(spark, base))
-      AnnIndex.registerExternal(spark, tombsName(tag), s"$base/tombs")
+    AnnIndex.syncTombs(spark, base, tombsName(tag))
+    val statsKept = statsCurrent(meta) &&
+      AnnIndex.parquetReadable(spark, s"$base/dfs")
+    val (dfDeltas, nStatDel, sumDlDel) =
+      if (statsKept && batchIds.nonEmpty) {
+        syncDfs(spark, tag)
+        // the batch's postings still served — read BEFORE the tombs
+        // append, over the current files, so already-deleted and absent
+        // ids contribute nothing
+        spark.catalog.refreshTable(tableName(tag))
+        val gone = served(spark, tag)
+          .filter(col("doc_id").isin(batchIds.map(_.get(0)): _*))
+          .select("doc_id", "term", "dl").collect()
+        val dls = gone.map(r => r.get(0) -> r.getDouble(2)).toMap
+        // INVALIDATE the stats before touching any data (the
+        // upsertPostings rule); the final meta commit re-admits them
+        AnnIndex.writeMetaFull(base,
+          (meta - "sum_dl" - "n_docs_stat").toSeq,
+          AnnIndex.readMetaStrs(base).toSeq)
+        (gone.groupMapReduce(_.getString(1))(_ => -1L)(_ + _),
+          dls.size.toLong, dls.values.sum.toLong)
+      } else (Map.empty[String, Long], 0L, 0L)
     if (spark.catalog.tableExists(tombsName(tag)))
       batch.write.mode(SaveMode.Append).format("parquet")
         .saveAsTable(tombsName(tag))
@@ -423,9 +463,21 @@ object KeywordIndex {
       batch.write.mode(SaveMode.Overwrite)
         .option("path", s"$base/tombs")
         .format("parquet").saveAsTable(tombsName(tag))
+    if (dfDeltas.nonEmpty)
+      spark.createDataFrame(
+        dfDeltas.toSeq.map { case (t, d) => Row(t, d) }.asJava,
+        spark.table(dfsName(tag)).schema)
+        .coalesce(1).write.mode(SaveMode.Append).format("parquet")
+        .saveAsTable(dfsName(tag))
+    val tombRows = meta.getOrElse("tomb_rows", 0L) + nDel
     AnnIndex.writeMetaFull(base,
-      (meta - "tomb_rows" - "last_del_batch_id").toSeq ++
-        Seq("tomb_rows" -> (meta.getOrElse("tomb_rows", 0L) + nDel)) ++
+      (meta - "tomb_rows" - "last_del_batch_id" - "sum_dl" - "n_docs_stat"
+        - "stats_tomb_rows").toSeq ++
+        Seq("tomb_rows" -> tombRows) ++
+        (if (statsKept)
+          Seq("sum_dl" -> (meta("sum_dl") - sumDlDel),
+            "n_docs_stat" -> (meta("n_docs_stat") - nStatDel),
+            "stats_tomb_rows" -> tombRows) else Nil) ++
         batchId.orElse(meta.get("last_del_batch_id"))
           .map("last_del_batch_id" -> _).toSeq,
       Nil) // snapshot_id intentionally dropped: the layout moved past it
@@ -514,26 +566,40 @@ object KeywordIndex {
         .select("doc_id").distinct().count()
       AnnIndex.writeMetaFull(base,
         (meta - "n_docs" - "checksum" - "tomb_rows" - "sum_dl"
-          - "n_docs_stat").toSeq ++
+          - "n_docs_stat" - "stats_tomb_rows").toSeq ++
           Seq("n_docs" -> nLive, "sum_dl" -> sumDlLive,
             "n_docs_stat" -> nStatLive),
         AnnIndex.readMetaStrs(base).toSeq)
     } else
       AnnIndex.writeMetaFull(base,
-        (meta - "sum_dl" - "n_docs_stat").toSeq ++
+        (meta - "sum_dl" - "n_docs_stat" - "stats_tomb_rows").toSeq ++
           Seq("sum_dl" -> sumDlLive, "n_docs_stat" -> nStatLive),
         AnnIndex.readMetaStrs(base).toSeq)
     served(spark, tag)
   }
 
-  /** Stored corpus statistics for BM25 serving, when they are valid:
-    * `(n_docs, sum_dl)` from the meta plus the per-term df side table
-    * (append-only deltas; [[KeywordSearch.Bm25Stats]] read-side sums).
+  /** True iff the meta's stored stats describe the SERVED view: they
+    * are present and every committed tombstone was subtracted from them
+    * (`stats_tomb_rows`, written by [[deletePostings]], equals
+    * `tomb_rows`). A layout tombstoned by a delete that did not keep the
+    * stats fails the check.
+    */
+  private def statsCurrent(meta: Map[String, Long]): Boolean =
+    meta.contains("sum_dl") && meta.contains("n_docs_stat") &&
+      meta.getOrElse("tomb_rows", 0L) == meta.getOrElse("stats_tomb_rows", 0L)
+
+  /** Stored corpus statistics for BM25 serving: `(n_docs, sum_dl)` from
+    * the meta plus the per-term df side table (append-only deltas,
+    * negative after deletes; [[KeywordSearch.Bm25Stats]] read-side sums).
+    * They describe the served view — tombstoned layouts included, since
+    * [[deletePostings]] subtracts the deleted documents — so the stats
+    * path answers exactly like the derived path over the survivors.
     * Returns None — and the caller serves via the derived-stats path,
-    * same numbers, corpus-sized plan — when the layout is tombstoned
-    * (the anti-joined view's stats must reflect SURVIVORS to keep
-    * delete ≡ rebuild exact), predates stats, or lost its dfs dir to a
-    * crashed compaction. Registration sync is DDL-free on no change.
+    * same numbers, corpus-sized plan — only for a layout without stats
+    * (built before them, inside an upsert's or delete's crash window, or
+    * tombstoned by a delete that did not keep them) or with an
+    * unreadable dfs dir (a crashed compaction), and for an empty corpus.
+    * Registration sync is DDL-free on no change.
     */
   def statsFor(spark: SparkSession, sourceDir: String): Option[Bm25Stats] = {
     val tag = IndexStore.pathTag(sourceDir)
@@ -541,8 +607,7 @@ object KeywordIndex {
     // n_docs_stat, NOT n_docs: BM25's N is the count of docs with at
     // least one token (what the derived path counts over postings) —
     // meta n_docs is source cardinality and over-counts token-less docs
-    if (meta.get("tomb_rows").forall(_ == 0L) && meta.contains("sum_dl") &&
-        meta.get("n_docs_stat").exists(_ > 0L)) {
+    if (meta.get("n_docs_stat").exists(_ > 0L) && statsCurrent(meta)) {
       syncDfs(spark, tag)
       if (spark.catalog.tableExists(dfsName(tag)))
         Some(Bm25Stats(meta("n_docs_stat"), meta("sum_dl"),

@@ -89,6 +89,26 @@ class KnnGraphSpec extends AnyFunSuite {
     assert(served === exact)
   }
 
+  test("graphSearch's symmetrized-edge localCheckpoint is disk-backed: " +
+      "every RDD the undirected search persists may spill to disk") {
+    val idx = (0 until 40).map { i =>
+      val theta = (i % 4) * 1.5 + (i / 4) * 0.01
+      (i.toLong, Array(math.cos(theta).toFloat, math.sin(theta).toFloat))
+    }.toDF("vec_id", "embedding")
+    val graph = KnnGraph.exactGraph(idx, k = 3).select("src", "dst")
+    val q = Seq((100L, Array(1.0f, 0.0f))).toDF("query_id", "query_vec")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    KnnGraph.graphSearch(q, idx, graph, k = 2, beam = 8, rounds = 2)
+      .collect()
+    val added = sc.getPersistentRDDs.filter { case (id, _) =>
+      !before(id) }.values.toSeq
+    assert(added.nonEmpty, "the undirected search checkpointed nothing")
+    assert(added.forall(_.getStorageLevel.useDisk),
+      s"memory-only persisted RDDs: ${added.map(r =>
+        r.id -> r.getStorageLevel)}")
+  }
+
   test("graphSearch answers a seedless OUTLIER query via the global " +
       "entry fallback instead of silently dropping it") {
     // every index vector points along +v (scaled copies → identical

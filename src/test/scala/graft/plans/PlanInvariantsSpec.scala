@@ -206,19 +206,53 @@ class PlanInvariantsSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), p)
   }
 
+  /** `body`'s result plus the physical plans of the actions it ran
+    * eagerly (a QueryExecutionListener; its events are async).
+    */
+  private def withEagerPlans[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val r = body
+      Thread.sleep(1000)
+      import scala.jdk.CollectionConverters._
+      (r, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  private def scans(p: String, table: String): Int =
+    p.linesIterator.count(l => l.contains("FileScan") && l.contains(table))
+
+  /** The stored-stats BM25 path's df comes from ONE eager lookup whose
+    * job scans the vocabulary-sized side table and never the postings.
+    */
+  private def assertDfLookup(eager: Seq[String]): Unit = {
+    val lookups = eager.filter(scans(_, "graft_kw_dfs_") > 0)
+    assert(lookups.size === 1,
+      s"expected one df lookup over the stats side table:\n${
+        eager.mkString("\n\n")}")
+    assert(scans(lookups.head, "graft_kw_postings_") === 0,
+      s"the df lookup scanned the postings:\n${lookups.head}")
+  }
+
   test("q81 persisted BM25 serves stats from the STORE: exactly one " +
       "postings scan, df from the vocabulary-sized side table") {
-    val p = physical("q81_bm25_persisted")
+    val (p, eager) = withEagerPlans(physical("q81_bm25_persisted"))
     // the derived path scans the postings three times per call (corpus
     // stats, query-term df, scoring); the served-stats path must scan
     // them ONCE (scoring) — at 100 TB the other two were corpus-sized
     // aggregates per query batch
-    val postingsScans = p.linesIterator.count(l =>
-      l.contains("FileScan") && l.contains("graft_kw_postings_"))
+    val postingsScans = scans(p, "graft_kw_postings_")
     assert(postingsScans === 1,
       s"expected exactly 1 postings scan, got $postingsScans:\n$p")
-    assert(p.contains("graft_kw_dfs_"),
-      s"df must come from the stats side table:\n$p")
+    assertDfLookup(eager)
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
       s"a join shuffled the postings:\n$p")
     assert(p.toLowerCase.contains("partial_topkagg"), p)
@@ -235,15 +269,53 @@ class PlanInvariantsSpec extends AnyFunSuite {
     val docs = graft.Tables.load(spark, TestSpark.Sf0001, "documents")
     val index = RagPipeline.buildIndex(spark, docs, chunkSize = 200)
     val q = graft.queries.PipelineQueries.retrievalQueryDf(spark)
-    val p = RagPipeline.hybridRetrievePersisted(spark,
-        TestSpark.Sf0001 + "!hybrid", q, index, k = 4)
-      .queryExecution.executedPlan.toString
-    val postingsScans = p.linesIterator.count(l =>
-      l.contains("FileScan") && l.contains("graft_kw_postings_"))
+    val (p, eager) = withEagerPlans(RagPipeline.hybridRetrievePersisted(
+        spark, TestSpark.Sf0001 + "!hybrid", q, index, k = 4)
+      .queryExecution.executedPlan.toString)
+    val postingsScans = scans(p, "graft_kw_postings_")
     assert(postingsScans === 1,
       s"expected exactly 1 postings scan, got $postingsScans:\n$p")
-    assert(p.contains("graft_kw_dfs_"),
-      s"df must come from the stats side table:\n$p")
+    assertDfLookup(eager)
+  }
+
+  test("served quantized hybrid read ships only corpus-side work: no " +
+      "shuffle over the query batch, one postings scan and one df " +
+      "lookup — before and after hybridDeleteQuantized") {
+    import graft.rag.RagPipeline
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val docs = graft.Tables.load(spark, TestSpark.Sf0001, "documents")
+    val index = RagPipeline.buildIndex(spark, docs, chunkSize = 200)
+      .localCheckpoint(true)
+    val q = graft.queries.PipelineQueries.retrievalQueryDf(spark)
+    val src = TestSpark.Sf0001 + "!served-" +
+      java.util.UUID.randomUUID.toString.take(8)
+    RagPipeline.hybridRetrieveQuantized(spark, src, q, index, k = 4).count()
+    def check(stage: String): Unit = {
+      val (df, eager) = withEagerPlans(
+        RagPipeline.hybridRetrieveQuantizedOpen(spark, src, q, index, k = 4))
+      val plan: SparkPlan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+      val p = plan.toString
+      // every shuffle must carry corpus-side rows: one whose input reads
+      // no stored table moves the query batch itself
+      val shuffles = plan.collect { case e: ShuffleExchangeLike => e }
+      assert(shuffles.nonEmpty, p)
+      val queryOnly = shuffles.filter(e =>
+        e.collect { case f: FileSourceScanExec => f }.isEmpty)
+      assert(queryOnly.isEmpty,
+        s"$stage: a shuffle moves the query batch:\n${queryOnly.mkString("\n")}")
+      assert(scans(p, "graft_kw_postings_") === 1,
+        s"$stage: expected exactly 1 postings scan:\n$p")
+      assertDfLookup(eager)
+    }
+    check("clean")
+    RagPipeline.hybridDeleteQuantized(spark, src,
+      index.select("chunk_id").orderBy("chunk_id").limit(7))
+    check("after delete")
   }
 
   test("q86 hybrid over the persisted postings: the BM25 half scans the " +

@@ -29,6 +29,15 @@ class KeywordIndexSpec extends AnyFunSuite {
 
   private val runTag = java.util.UUID.randomUUID.toString.take(8)
 
+  /** Stored stats as values: N, Σ dl and the per-term Σ df (terms whose
+    * every document was deleted sum to 0 and a rebuild has no row for
+    * them, so zero sums are dropped).
+    */
+  private def summary(st: KeywordSearch.Bm25Stats)
+      : (Long, Long, Map[String, Long]) =
+    (st.nDocs, st.sumDl, st.dfs.groupBy("term").agg(sum("df")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).filter(_._2 != 0L).toMap)
+
   test("persisted postings answer row-identically to the direct path, " +
       "and a second ensure reuses without rebuilding") {
     val src = s"kwspec-$runTag-a"
@@ -103,21 +112,94 @@ class KeywordIndexSpec extends AnyFunSuite {
     assert(st2.get.sumDl === st.get.sumDl)
     assert(hits(KeywordSearch.bm25TopKFromPostings(queries, post2, k = 5,
       stats = st2)) === direct)
-    // tombstoned layout refuses stats (the anti-joined view's stats
-    // must reflect survivors — the caller falls back to derivation)
+    // a tombstoned layout keeps serving stats: the delete subtracted
+    // the victims, so they are the survivors' stats exactly
     val victims = KeywordSearch.bm25TopK(queries, docs, k = 1)
       .select("doc_id").distinct().limit(2).localCheckpoint(true)
-    KeywordIndex.deletePostings(spark, src2, victims)
-    assert(KeywordIndex.statsFor(spark, src2).isEmpty,
-      "tombstoned layout must not serve stale stats")
-    // the fold recounts survivor stats and re-admits them
+    val tombed = KeywordIndex.deletePostings(spark, src2, victims)
+    val survivors = docs.join(victims, Seq("doc_id"), "left_anti")
+    val survivorHits = hits(KeywordSearch.bm25TopK(queries, survivors,
+      k = 5))
+    val stDel = KeywordIndex.statsFor(spark, src2)
+    assert(stDel.isDefined, "tombstoned layout must keep serving stats")
+    assert(stDel.get.nDocs === survivors.count())
+    assert(hits(KeywordSearch.bm25TopKFromPostings(queries, tombed, k = 5,
+      stats = stDel)) === survivorHits)
+    val delSummary = summary(stDel.get)
+    // the fold recounts survivor stats and keeps them admitted
     val folded = KeywordIndex.compactPostings(spark, src2)
     val st3 = KeywordIndex.statsFor(spark, src2)
     assert(st3.isDefined)
-    val survivors = docs.join(victims, Seq("doc_id"), "left_anti")
+    assert(summary(st3.get) === delSummary)
     assert(hits(KeywordSearch.bm25TopKFromPostings(queries, folded, k = 5,
-      stats = st3)) === hits(KeywordSearch.bm25TopK(queries, survivors,
-      k = 5)))
+      stats = st3)) === survivorHits)
+  }
+
+  test("deletePostings keeps the stored stats exact: a batch with an " +
+      "already-deleted id, an absent id and a token-less document leaves " +
+      "stats equal to a rebuild over the survivors; upsert and fold after " +
+      "the delete, and a crash inside it, keep the answers exact") {
+    import spark.implicits._
+    val src = s"kwspec-$runTag-ds"
+    val blank = 999997L
+    val corpus = docs.unionByName(Seq((blank, "!!! ---")).toDF("doc_id",
+      "text"))
+    KeywordIndex.ensurePostings(spark, src, corpus)
+    val ranked = KeywordSearch.bm25TopK(queries, docs, k = 3)
+      .select("doc_id").distinct().collect().map(_.getLong(0)).sorted
+    assert(ranked.length >= 7, ranked.toSeq)
+    val (first, second) = (ranked.take(2).toSeq, ranked.slice(2, 4).toSeq)
+    KeywordIndex.deletePostings(spark, src, first.toDF("doc_id"))
+    KeywordIndex.deletePostings(spark, src,
+      (second :+ first.head :+ 123456789L :+ blank).toDF("doc_id"))
+    def without(ids: Seq[Long]) = corpus.join(ids.toDF("doc_id"),
+      Seq("doc_id"), "left_anti")
+    // the stored stats equal a fresh build's over the survivors, and
+    // serve the same answers as the direct path over them
+    def assertExact(live: DataFrame, tag: String): Unit = {
+      val st = KeywordIndex.statsFor(spark, src)
+      assert(st.isDefined, s"$tag: stats must stay admitted")
+      val ref = s"$src-$tag-ref"
+      KeywordIndex.ensurePostings(spark, ref, live)
+      assert(summary(st.get) ===
+        summary(KeywordIndex.statsFor(spark, ref).get), tag)
+      assert(hits(KeywordSearch.bm25TopKFromPostings(queries,
+        KeywordIndex.openPostings(spark, src), k = 5, stats = st)) ===
+        hits(KeywordSearch.bm25TopK(queries, live, k = 5)), tag)
+    }
+    val gone = first ++ second :+ blank
+    assertExact(without(gone), "delete")
+    // upsert after the delete adds to the maintained stats
+    val fresh = Seq((990101L, "quartz zebra " + "lorem " * 3),
+      (990102L, "zebra delta")).toDF("doc_id", "text")
+    KeywordIndex.upsertPostings(spark, src, fresh)
+    assertExact(without(gone).unionByName(fresh), "upsert")
+    // crash window: a delete whose tombs and df deltas landed but whose
+    // final meta commit did not (the meta it left: stats invalidated,
+    // tomb count not yet raised) serves via the derived path, exactly
+    val base = s"/tmp/graft_kw_${IndexStore.pathTag(src)}"
+    val before = AnnIndex.readMeta(base)
+    val third = ranked.slice(4, 6).toSeq
+    KeywordIndex.deletePostings(spark, src, third.toDF("doc_id"))
+    AnnIndex.writeMetaFull(base, (before - "sum_dl" - "n_docs_stat").toSeq,
+      Nil)
+    val live = without(gone ++ third).unionByName(fresh)
+    assert(KeywordIndex.statsFor(spark, src).isEmpty,
+      "a crashed delete must not serve stats")
+    assert(hits(KeywordSearch.bm25TopKFromPostings(queries,
+      KeywordIndex.openPostings(spark, src), k = 5,
+      stats = KeywordIndex.statsFor(spark, src))) ===
+      hits(KeywordSearch.bm25TopK(queries, live, k = 5)))
+    // fold after the delete re-derives and re-admits them
+    KeywordIndex.compactPostings(spark, src)
+    assertExact(live, "fold")
+    // a tombstoned layout whose delete did not subtract the victims
+    // (stats left as they were, no stats_tomb_rows) refuses its stats
+    KeywordIndex.deletePostings(spark, src, ranked.slice(6, 7).toSeq
+      .toDF("doc_id"))
+    AnnIndex.writeMetaFull(base,
+      (AnnIndex.readMeta(base) - "stats_tomb_rows").toSeq, Nil)
+    assert(KeywordIndex.statsFor(spark, src).isEmpty)
   }
 
   test("stored stats N counts docs WITH tokens: a token-less document " +

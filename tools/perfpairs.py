@@ -23,6 +23,11 @@ same files the benchmark compares, with no checkout registered in this
 repository) that is removed afterwards. Both sides build their own
 `.bench_build/` on the first run. `--out FILE` also writes every run and
 every verdict as JSON.
+
+`--layers SEED` adds, after a workload's pairs, one `--trace 1` run per side
+at SEED and prints every per-layer metric BENCHMARK.json declares side by
+side with the change's difference (one traced run each: counts are exact,
+times are a single sample).
 """
 
 import argparse
@@ -88,10 +93,10 @@ def verdict(parent, change, better, bound):
     }
 
 
-def run_once(cwd, workload, seed, seconds):
-    """One untraced benchmark run in `cwd`: its parsed JSON result."""
+def run_once(cwd, workload, seed, seconds, trace=0):
+    """One benchmark run in `cwd`: its parsed JSON result."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=cwd, capture_output=True, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
@@ -142,6 +147,29 @@ def report(workload, runs, metrics):
     return verdicts
 
 
+def layer_table(workload, seed, parent, change, layers):
+    """Lines of the per-layer table of one traced run per side."""
+    def value(run, name):
+        m = run["metrics"].get(name)
+        return None if m is None else m["value"]
+
+    out = [f"\n## {workload}: per-layer metrics, traced seed {seed}",
+           "| metric | parent | change | change - parent |",
+           "|---|---|---|---|"]
+    for m in layers:
+        p, c = value(parent, m["name"]), value(change, m["name"])
+        if p is None or c is None:
+            diff = "n/a"
+        else:
+            diff = f"{c - p:+.4g}"
+            if p:
+                diff += f" ({100.0 * (c - p) / abs(p):+.1f}%)"
+        out.append(f"| {m['name']} ({m['unit']}) | "
+                   f"{'n/a' if p is None else fmt(p)} | "
+                   f"{'n/a' if c is None else fmt(c)} | {diff} |")
+    return out
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--parent", default="HEAD",
@@ -149,6 +177,9 @@ def main(argv=None):
     ap.add_argument("--workload", action="append", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 1-10 or 3,5,7")
     ap.add_argument("--out", help="write runs and verdicts as JSON here")
+    ap.add_argument("--layers", type=int, metavar="SEED",
+                    help="after the pairs, one traced run per side at SEED "
+                         "and a per-layer table")
     a = ap.parse_args(argv)
     seeds = parse_seeds(a.seeds)
     bench = load_benchmark(ROOT)
@@ -173,6 +204,14 @@ def main(argv=None):
                     f"{s}={pair[s]['metrics']['latency_p50_ms']['value']:.0f}ms"
                     for s in ("parent", "change")), flush=True)
             result["workloads"][w]["verdicts"] = report(w, runs, metrics)
+            if a.layers is not None:
+                traced = {side: run_once(cwd, w, a.layers, seconds, trace=1)
+                          for side, cwd in (("parent", parent_dir),
+                                            ("change", ROOT))}
+                result["workloads"][w]["layers"] = traced
+                print("\n".join(layer_table(w, a.layers, traced["parent"],
+                                             traced["change"],
+                                             bench["per_layer"])))
     finally:
         shutil.rmtree(parent_dir, ignore_errors=True)
         if a.out:

@@ -7,7 +7,7 @@ import os
 import tempfile
 import unittest
 
-from perfpairs import export_ref, parse_seeds, quartiles, verdict
+from perfpairs import export_ref, layer_table, parse_seeds, quartiles, verdict
 
 
 class VerdictTest(unittest.TestCase):
@@ -69,6 +69,40 @@ class VerdictTest(unittest.TestCase):
 
     def test_parse_seeds(self):
         self.assertEqual(parse_seeds("1-3,7,9-10"), [1, 2, 3, 7, 9, 10])
+
+
+class LayerTableTest(unittest.TestCase):
+    layers = [{"name": "spark.jobs_per_answer", "unit": "count"},
+              {"name": "rag.call_ms", "unit": "ms"},
+              {"name": "jvm.gc_ms", "unit": "ms"}]
+
+    def run_of(self, **values):
+        return {"metrics": {k.replace("_", ".", 1): {"value": v}
+                            for k, v in values.items()}}
+
+    def test_side_by_side_with_signed_difference(self):
+        lines = layer_table(
+            "churn", 1,
+            self.run_of(spark_jobs_per_answer=15.67, rag_call_ms=250.0,
+                        jvm_gc_ms=0.0),
+            self.run_of(spark_jobs_per_answer=10.67, rag_call_ms=350.0,
+                        jvm_gc_ms=3.0),
+            self.layers)
+        self.assertEqual(lines[0], "\n## churn: per-layer metrics, traced seed 1")
+        self.assertEqual(lines[3], "| spark.jobs_per_answer (count) | 15.67 | "
+                                   "10.67 | -5 (-31.9%) |")
+        self.assertEqual(lines[4], "| rag.call_ms (ms) | 250 | 350 | "
+                                   "+100 (+40.0%) |")
+        # no relative change against a zero parent
+        self.assertEqual(lines[5], "| jvm.gc_ms (ms) | 0 | 3 | +3 |")
+
+    def test_a_metric_missing_on_one_side_reads_na(self):
+        lines = layer_table("ingest", 2, self.run_of(rag_call_ms=1.0),
+                            self.run_of(), self.layers)
+        self.assertEqual(len(lines), 3 + len(self.layers))
+        self.assertEqual(lines[4], "| rag.call_ms (ms) | 1 | n/a | n/a |")
+        self.assertEqual(lines[3], "| spark.jobs_per_answer (count) | n/a | "
+                                   "n/a | n/a |")
 
 
 class ExportTest(unittest.TestCase):
