@@ -53,6 +53,12 @@ object KeywordSearch {
     * performs (dl sums are integral doubles, exact in any order), and
     * the df sums are integer counts — so the served scores are
     * bit-identical to the derived path's.
+    *
+    * A persisted `dfs` frame is bound to the side table's file listing
+    * at the time the stats were taken: after a
+    * [[graft.sources.KeywordIndex.compactPostings]] swaps the dir, using
+    * it fails with `FAILED_READ_FILE.FILE_NOT_EXIST`. Take the stats
+    * again after every compaction.
     */
   final case class Bm25Stats(nDocs: Long, sumDl: Long, dfs: DataFrame)
 

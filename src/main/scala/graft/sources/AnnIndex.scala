@@ -13,30 +13,36 @@ import java.nio.file.{Files, Paths}
   * At a 100 TB index the build dwarfs any single query — amortizing it is
   * the entire point of an index. This module stores:
   *
-  *  - LSH: a bucket table `(tb, vec_id)` where `tb = table * 2^bits +
-  *    bucket`, written `bucketBy(tb)`/`sortBy(tb)` through the catalog,
-  *    plus a vector table `(vec_id, embedding)` bucketed by `vec_id` for
-  *    the re-rank join. Queries broadcast their probed bucket ids and
-  *    equi-join the bucket table on `tb` — no signature is recomputed
-  *    over the index side, and the index scan is a single pass over a
-  *    narrow (long, long) relation with no index-side shuffle.
+  *  - Codec layouts, two lifecycles written once over a private
+  *    `Codec`. The FLAT one (one scan table of per-row codec rows)
+  *    serves SQ8 and BQ (`codes` bucketed by vec_id) and LSH, a flat
+  *    codec whose rows are bucket ids: `buckets` holds `(tb, vec_id)`
+  *    with `tb = table * 2^bits + bucket`, bucketed and sorted by `tb`.
+  *    Queries broadcast their probed bucket ids and equi-join it on
+  *    `tb` — no signature is recomputed over the index side, and the
+  *    index scan is one pass over a narrow (long, long) relation. The
+  *    IVF one (encoded `lists` partitioned by centroid_id, plus the
+  *    centroids and any trained codec model such as the PQ codebook)
+  *    serves IVF-SQ8, IVF-BQ and IVF-PQ. Both keep the float vectors
+  *    bucketed by vec_id for the exact re-rank, and merge-on-read
+  *    tombstones.
   *  - IVF: Lloyd-refined centroids (tiny, plain parquet) plus the
   *    inverted lists `(centroid_id, vec_id, embedding)` partitioned by
   *    `centroid_id` — probing nProbe lists per query is partition
   *    pruning, the classic inverted-file read pattern.
-  *  - Quantized codec layouts, two lifecycles written once over a
-  *    private `Codec`: the FLAT one (`codes` bucketed by vec_id) serves
-  *    SQ8 and BQ; the IVF one (encoded `lists` partitioned by
-  *    centroid_id, plus the centroids and any trained codec model such
-  *    as the PQ codebook) serves IVF-SQ8, IVF-BQ and IVF-PQ. Both keep
-  *    the float vectors bucketed by vec_id for the exact re-rank, and
-  *    merge-on-read tombstones.
   *
   * Freshness contract: `ensure*` rebuilds when the stored meta (operating
   * point + row count) no longer matches the source frame; the layout is
   * keyed by a tag of the source dir so different fixtures never collide.
   * (A production deployment would key on a table snapshot/version id
   * instead of a row-count heuristic; the fixtures are immutable files.)
+  *
+  * A handle (and any frame built from one) is bound to the file
+  * listing of the moment it was returned. A `compact*` swaps the
+  * layout's dirs and deletes the old files, so a handle an
+  * `open*`/`ensure*` returned before the compaction fails with a
+  * file-not-found read error (`FAILED_READ_FILE.FILE_NOT_EXIST`) when
+  * used after it: open again after every compaction.
   *
   * The IVF probe collects its probed centroid ids to the driver as
   * partition literals: that set is O(queries × nProbe), capped by the
@@ -257,457 +263,13 @@ object AnnIndex {
       org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
   }
 
-  private def lshBase(spark: SparkSession, tag: String) =
-    s"${annBase(spark)}/graft_ann_lsh_$tag"
-
-  /** Per-vector bucket rows, one per hash table: `tb = table * 2^bits +
-    * bucket` packs the table id and bucket into one join key.
-    */
-  private def lshBucketRows(index: DataFrame, tables: Int,
-      bits: Int): DataFrame = {
-    import graft.functions.expressions.VectorExpressions.lsh_buckets
-    index.select(col("vec_id"),
-      posexplode(lsh_buckets(col("embedding"), tables, bits))
-        .as(Seq("tbl", "bucket")))
-      .select(
-        (col("tbl").cast("long") * (1L << bits) + col("bucket")).as("tb"),
-        col("vec_id"))
-  }
-
-  private def lshMetaMatches(meta: Map[String, Long], tables: Int, bits: Int,
-      storageBuckets: Int, n: Long, fp: Long): Boolean =
-    meta.get("tables").contains(tables.toLong) &&
-      meta.get("bits").contains(bits.toLong) &&
-      meta.get("buckets").contains(storageBuckets.toLong) &&
-      meta.get("n_rows").contains(n) &&
-      meta.get("checksum").contains(fp)
-
-  private def lshRegistered(spark: SparkSession, tag: String): Boolean =
-    spark.catalog.tableExists(s"graft_lsh_buckets_$tag") &&
-      spark.catalog.tableExists(s"graft_lsh_vecs_$tag")
-
-  /** Attach the on-disk layout written by an earlier process: DDL only. */
-  private def attachLsh(spark: SparkSession, tag: String,
-      storageBuckets: Int): Unit = {
-    val base = lshBase(spark, tag)
-    spark.sql(s"DROP TABLE IF EXISTS graft_lsh_buckets_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_lsh_vecs_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_lsh_tombs_$tag")
-    registerExternal(spark, s"graft_lsh_buckets_$tag", s"$base/buckets",
-      clusteredBy = Some(("tb", storageBuckets)))
-    registerExternal(spark, s"graft_lsh_vecs_$tag", s"$base/vecs",
-      clusteredBy = Some(("vec_id", storageBuckets)))
-    if (tombsServable(spark, base))
-      registerExternal(spark, s"graft_lsh_tombs_$tag", s"$base/tombs",
-        clusteredBy = Some(("vec_id", storageBuckets)))
-  }
-
-  /** Full (re)build: overwrite both tables, then commit the meta. The
-    * prior meta's `last_batch_id` is carried through: a rebuild between a
-    * streaming crash and its replay must not reopen the replay-skip
-    * window (the replayed batch — already inside the rebuild's source —
-    * would re-append, duplicating its vectors). Contract: a rebuild's
-    * source includes every batch already applied; rebuilding from a
-    * source that deliberately excludes applied batches needs a fresh
-    * sourceDir.
-    */
-  private def buildLsh(spark: SparkSession, tag: String, index: DataFrame,
-      tables: Int, bits: Int, storageBuckets: Int, n: Long,
-      fp: Long, snapshotId: Option[String] = None): Unit = {
-    val base = lshBase(spark, tag)
-    val priorBatch = readMeta(base).get("last_batch_id")
-    val priorDelBatch = readMeta(base).get("last_del_batch_id")
-    // a rebuild serves exactly its source: tombstones are cleared (the
-    // ensureSq8 discipline); the delete replay-skip window survives
-    dropTombs(spark, base, s"graft_lsh_tombs_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS graft_lsh_buckets_$tag")
-    writeBucketed(lshBucketRows(index, tables, bits),
-      s"graft_lsh_buckets_$tag", "tb", storageBuckets, Some(s"$base/buckets"))
-    spark.sql(s"DROP TABLE IF EXISTS graft_lsh_vecs_$tag")
-    writeBucketed(index.select("vec_id", "embedding"),
-      s"graft_lsh_vecs_$tag", "vec_id", storageBuckets, Some(s"$base/vecs"))
-    writeMetaFull(base,
-      Seq("tables" -> tables.toLong, "bits" -> bits.toLong,
-        "buckets" -> storageBuckets.toLong, "n_rows" -> n, "checksum" -> fp) ++
-        priorBatch.map("last_batch_id" -> _).toSeq ++
-        priorDelBatch.map("last_del_batch_id" -> _).toSeq,
-      Seq("source_paths" -> joinPaths(relationPaths(index))) ++
-        snapshotId.map("snapshot_id" -> _).toSeq)
-  }
-
-  /** The served LSH view (the [[flatHandle]] discipline): when a
-    * tombstone table exists both sides anti-join it on vec_id — the
-    * vecs side shares the bucketing (exchange-free); the buckets table
-    * is bucketed by `tb`, so its anti-join rides a broadcast of the
-    * (deletion-bounded) tombstone set instead.
-    */
-  private def lshHandle(spark: SparkSession, tag: String, tables: Int,
-      bits: Int): LshHandle = {
-    val buckets = spark.table(s"graft_lsh_buckets_$tag")
-    val vecs = spark.table(s"graft_lsh_vecs_$tag")
-    val (b, v) =
-      if (spark.catalog.tableExists(s"graft_lsh_tombs_$tag")) {
-        val tombs = spark.table(s"graft_lsh_tombs_$tag")
-        (buckets.join(broadcast(tombs), Seq("vec_id"), "left_anti"),
-          vecs.join(tombs, Seq("vec_id"), "left_anti"))
-      } else (buckets, vecs)
-    LshHandle(b, v, tables, bits,
-      readMetaStrs(lshBase(spark, tag)).get("source_paths")
-        .map(splitPaths).getOrElse(Nil))
-  }
-
-  /** Build (or reuse) the persisted LSH index over `index(vec_id,
-    * embedding)`. One pass computes all `tables` signatures per vector;
-    * both tables land bucketed + sorted through the catalog.
-    *
-    * `snapshotId`: freshness WITHOUT the content scan. The default
-    * build-or-reuse decision pays one O(n) fingerprint pass over the
-    * source per call — right for fixtures, a full table scan per
-    * session attach at 100 TB. When the caller can name an immutable
-    * source snapshot (a lake table version, a partition manifest hash),
-    * passing its id makes reuse O(1): an index whose meta carries the
-    * SAME id at the same operating point is trusted outright — no scan.
-    * A different (or absent) stored id falls back to the fingerprint
-    * path, which rebuilds only on real content change and then records
-    * the new id, so the scan is paid once per snapshot, not once per
-    * call. Contract: ids must name immutable content — reusing an id
-    * after mutating the source serves a stale index by construction.
-    * [[upsertLsh]] drops the stored id (the layout moves ahead of the
-    * named snapshot).
-    */
-  def ensureLsh(
-      spark: SparkSession,
-      sourceDir: String,
-      index: DataFrame,
-      tables: Int = 64,
-      bits: Int = 12,
-      storageBuckets: Int = 8,
-      snapshotId: Option[String] = None): LshHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = lshBase(spark, tag)
-    // a tombstoned layout no longer equals signatures(source): ensure's
-    // contract is "serve exactly this source", so deletions force a
-    // rebuild which clears them (the ensureSq8 discipline)
-    def tombFree = readMeta(base).get("tomb_rows").forall(_ == 0L)
-    val snapFresh = snapshotId.exists { id =>
-      val meta = readMeta(base)
-      readMetaStrs(base).get("snapshot_id").contains(id) &&
-        meta.get("tables").contains(tables.toLong) &&
-        meta.get("bits").contains(bits.toLong) &&
-        meta.get("buckets").contains(storageBuckets.toLong)
-    } && tombFree
-    if (snapFresh && servable(spark,
-        Seq(s"$base/buckets", s"$base/vecs"),
-        lshRegistered(spark, tag),
-        () => attachLsh(spark, tag, storageBuckets)))
-      return lshHandle(spark, tag, tables, bits)
-    // an unreadable layout under a fresh snapshot id falls through to
-    // the fingerprint path, which rebuilds
-    val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
-    // a matching meta over an unreadable layout (a compaction or build
-    // crashed inside a directory-rename window) must count as STALE —
-    // otherwise the attach throws forever and no API call can rebuild.
-    // The readability probe (a footer read) must not trust this
-    // session's catalog registration: files can be gone while the
-    // registration survives.
-    val metaFresh = lshMetaMatches(readMeta(base), tables,
-      bits, storageBuckets, n, fp) && tombFree &&
-      servable(spark, Seq(s"$base/buckets", s"$base/vecs"),
-        lshRegistered(spark, tag),
-        () => attachLsh(spark, tag, storageBuckets))
-    if (!metaFresh)
-      buildLsh(spark, tag, index, tables, bits, storageBuckets, n, fp,
-        snapshotId)
-    if (metaFresh && snapshotId.isDefined)
-      // content unchanged under a new snapshot name: record the id so
-      // the NEXT ensure at this snapshot skips the scan entirely
-      writeMetaFull(base,
-        Seq("tables" -> tables.toLong, "bits" -> bits.toLong,
-          "buckets" -> storageBuckets.toLong, "n_rows" -> n,
-          "checksum" -> fp) ++
-          readMeta(base).get("last_batch_id")
-            .map("last_batch_id" -> _).toSeq ++
-          readMeta(base).get("last_del_batch_id")
-            .map("last_del_batch_id" -> _).toSeq,
-        Seq("source_paths" -> readMetaStrs(base)
-          .getOrElse("source_paths", joinPaths(relationPaths(index)))) ++
-          snapshotId.map("snapshot_id" -> _).toSeq)
-    lshHandle(spark, tag, tables, bits)
-  }
-
-  /** Incremental add into an EXISTING persisted LSH index — the
-    * reference's index-once/upsert-many lifecycle (Pinecone
-    * `index.upsert`, `/root/reference/AI.py:53-55`) without a rebuild:
-    * signatures are computed for the NEW vectors only and appended to
-    * the bucketed layout, a per-batch O(new) cost where a rebuild is
-    * O(index). The meta checksum is an xor of per-row hashes, so it
-    * composes incrementally (`old ⊕ fingerprint(new)`) and later
-    * `ensure*` freshness checks remain exact without rescanning old
-    * rows. Append-only contract: `newVecs` ids must be previously
-    * unseen — replacing an existing id needs a delete + compaction
-    * pass, which the immutable fixtures never exercise.
-    *
-    * `batchId`: the idempotent-foreachBatch recipe for at-least-once
-    * streaming replay. When set, a batch whose id is ≤ the meta's
-    * `last_batch_id` is SKIPPED — a crash-replayed micro-batch neither
-    * re-appends its rows (duplicate vecs rows would multiply rerank
-    * candidates and could push duplicate vec_ids into the top-k) nor
-    * double-xors the checksum. The remaining window is a crash BETWEEN
-    * the table appends and the meta commit: that one batch replays as
-    * a duplicate — closing it needs an atomically-committing table
-    * format, out of scope for a parquet layout.
-    */
-  def upsertLsh(
-      spark: SparkSession,
-      sourceDir: String,
-      newVecs: DataFrame,
-      tables: Int = 64,
-      bits: Int = 12,
-      storageBuckets: Int = 8,
-      batchId: Option[Long] = None): LshHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = lshBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.get("tables").contains(tables.toLong) &&
-      meta.get("bits").contains(bits.toLong) &&
-      meta.get("buckets").contains(storageBuckets.toLong),
-      s"upsertLsh needs an existing index at the same operating point " +
-        s"(tables=$tables bits=$bits buckets=$storageBuckets); found $meta")
-    // appending into a crashed-compaction gutted layout would RECREATE
-    // the dir holding only this batch while the xor'd checksum claims
-    // the full corpus — silent corruption every later probe trusts;
-    // fail loudly instead (ensureLsh is the rebuild path)
-    require(parquetReadable(spark, s"$base/buckets") &&
-      parquetReadable(spark, s"$base/vecs"),
-      s"persisted LSH layout for '$sourceDir' is unreadable (crashed " +
-        "compaction?) — run ensureLsh to rebuild before upserting")
-    if (!lshRegistered(spark, tag)) attachLsh(spark, tag, storageBuckets)
-    val replayed = batchId.exists(id =>
-      meta.get("last_batch_id").exists(id <= _))
-    if (replayed) return lshHandle(spark, tag, tables, bits)
-    // append-only + tombstone contract (the upsertSq8 discipline):
-    // re-adding a deleted id would be silently swallowed by the
-    // tombstone anti-join — fail loudly; compactLsh folds first
-    if (meta.get("tomb_rows").exists(_ > 0L)) {
-      if (!spark.catalog.tableExists(s"graft_lsh_tombs_$tag") &&
-          tombsServable(spark, base))
-        registerExternal(spark, s"graft_lsh_tombs_$tag", s"$base/tombs",
-          clusteredBy = Some(("vec_id", storageBuckets)))
-      val clash = spark.table(s"graft_lsh_tombs_$tag")
-        .join(newVecs.select("vec_id"), Seq("vec_id"), "left_semi").count()
-      require(clash == 0L,
-        s"upsertLsh: $clash incoming vec_id(s) are tombstoned — run " +
-          "compactLsh to fold deletions before re-inserting those ids")
-    }
-    val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
-    writeBucketed(lshBucketRows(newVecs, tables, bits),
-      s"graft_lsh_buckets_$tag", "tb", storageBuckets)
-    writeBucketed(newVecs.select("vec_id", "embedding"),
-      s"graft_lsh_vecs_$tag", "vec_id", storageBuckets)
-    writeMetaFull(base,
-      Seq("tables" -> tables.toLong, "bits" -> bits.toLong,
-        "buckets" -> storageBuckets.toLong,
-        "n_rows" -> (meta("n_rows") + nNew),
-        "checksum" -> (meta("checksum") ^ fpNew)) ++
-        batchId.orElse(meta.get("last_batch_id"))
-          .map("last_batch_id" -> _).toSeq ++
-        meta.get("tomb_rows").map("tomb_rows" -> _).toSeq ++
-        meta.get("last_del_batch_id")
-          .map("last_del_batch_id" -> _).toSeq,
-      // indexed-path identity grows with the upsert: a scan must cover
-      // base AND tail relations to be served from the combined index.
-      // Any stored snapshot_id is deliberately NOT carried over — the
-      // layout is now AHEAD of the snapshot that id named, so the O(1)
-      // ensureLsh fast path must not match it again.
-      Seq("source_paths" -> joinPaths(
-        (readMetaStrs(base).get("source_paths").map(splitPaths)
-          .getOrElse(Nil) ++ relationPaths(newVecs)).distinct.sorted)))
-    lshHandle(spark, tag, tables, bits)
-  }
-
-  /** Delete by id from the persisted LSH index — the float layout's
-    * twin of [[deleteSq8]], closing the last lifecycle asymmetry (every
-    * quantized layout deletes; the float LSH layout could not).
-    * Merge-on-read vec_id tombstones; the served handle anti-joins
-    * them on both sides (vecs co-bucketed, buckets via a broadcast of
-    * the deletion-bounded tombstone set). A delete drops the stored
-    * snapshot_id (the layout moved past the snapshot that id named)
-    * but KEEPS `source_paths`: the index remains the authoritative
-    * serving view of its source under the vector-store delete contract
-    * (Pinecone `delete(ids=)` composed with `as_retriever()`,
-    * `/root/reference/AI.py:138` — a user who deletes keeps querying
-    * the same index), so the [[graft.plans.LshAnnPlan]] rewrite keeps
-    * serving raw-source kNN through the index, tombstone anti-join
-    * included — survivors-exact, never O(n) exact-scan degraded.
-    * That contract is the rewrite's OPT-IN semantic: enabling
-    * `persistedSource` declares index-side deletes authoritative for
-    * matching source scans (see [[graft.plans.LshAnnPlan.Config]]).
-    * Explicit [[queryLsh]]/[[openLsh]] callers serve the same
-    * tombstoned view; [[compactLsh]] folds physically; [[ensureLsh]]
-    * still treats a tombstoned layout as stale ("serve exactly this
-    * source") and rebuilds; re-inserting a deleted id fails loudly in
-    * [[upsertLsh]]; `batchId` replay-skip rides the delete counter
-    * (`last_del_batch_id`).
-    */
-  def deleteLsh(
-      spark: SparkSession,
-      sourceDir: String,
-      ids: DataFrame,
-      batchId: Option[Long] = None): LshHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = lshBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("tables") && meta.contains("buckets"),
-      s"deleteLsh needs an existing persisted LSH index for " +
-        s"'$sourceDir' — run ensureLsh first")
-    val storageBuckets = meta("buckets").toInt
-    require(parquetReadable(spark, s"$base/buckets") &&
-      parquetReadable(spark, s"$base/vecs"),
-      s"persisted LSH layout for '$sourceDir' is unreadable — run " +
-        "ensureLsh to rebuild before deleting")
-    if (!lshRegistered(spark, tag)) attachLsh(spark, tag, storageBuckets)
-    val replayed = batchId.exists(id =>
-      meta.get("last_del_batch_id").exists(id <= _))
-    if (replayed)
-      return lshHandle(spark, tag, meta("tables").toInt,
-        meta("bits").toInt)
-    val batch = ids.select("vec_id").distinct()
-    val nDel = batch.count()
-    writeTombs(spark, base, s"graft_lsh_tombs_$tag", batch,
-      storageBuckets)
-    writeMetaFull(base,
-      (meta - "tomb_rows" - "last_del_batch_id").toSeq ++
-        Seq("tomb_rows" -> (meta.getOrElse("tomb_rows", 0L) + nDel)) ++
-        batchId.orElse(meta.get("last_del_batch_id"))
-          .map("last_del_batch_id" -> _).toSeq,
-      // snapshot_id dropped (the layout moved past it); source_paths
-      // KEPT — the tombstoned index stays the authoritative serving
-      // view of its source, so the plan rewrite keeps accelerating
-      // raw-source kNN (survivors-exact via the handle's anti-join)
-      readMetaStrs(base).get("source_paths")
-        .map("source_paths" -> _).toSeq)
-    lshHandle(spark, tag, meta("tables").toInt, meta("bits").toInt)
-  }
-
-  /** True iff a persisted LSH layout exists for `sourceDir` AT the
-    * given operating point (meta check only — no readability or
-    * freshness probe; the [[ivfExists]] contract). Lets callers branch
-    * build-vs-open explicitly — the delete-serving lifecycle needs
-    * this, since a tombstoned layout deliberately fails [[ensureLsh]]'s
-    * freshness ("serve exactly this source") and must be OPENED, not
-    * re-ensured, to keep serving its deletions.
-    */
-  def lshExists(spark: SparkSession, sourceDir: String,
-      tables: Int = 64, bits: Int = 12,
-      storageBuckets: Int = 8): Boolean = {
-    val meta = readMeta(lshBase(spark, IndexStore.pathTag(sourceDir)))
-    meta.get("tables").contains(tables.toLong) &&
-      meta.get("bits").contains(bits.toLong) &&
-      meta.get("buckets").contains(storageBuckets.toLong)
-  }
-
-  /** Open an existing persisted LSH index read-only, WITHOUT a
-    * freshness probe — the reader's path while a writer (e.g. a
-    * [[graft.streaming.StreamOps.streamingIndexUpsert]] stream)
-    * appends concurrently: no fingerprint scan, no rebuild decision,
-    * just a catalog attach if this process hasn't one yet. The
-    * operating point comes from the stored meta.
-    */
-  def openLsh(spark: SparkSession, sourceDir: String): LshHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = lshBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("tables") && meta.contains("bits") &&
-      meta.contains("buckets"),
-      s"no persisted LSH index for '$sourceDir' ($base)")
-    // readability (footer reads, not a freshness scan): a surviving
-    // registration over a gutted dir would otherwise serve EMPTY tables
-    require(parquetReadable(spark, s"$base/buckets") &&
-      parquetReadable(spark, s"$base/vecs"),
-      s"persisted LSH layout for '$sourceDir' is unreadable (crashed " +
-        "compaction?) — run ensureLsh to rebuild")
-    if (!lshRegistered(spark, tag))
-      attachLsh(spark, tag, meta("buckets").toInt)
-    else {
-      // a writer in ANOTHER session (a streaming foreachBatch clone, a
-      // concurrent process) invalidates only its own relation cache on
-      // append — refresh so this reader's file listing is current
-      spark.catalog.refreshTable(s"graft_lsh_buckets_$tag")
-      spark.catalog.refreshTable(s"graft_lsh_vecs_$tag")
-      // tombstones may have (dis)appeared under another session's
-      // delete or fold — align with the store, DDL only on a change
-      syncTombs(spark, base, s"graft_lsh_tombs_$tag",
-        clusteredBy = Some(("vec_id", meta("buckets").toInt)))
-    }
-    lshHandle(spark, tag, meta("tables").toInt, meta("bits").toInt)
-  }
-
-  /** Compact the persisted LSH layout: a streaming upsert appends one
-    * file set per micro-batch into each bucketed table, and file count
-    * — not row count — is what erodes scan planning over time.
-    * Rewrites both tables' IDENTICAL rows at the same (bucketing,
-    * sort) spec; the meta (operating point, checksum, n_rows,
-    * last_batch_id) is untouched, so every freshness and replay
-    * contract keeps holding.
-    *
-    * Crash safety (the [[graft.sources.KeywordIndex.compactPostings]]
-    * discipline): each compacted copy lands in a SIDE directory —
-    * written through a temp catalog table, since bucketed writes go
-    * through `saveAsTable` — and swaps in by directory rename. The two
-    * tables hold identical logical content before and after, so a
-    * crash BETWEEN their swaps still leaves a correct index (mixed
-    * file layouts); a crash inside one rename window leaves that dir
-    * missing: [[openLsh]] fails loudly, and [[ensureLsh]] treats the
-    * unreadable layout as STALE and rebuilds (the recovery path);
-    * leftover side/old dirs are swept by the next compaction. Not safe
-    * concurrent with a writer — run between ingest windows.
-    */
-  def compactLsh(spark: SparkSession, sourceDir: String): LshHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = lshBase(spark, tag)
-    openLsh(spark, sourceDir) // validates meta + attaches + refreshes
-    val meta = readMeta(base)
-    val sb = meta("buckets").toInt
-    // tombstone FOLD (the compactSq8 discipline): physically drop
-    // deleted rows while rewriting; recompute the live fingerprint from
-    // the folded vecs so upsert checksum composition stays coherent
-    val folding = meta.get("tomb_rows").exists(_ > 0L) &&
-      spark.catalog.tableExists(s"graft_lsh_tombs_$tag")
-    val tombFilter = (df: DataFrame) =>
-      if (folding)
-        df.join(spark.table(s"graft_lsh_tombs_$tag"), Seq("vec_id"),
-          "left_anti")
-      else df
-    compactBucketed(spark, base, s"graft_lsh_buckets_$tag", "buckets",
-      "tb", sb,
-      Some(tombFilter(spark.table(s"graft_lsh_buckets_$tag"))))
-    compactBucketed(spark, base, s"graft_lsh_vecs_$tag", "vecs",
-      "vec_id", sb,
-      Some(tombFilter(spark.table(s"graft_lsh_vecs_$tag"))))
-    if (folding) dropTombs(spark, base, s"graft_lsh_tombs_$tag")
-    attachLsh(spark, tag, sb)
-    if (folding) {
-      val (n, fp) = fingerprint(spark.table(s"graft_lsh_vecs_$tag")
-        .select("vec_id", "embedding"))
-      writeMetaFull(base,
-        (meta - "n_rows" - "checksum" - "tomb_rows").toSeq ++
-          Seq("n_rows" -> n, "checksum" -> fp),
-        // source_paths survive the fold: the folded layout serves the
-        // SAME survivor view the tombstoned one did, and the serving
-        // contract (index authoritative over its source after deletes)
-        // is what the rewrite's opt-in declared
-        readMetaStrs(base).get("source_paths")
-          .map("source_paths" -> _).toSeq)
-    }
-    lshHandle(spark, tag, meta("tables").toInt, meta("bits").toInt)
-  }
-
-  /** The compaction swap, shared by [[compactLsh]] and
-    * [[KeywordIndex.compactPostings]]: live → pid-suffixed old, side →
-    * live, delete old. A crash before the first rename leaves the live
-    * layout intact; inside the two-rename window the live dir is
-    * missing, which the next attach throws on and the `ensure*` paths
-    * treat as STALE (rebuild) rather than unrecoverable.
+  /** The compaction swap, shared by [[compactBucketed]],
+    * [[compactPartitioned]] and [[KeywordIndex.compactPostings]]: live
+    * → pid-suffixed old, side → live, delete old. A crash before the
+    * first rename leaves the live layout intact; inside the two-rename
+    * window the live dir is missing, which the next attach throws on
+    * and the `ensure*` paths treat as STALE (rebuild) rather than
+    * unrecoverable.
     */
   private[sources] def swapDir(liveDir: String, sideDir: String): Unit = {
     val live = Paths.get(liveDir)
@@ -773,11 +335,163 @@ object AnnIndex {
     }
   }
 
-  /** Build-or-reuse for a base + upserted-tail index: when the stored
-    * meta already equals base ⊕ tail the layout is reused (or attached)
-    * without touching data; otherwise the base is built and the tail
-    * upserted — so repeated runs over immutable fixtures pay DDL, not
-    * rebuild + re-append (which would also double the tail).
+  // ------------------------------------------------------ LSH lifecycle
+  // the flat lifecycle ([[ensureFlat]] … [[compactFlat]]) at [[Lsh]]
+
+  /** `verb`'s flat handle at `c`, with the stored `source_paths`. */
+  private def servedLsh(spark: SparkSession, sourceDir: String, c: Lsh)(
+      verb: Lsh => CodesHandle): LshHandle = {
+    val h = verb(c)
+    LshHandle(h.codes, h.vecs, c.tables, c.bits,
+      readMetaStrs(flatLayout(c, spark, sourceDir).base).get("source_paths")
+        .map(splitPaths).getOrElse(Nil))
+  }
+
+  /** Run a lifecycle verb that takes no operating point at the one the
+    * layout's meta records (the [[atStoredPq]] shape). An unbuilt layout
+    * yields zeros, which the lifecycle's `built` check refuses.
+    */
+  private def atStoredLsh(spark: SparkSession, sourceDir: String)(
+      verb: Lsh => CodesHandle): LshHandle = {
+    val meta = readMeta(flatLayout(Lsh(0, 0), spark, sourceDir).base)
+    def at(k: String) = meta.getOrElse(k, 0L).toInt
+    servedLsh(spark, sourceDir, Lsh(at("tables"), at("bits")))(verb)
+  }
+
+  /** Build (or reuse) the persisted LSH index over `index(vec_id,
+    * embedding)`. One pass computes all `tables` signatures per vector;
+    * both tables land bucketed + sorted through the catalog.
+    *
+    * `snapshotId`: freshness WITHOUT the content scan. The default
+    * build-or-reuse decision pays one O(n) fingerprint pass over the
+    * source per call — right for fixtures, a full table scan per
+    * session attach at 100 TB. When the caller can name an immutable
+    * source snapshot (a lake table version, a partition manifest hash),
+    * passing its id makes reuse O(1): an index whose meta carries the
+    * SAME id at the same operating point is trusted outright — no scan.
+    * A different (or absent) stored id falls back to the fingerprint
+    * path, which rebuilds only on real content change and then records
+    * the new id, so the scan is paid once per snapshot, not once per
+    * call. Contract: ids must name immutable content — reusing an id
+    * after mutating the source serves a stale index by construction.
+    * [[upsertLsh]] drops the stored id (the layout moves ahead of the
+    * named snapshot). A tombstoned or unreadable layout rebuilds.
+    */
+  def ensureLsh(
+      spark: SparkSession,
+      sourceDir: String,
+      index: DataFrame,
+      tables: Int = 64,
+      bits: Int = 12,
+      storageBuckets: Int = 8,
+      snapshotId: Option[String] = None): LshHandle =
+    servedLsh(spark, sourceDir, Lsh(tables, bits))(c =>
+      ensureFlat(c, spark, sourceDir, index, storageBuckets, snapshotId))
+
+  /** Incremental add into an EXISTING persisted LSH index — the
+    * reference's index-once/upsert-many lifecycle (Pinecone
+    * `index.upsert`, `/root/reference/AI.py:53-55`) without a rebuild:
+    * signatures are computed for the NEW vectors only and appended to
+    * the bucketed layout, a per-batch O(new) cost where a rebuild is
+    * O(index). The meta checksum is an xor of per-row hashes, so it
+    * composes incrementally (`old ⊕ fingerprint(new)`) and later
+    * `ensure*` freshness checks remain exact without rescanning old
+    * rows. Append-only contract: `newVecs` ids must be previously
+    * unseen — replacing an existing id needs a delete + compaction
+    * pass; a tombstoned id fails loudly until [[compactLsh]] folds it.
+    *
+    * `batchId`: the idempotent-foreachBatch recipe for at-least-once
+    * streaming replay. When set, a batch whose id is ≤ the meta's
+    * `last_batch_id` is SKIPPED — a crash-replayed micro-batch neither
+    * re-appends its rows (duplicate vecs rows would multiply rerank
+    * candidates and could push duplicate vec_ids into the top-k) nor
+    * double-xors the checksum. The remaining window is a crash BETWEEN
+    * the table appends and the meta commit: that one batch replays as
+    * a duplicate — closing it needs an atomically-committing table
+    * format, out of scope for a parquet layout. The indexed
+    * `source_paths` grow by the batch's relations; any stored
+    * `snapshot_id` is dropped.
+    */
+  def upsertLsh(
+      spark: SparkSession,
+      sourceDir: String,
+      newVecs: DataFrame,
+      tables: Int = 64,
+      bits: Int = 12,
+      storageBuckets: Int = 8,
+      batchId: Option[Long] = None): LshHandle =
+    servedLsh(spark, sourceDir, Lsh(tables, bits))(c =>
+      upsertFlat(c, spark, sourceDir, newVecs, storageBuckets, batchId))
+
+  /** Delete by id from the persisted LSH index — the float layout's
+    * twin of [[deleteSq8]]. Merge-on-read vec_id tombstones; the served
+    * handle anti-joins them on both sides (vecs co-bucketed, buckets via
+    * a broadcast of the deletion-bounded tombstone set). A delete drops
+    * the stored snapshot_id (the layout moved past the snapshot that id
+    * named) but KEEPS `source_paths`: the index remains the
+    * authoritative serving view of its source under the vector-store
+    * delete contract (Pinecone `delete(ids=)` composed with
+    * `as_retriever()`, `/root/reference/AI.py:138` — a user who deletes
+    * keeps querying the same index), so the [[graft.plans.LshAnnPlan]]
+    * rewrite keeps serving raw-source kNN through the index, tombstone
+    * anti-join included — survivors-exact, never O(n) exact-scan
+    * degraded. That contract is the rewrite's OPT-IN semantic: enabling
+    * `persistedSource` declares index-side deletes authoritative for
+    * matching source scans (see [[graft.plans.LshAnnPlan.Config]]).
+    * Explicit [[queryLsh]]/[[openLsh]] callers serve the same
+    * tombstoned view; [[compactLsh]] folds physically; [[ensureLsh]]
+    * still treats a tombstoned layout as stale ("serve exactly this
+    * source") and rebuilds; re-inserting a deleted id fails loudly in
+    * [[upsertLsh]]; `batchId` replay-skip rides the delete counter
+    * (`last_del_batch_id`).
+    */
+  def deleteLsh(
+      spark: SparkSession,
+      sourceDir: String,
+      ids: DataFrame,
+      batchId: Option[Long] = None): LshHandle =
+    atStoredLsh(spark, sourceDir)(c =>
+      deleteFlat(c, spark, sourceDir, ids, batchId))
+
+  /** True iff a persisted LSH layout exists for `sourceDir` AT the
+    * given operating point (meta check only — no readability or
+    * freshness probe; the [[ivfExists]] contract). Lets callers branch
+    * build-vs-open explicitly — the delete-serving lifecycle needs
+    * this, since a tombstoned layout deliberately fails [[ensureLsh]]'s
+    * freshness ("serve exactly this source") and must be OPENED, not
+    * re-ensured, to keep serving its deletions.
+    */
+  def lshExists(spark: SparkSession, sourceDir: String,
+      tables: Int = 64, bits: Int = 12,
+      storageBuckets: Int = 8): Boolean =
+    existsFlat(Lsh(tables, bits), spark, sourceDir, Some(storageBuckets))
+
+  /** Open an existing persisted LSH index read-only, WITHOUT a
+    * freshness probe — the reader's path while a writer (e.g. a
+    * [[graft.streaming.StreamOps.streamingIndexUpsert]] stream)
+    * appends concurrently: no fingerprint scan, no rebuild decision,
+    * just a catalog attach if this process hasn't one yet, else a
+    * relation-cache refresh. The operating point comes from the stored
+    * meta.
+    */
+  def openLsh(spark: SparkSession, sourceDir: String): LshHandle =
+    atStoredLsh(spark, sourceDir)(c => openFlat(c, spark, sourceDir))
+
+  /** Compact the persisted LSH layout ([[compactFlat]]): a streaming
+    * upsert appends one file set per micro-batch into each bucketed
+    * table, and file count — not row count — is what erodes scan
+    * planning over time. Rewrites both tables at the same (bucketing,
+    * sort) spec in side dirs swapped in by rename, folding any
+    * tombstones; the operating point, replay windows and
+    * `source_paths` are kept. Not safe concurrent with a writer — run
+    * between ingest windows.
+    */
+  def compactLsh(spark: SparkSession, sourceDir: String): LshHandle =
+    atStoredLsh(spark, sourceDir)(c => compactFlat(c, spark, sourceDir))
+
+  /** Build-or-reuse for a base + upserted-tail index
+    * ([[ensureFlatUpserted]]): reused when the stored meta already
+    * equals base ⊕ tail, else the base is built and the tail upserted.
     */
   def ensureLshUpserted(
       spark: SparkSession,
@@ -786,25 +500,10 @@ object AnnIndex {
       tailRows: DataFrame,
       tables: Int = 64,
       bits: Int = 12,
-      storageBuckets: Int = 8): LshHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val (nb, fb) = fingerprint(baseRows.select("vec_id", "embedding"))
-    val (nt, ft) = fingerprint(tailRows.select("vec_id", "embedding"))
-    val ubase = lshBase(spark, tag)
-    // a tombstoned layout fails ensure's "serve exactly base ⊕ tail"
-    // contract — rebuild clears the deletions (the ensureLsh gate)
-    val combinedFresh = lshMetaMatches(readMeta(ubase),
-      tables, bits, storageBuckets, nb + nt, fb ^ ft) &&
-      readMeta(ubase).get("tomb_rows").forall(_ == 0L) &&
-      servable(spark, Seq(s"$ubase/buckets", s"$ubase/vecs"),
-        lshRegistered(spark, tag),
-        () => attachLsh(spark, tag, storageBuckets))
-    if (!combinedFresh) {
-      buildLsh(spark, tag, baseRows, tables, bits, storageBuckets, nb, fb)
-      upsertLsh(spark, sourceDir, tailRows, tables, bits, storageBuckets)
-    }
-    lshHandle(spark, tag, tables, bits)
-  }
+      storageBuckets: Int = 8): LshHandle =
+    servedLsh(spark, sourceDir, Lsh(tables, bits))(c =>
+      ensureFlatUpserted(c, spark, sourceDir, baseRows, tailRows,
+        storageBuckets))
 
   /** Query the persisted LSH index: probe buckets come from the (small)
     * query side only and reach the index through a broadcast equi-join
@@ -1144,12 +843,7 @@ object AnnIndex {
       batch.write.mode(SaveMode.Overwrite)
         .option("path", s"$base/tombs")
         .format("parquet").saveAsTable(s"graft_ivf_tombs_$tag")
-    writeMetaFull(base,
-      (meta - "tomb_rows" - "last_del_batch_id").toSeq ++
-        Seq("tomb_rows" -> (meta.getOrElse("tomb_rows", 0L) + nDel)) ++
-        batchId.orElse(meta.get("last_del_batch_id"))
-          .map("last_del_batch_id" -> _).toSeq,
-      Nil) // snapshot_id intentionally dropped: the layout moved past it
+    commitDelete(base, meta, nDel, batchId)
     ivfServedHandle(spark, tag)
   }
 
@@ -1286,21 +980,46 @@ object AnnIndex {
     SimilaritySearch.rerankWithVecs(cand, queries, k)
   }
 
-  // ------------------------------------------------- SQ8 / BQ / PQ codecs
+  // -------------------------------------------- LSH / SQ8 / BQ / PQ codecs
 
-  /** A vector codec of the quantized serving layouts: flat SQ8/BQ and
-    * the composed IVF-SQ8/IVF-BQ/IVF-PQ. The codec names its stores
+  /** A vector codec of the codec layouts: flat LSH/SQ8/BQ and the
+    * composed IVF-SQ8/IVF-BQ/IVF-PQ. The codec names its stores
     * (`graft_ann_<stem>_<tag>`, catalog tables
     * `graft_<stem>_<table>_<tag>`; the IVF form prefixes `ivf`), the
     * verb suffix and label its error messages carry, and any
-    * operating-point keys and trained model of its own.
+    * operating-point keys of its own. It plays one or both of the two
+    * roles the lifecycles use: [[FlatCodec]] and [[IvfCodec]].
     */
   private sealed abstract class Codec(val stem: String, val verb: String,
       val label: String) {
     /** The codec's own operating point as meta entries, checked and
-      * committed next to the partition's (IVF: lists/iters/buckets).
+      * committed next to the layout's (buckets; IVF: lists/iters).
       */
     def point: Seq[(String, Long)] = Nil
+  }
+
+  /** The flat role: a per-row encoding into the scan table `scanDir`,
+    * bucketed by `scanKey`. Encoding reads no global statistics (unlike
+    * IVF centroids or a trained product-quantizer codebook), so
+    * encoding new rows is EXACTLY a rebuild restricted to them — every
+    * upsert ≡ rebuild argument of the flat lifecycle rests on this.
+    */
+  private sealed trait FlatCodec extends Codec {
+    /** (vec_id, embedding) → the scan table's rows. */
+    def encode(index: DataFrame): DataFrame
+    def scanDir: String = "codes"
+    def scanKey: String = "vec_id"
+    /** The codec's own string meta once `rows` have joined a layout
+      * whose stored strings are `prior` (empty at a build).
+      */
+    def strMeta(rows: DataFrame,
+        prior: Map[String, String]): Seq[(String, String)] = Nil
+  }
+
+  /** The IVF role: vectors assigned to stored centroids and encoded
+    * with a model the codec may train at build time.
+    */
+  private sealed trait IvfCodec extends Codec {
     /** The dirs under the layout dir that hold the trained model. */
     def modelDirs: Seq[String] = Nil
     /** Train the model on the build's (vec_id, embedding) and persist
@@ -1316,23 +1035,12 @@ object AnnIndex {
         base: String): DataFrame
   }
 
-  /** A per-row codec, which also encodes the flat layout. Encoding
-    * reads no global statistics (unlike IVF centroids or a trained
-    * product-quantizer codebook), so encoding new rows is EXACTLY a
-    * rebuild restricted to them — every upsert ≡ rebuild argument
-    * below rests on this.
-    */
-  private sealed abstract class RowCodec(stem: String, verb: String,
-      label: String) extends Codec(stem, verb, label) {
-    /** (vec_id, embedding) → the flat layout's `codes` rows. */
-    def encode(index: DataFrame): DataFrame
-  }
-
   /** int8 scalar quantization: (vec_id, codes binary, qscale, qnorm) —
     * 4× smaller than the float table, the bandwidth the quantized scan
     * saves at 100 TB.
     */
-  private case object Sq8 extends RowCodec("sq8", "Sq8", "SQ8") {
+  private case object Sq8 extends Codec("sq8", "Sq8", "SQ8")
+      with FlatCodec with IvfCodec {
     def encode(index: DataFrame): DataFrame =
       SimilaritySearch.quantizeIndex(index)
     def assign(index: DataFrame, centroids: DataFrame,
@@ -1343,7 +1051,8 @@ object AnnIndex {
   /** 1-bit sign packing: (vec_id, bcodes) — ⌈dim/8⌉ bytes per row, 32×
     * under float32 and 8× under SQ8.
     */
-  private case object Bq extends RowCodec("bq", "Bq", "BQ") {
+  private case object Bq extends Codec("bq", "Bq", "BQ")
+      with FlatCodec with IvfCodec {
     def encode(index: DataFrame): DataFrame =
       SimilaritySearch.binarizeIndex(index)
     def assign(index: DataFrame, centroids: DataFrame,
@@ -1360,7 +1069,7 @@ object AnnIndex {
     * the drift gate covers both.
     */
   private final case class Pq(numSub: Int, ksub: Int, pqIters: Int)
-      extends Codec("pq", "Pq", "PQ") {
+      extends Codec("pq", "Pq", "PQ") with IvfCodec {
     override def point: Seq[(String, Long)] =
       Seq("num_sub" -> numSub.toLong, "ksub" -> ksub.toLong,
         "pq_iters" -> pqIters.toLong)
@@ -1377,22 +1086,51 @@ object AnnIndex {
         numSub, ksub)
   }
 
-  /** One codec layout over `sourceDir`: the flat form (`codes` bucketed
-    * by vec_id) or the IVF form (`lists` partitioned by centroid_id,
-    * plus plain-parquet `centroids`). Both keep `vecs` — the float
-    * vectors bucketed by vec_id for the exact re-rank, fetched for the
-    * m winners per query only — merge-on-read `tombs`, and the codec's
-    * model dirs. Names depend on the codec's stem alone, never on its
-    * operating point.
+  /** Random-hyperplane LSH at (tables, bits): one `(tb, vec_id)` row
+    * per vector and hash table, `tb = table * 2^bits + bucket`.
+    * `source_paths` records the normalized root paths of the file
+    * relations the layout holds ([[LshHandle]]`.indexedPaths`) and grows
+    * with each upsert: a scan must cover base AND tail relations to be
+    * served from the combined index.
+    */
+  private final case class Lsh(tables: Int, bits: Int)
+      extends Codec("lsh", "Lsh", "LSH") with FlatCodec {
+    override def point: Seq[(String, Long)] =
+      Seq("tables" -> tables.toLong, "bits" -> bits.toLong)
+    override def scanDir: String = "buckets"
+    override def scanKey: String = "tb"
+    def encode(index: DataFrame): DataFrame = {
+      import graft.functions.expressions.VectorExpressions.lsh_buckets
+      index.select(col("vec_id"),
+        posexplode(lsh_buckets(col("embedding"), tables, bits))
+          .as(Seq("tbl", "bucket")))
+        .select(
+          (col("tbl").cast("long") * (1L << bits) + col("bucket")).as("tb"),
+          col("vec_id"))
+    }
+    override def strMeta(rows: DataFrame,
+        prior: Map[String, String]): Seq[(String, String)] =
+      Seq("source_paths" -> joinPaths(
+        (prior.get("source_paths").map(splitPaths).getOrElse(Nil) ++
+          relationPaths(rows)).distinct.sorted))
+  }
+
+  /** One codec layout over `sourceDir`: the flat form (the scan table
+    * `sub` bucketed by `key`) or the IVF form (`lists` partitioned by
+    * centroid_id, plus plain-parquet `centroids`). Both keep `vecs` —
+    * the float vectors bucketed by vec_id for the exact re-rank,
+    * fetched for the m winners per query only — merge-on-read `tombs`,
+    * and the codec's model dirs. Names depend on the codec's stem
+    * alone, never on its operating point.
     */
   private final class CodecLayout(spark: SparkSession, c: Codec,
-      sourceDir: String, ivf: Boolean) {
+      sourceDir: String, ivf: Boolean, val sub: String, val key: String,
+      modelDirs: Seq[String]) {
     private val stem = (if (ivf) "ivf" else "") + c.stem
     private val tag = IndexStore.pathTag(sourceDir)
     val verb = (if (ivf) "Ivf" else "") + c.verb
     val label = (if (ivf) "IVF-" else "") + c.label
     val base = s"${annBase(spark)}/graft_ann_${stem}_$tag"
-    private val sub = if (ivf) "lists" else "codes"
     val scan = s"graft_${stem}_${sub}_$tag"
     val vecs = s"graft_${stem}_vecs_$tag"
     val tombs = s"graft_${stem}_tombs_$tag"
@@ -1400,7 +1138,7 @@ object AnnIndex {
     /** The dirs a servable layout holds readable parquet in. */
     val dataDirs = Seq(s"$base/$sub", s"$base/vecs") ++
       (if (ivf) Seq(centroids) else Nil) ++
-      c.modelDirs.map(d => s"$base/$d")
+      modelDirs.map(d => s"$base/$d")
 
     def built(meta: Map[String, Long]): Boolean =
       (!ivf || meta.contains("lists")) && meta.contains("buckets") &&
@@ -1421,12 +1159,9 @@ object AnnIndex {
       spark.sql(s"DROP TABLE IF EXISTS $scan")
       spark.sql(s"DROP TABLE IF EXISTS $vecs")
       spark.sql(s"DROP TABLE IF EXISTS $tombs")
-      if (ivf)
-        registerExternal(spark, scan, s"$base/lists",
-          partitionedBy = Some("centroid_id"))
-      else
-        registerExternal(spark, scan, s"$base/codes",
-          clusteredBy = Some(("vec_id", storageBuckets)))
+      registerExternal(spark, scan, s"$base/$sub",
+        clusteredBy = if (ivf) None else Some((key, storageBuckets)),
+        partitionedBy = if (ivf) Some(key) else None)
       registerExternal(spark, vecs, s"$base/vecs",
         clusteredBy = Some(("vec_id", storageBuckets)))
       if (tombsServable(spark, base))
@@ -1529,7 +1264,35 @@ object AnnIndex {
           s"compact$verb to fold deletions before re-inserting those ids")
     }
 
-  // --------------------------------------------- flat SQ8 / BQ lifecycle
+  /** Commit a delete of `nDel` ids: the tomb count grows, the delete
+    * replay window advances, `snapshot_id` drops (the layout moved past
+    * it); every other key is carried.
+    */
+  private def commitDelete(base: String, meta: Map[String, Long],
+      nDel: Long, batchId: Option[Long]): Unit =
+    writeMetaFull(base,
+      (meta - "tomb_rows" - "last_del_batch_id").toSeq ++
+        Seq("tomb_rows" -> (meta.getOrElse("tomb_rows", 0L) + nDel)) ++
+        batchId.orElse(meta.get("last_del_batch_id"))
+          .map("last_del_batch_id" -> _).toSeq,
+      (readMetaStrs(base) - "snapshot_id").toSeq)
+
+  /** Commit a tombstone fold: the live fingerprint is recomputed from
+    * the folded `vecs` (upsert checksum composition stays coherent),
+    * `tomb_rows` resets, and every other key is carried — replay
+    * windows, and `n_base`: the centroids were trained on the original
+    * base, so shrinking it would only tighten the drift gate spuriously.
+    */
+  private def commitFold(base: String, meta: Map[String, Long],
+      vecs: DataFrame): Unit = {
+    val (n, fp) = fingerprint(vecs.select("vec_id", "embedding"))
+    writeMetaFull(base,
+      (meta - "n_rows" - "checksum" - "tomb_rows").toSeq ++
+        Seq("n_rows" -> n, "checksum" -> fp),
+      (readMetaStrs(base) - "snapshot_id").toSeq)
+  }
+
+  // ---------------------------------------- flat LSH / SQ8 / BQ lifecycle
 
   /** Persisted flat quantized index (SQ8 or BQ): `codes` is the scan
     * table of codec rows, `vecs` the float vectors co-bucketed by vec_id
@@ -1537,85 +1300,134 @@ object AnnIndex {
     */
   final case class CodesHandle(codes: DataFrame, vecs: DataFrame)
 
-  private def flatLayout(c: Codec, spark: SparkSession, sourceDir: String) =
-    new CodecLayout(spark, c, sourceDir, ivf = false)
+  private def flatLayout(c: FlatCodec, spark: SparkSession,
+      sourceDir: String) =
+    new CodecLayout(spark, c, sourceDir, ivf = false, c.scanDir, c.scanKey,
+      Nil)
+
+  private def flatPoint(c: FlatCodec,
+      storageBuckets: Int): Seq[(String, Long)] =
+    c.point :+ ("buckets" -> storageBuckets.toLong)
 
   /** The served view: when a tombstone table exists, BOTH sides carry
-    * the anti-join against it (the codes side is what excludes deleted
+    * the anti-join against it (the scan side is what excludes deleted
     * ids from candidates; the vecs side keeps any direct consumer of
     * the float table honest too). Tombs share the vec_id bucketing, so
-    * the anti-joins are shuffle-free on the index side.
+    * those anti-joins are shuffle-free on the index side; a scan table
+    * bucketed by another key (LSH's `tb`) rides a broadcast of the
+    * deletion-bounded tombstone set instead.
     */
   private def flatHandle(spark: SparkSession, l: CodecLayout): CodesHandle = {
     val codes = spark.table(l.scan)
     val vecs = spark.table(l.vecs)
     if (spark.catalog.tableExists(l.tombs)) {
       val tombs = spark.table(l.tombs)
-      CodesHandle(codes.join(tombs, Seq("vec_id"), "left_anti"),
+      val scanTombs = if (l.key == "vec_id") tombs else broadcast(tombs)
+      CodesHandle(codes.join(scanTombs, Seq("vec_id"), "left_anti"),
         vecs.join(tombs, Seq("vec_id"), "left_anti"))
     } else CodesHandle(codes, vecs)
   }
 
+  /** The reuse probe of the `ensure*` verbs of both lifecycles: the
+    * stored meta is at `point` with no committed tombstones (a
+    * tombstoned layout no longer equals its source) and names either
+    * the caller's snapshot id (`Left` — O(1), no content scan) or the
+    * content fingerprint (`Right(n, fp)`); and the layout is
+    * [[servable]], so an unreadable one reads as STALE and rebuilds.
+    */
+  private def layoutFresh(spark: SparkSession, l: CodecLayout,
+      point: Seq[(String, Long)], storageBuckets: Int,
+      stored: Either[String, (Long, Long)]): Boolean = {
+    val meta = readMeta(l.base)
+    (stored match {
+      case Left(id) => readMetaStrs(l.base).get("snapshot_id").contains(id)
+      case Right((n, fp)) =>
+        meta.get("n_rows").contains(n) && meta.get("checksum").contains(fp)
+    }) && atPoint(meta, point) && meta.get("tomb_rows").forall(_ == 0L) &&
+      servable(spark, l.dataDirs, l.registered, () => l.attach(storageBuckets))
+  }
+
+  /** Commit a built layout's meta: `num` (its point and content), then
+    * both replay-skip windows, which survive a rebuild — one between a
+    * streaming crash and its replay must not reopen them (a rebuild's
+    * source includes every batch already applied). `tomb_rows` does NOT
+    * survive.
+    */
+  private def commitBuilt(base: String, num: Seq[(String, Long)],
+      strs: Seq[(String, String)], snapshotId: Option[String]): Unit = {
+    val old = readMeta(base)
+    writeMetaFull(base,
+      num ++ old.get("last_batch_id").map("last_batch_id" -> _).toSeq ++
+        old.get("last_del_batch_id").map("last_del_batch_id" -> _).toSeq,
+      strs ++ snapshotId.map("snapshot_id" -> _).toSeq)
+  }
+
+  /** Full (re)build: overwrite both tables, clear the tombstones (a
+    * rebuild serves exactly its source), then commit the meta.
+    */
+  private def buildFlat(c: FlatCodec, spark: SparkSession, l: CodecLayout,
+      index: DataFrame, storageBuckets: Int, n: Long, fp: Long,
+      snapshotId: Option[String]): Unit = {
+    dropTombs(spark, l.base, l.tombs)
+    spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
+    writeBucketed(c.encode(index.select("vec_id", "embedding")), l.scan,
+      l.key, storageBuckets, Some(s"${l.base}/${l.sub}"))
+    spark.sql(s"DROP TABLE IF EXISTS ${l.vecs}")
+    writeBucketed(index.select("vec_id", "embedding"), l.vecs, "vec_id",
+      storageBuckets, Some(s"${l.base}/vecs"))
+    commitBuilt(l.base, flatPoint(c, storageBuckets) ++
+      Seq("n_rows" -> n, "checksum" -> fp), c.strMeta(index, Map.empty),
+      snapshotId)
+  }
+
   /** Build (or reuse) the persisted flat layout over `index(vec_id,
     * embedding)`: encoding is one per-row projection pass; both tables
-    * land bucketed by vec_id through the catalog (co-located, so the
-    * re-rank id-join against `vecs` is shuffle-free on the index side).
-    * Freshness follows the `ensureLsh` discipline — O(1) snapshot-id
-    * trust when the caller names an immutable source snapshot, else the
-    * content fingerprint; the shared `servable` recovery probe (a
-    * crashed compaction's unreadable layout reads as STALE and
-    * rebuilds); meta committed atomically after the data. A tombstoned
-    * layout fails freshness ("serve exactly this source") and rebuilds,
-    * clearing the deletions. [[upsertFlat]] and [[deleteFlat]] drop a
-    * stored snapshot id (the layout moves past the snapshot that id
-    * named).
+    * land bucketed through the catalog (the vec_id-keyed ones
+    * co-located, so the re-rank id-join against `vecs` is shuffle-free
+    * on the index side). Freshness: O(1) snapshot-id trust when the
+    * caller names an immutable source snapshot, else the content
+    * fingerprint ([[layoutFresh]]); meta committed atomically after the
+    * data. [[upsertFlat]] and [[deleteFlat]] drop a stored snapshot id
+    * (the layout moves past the snapshot that id named).
     */
-  private def ensureFlat(c: RowCodec, spark: SparkSession, sourceDir: String,
-      index: DataFrame, storageBuckets: Int,
+  private def ensureFlat(c: FlatCodec, spark: SparkSession,
+      sourceDir: String, index: DataFrame, storageBuckets: Int,
       snapshotId: Option[String]): CodesHandle = {
     val l = flatLayout(c, spark, sourceDir)
     val base = l.base
-    def serv(): Boolean = servable(spark, l.dataDirs, l.registered,
-      () => l.attach(storageBuckets))
-    // a tombstoned layout no longer equals encode(source): deleteFlat
-    // also drops the stored snapshot_id, this is the content-path twin
-    def tombFree = readMeta(base).get("tomb_rows").forall(_ == 0L)
-    val snapFresh = snapshotId.exists { id =>
-      readMetaStrs(base).get("snapshot_id").contains(id) &&
-        readMeta(base).get("buckets").contains(storageBuckets.toLong)
-    } && tombFree
-    if (snapFresh && serv()) return flatHandle(spark, l)
+    val point = flatPoint(c, storageBuckets)
+    if (snapshotId.exists(id =>
+        layoutFresh(spark, l, point, storageBuckets, Left(id))))
+      return flatHandle(spark, l)
+    // an unreadable layout under a fresh snapshot id falls through to
+    // the fingerprint path, which rebuilds
     val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
-    val metaFresh = {
-      val meta = readMeta(base)
-      meta.get("buckets").contains(storageBuckets.toLong) &&
-        meta.get("n_rows").contains(n) &&
-        meta.get("checksum").contains(fp)
-    } && tombFree && serv()
-    if (!metaFresh) {
-      dropTombs(spark, base, l.tombs)
-      spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
-      writeBucketed(c.encode(index.select("vec_id", "embedding")), l.scan,
-        "vec_id", storageBuckets, Some(s"$base/codes"))
-      spark.sql(s"DROP TABLE IF EXISTS ${l.vecs}")
-      writeBucketed(index.select("vec_id", "embedding"), l.vecs, "vec_id",
-        storageBuckets, Some(s"$base/vecs"))
-    }
-    // (re)commit the meta when we rebuilt, OR when unchanged content
-    // arrives under a new snapshot name — recording the id makes the
-    // NEXT ensure at this snapshot O(1)
-    if (!metaFresh || snapshotId.isDefined) {
-      val old = readMeta(base)
-      writeMetaFull(base,
-        Seq("buckets" -> storageBuckets.toLong,
-          "n_rows" -> n, "checksum" -> fp) ++
-          // both replay-skip windows survive a rebuild (the buildLsh
-          // discipline: a rebuild between a streaming crash and its
-          // replay must not reopen them) — tomb_rows does NOT (the
-          // rebuild cleared them)
-          old.get("last_batch_id").map("last_batch_id" -> _).toSeq ++
-          old.get("last_del_batch_id").map("last_del_batch_id" -> _).toSeq,
-        snapshotId.map("snapshot_id" -> _).toSeq)
+    if (!layoutFresh(spark, l, point, storageBuckets, Right((n, fp))))
+      buildFlat(c, spark, l, index, storageBuckets, n, fp, snapshotId)
+    else if (snapshotId.isDefined)
+      // content unchanged under a new snapshot name: record the id so
+      // the NEXT ensure at this snapshot skips the scan entirely
+      commitBuilt(base, point ++ Seq("n_rows" -> n, "checksum" -> fp),
+        (readMetaStrs(base) - "snapshot_id").toSeq, snapshotId)
+    flatHandle(spark, l)
+  }
+
+  /** Build-or-reuse for a base + upserted-tail layout: when the stored
+    * meta already equals base ⊕ tail the layout is reused (or attached)
+    * without touching data; otherwise the base is built and the tail
+    * upserted — so repeated runs over immutable fixtures pay DDL, not
+    * rebuild + re-append (which would also double the tail).
+    */
+  private def ensureFlatUpserted(c: FlatCodec, spark: SparkSession,
+      sourceDir: String, baseRows: DataFrame, tailRows: DataFrame,
+      storageBuckets: Int): CodesHandle = {
+    val l = flatLayout(c, spark, sourceDir)
+    val (nb, fb) = fingerprint(baseRows.select("vec_id", "embedding"))
+    val (nt, ft) = fingerprint(tailRows.select("vec_id", "embedding"))
+    if (!layoutFresh(spark, l, flatPoint(c, storageBuckets), storageBuckets,
+        Right((nb + nt, fb ^ ft)))) {
+      buildFlat(c, spark, l, baseRows, storageBuckets, nb, fb, None)
+      upsertFlat(c, spark, sourceDir, tailRows, storageBuckets, None)
     }
     flatHandle(spark, l)
   }
@@ -1626,16 +1438,20 @@ object AnnIndex {
     * the checksum: O(new) per batch, upsert ≡ rebuild row-identically
     * by construction. Append-only contract (a tombstoned id is refused,
     * see [[refuseTombstoned]]) and `batchId` replay-skip as in
-    * [[upsertLsh]].
+    * [[upsertLsh]]; a stored snapshot id is dropped.
     */
-  private def upsertFlat(c: RowCodec, spark: SparkSession, sourceDir: String,
-      newVecs: DataFrame, storageBuckets: Int,
+  private def upsertFlat(c: FlatCodec, spark: SparkSession,
+      sourceDir: String, newVecs: DataFrame, storageBuckets: Int,
       batchId: Option[Long]): CodesHandle = {
     val l = flatLayout(c, spark, sourceDir)
     val meta = readMeta(l.base)
-    require(meta.get("buckets").contains(storageBuckets.toLong),
-      s"upsert${l.verb} needs an existing index at the same layout " +
-        s"(buckets=$storageBuckets); found $meta")
+    val point = flatPoint(c, storageBuckets)
+    require(atPoint(meta, point),
+      s"upsert${l.verb} needs an existing index at the same operating " +
+        s"point (${point.map { case (k, v) => s"$k=$v" }.mkString(" ")}); " +
+        s"found $meta")
+    // appending into a gutted layout would recreate the dir holding only
+    // this batch under a checksum that claims the full corpus
     l.requireReadable(" before upserting")
     if (!l.registered) l.attach(storageBuckets)
     if (batchId.exists(id => meta.get("last_batch_id").exists(id <= _)))
@@ -1644,18 +1460,17 @@ object AnnIndex {
       storageBuckets)
     val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
     writeBucketed(c.encode(newVecs.select("vec_id", "embedding")), l.scan,
-      "vec_id", storageBuckets)
+      l.key, storageBuckets)
     writeBucketed(newVecs.select("vec_id", "embedding"), l.vecs, "vec_id",
       storageBuckets)
     writeMetaFull(l.base,
-      Seq("buckets" -> storageBuckets.toLong,
-        "n_rows" -> (meta("n_rows") + nNew),
+      point ++ Seq("n_rows" -> (meta("n_rows") + nNew),
         "checksum" -> (meta("checksum") ^ fpNew)) ++
         batchId.orElse(meta.get("last_batch_id"))
           .map("last_batch_id" -> _).toSeq ++
         meta.get("tomb_rows").map("tomb_rows" -> _).toSeq ++
         meta.get("last_del_batch_id").map("last_del_batch_id" -> _).toSeq,
-      Nil)
+      c.strMeta(newVecs, readMetaStrs(l.base)))
     flatHandle(spark, l)
   }
 
@@ -1663,26 +1478,26 @@ object AnnIndex {
     * lifecycle verb the reference's stack exposes as Pinecone's
     * `delete(ids=...)` (public API). Merge-on-read tombstones, the only
     * delete that scales: the batch of ids is APPENDED to a tombstone
-    * table co-bucketed with the codes/vecs pair (O(batch) work, no
-    * index rewrite, see [[writeTombs]]), and every served handle
-    * anti-joins it — shuffle-free on the index side thanks to the shared
-    * bucketing. [[compactFlat]] later folds tombstones into the base
-    * (physically removes the rows and resets the live fingerprint);
-    * until then re-inserting a deleted id fails loudly in
+    * table bucketed by vec_id like `vecs` (O(batch) work, no index
+    * rewrite, see [[writeTombs]]), and every served handle anti-joins
+    * it ([[flatHandle]]). [[compactFlat]] later folds tombstones into
+    * the base (physically removes the rows and resets the live
+    * fingerprint); until then re-inserting a deleted id fails loudly in
     * [[upsertFlat]].
     *
     * Deleting ids absent from the index (or already deleted) is a
     * semantic no-op — the anti-join ignores them. A delete moves the
-    * layout past any named snapshot (stored `snapshot_id` is dropped)
-    * and past the source content (`ensure*` over the original source
-    * rebuilds — "serve exactly this source" clears deletions by
-    * contract). `batchId` gives streaming delete feeds the same
-    * replay-skip contract as [[upsertFlat]], on its own counter
-    * (`last_del_batch_id`) so interleaved upsert/delete streams don't
-    * mask each other.
+    * layout past any named snapshot (stored `snapshot_id` is dropped;
+    * the codec's other meta is carried) and past the source content
+    * (`ensure*` over the original source rebuilds — "serve exactly this
+    * source" clears deletions by contract). `batchId` gives streaming
+    * delete feeds the same replay-skip contract as [[upsertFlat]], on
+    * its own counter (`last_del_batch_id`) so interleaved
+    * upsert/delete streams don't mask each other.
     */
-  private def deleteFlat(c: Codec, spark: SparkSession, sourceDir: String,
-      ids: DataFrame, batchId: Option[Long]): CodesHandle = {
+  private def deleteFlat(c: FlatCodec, spark: SparkSession,
+      sourceDir: String, ids: DataFrame,
+      batchId: Option[Long]): CodesHandle = {
     val l = flatLayout(c, spark, sourceDir)
     val meta = readMeta(l.base)
     require(l.built(meta),
@@ -1696,29 +1511,26 @@ object AnnIndex {
     val batch = ids.select("vec_id").distinct()
     val nDel = batch.count()
     writeTombs(spark, l.base, l.tombs, batch, storageBuckets)
-    writeMetaFull(l.base,
-      Seq("buckets" -> meta("buckets"),
-        "n_rows" -> meta("n_rows"),
-        "checksum" -> meta("checksum"),
-        "tomb_rows" -> (meta.getOrElse("tomb_rows", 0L) + nDel)) ++
-        meta.get("last_batch_id").map("last_batch_id" -> _).toSeq ++
-        batchId.orElse(meta.get("last_del_batch_id"))
-          .map("last_del_batch_id" -> _).toSeq,
-      Nil) // snapshot_id intentionally dropped: the layout moved past it
+    commitDelete(l.base, meta, nDel, batchId)
     flatHandle(spark, l)
   }
 
-  /** True iff a persisted flat layout exists for `sourceDir` (meta
-    * present — no readability or freshness probe). Lets callers branch
+  /** True iff a persisted flat layout exists for `sourceDir` — at
+    * `storageBuckets` and the codec's point when given (meta check only
+    * — no readability or freshness probe). Lets callers branch
     * build-vs-open explicitly instead of catching the open verb's
     * deliberately fail-loud errors, which must keep distinguishing
     * "never built" from "unreadable crashed layout".
     */
-  private def existsFlat(c: Codec, spark: SparkSession,
-      sourceDir: String): Boolean =
-    readMeta(flatLayout(c, spark, sourceDir).base).contains("buckets")
+  private def existsFlat(c: FlatCodec, spark: SparkSession,
+      sourceDir: String, storageBuckets: Option[Int] = None): Boolean = {
+    val l = flatLayout(c, spark, sourceDir)
+    val meta = readMeta(l.base)
+    l.built(meta) &&
+      storageBuckets.forall(sb => atPoint(meta, flatPoint(c, sb)))
+  }
 
-  private def openFlat(c: Codec, spark: SparkSession,
+  private def openFlat(c: FlatCodec, spark: SparkSession,
       sourceDir: String): CodesHandle = {
     val l = flatLayout(c, spark, sourceDir)
     l.open()
@@ -1736,13 +1548,11 @@ object AnnIndex {
     * keeps holding.
     *
     * Tombstone FOLD: physically drops deleted rows while rewriting,
-    * then recomputes the live fingerprint from the folded vecs (upsert
-    * checksum composition stays coherent), resets tomb_rows; both
-    * replay-skip windows survive.
+    * then commits the folded layout ([[commitFold]]).
     *
-    * Crash safety (the [[compactLsh]] / [[KeywordIndex.compactPostings]]
-    * discipline): each compacted copy lands in a SIDE directory and
-    * swaps in by rename. A crash between the two tables' swaps leaves a
+    * Crash safety (the [[KeywordIndex.compactPostings]] discipline):
+    * each compacted copy lands in a SIDE directory and swaps in by
+    * rename. A crash between the two tables' swaps leaves a
     * mixed but logically identical layout (the still-present tombstone
     * anti-join keeps serving correctly); a crash inside one rename
     * window leaves that dir missing — open and upsert fail loudly, and
@@ -1754,7 +1564,7 @@ object AnnIndex {
     * swept by the next compaction. Not safe concurrent with a writer —
     * run between ingest windows.
     */
-  private def compactFlat(c: Codec, spark: SparkSession,
+  private def compactFlat(c: FlatCodec, spark: SparkSession,
       sourceDir: String): CodesHandle = {
     val l = flatLayout(c, spark, sourceDir)
     val base = l.base
@@ -1766,22 +1576,13 @@ object AnnIndex {
     val tombFilter = (df: DataFrame) =>
       if (folding) df.join(spark.table(l.tombs), Seq("vec_id"), "left_anti")
       else df
-    compactBucketed(spark, base, l.scan, "codes", "vec_id", sb,
+    compactBucketed(spark, base, l.scan, l.sub, l.key, sb,
       Some(tombFilter(spark.table(l.scan))))
     compactBucketed(spark, base, l.vecs, "vecs", "vec_id", sb,
       Some(tombFilter(spark.table(l.vecs))))
     if (folding) dropTombs(spark, base, l.tombs)
     l.attach(sb)
-    if (folding) {
-      val (n, fp) = fingerprint(
-        spark.table(l.vecs).select("vec_id", "embedding"))
-      writeMetaFull(base,
-        Seq("buckets" -> sb.toLong, "n_rows" -> n, "checksum" -> fp) ++
-          meta.get("last_batch_id").map("last_batch_id" -> _).toSeq ++
-          meta.get("last_del_batch_id")
-            .map("last_del_batch_id" -> _).toSeq,
-        Nil)
-    }
+    if (folding) commitFold(base, meta, spark.table(l.vecs))
     flatHandle(spark, l)
   }
 
@@ -2477,13 +2278,15 @@ object AnnIndex {
   final case class IvfCodesHandle(centroids: DataFrame, lists: DataFrame,
       vecs: DataFrame)
 
-  private def ivfLayout(c: Codec, spark: SparkSession, sourceDir: String) =
-    new CodecLayout(spark, c, sourceDir, ivf = true)
+  private def ivfLayout(c: IvfCodec, spark: SparkSession,
+      sourceDir: String) =
+    new CodecLayout(spark, c, sourceDir, ivf = true, "lists", "centroid_id",
+      c.modelDirs)
 
   /** An IVF layout's operating point as meta entries: the partition's
     * lists and iters, the codec's own keys, the storage bucketing.
     */
-  private def ivfPoint(c: Codec, lists: Int, iters: Int,
+  private def ivfPoint(c: IvfCodec, lists: Int, iters: Int,
       storageBuckets: Int): Seq[(String, Long)] =
     Seq("lists" -> lists.toLong, "iters" -> iters.toLong) ++ c.point :+
       ("buckets" -> storageBuckets.toLong)
@@ -2526,24 +2329,19 @@ object AnnIndex {
     * longer equals assign(source), so it rebuilds, clearing the
     * deletions.
     */
-  private def ensureIvfCodes(c: Codec, spark: SparkSession,
+  private def ensureIvfCodes(c: IvfCodec, spark: SparkSession,
       sourceDir: String, index: DataFrame, lists: Int, iters: Int,
       storageBuckets: Int, snapshotId: Option[String]): IvfCodesHandle = {
     val l = ivfLayout(c, spark, sourceDir)
     val base = l.base
-    def serv(): Boolean = servable(spark, l.dataDirs, l.registered,
-      () => l.attach(storageBuckets))
     val point = ivfPoint(c, lists, iters, storageBuckets)
-    def tombFree = readMeta(base).get("tomb_rows").forall(_ == 0L)
-    val snapFresh = snapshotId.exists(id =>
-      readMetaStrs(base).get("snapshot_id").contains(id) &&
-        atPoint(readMeta(base), point)) && tombFree
-    if (snapFresh && serv()) return ivfCodesHandle(spark, l)
+    if (snapshotId.exists(id =>
+        layoutFresh(spark, l, point, storageBuckets, Left(id))))
+      return ivfCodesHandle(spark, l)
     val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
     val meta = readMeta(base)
-    val metaFresh = atPoint(meta, point) &&
-      meta.get("n_rows").contains(n) &&
-      meta.get("checksum").contains(fp) && tombFree && serv()
+    val metaFresh = layoutFresh(spark, l, point, storageBuckets,
+      Right((n, fp)))
     if (!metaFresh) {
       dropTombs(spark, base, l.tombs)
       val cents = SimilaritySearch.kMeansCentroids(
@@ -2559,16 +2357,9 @@ object AnnIndex {
         storageBuckets, Some(s"$base/vecs"))
     }
     if (!metaFresh || snapshotId.isDefined)
-      writeMetaFull(base,
-        point ++ Seq("n_rows" -> n, "checksum" -> fp,
-          "n_base" -> (if (metaFresh) meta.getOrElse("n_base", n) else n)) ++
-          readMeta(base).get("last_batch_id")
-            .map("last_batch_id" -> _).toSeq ++
-          // the delete replay-skip window survives a rebuild (the
-          // ensureFlat discipline) — tomb_rows does NOT (just cleared)
-          readMeta(base).get("last_del_batch_id")
-            .map("last_del_batch_id" -> _).toSeq,
-        snapshotId.map("snapshot_id" -> _).toSeq)
+      commitBuilt(base, point ++ Seq("n_rows" -> n, "checksum" -> fp,
+        "n_base" -> (if (metaFresh) meta.getOrElse("n_base", n) else n)),
+        Nil, snapshotId)
     ivfCodesHandle(spark, l)
   }
 
@@ -2584,7 +2375,7 @@ object AnnIndex {
     * is trusted. Any stored snapshot id is dropped (the layout moves
     * ahead of the snapshot that id named).
     */
-  private def upsertIvfCodes(c: Codec, spark: SparkSession,
+  private def upsertIvfCodes(c: IvfCodec, spark: SparkSession,
       sourceDir: String, newVecs: DataFrame, at: Option[(Int, Int, Int)],
       batchId: Option[Long]): IvfCodesHandle = {
     val l = ivfLayout(c, spark, sourceDir)
@@ -2645,7 +2436,7 @@ object AnnIndex {
     * and `ensure*` over the original source rebuilds; `batchId`
     * replay-skips on its own counter (`last_del_batch_id`).
     */
-  private def deleteIvfCodes(c: Codec, spark: SparkSession,
+  private def deleteIvfCodes(c: IvfCodec, spark: SparkSession,
       sourceDir: String, ids: DataFrame,
       batchId: Option[Long]): IvfCodesHandle = {
     val l = ivfLayout(c, spark, sourceDir)
@@ -2671,12 +2462,7 @@ object AnnIndex {
       .select("centroid_id", "vec_id")
     val nDel = batch.count()
     writeTombs(spark, l.base, l.tombs, batch, storageBuckets)
-    writeMetaFull(l.base,
-      (meta - "tomb_rows" - "last_del_batch_id").toSeq ++
-        Seq("tomb_rows" -> (meta.getOrElse("tomb_rows", 0L) + nDel)) ++
-        batchId.orElse(meta.get("last_del_batch_id"))
-          .map("last_del_batch_id" -> _).toSeq,
-      Nil) // snapshot_id intentionally dropped: the layout moved past it
+    commitDelete(l.base, meta, nDel, batchId)
     ivfCodesHandle(spark, l)
   }
 
@@ -2688,13 +2474,13 @@ object AnnIndex {
     * freshness ("serve exactly this source") and must be OPENED, not
     * re-ensured, to keep serving its deletions.
     */
-  private def existsIvfCodes(c: Codec, spark: SparkSession,
+  private def existsIvfCodes(c: IvfCodec, spark: SparkSession,
       sourceDir: String, lists: Int, iters: Int,
       storageBuckets: Int): Boolean =
     atPoint(readMeta(ivfLayout(c, spark, sourceDir).base),
       ivfPoint(c, lists, iters, storageBuckets))
 
-  private def openIvfCodes(c: Codec, spark: SparkSession,
+  private def openIvfCodes(c: IvfCodec, spark: SparkSession,
       sourceDir: String): IvfCodesHandle = {
     val l = ivfLayout(c, spark, sourceDir)
     l.open()
@@ -2715,7 +2501,7 @@ object AnnIndex {
     * rebuild (stale tomb_rows meta over folded data). Not safe
     * concurrent with a writer.
     */
-  private def compactIvfCodes(c: Codec, spark: SparkSession,
+  private def compactIvfCodes(c: IvfCodec, spark: SparkSession,
       sourceDir: String): IvfCodesHandle = {
     val l = ivfLayout(c, spark, sourceDir)
     val base = l.base
@@ -2733,19 +2519,7 @@ object AnnIndex {
         .join(t.select("vec_id"), Seq("vec_id"), "left_anti")))
     if (folding) dropTombs(spark, base, l.tombs)
     l.attach(sb)
-    if (folding) {
-      // the live fingerprint changed: recompute from the folded vecs so
-      // upsert checksum composition stays coherent; replay-skip windows
-      // survive, tomb_rows resets. n_base is NOT reduced — the
-      // centroids were trained on the original base, and shrinking
-      // n_base would only tighten the drift gate spuriously.
-      val (n, fp) = fingerprint(spark.table(l.vecs)
-        .select("vec_id", "embedding"))
-      writeMetaFull(base,
-        (meta - "n_rows" - "checksum" - "tomb_rows").toSeq ++
-          Seq("n_rows" -> n, "checksum" -> fp),
-        Nil)
-    }
+    if (folding) commitFold(base, meta, spark.table(l.vecs))
     ivfCodesHandle(spark, l)
   }
 
@@ -2884,17 +2658,9 @@ object AnnIndex {
     spark.sql(s"DROP TABLE IF EXISTS $listsTable")
     registerExternal(spark, listsTable, s"$base/lists",
       partitionedBy = Some("centroid_id"))
-    if (folding) {
-      // recompute the live fingerprint from the folded lists (they
-      // carry (vec_id, embedding) — the same rows ensure fingerprints);
-      // n_base stays: the centroids trained on the original base
-      val (n, fp) = fingerprint(
-        spark.table(listsTable).select("vec_id", "embedding"))
-      writeMetaFull(base,
-        (meta - "n_rows" - "checksum" - "tomb_rows").toSeq ++
-          Seq("n_rows" -> n, "checksum" -> fp),
-        Nil)
-    }
+    // the folded lists carry (vec_id, embedding): the rows ensure
+    // fingerprints
+    if (folding) commitFold(base, meta, spark.table(listsTable))
     ivfServedHandle(spark, tag)
   }
 

@@ -503,6 +503,11 @@ object KeywordIndex {
     * Not safe concurrent with a writer — run it between ingest
     * windows (no transaction log on a parquet layout; atomic dir
     * rename is the posix/HDFS primitive this relies on).
+    *
+    * The swap deletes the old files: a [[statsFor]] result (its `dfs`
+    * frame) or a served frame taken before the compaction fails with
+    * `FAILED_READ_FILE.FILE_NOT_EXIST` when used after it — take both
+    * again.
     */
   def compactPostings(
       spark: SparkSession,
@@ -599,7 +604,10 @@ object KeywordIndex {
     * (built before them, inside an upsert's or delete's crash window, or
     * tombstoned by a delete that did not keep them) or with an
     * unreadable dfs dir (a crashed compaction), and for an empty corpus.
-    * Registration sync is DDL-free on no change.
+    * Registration sync is DDL-free on no change. The returned `dfs`
+    * frame is bound to the file listing at call time: call `statsFor`
+    * again after a [[compactPostings]], whose dir swap makes the old
+    * frame fail with `FAILED_READ_FILE.FILE_NOT_EXIST`.
     */
   def statsFor(spark: SparkSession, sourceDir: String): Option[Bm25Stats] = {
     val tag = IndexStore.pathTag(sourceDir)

@@ -1561,4 +1561,66 @@ class AnnIndexSpec extends AnyFunSuite {
       s"an upsert added more than one file to a list: $listsAdd")
     assert(added(vecs, filesByDir(s"$pq/vecs")).values.sum <= buckets)
   }
+
+  // the on-disk meta is the format every later session reads back: each
+  // lifecycle verb must leave exactly these key→value maps behind
+  test("flat-layout meta format across ensure(snapshotId) → " +
+      "upsert(batchId) → delete(batchId) → compact: LSH and SQ8") {
+    import spark.implicits._
+    val dir = s"/tmp/graft_spec_meta_$runTag"
+    emb.filter(col("vec_id") % 5 =!= 0).write.parquet(s"$dir/base")
+    emb.filter(col("vec_id") % 5 === 0).write.parquet(s"$dir/tail")
+    val base = spark.read.parquet(s"$dir/base")
+    val tail = spark.read.parquet(s"$dir/tail")
+    val gone = Seq(1L, 2L, 5L, 987654321L) // one id was never indexed
+    val (nb, fb) = AnnIndex.fingerprint(base)
+    val (nt, ft) = AnnIndex.fingerprint(tail)
+    val (ns, fs) = AnnIndex.fingerprint(
+      base.union(tail).filter(!col("vec_id").isin(gone: _*)))
+    val both = s"$dir/base;$dir/tail"
+    case class Layout(stem: String, point: Map[String, Long],
+        paths: String => Map[String, String], ensure: String => Any,
+        upsert: String => Any, delete: String => Any,
+        compact: String => Any)
+    val layouts = Seq(
+      Layout("lsh", Map("tables" -> 16L, "bits" -> 6L, "buckets" -> 4L),
+        p => Map("source_paths" -> p),
+        src => AnnIndex.ensureLsh(spark, src, base, tables = 16, bits = 6,
+          storageBuckets = 4, snapshotId = Some("v1")),
+        src => AnnIndex.upsertLsh(spark, src, tail, tables = 16, bits = 6,
+          storageBuckets = 4, batchId = Some(7L)),
+        src => AnnIndex.deleteLsh(spark, src, gone.toDF("vec_id"),
+          batchId = Some(3L)),
+        src => AnnIndex.compactLsh(spark, src)),
+      Layout("sq8", Map("buckets" -> 4L), _ => Map.empty,
+        src => AnnIndex.ensureSq8(spark, src, base, storageBuckets = 4,
+          snapshotId = Some("v1")),
+        src => AnnIndex.upsertSq8(spark, src, tail, storageBuckets = 4,
+          batchId = Some(7L)),
+        src => AnnIndex.deleteSq8(spark, src, gone.toDF("vec_id"),
+          batchId = Some(3L)),
+        src => AnnIndex.compactSq8(spark, src)))
+    layouts.foreach { l =>
+      val src = s"spec-$runTag-meta-${l.stem}"
+      val at = s"/tmp/graft_ann_${l.stem}_${IndexStore.pathTag(src)}"
+      def pin(verb: String, num: Map[String, Long],
+          str: Map[String, String]): Unit = {
+        assert(AnnIndex.readMeta(at) === num, s"${l.stem} $verb")
+        assert(AnnIndex.readMetaStrs(at) === str, s"${l.stem} $verb")
+      }
+      l.ensure(src)
+      pin("ensure", l.point ++ Map("n_rows" -> nb, "checksum" -> fb),
+        l.paths(s"$dir/base") ++ Map("snapshot_id" -> "v1"))
+      l.upsert(src)
+      val upserted = l.point ++ Map("n_rows" -> (nb + nt),
+        "checksum" -> (fb ^ ft), "last_batch_id" -> 7L)
+      pin("upsert", upserted, l.paths(both))
+      l.delete(src)
+      pin("delete", upserted ++ Map("tomb_rows" -> 4L,
+        "last_del_batch_id" -> 3L), l.paths(both))
+      l.compact(src)
+      pin("compact", l.point ++ Map("n_rows" -> ns, "checksum" -> fs,
+        "last_batch_id" -> 7L, "last_del_batch_id" -> 3L), l.paths(both))
+    }
+  }
 }

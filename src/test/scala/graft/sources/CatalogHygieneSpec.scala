@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.TestSpark
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.catalog.{CreateTableEvent,
   DropTableEvent, ExternalCatalogEvent, ExternalCatalogEventListener}
@@ -124,6 +125,93 @@ class CatalogHygieneSpec extends AnyFunSuite {
     val evs2 = ddlDuring { PlaidIndex.openPlaid(spark, key) }
     assert(evs2.isEmpty,
       s"tombstoned open did not stabilize: ${evs2.mkString(", ")}")
+  }
+
+  /** Run `body` with a listener on the Spark listener bus and return the
+    * number of jobs it started. Listener events arrive asynchronously,
+    * in order: a sentinel job run after `body` marks the point where
+    * every job of `body` has been seen.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.sentinel") ==
+            "1")) sentinel.countDown()
+        else started.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.sentinel", null)
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    started.get
+  }
+
+  /** The flat codec layouts: label, stem, and ensure / delete / upsert /
+    * open verbs over a 64-row fixture (the upsert re-adds deleted id 5).
+    */
+  private val flatCodecs = Seq[(String, String, String => Any,
+      String => Any, String => Any, String => Any)](
+    ("SQ8", "sq8",
+      key => AnnIndex.ensureSq8(spark, key, vecs(64), storageBuckets = 2),
+      key => AnnIndex.deleteSq8(spark, key, Seq(5L).toDF("vec_id")),
+      key => AnnIndex.upsertSq8(spark, key,
+        vecs(64).filter(col("vec_id") === 5L), storageBuckets = 2),
+      key => AnnIndex.openSq8(spark, key)),
+    ("BQ", "bq",
+      key => AnnIndex.ensureBq(spark, key, vecs(64), storageBuckets = 2),
+      key => AnnIndex.deleteBq(spark, key, Seq(5L).toDF("vec_id")),
+      key => AnnIndex.upsertBq(spark, key,
+        vecs(64).filter(col("vec_id") === 5L), storageBuckets = 2),
+      key => AnnIndex.openBq(spark, key)),
+    ("LSH", "lsh",
+      key => AnnIndex.ensureLsh(spark, key, vecs(64), tables = 2, bits = 2,
+        storageBuckets = 2),
+      key => AnnIndex.deleteLsh(spark, key, Seq(5L).toDF("vec_id")),
+      key => AnnIndex.upsertLsh(spark, key,
+        vecs(64).filter(col("vec_id") === 5L), tables = 2, bits = 2,
+        storageBuckets = 2),
+      key => AnnIndex.openLsh(spark, key)))
+
+  // the flat upserts re-derive the tombs registration before their
+  // tombstone clash check, like the IVF ones below
+  flatCodecs.foreach { case (label, layout, ensure, delete, upsert, _) =>
+    test(s"$label upsert refuses an id tombstoned by another session") {
+      val key = s"hyg-$runTag-$layout-fx"
+      ensure(key)
+      delete(key)
+      spark.sql(s"DROP TABLE IF EXISTS graft_${layout}_tombs_" +
+        IndexStore.pathTag(key))
+      val e = intercept[IllegalArgumentException] { upsert(key) }
+      assert(e.getMessage.contains("tombstoned"))
+    }
+  }
+
+  // the flat layouts share one open path: no DDL and no Spark job once
+  // the registration matches the store, tombstoned or not
+  flatCodecs.foreach { case (label, layout, ensure, delete, _, open) =>
+    test(s"second open of the $label layout issues zero catalog DDL and " +
+        "runs zero Spark jobs — clean AND tombstoned") {
+      val key = s"hyg-$runTag-$layout-fo"
+      ensure(key)
+      open(key)
+      var jobs = -1
+      val evs = ddlDuring { jobs = jobsDuring(open(key)) }
+      assert(evs.isEmpty, s"expected zero DDL, got: ${evs.mkString(", ")}")
+      assert(jobs === 0)
+      delete(key)
+      open(key)
+      val evs2 = ddlDuring { jobs = jobsDuring(open(key)) }
+      assert(evs2.isEmpty,
+        s"tombstoned open did not stabilize: ${evs2.mkString(", ")}")
+      assert(jobs === 0)
+    }
   }
 
   /** The IVF codec layouts: label, stem, and ensure / delete / upsert /
