@@ -1,9 +1,10 @@
 package graft.sources
 
 import graft.operators.SimilaritySearch
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** PERSISTED approximate-nearest-neighbor index (SURVEY.md §2.1 S4/S5 +
   * §4 O3). The reference creates its vector index ONCE and queries it
@@ -21,15 +22,15 @@ import java.nio.file.{Files, Paths}
   *    Queries broadcast their probed bucket ids and equi-join it on
   *    `tb` — no signature is recomputed over the index side, and the
   *    index scan is one pass over a narrow (long, long) relation. The
-  *    IVF one (encoded `lists` partitioned by centroid_id, plus the
-  *    centroids and any trained codec model such as the PQ codebook)
-  *    serves IVF-SQ8, IVF-BQ and IVF-PQ. Both keep the float vectors
-  *    bucketed by vec_id for the exact re-rank, and merge-on-read
-  *    tombstones.
-  *  - IVF: Lloyd-refined centroids (tiny, plain parquet) plus the
-  *    inverted lists `(centroid_id, vec_id, embedding)` partitioned by
-  *    `centroid_id` — probing nProbe lists per query is partition
-  *    pruning, the classic inverted-file read pattern.
+  *    IVF one (Lloyd-refined centroids, tiny plain parquet, plus the
+  *    inverted `lists` partitioned by centroid_id — probing nProbe
+  *    lists per query is partition pruning, the classic inverted-file
+  *    read pattern — and any trained codec model such as the PQ
+  *    codebook) serves IVF-SQ8, IVF-BQ and IVF-PQ with encoded lists,
+  *    and float IVF, whose lists `(vec_id, embedding, centroid_id)`
+  *    carry the vectors themselves. Every other layout keeps the float
+  *    vectors bucketed by vec_id for the exact re-rank; all keep
+  *    merge-on-read tombstones.
   *
   * Freshness contract: `ensure*` rebuilds when the stored meta (operating
   * point + row count) no longer matches the source frame; the layout is
@@ -83,9 +84,6 @@ object AnnIndex {
     * benign; a production deployment over mutable sources would key the
     * layout on a table snapshot id instead.)
     */
-  private def writeMeta(base: String, kv: (String, Long)*): Unit =
-    writeMetaFull(base, kv, Nil)
-
   private[sources] def writeMetaFull(base: String, num: Seq[(String, Long)],
       str: Seq[(String, String)]): Unit = {
     Files.createDirectories(Paths.get(base))
@@ -490,8 +488,8 @@ object AnnIndex {
     atStoredLsh(spark, sourceDir)(c => compactFlat(c, spark, sourceDir))
 
   /** Build-or-reuse for a base + upserted-tail index
-    * ([[ensureFlatUpserted]]): reused when the stored meta already
-    * equals base ⊕ tail, else the base is built and the tail upserted.
+    * ([[ensureUpserted]]): reused when the stored meta already equals
+    * base ⊕ tail, else the base is built and the tail upserted.
     */
   def ensureLshUpserted(
       spark: SparkSession,
@@ -501,9 +499,16 @@ object AnnIndex {
       tables: Int = 64,
       bits: Int = 12,
       storageBuckets: Int = 8): LshHandle =
-    servedLsh(spark, sourceDir, Lsh(tables, bits))(c =>
-      ensureFlatUpserted(c, spark, sourceDir, baseRows, tailRows,
-        storageBuckets))
+    servedLsh(spark, sourceDir, Lsh(tables, bits)) { c =>
+      val l = flatLayout(c, spark, sourceDir)
+      ensureUpserted(spark, l, flatPoint(c, storageBuckets), storageBuckets,
+        baseRows, tailRows)(
+        (n, fp) => buildFlat(c, spark, l, baseRows, storageBuckets, n, fp,
+          None),
+        tail => upsertFlat(c, spark, sourceDir, tailRows, storageBuckets,
+          None, Some(tail)))
+      flatHandle(spark, l)
+    }
 
   /** Query the persisted LSH index: probe buckets come from the (small)
     * query side only and reach the index through a broadcast equi-join
@@ -585,39 +590,17 @@ object AnnIndex {
   }
 
   // ---------------------------------------------------------------- IVF
+  // the IVF lifecycle ([[ensureIvfCodes]] … [[compactIvfCodes]]) at
+  // [[FloatIvf]]; its layout buckets nothing, so the storage bucketing
+  // these verbs pass (0) is never read
 
   final case class IvfHandle(centroids: DataFrame, lists: DataFrame)
 
-  private def ivfBase(spark: SparkSession, tag: String) =
-    s"${annBase(spark)}/graft_ann_ivf_$tag"
-
-  /** (Re)register the float-IVF tombstone table when its dir exists;
-    * drop the registration when it doesn't (another session's fold).
+  /** The float-IVF view of the IVF lifecycle's handle: its lists carry
+    * the vectors, so the handle is the centroids and the served lists.
     */
-  private def ivfTombsRegistered(spark: SparkSession,
-      tag: String): Boolean = {
-    val base = ivfBase(spark, tag)
-    if (!spark.catalog.tableExists(s"graft_ivf_tombs_$tag") &&
-        tombsServable(spark, base))
-      registerExternal(spark, s"graft_ivf_tombs_$tag", s"$base/tombs")
-    spark.catalog.tableExists(s"graft_ivf_tombs_$tag")
-  }
-
-  /** The served float-IVF view: when tombstones exist the lists
-    * anti-join them on vec_id via a broadcast of the deletion-bounded
-    * set (the [[deleteLsh]] shape — this layout has no id-bucketed
-    * side to ride, its lists carry the vectors themselves).
-    */
-  private def ivfServedHandle(spark: SparkSession,
-      tag: String): IvfHandle = {
-    val cents = ParquetIO.read(spark, s"${ivfBase(spark, tag)}/centroids")
-    val lists = spark.table(s"graft_ivf_lists_$tag")
-    if (ivfTombsRegistered(spark, tag))
-      IvfHandle(cents, lists.join(
-        broadcast(spark.table(s"graft_ivf_tombs_$tag")), Seq("vec_id"),
-        "left_anti"))
-    else IvfHandle(cents, lists)
-  }
+  private def floatIvf(h: IvfCodesHandle): IvfHandle =
+    IvfHandle(h.centroids, h.lists)
 
   /** The drift gate of every upsert into a centroid-partitioned
     * layout (IVF, the IVF codec layouts, PLAID): centroids and any codec
@@ -654,6 +637,8 @@ object AnnIndex {
     * the classic k-center failure; see the q37 operating-point notes in
     * PipelineQueries) and inverted lists partitioned by centroid, each
     * list row carrying its vector so a probe needs no second join.
+    * Freshness as [[ensureLsh]] (snapshot id or content fingerprint; a
+    * tombstoned or unreadable layout rebuilds).
     */
   def ensureIvf(
       spark: SparkSession,
@@ -661,76 +646,9 @@ object AnnIndex {
       index: DataFrame,
       lists: Int = 32,
       iters: Int = 5,
-      snapshotId: Option[String] = None): IvfHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfBase(spark, tag)
-    val listsTable = s"graft_ivf_lists_$tag"
-    val centsPath = s"$base/centroids"
-    def attach(): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $listsTable")
-      registerExternal(spark, listsTable, s"$base/lists",
-        partitionedBy = Some("centroid_id"))
-    }
-    // the shared reuse-vs-rebuild probe ([[servable]]): footer-reads the
-    // lists AND centroid layouts and re-attaches if needed, so an
-    // unreadable layout (crashed build/compaction window) or a failing
-    // attach reads as STALE → rebuild, never an eternally-throwing
-    // fast path — the same hardened recovery contract as ensureLsh and
-    // ensurePostings
-    def ivfServable(): Boolean = servable(spark,
-      Seq(s"$base/lists", centsPath),
-      spark.catalog.tableExists(listsTable), () => attach())
-    // O(1) snapshot-id freshness — same contract as [[ensureLsh]]:
-    // a stored id equal to the caller's names the same immutable
-    // content, so the fingerprint scan is skipped outright
-    // a tombstoned layout no longer equals assign(source): deletions
-    // force a rebuild which clears them (the ensureSq8 discipline)
-    def tombFree = readMeta(base).get("tomb_rows").forall(_ == 0L)
-    val snapFresh = snapshotId.exists { id =>
-      val meta = readMeta(base)
-      readMetaStrs(base).get("snapshot_id").contains(id) &&
-        meta.get("lists").contains(lists.toLong) &&
-        meta.get("iters").contains(iters.toLong)
-    } && tombFree
-    if (snapFresh && ivfServable()) {
-      return ivfServedHandle(spark, tag)
-    }
-    val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
-    val meta = readMeta(base)
-    val metaFresh = meta.get("lists").contains(lists.toLong) &&
-      meta.get("iters").contains(iters.toLong) &&
-      meta.get("n_rows").contains(n) &&
-      meta.get("checksum").contains(fp) && tombFree &&
-      ivfServable()
-    if (!metaFresh) {
-      // the rebuild clears deletions ("serve exactly this source");
-      // the delete replay-skip window survives
-      dropTombs(spark, base, s"graft_ivf_tombs_$tag")
-      val cents = SimilaritySearch.kMeansCentroids(index, lists, iters)
-      cents.write.mode(SaveMode.Overwrite).parquet(centsPath)
-      val assigned = SimilaritySearch
-        .assignWithVecs(index, ParquetIO.read(spark, centsPath))
-      spark.sql(s"DROP TABLE IF EXISTS $listsTable")
-      writeLists(assigned, listsTable, Some(s"$base/lists"))
-      writeMetaFull(base,
-        Seq("lists" -> lists.toLong, "iters" -> iters.toLong,
-          "n_rows" -> n, "checksum" -> fp, "n_base" -> n) ++
-          meta.get("last_del_batch_id")
-            .map("last_del_batch_id" -> _).toSeq,
-        snapshotId.map("snapshot_id" -> _).toSeq)
-    }
-    if (metaFresh && snapshotId.isDefined)
-      // content unchanged under a new snapshot name: record the id so
-      // the next ensure at this snapshot is O(1)
-      writeMetaFull(base,
-        Seq("lists" -> lists.toLong, "iters" -> iters.toLong,
-          "n_rows" -> n, "checksum" -> fp,
-          "n_base" -> meta.getOrElse("n_base", n)) ++
-          meta.get("last_del_batch_id")
-            .map("last_del_batch_id" -> _).toSeq,
-        snapshotId.map("snapshot_id" -> _).toSeq)
-    ivfServedHandle(spark, tag)
-  }
+      snapshotId: Option[String] = None): IvfHandle =
+    floatIvf(ensureIvfCodes(FloatIvf, spark, sourceDir, index, lists, iters,
+      0, snapshotId))
 
   /** Incremental add into an EXISTING persisted IVF index: new vectors
     * are assigned to the STORED centroids (no k-means — the index
@@ -750,45 +668,9 @@ object AnnIndex {
       sourceDir: String,
       newVecs: DataFrame,
       lists: Int = 32,
-      iters: Int = 5): IvfHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfBase(spark, tag)
-    val listsTable = s"graft_ivf_lists_$tag"
-    val centsPath = s"$base/centroids"
-    val meta = readMeta(base)
-    require(meta.get("lists").contains(lists.toLong) &&
-      meta.get("iters").contains(iters.toLong) &&
-      Files.exists(Paths.get(centsPath)),
-      s"upsertIvf needs an existing index at the same operating point " +
-        s"(lists=$lists iters=$iters); found $meta")
-    if (!spark.catalog.tableExists(listsTable)) {
-      spark.sql(s"DROP TABLE IF EXISTS $listsTable")
-      registerExternal(spark, listsTable, s"$base/lists",
-        partitionedBy = Some("centroid_id"))
-    }
-    val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
-    val nBase = driftGate(spark, "Ivf", meta, nNew)
-    // append-only + tombstone contract (the upsertSq8 discipline)
-    if (meta.get("tomb_rows").exists(_ > 0L) &&
-        ivfTombsRegistered(spark, tag)) {
-      val clash = spark.table(s"graft_ivf_tombs_$tag")
-        .join(newVecs.select("vec_id"), Seq("vec_id"), "left_semi").count()
-      require(clash == 0L,
-        s"upsertIvf: $clash incoming vec_id(s) are tombstoned — run " +
-          "compactIvf to fold deletions before re-inserting those ids")
-    }
-    val assigned = SimilaritySearch
-      .assignWithVecs(newVecs, ParquetIO.read(spark, centsPath))
-    writeLists(assigned, listsTable)
-    writeMeta(base, (Seq("lists" -> lists.toLong, "iters" -> iters.toLong,
-      "n_rows" -> (meta("n_rows") + nNew),
-      "checksum" -> (meta("checksum") ^ fpNew),
-      "n_base" -> nBase) ++
-      meta.get("tomb_rows").map("tomb_rows" -> _).toSeq ++
-      meta.get("last_del_batch_id")
-        .map("last_del_batch_id" -> _).toSeq): _*)
-    ivfServedHandle(spark, tag)
-  }
+      iters: Int = 5): IvfHandle =
+    floatIvf(upsertIvfCodes(FloatIvf, spark, sourceDir, newVecs,
+      Some((lists, iters, 0)), None))
 
   /** True iff a persisted float-IVF layout exists for `sourceDir` AT
     * the given operating point (meta check only — the [[sq8Exists]]
@@ -796,17 +678,14 @@ object AnnIndex {
     * not re-ensured).
     */
   def ivfExists(spark: SparkSession, sourceDir: String,
-      lists: Int = 32, iters: Int = 5): Boolean = {
-    val meta = readMeta(ivfBase(spark, IndexStore.pathTag(sourceDir)))
-    meta.get("lists").contains(lists.toLong) &&
-      meta.get("iters").contains(iters.toLong)
-  }
+      lists: Int = 32, iters: Int = 5): Boolean =
+    existsIvfCodes(FloatIvf, spark, sourceDir, lists, iters, 0)
 
-  /** Delete by id from the persisted float-IVF index — the last layout
-    * without the verb. Merge-on-read vec_id tombstones served through
-    * a broadcast anti-join on the probed lists (this layout has no
-    * id-bucketed side; the tombstone set is deletion-bounded). Ids
-    * absent from the index are a semantic no-op; [[compactIvf]] folds
+  /** Delete by id from the persisted float-IVF index. Merge-on-read
+    * vec_id tombstones served through a broadcast anti-join on the
+    * probed lists (this layout has no id-bucketed side; the tombstone
+    * set is deletion-bounded). Ids the layout does not serve (absent or
+    * already deleted) are not tombstoned; [[compactIvf]] folds
     * physically; re-inserting a deleted id fails loudly in
     * [[upsertIvf]]; a delete moves the layout past any named snapshot;
     * `batchId` replay-skip rides the delete counter.
@@ -815,76 +694,33 @@ object AnnIndex {
       spark: SparkSession,
       sourceDir: String,
       ids: DataFrame,
-      batchId: Option[Long] = None): IvfHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfBase(spark, tag)
-    val listsTable = s"graft_ivf_lists_$tag"
-    val meta = readMeta(base)
-    require(meta.contains("lists"),
-      s"deleteIvf needs an existing persisted IVF index for " +
-        s"'$sourceDir' — run ensureIvf first")
-    require(parquetReadable(spark, s"$base/lists") &&
-      parquetReadable(spark, s"$base/centroids"),
-      s"persisted IVF layout for '$sourceDir' is unreadable — run " +
-        "ensureIvf to rebuild before deleting")
-    if (!spark.catalog.tableExists(listsTable))
-      registerExternal(spark, listsTable, s"$base/lists",
-        partitionedBy = Some("centroid_id"))
-    val replayed = batchId.exists(id =>
-      meta.get("last_del_batch_id").exists(id <= _))
-    if (replayed) return ivfServedHandle(spark, tag)
-    val batch = ids.select("vec_id").distinct()
-    val nDel = batch.count()
-    sweepOrphanTombs(spark, base, s"graft_ivf_tombs_$tag")
-    if (ivfTombsRegistered(spark, tag))
-      batch.write.mode(SaveMode.Append).format("parquet")
-        .saveAsTable(s"graft_ivf_tombs_$tag")
-    else
-      batch.write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/tombs")
-        .format("parquet").saveAsTable(s"graft_ivf_tombs_$tag")
-    commitDelete(base, meta, nDel, batchId)
-    ivfServedHandle(spark, tag)
-  }
+      batchId: Option[Long] = None): IvfHandle =
+    floatIvf(deleteIvfCodes(FloatIvf, spark, sourceDir, ids, batchId))
 
   /** Open an existing persisted float-IVF index read-only, WITHOUT a
-    * freshness probe — the [[openSq8]] contract on the float layout
-    * (the one open* verb that was missing): no fingerprint scan, no
-    * rebuild decision, just a catalog attach/refresh. The reader's
-    * path for a tombstoned layout, which deliberately fails
-    * [[ensureIvf]]'s "serve exactly this source" freshness and must be
-    * OPENED to keep serving its deletions.
+    * freshness probe — the [[openSq8]] contract on the float layout:
+    * no fingerprint scan, no rebuild decision, just a catalog
+    * attach/refresh. The reader's path for a tombstoned layout, which
+    * deliberately fails [[ensureIvf]]'s "serve exactly this source"
+    * freshness and must be OPENED to keep serving its deletions.
     */
-  def openIvf(spark: SparkSession, sourceDir: String): IvfHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("lists"),
-      s"no persisted IVF index for '$sourceDir' ($base)")
-    require(parquetReadable(spark, s"$base/lists") &&
-      parquetReadable(spark, s"$base/centroids"),
-      s"persisted IVF layout for '$sourceDir' is unreadable (crashed " +
-        "compaction?) — run ensureIvf to rebuild")
-    val listsTable = s"graft_ivf_lists_$tag"
-    if (!spark.catalog.tableExists(listsTable))
-      registerExternal(spark, listsTable, s"$base/lists",
-        partitionedBy = Some("centroid_id"))
-    else {
-      // a writer in another session invalidates only its own relation
-      // cache — refresh so this reader's file listing is current; the
-      // tombs registration aligns with the store (DDL only on change),
-      // then ivfServedHandle picks it up
-      spark.catalog.refreshTable(listsTable)
-      syncTombs(spark, ivfBase(spark, tag), s"graft_ivf_tombs_$tag")
-    }
-    ivfServedHandle(spark, tag)
-  }
+  def openIvf(spark: SparkSession, sourceDir: String): IvfHandle =
+    floatIvf(openIvfCodes(FloatIvf, spark, sourceDir))
 
-  /** Build-or-reuse for a base + upserted-tail IVF index: reused (or
-    * attached) when the stored meta equals base ⊕ tail; otherwise
-    * k-means trains on the BASE only, then the tail is upserted against
-    * the stored centroids — the shape a serving index lifecycle takes
-    * (train at build time, assign-only on ingest).
+  /** [[compactIvfSq8]]'s float-IVF twin: rewrites the partitioned
+    * inverted lists of an [[ensureIvf]] layout into few files per
+    * partition, folding any tombstones; centroids (tiny plain parquet)
+    * untouched.
+    */
+  def compactIvf(spark: SparkSession, sourceDir: String): IvfHandle =
+    floatIvf(compactIvfCodes(FloatIvf, spark, sourceDir))
+
+  /** Build-or-reuse for a base + upserted-tail IVF index
+    * ([[ensureUpserted]]): reused when the stored meta equals
+    * base ⊕ tail; otherwise k-means trains on the BASE only, then the
+    * tail is upserted against the stored centroids — the shape a
+    * serving index lifecycle takes (train at build time, assign-only on
+    * ingest).
     */
   def ensureIvfUpserted(
       spark: SparkSession,
@@ -893,44 +729,14 @@ object AnnIndex {
       tailRows: DataFrame,
       lists: Int = 32,
       iters: Int = 5): IvfHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfBase(spark, tag)
-    val listsTable = s"graft_ivf_lists_$tag"
-    val centsPath = s"$base/centroids"
-    val (nb, fb) = fingerprint(baseRows.select("vec_id", "embedding"))
-    val (nt, ft) = fingerprint(tailRows.select("vec_id", "embedding"))
-    val meta = readMeta(base)
-    def attach(): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $listsTable")
-      registerExternal(spark, listsTable, s"$base/lists",
-        partitionedBy = Some("centroid_id"))
-    }
-    // same servable() recovery probe as ensureIvf: an unreadable layout
-    // or failing attach counts as stale → rebuild
-    val combinedFresh = meta.get("lists").contains(lists.toLong) &&
-      meta.get("iters").contains(iters.toLong) &&
-      meta.get("n_rows").contains(nb + nt) &&
-      meta.get("checksum").contains(fb ^ ft) &&
-      meta.get("tomb_rows").forall(_ == 0L) &&
-      servable(spark, Seq(s"$base/lists", centsPath),
-        spark.catalog.tableExists(listsTable), () => attach())
-    if (!combinedFresh) {
-      // the rebuild clears deletions (the ensureIvf discipline)
-      dropTombs(spark, base, s"graft_ivf_tombs_$tag")
-      val cents = SimilaritySearch.kMeansCentroids(baseRows, lists, iters)
-      cents.write.mode(SaveMode.Overwrite).parquet(centsPath)
-      val assigned = SimilaritySearch
-        .assignWithVecs(baseRows, ParquetIO.read(spark, centsPath))
-      spark.sql(s"DROP TABLE IF EXISTS $listsTable")
-      writeLists(assigned, listsTable, Some(s"$base/lists"))
-      writeMeta(base, (Seq("lists" -> lists.toLong,
-        "iters" -> iters.toLong,
-        "n_rows" -> nb, "checksum" -> fb, "n_base" -> nb) ++
-        meta.get("last_del_batch_id")
-          .map("last_del_batch_id" -> _).toSeq): _*)
-      upsertIvf(spark, sourceDir, tailRows, lists, iters)
-    }
-    ivfServedHandle(spark, tag)
+    val l = ivfLayout(FloatIvf, spark, sourceDir)
+    ensureUpserted(spark, l, ivfPoint(FloatIvf, lists, iters, 0), 0,
+      baseRows, tailRows)(
+      (n, fp) => buildIvf(FloatIvf, spark, l, baseRows, lists, iters, 0, n,
+        fp, None),
+      tail => upsertIvfCodes(FloatIvf, spark, sourceDir, tailRows,
+        Some((lists, iters, 0)), None, Some(tail)))
+    floatIvf(ivfCodesHandle(spark, l))
   }
 
   /** Query the persisted IVF index: rank centroids per query (broadcast,
@@ -980,10 +786,11 @@ object AnnIndex {
     SimilaritySearch.rerankWithVecs(cand, queries, k)
   }
 
-  // -------------------------------------------- LSH / SQ8 / BQ / PQ codecs
+  // ---------------------------------------- LSH / SQ8 / BQ / PQ / IVF codecs
 
   /** A vector codec of the codec layouts: flat LSH/SQ8/BQ and the
-    * composed IVF-SQ8/IVF-BQ/IVF-PQ. The codec names its stores
+    * composed IVF-SQ8/IVF-BQ/IVF-PQ plus float IVF (the lists keep the
+    * vectors themselves). The codec names its stores
     * (`graft_ann_<stem>_<tag>`, catalog tables
     * `graft_<stem>_<table>_<tag>`; the IVF form prefixes `ivf`), the
     * verb suffix and label its error messages carry, and any
@@ -1020,6 +827,10 @@ object AnnIndex {
     * with a model the codec may train at build time.
     */
   private sealed trait IvfCodec extends Codec {
+    /** True when `assign` keeps each row's float vector in `lists`: the
+      * layout then has no `vecs` table (see [[CodecLayout]]).
+      */
+    def vecsInLists: Boolean = false
     /** The dirs under the layout dir that hold the trained model. */
     def modelDirs: Seq[String] = Nil
     /** Train the model on the build's (vec_id, embedding) and persist
@@ -1028,8 +839,7 @@ object AnnIndex {
     def train(index: DataFrame, base: String): Unit = ()
     /** (vec_id, embedding) → the IVF layout's `lists` rows: each vector
       * assigned to its nearest of `centroids` and encoded with the
-      * model persisted under `base` — the float embedding never reaches
-      * the list layout.
+      * model persisted under `base`.
       */
     def assign(index: DataFrame, centroids: DataFrame,
         base: String): DataFrame
@@ -1086,6 +896,17 @@ object AnnIndex {
         numSub, ksub)
   }
 
+  /** Float IVF: each list row carries its vector, `(vec_id, embedding,
+    * centroid_id)`, so a probe re-ranks exactly from the lists alone.
+    * No trained model and no point of its own: lists/iters is all.
+    */
+  private case object FloatIvf extends Codec("", "", "") with IvfCodec {
+    override def vecsInLists: Boolean = true
+    def assign(index: DataFrame, centroids: DataFrame,
+        base: String): DataFrame =
+      SimilaritySearch.assignWithVecs(index, centroids)
+  }
+
   /** Random-hyperplane LSH at (tables, bits): one `(tb, vec_id)` row
     * per vector and hash table, `tb = table * 2^bits + bucket`.
     * `source_paths` records the normalized root paths of the file
@@ -1119,33 +940,53 @@ object AnnIndex {
     * `sub` bucketed by `key`) or the IVF form (`lists` partitioned by
     * centroid_id, plus plain-parquet `centroids`). Both keep `vecs` —
     * the float vectors bucketed by vec_id for the exact re-rank,
-    * fetched for the m winners per query only — merge-on-read `tombs`,
-    * and the codec's model dirs. Names depend on the codec's stem
-    * alone, never on its operating point.
+    * fetched for the m winners per query only — unless the scan table
+    * carries the vectors itself (`vecsInScan`: float IVF), plus
+    * merge-on-read `tombs` and the codec's model dirs. Without `vecs`
+    * nothing is bucketed: the meta records no `buckets` and the
+    * tombstones are unbucketed. Names depend on the codec's stem alone,
+    * never on its operating point.
     */
   private final class CodecLayout(spark: SparkSession, c: Codec,
       sourceDir: String, ivf: Boolean, val sub: String, val key: String,
-      modelDirs: Seq[String]) {
+      modelDirs: Seq[String], vecsInScan: Boolean) {
     private val stem = (if (ivf) "ivf" else "") + c.stem
     private val tag = IndexStore.pathTag(sourceDir)
     val verb = (if (ivf) "Ivf" else "") + c.verb
-    val label = (if (ivf) "IVF-" else "") + c.label
+    val label = Seq(if (ivf) "IVF" else "", c.label).filter(_.nonEmpty)
+      .mkString("-")
     val base = s"${annBase(spark)}/graft_ann_${stem}_$tag"
     val scan = s"graft_${stem}_${sub}_$tag"
-    val vecs = s"graft_${stem}_vecs_$tag"
+    val vecs = if (vecsInScan) None else Some(s"graft_${stem}_vecs_$tag")
+    /** The table of float vectors: the exact re-rank's and the fold's. */
+    val floats = vecs.getOrElse(scan)
     val tombs = s"graft_${stem}_tombs_$tag"
+    /** A tombstone's columns: an IVF one is co-keyed by its list when it
+      * is stored bucketed next to `vecs`, so a probe prunes tombstones
+      * with its lists; any other is a bare vec_id.
+      */
+    val tombKeys = (if (ivf && vecs.isDefined) Seq(key) else Nil) :+ "vec_id"
     val centroids = s"$base/centroids"
+    private val tables = scan +: vecs.toSeq
     /** The dirs a servable layout holds readable parquet in. */
-    val dataDirs = Seq(s"$base/$sub", s"$base/vecs") ++
+    val dataDirs = Seq(s"$base/$sub") ++ vecs.map(_ => s"$base/vecs") ++
       (if (ivf) Seq(centroids) else Nil) ++
       modelDirs.map(d => s"$base/$d")
 
+    /** The stored storage bucketing (0 when none is recorded). */
+    def buckets(meta: Map[String, Long]): Int =
+      meta.getOrElse("buckets", 0L).toInt
+
+    /** The tombstones' bucketing: vec_id, like `vecs`; none without. */
+    def tombsBy(storageBuckets: Int): Option[(String, Int)] =
+      vecs.map(_ => ("vec_id", storageBuckets))
+
     def built(meta: Map[String, Long]): Boolean =
-      (!ivf || meta.contains("lists")) && meta.contains("buckets") &&
+      (!ivf || meta.contains("lists")) &&
+        (vecs.isEmpty || meta.contains("buckets")) &&
         c.point.forall { case (k, _) => meta.contains(k) }
 
-    def registered: Boolean =
-      spark.catalog.tableExists(scan) && spark.catalog.tableExists(vecs)
+    def registered: Boolean = tables.forall(spark.catalog.tableExists)
 
     def requireReadable(before: String): Unit =
       require(dataDirs.forall(parquetReadable(spark, _)),
@@ -1156,41 +997,42 @@ object AnnIndex {
       * only. Tombs register only when the meta committed them.
       */
     def attach(storageBuckets: Int): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $scan")
-      spark.sql(s"DROP TABLE IF EXISTS $vecs")
-      spark.sql(s"DROP TABLE IF EXISTS $tombs")
+      (tables :+ tombs).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       registerExternal(spark, scan, s"$base/$sub",
         clusteredBy = if (ivf) None else Some((key, storageBuckets)),
         partitionedBy = if (ivf) Some(key) else None)
-      registerExternal(spark, vecs, s"$base/vecs",
-        clusteredBy = Some(("vec_id", storageBuckets)))
+      vecs.foreach(registerExternal(spark, _, s"$base/vecs",
+        clusteredBy = Some(("vec_id", storageBuckets))))
       if (tombsServable(spark, base))
         registerExternal(spark, tombs, s"$base/tombs",
-          clusteredBy = Some(("vec_id", storageBuckets)))
+          tombsBy(storageBuckets))
     }
+
+    /** Attach, or refresh the relation caches so another session's
+      * appends become visible and align the tombs registration with the
+      * store (tombstones may have (dis)appeared under another session's
+      * delete or fold) — DDL only on a change.
+      */
+    def sync(meta: Map[String, Long]): Unit =
+      if (!registered) attach(buckets(meta))
+      else {
+        tables.foreach(spark.catalog.refreshTable)
+        syncTombs(spark, base, tombs, tombsBy(buckets(meta)))
+      }
 
     /** The read-only open, WITHOUT a freshness probe — the reader's path
       * while a writer (e.g. a
       * [[graft.streaming.StreamOps.streamingSq8Upsert]] or
       * [[graft.streaming.StreamOps.streamingIvfSq8Upsert]] stream)
       * appends concurrently: no fingerprint scan, no rebuild decision,
-      * just a catalog attach, or a relation-cache refresh so another
-      * session's appends become visible.
+      * just a catalog attach or a [[sync]].
       */
     def open(): Unit = {
       val meta = readMeta(base)
       require(built(meta),
         s"no persisted $label index for '$sourceDir' ($base)")
       requireReadable("")
-      if (!registered) attach(meta("buckets").toInt)
-      else {
-        spark.catalog.refreshTable(scan)
-        spark.catalog.refreshTable(vecs)
-        // tombstones may have (dis)appeared under another session's
-        // delete or fold — align with the store, DDL only on a change
-        syncTombs(spark, base, tombs,
-          clusteredBy = Some(("vec_id", meta("buckets").toInt)))
-      }
+      sync(meta)
     }
   }
 
@@ -1239,10 +1081,10 @@ object AnnIndex {
     * here). No-op when already registered or nothing is committed.
     */
   private def registerCommittedTombs(spark: SparkSession,
-      base: String, table: String, storageBuckets: Int): Unit =
+      base: String, table: String,
+      clusteredBy: Option[(String, Int)]): Unit =
     if (!spark.catalog.tableExists(table) && tombsServable(spark, base))
-      registerExternal(spark, table, s"$base/tombs",
-        clusteredBy = Some(("vec_id", storageBuckets)))
+      registerExternal(spark, table, s"$base/tombs", clusteredBy)
 
   /** Append-only + tombstone contract of the upsert verbs: re-adding a
     * deleted id would be silently swallowed by the tombstone anti-join —
@@ -1252,17 +1094,52 @@ object AnnIndex {
     * registration, so the registration is re-derived first. The probe
     * is batch-sized (broadcast semi-join), not index-sized.
     */
-  private def refuseTombstoned(spark: SparkSession, base: String,
-      table: String, verb: String, meta: Map[String, Long],
-      newVecs: DataFrame, storageBuckets: Int): Unit =
+  private def refuseTombstoned(spark: SparkSession, l: CodecLayout,
+      meta: Map[String, Long], newVecs: DataFrame): Unit =
     if (meta.get("tomb_rows").exists(_ > 0L)) {
-      registerCommittedTombs(spark, base, table, storageBuckets)
-      val clash = spark.table(table)
+      registerCommittedTombs(spark, l.base, l.tombs,
+        l.tombsBy(l.buckets(meta)))
+      val clash = spark.table(l.tombs)
         .join(newVecs.select("vec_id"), Seq("vec_id"), "left_semi").count()
       require(clash == 0L,
-        s"upsert$verb: $clash incoming vec_id(s) are tombstoned — run " +
-          s"compact$verb to fold deletions before re-inserting those ids")
+        s"upsert${l.verb}: $clash incoming vec_id(s) are tombstoned — " +
+          s"run compact${l.verb} to fold deletions before re-inserting " +
+          "those ids")
     }
+
+  /** The delete verb of both lifecycles: validate and sync the layout,
+    * skip a replayed `batchId`, then tombstone the batch's LIVE ids.
+    * The id batch is delete-sized: it is collected once (an in-memory
+    * id frame collects without a job) and pushed into `live` as an id
+    * filter, which the vec_id bucketing and sort of a `vecs` table
+    * prune. `live(filter)` gives the served rows passing it, one per
+    * live vector, carrying the layout's tombstone columns; those rows
+    * are collected, appended to the tombstones and committed. An absent
+    * or already-deleted id matches no served row, so `tomb_rows` counts
+    * exactly the rows deleted, and an id that was never indexed stays
+    * insertable.
+    */
+  private def deleteLayout(spark: SparkSession, l: CodecLayout,
+      sourceDir: String, ids: DataFrame, batchId: Option[Long])(
+      live: Column => DataFrame): Unit = {
+    val meta = readMeta(l.base)
+    require(l.built(meta),
+      s"delete${l.verb} needs an existing persisted ${l.label} index for " +
+        s"'$sourceDir' — run ensure${l.verb} first")
+    l.requireReadable(" before deleting")
+    l.sync(meta)
+    if (batchId.exists(id => meta.get("last_del_batch_id").exists(id <= _)))
+      return
+    val batch = ids.select("vec_id").collect().map(_.get(0)).distinct
+    val rows = if (batch.isEmpty) Nil
+      else live(col("vec_id").isin(batch.toIndexedSeq: _*))
+        .select(l.tombKeys.map(col): _*).collect().toSeq
+    if (rows.nonEmpty)
+      writeTombs(spark, l.base, l.tombs,
+        spark.createDataFrame(rows.asJava, rows.head.schema).coalesce(1),
+        l.tombsBy(l.buckets(meta)))
+    commitDelete(l.base, meta, rows.size, batchId)
+  }
 
   /** Commit a delete of `nDel` ids: the tomb count grows, the delete
     * replay window advances, `snapshot_id` drops (the layout moved past
@@ -1278,7 +1155,8 @@ object AnnIndex {
       (readMetaStrs(base) - "snapshot_id").toSeq)
 
   /** Commit a tombstone fold: the live fingerprint is recomputed from
-    * the folded `vecs` (upsert checksum composition stays coherent),
+    * the folded float vectors (upsert checksum composition stays
+    * coherent),
     * `tomb_rows` resets, and every other key is carried — replay
     * windows, and `n_base`: the centroids were trained on the original
     * base, so shrinking it would only tighten the drift gate spuriously.
@@ -1303,29 +1181,38 @@ object AnnIndex {
   private def flatLayout(c: FlatCodec, spark: SparkSession,
       sourceDir: String) =
     new CodecLayout(spark, c, sourceDir, ivf = false, c.scanDir, c.scanKey,
-      Nil)
+      Nil, vecsInScan = false)
 
   private def flatPoint(c: FlatCodec,
       storageBuckets: Int): Seq[(String, Long)] =
     c.point :+ ("buckets" -> storageBuckets.toLong)
 
-  /** The served view: when a tombstone table exists, BOTH sides carry
-    * the anti-join against it (the scan side is what excludes deleted
-    * ids from candidates; the vecs side keeps any direct consumer of
-    * the float table honest too). Tombs share the vec_id bucketing, so
-    * those anti-joins are shuffle-free on the index side; a scan table
-    * bucketed by another key (LSH's `tb`) rides a broadcast of the
-    * deletion-bounded tombstone set instead.
+  /** The served (scan, floats) view of both lifecycles: when a
+    * tombstone table exists, BOTH sides carry the anti-join against it
+    * (the scan side is what excludes deleted ids from candidates; the
+    * floats side keeps any direct consumer of the float vectors honest
+    * too). Tombs keyed like the scan table join it directly — on the
+    * shared vec_id bucketing shuffle-free on the index side, on an IVF
+    * list pruned with the probed lists; any other scan (LSH's `tb`,
+    * float IVF's lists against vec_id-only tombs) rides a broadcast of
+    * the deletion-bounded tombstone set.
     */
-  private def flatHandle(spark: SparkSession, l: CodecLayout): CodesHandle = {
-    val codes = spark.table(l.scan)
-    val vecs = spark.table(l.vecs)
+  private def served(spark: SparkSession,
+      l: CodecLayout): (DataFrame, DataFrame) = {
+    val scan = spark.table(l.scan)
+    val floats = l.vecs.map(spark.table)
     if (spark.catalog.tableExists(l.tombs)) {
       val tombs = spark.table(l.tombs)
-      val scanTombs = if (l.key == "vec_id") tombs else broadcast(tombs)
-      CodesHandle(codes.join(scanTombs, Seq("vec_id"), "left_anti"),
-        vecs.join(tombs, Seq("vec_id"), "left_anti"))
-    } else CodesHandle(codes, vecs)
+      val scanTombs = if (l.tombKeys.contains(l.key)) tombs
+        else broadcast(tombs)
+      val live = scan.join(scanTombs, l.tombKeys, "left_anti")
+      (live, floats.fold(live)(_.join(tombs, Seq("vec_id"), "left_anti")))
+    } else (scan, floats.getOrElse(scan))
+  }
+
+  private def flatHandle(spark: SparkSession, l: CodecLayout): CodesHandle = {
+    val (codes, vecs) = served(spark, l)
+    CodesHandle(codes, vecs)
   }
 
   /** The reuse probe of the `ensure*` verbs of both lifecycles: the
@@ -1372,8 +1259,8 @@ object AnnIndex {
     spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
     writeBucketed(c.encode(index.select("vec_id", "embedding")), l.scan,
       l.key, storageBuckets, Some(s"${l.base}/${l.sub}"))
-    spark.sql(s"DROP TABLE IF EXISTS ${l.vecs}")
-    writeBucketed(index.select("vec_id", "embedding"), l.vecs, "vec_id",
+    spark.sql(s"DROP TABLE IF EXISTS ${l.floats}")
+    writeBucketed(index.select("vec_id", "embedding"), l.floats, "vec_id",
       storageBuckets, Some(s"${l.base}/vecs"))
     commitBuilt(l.base, flatPoint(c, storageBuckets) ++
       Seq("n_rows" -> n, "checksum" -> fp), c.strMeta(index, Map.empty),
@@ -1394,42 +1281,55 @@ object AnnIndex {
       sourceDir: String, index: DataFrame, storageBuckets: Int,
       snapshotId: Option[String]): CodesHandle = {
     val l = flatLayout(c, spark, sourceDir)
-    val base = l.base
-    val point = flatPoint(c, storageBuckets)
-    if (snapshotId.exists(id =>
-        layoutFresh(spark, l, point, storageBuckets, Left(id))))
-      return flatHandle(spark, l)
-    // an unreadable layout under a fresh snapshot id falls through to
-    // the fingerprint path, which rebuilds
-    val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
-    if (!layoutFresh(spark, l, point, storageBuckets, Right((n, fp))))
-      buildFlat(c, spark, l, index, storageBuckets, n, fp, snapshotId)
-    else if (snapshotId.isDefined)
-      // content unchanged under a new snapshot name: record the id so
-      // the NEXT ensure at this snapshot skips the scan entirely
-      commitBuilt(base, point ++ Seq("n_rows" -> n, "checksum" -> fp),
-        (readMetaStrs(base) - "snapshot_id").toSeq, snapshotId)
+    ensureLayout(spark, l, flatPoint(c, storageBuckets), storageBuckets,
+      index, snapshotId)(
+      buildFlat(c, spark, l, index, storageBuckets, _, _, snapshotId))
     flatHandle(spark, l)
   }
 
-  /** Build-or-reuse for a base + upserted-tail layout: when the stored
-    * meta already equals base ⊕ tail the layout is reused (or attached)
-    * without touching data; otherwise the base is built and the tail
-    * upserted — so repeated runs over immutable fixtures pay DDL, not
-    * rebuild + re-append (which would also double the tail).
+  /** The build-or-reuse of both lifecycles at `point`: reused when
+    * [[layoutFresh]] by the caller's snapshot id, else by the content
+    * fingerprint — an unreadable layout under a fresh snapshot id
+    * falls through to the fingerprint path, which rebuilds — and
+    * otherwise laid out by the lifecycle's `build` at the fingerprint.
     */
-  private def ensureFlatUpserted(c: FlatCodec, spark: SparkSession,
-      sourceDir: String, baseRows: DataFrame, tailRows: DataFrame,
-      storageBuckets: Int): CodesHandle = {
-    val l = flatLayout(c, spark, sourceDir)
+  private def ensureLayout(spark: SparkSession, l: CodecLayout,
+      point: Seq[(String, Long)], storageBuckets: Int, index: DataFrame,
+      snapshotId: Option[String])(build: (Long, Long) => Unit): Unit =
+    if (!snapshotId.exists(id =>
+        layoutFresh(spark, l, point, storageBuckets, Left(id)))) {
+      val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
+      val meta = readMeta(l.base)
+      if (!layoutFresh(spark, l, point, storageBuckets, Right((n, fp))))
+        build(n, fp)
+      else if (snapshotId.isDefined)
+        // content unchanged under a new snapshot name: record the id so
+        // the NEXT ensure at this snapshot skips the scan entirely
+        commitBuilt(l.base, point ++ Seq("n_rows" -> n, "checksum" -> fp) ++
+          meta.get("n_base").map("n_base" -> _),
+          (readMetaStrs(l.base) - "snapshot_id").toSeq, snapshotId)
+    }
+
+  /** Build-or-reuse for a base + upserted-tail layout of either
+    * lifecycle: when the stored meta already equals base ⊕ tail the
+    * layout is reused (or attached) without touching data; otherwise
+    * the lifecycle's `build` step lays out the base at its fingerprint
+    * and its `upsert` step appends the tail, handed the tail's
+    * fingerprint so it is not taken twice — repeated runs over
+    * immutable fixtures pay DDL, not rebuild + re-append (which would
+    * also double the tail).
+    */
+  private def ensureUpserted(spark: SparkSession, l: CodecLayout,
+      point: Seq[(String, Long)], storageBuckets: Int, baseRows: DataFrame,
+      tailRows: DataFrame)(build: (Long, Long) => Unit,
+      upsert: ((Long, Long)) => Unit): Unit = {
     val (nb, fb) = fingerprint(baseRows.select("vec_id", "embedding"))
     val (nt, ft) = fingerprint(tailRows.select("vec_id", "embedding"))
-    if (!layoutFresh(spark, l, flatPoint(c, storageBuckets), storageBuckets,
+    if (!layoutFresh(spark, l, point, storageBuckets,
         Right((nb + nt, fb ^ ft)))) {
-      buildFlat(c, spark, l, baseRows, storageBuckets, nb, fb, None)
-      upsertFlat(c, spark, sourceDir, tailRows, storageBuckets, None)
+      build(nb, fb)
+      upsert((nt, ft))
     }
-    flatHandle(spark, l)
   }
 
   /** Incremental add into an existing persisted flat index: the codec
@@ -1438,40 +1338,70 @@ object AnnIndex {
     * the checksum: O(new) per batch, upsert ≡ rebuild row-identically
     * by construction. Append-only contract (a tombstoned id is refused,
     * see [[refuseTombstoned]]) and `batchId` replay-skip as in
-    * [[upsertLsh]]; a stored snapshot id is dropped.
+    * [[upsertLsh]]; a stored snapshot id is dropped. `known`: the new
+    * rows' fingerprint when the caller already took it.
     */
   private def upsertFlat(c: FlatCodec, spark: SparkSession,
       sourceDir: String, newVecs: DataFrame, storageBuckets: Int,
-      batchId: Option[Long]): CodesHandle = {
+      batchId: Option[Long],
+      known: Option[(Long, Long)] = None): CodesHandle = {
     val l = flatLayout(c, spark, sourceDir)
-    val meta = readMeta(l.base)
     val point = flatPoint(c, storageBuckets)
-    require(atPoint(meta, point),
-      s"upsert${l.verb} needs an existing index at the same operating " +
-        s"point (${point.map { case (k, v) => s"$k=$v" }.mkString(" ")}); " +
-        s"found $meta")
-    // appending into a gutted layout would recreate the dir holding only
-    // this batch under a checksum that claims the full corpus
+    upsertLayout(spark, l, sourceDir, Some(point), _ => point, newVecs,
+      batchId, known, c.strMeta(newVecs, readMetaStrs(l.base))) { (_, _) =>
+      val rows = newVecs.select("vec_id", "embedding")
+      writeBucketed(c.encode(rows), l.scan, l.key, storageBuckets)
+      writeBucketed(rows, l.floats, "vec_id", storageBuckets)
+      Nil
+    }
+    flatHandle(spark, l)
+  }
+
+  /** The upsert verb of both lifecycles: the stored meta must be at
+    * `expected` (else merely built); an unreadable layout is refused —
+    * appending into a gutted one would recreate the dir holding only
+    * this batch under a checksum that claims the full corpus; a
+    * replayed `batchId` is skipped and tombstoned ids refused. Then
+    * `append` lays out the new rows given the stored meta and their
+    * count and returns the meta keys it adds, and the meta commits the
+    * stored meta's `point` with the checksum xor-composed (`known`: the
+    * new rows' fingerprint when the caller already took it) and the
+    * string meta `strs`.
+    */
+  private def upsertLayout(spark: SparkSession, l: CodecLayout,
+      sourceDir: String, expected: Option[Seq[(String, Long)]],
+      point: Map[String, Long] => Seq[(String, Long)], newVecs: DataFrame,
+      batchId: Option[Long], known: Option[(Long, Long)],
+      strs: => Seq[(String, String)])(
+      append: (Map[String, Long], Long) => Seq[(String, Long)]): Unit = {
+    val meta = readMeta(l.base)
+    expected match {
+      case Some(at) =>
+        require(atPoint(meta, at),
+          s"upsert${l.verb} needs an existing index at the same operating " +
+            s"point (${at.map { case (k, v) => s"$k=$v" }.mkString(" ")})" +
+            s"; found $meta")
+      case None =>
+        require(l.built(meta),
+          s"upsert${l.verb} needs an existing persisted ${l.label} index " +
+            s"for '$sourceDir' — run ensure${l.verb} first")
+    }
     l.requireReadable(" before upserting")
-    if (!l.registered) l.attach(storageBuckets)
+    if (!l.registered) l.attach(l.buckets(meta))
     if (batchId.exists(id => meta.get("last_batch_id").exists(id <= _)))
-      return flatHandle(spark, l)
-    refuseTombstoned(spark, l.base, l.tombs, l.verb, meta, newVecs,
-      storageBuckets)
-    val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
-    writeBucketed(c.encode(newVecs.select("vec_id", "embedding")), l.scan,
-      l.key, storageBuckets)
-    writeBucketed(newVecs.select("vec_id", "embedding"), l.vecs, "vec_id",
-      storageBuckets)
+      return
+    refuseTombstoned(spark, l, meta, newVecs)
+    val (nNew, fpNew) = known.getOrElse(
+      fingerprint(newVecs.select("vec_id", "embedding")))
+    val added = append(meta, nNew)
     writeMetaFull(l.base,
-      point ++ Seq("n_rows" -> (meta("n_rows") + nNew),
-        "checksum" -> (meta("checksum") ^ fpNew)) ++
+      point(meta) ++ Seq("n_rows" -> (meta("n_rows") + nNew),
+        "checksum" -> (meta("checksum") ^ fpNew)) ++ added ++
         batchId.orElse(meta.get("last_batch_id"))
           .map("last_batch_id" -> _).toSeq ++
         meta.get("tomb_rows").map("tomb_rows" -> _).toSeq ++
         meta.get("last_del_batch_id").map("last_del_batch_id" -> _).toSeq,
-      c.strMeta(newVecs, readMetaStrs(l.base)))
-    flatHandle(spark, l)
+      strs)
   }
 
   /** Delete by id from the persisted flat index — the vector-store
@@ -1485,8 +1415,9 @@ object AnnIndex {
     * fingerprint); until then re-inserting a deleted id fails loudly in
     * [[upsertFlat]].
     *
-    * Deleting ids absent from the index (or already deleted) is a
-    * semantic no-op — the anti-join ignores them. A delete moves the
+    * Ids absent from the index (or already deleted) are not
+    * tombstoned and leave `tomb_rows` unchanged ([[deleteLayout]]);
+    * an absent id stays insertable. A delete moves the
     * layout past any named snapshot (stored `snapshot_id` is dropped;
     * the codec's other meta is carried) and past the source content
     * (`ensure*` over the original source rebuilds — "serve exactly this
@@ -1499,19 +1430,8 @@ object AnnIndex {
       sourceDir: String, ids: DataFrame,
       batchId: Option[Long]): CodesHandle = {
     val l = flatLayout(c, spark, sourceDir)
-    val meta = readMeta(l.base)
-    require(l.built(meta),
-      s"delete${l.verb} needs an existing persisted ${l.label} index for " +
-        s"'$sourceDir' — run ensure${l.verb} first")
-    val storageBuckets = meta("buckets").toInt
-    l.requireReadable(" before deleting")
-    if (!l.registered) l.attach(storageBuckets)
-    if (batchId.exists(id => meta.get("last_del_batch_id").exists(id <= _)))
-      return flatHandle(spark, l)
-    val batch = ids.select("vec_id").distinct()
-    val nDel = batch.count()
-    writeTombs(spark, l.base, l.tombs, batch, storageBuckets)
-    commitDelete(l.base, meta, nDel, batchId)
+    deleteLayout(spark, l, sourceDir, ids, batchId)(
+      flatHandle(spark, l).vecs.filter(_))
     flatHandle(spark, l)
   }
 
@@ -1567,23 +1487,30 @@ object AnnIndex {
   private def compactFlat(c: FlatCodec, spark: SparkSession,
       sourceDir: String): CodesHandle = {
     val l = flatLayout(c, spark, sourceDir)
-    val base = l.base
+    compactLayout(spark, l)((scan, sb) =>
+      compactBucketed(spark, l.base, l.scan, l.sub, l.key, sb, Some(scan)))
+    flatHandle(spark, l)
+  }
+
+  /** The compaction of both lifecycles: `rewriteScan` rewrites the scan
+    * table from its served rows at the stored bucketing, then `vecs`
+    * is rewritten likewise — so any tombstones fold — and swapped in;
+    * a fold drops the tombstones and commits ([[commitFold]]).
+    */
+  private def compactLayout(spark: SparkSession, l: CodecLayout)(
+      rewriteScan: (DataFrame, Int) => Unit): Unit = {
     l.open() // validates meta + attaches + refreshes
-    val meta = readMeta(base)
-    val sb = meta("buckets").toInt
+    val meta = readMeta(l.base)
+    val sb = l.buckets(meta)
     val folding = meta.get("tomb_rows").exists(_ > 0L) &&
       spark.catalog.tableExists(l.tombs)
-    val tombFilter = (df: DataFrame) =>
-      if (folding) df.join(spark.table(l.tombs), Seq("vec_id"), "left_anti")
-      else df
-    compactBucketed(spark, base, l.scan, l.sub, l.key, sb,
-      Some(tombFilter(spark.table(l.scan))))
-    compactBucketed(spark, base, l.vecs, "vecs", "vec_id", sb,
-      Some(tombFilter(spark.table(l.vecs))))
-    if (folding) dropTombs(spark, base, l.tombs)
+    val (scan, floats) = served(spark, l)
+    rewriteScan(scan, sb)
+    l.vecs.foreach(compactBucketed(spark, l.base, _, "vecs", "vec_id", sb,
+      Some(floats)))
+    if (folding) dropTombs(spark, l.base, l.tombs)
     l.attach(sb)
-    if (folding) commitFold(base, meta, spark.table(l.vecs))
-    flatHandle(spark, l)
+    if (folding) commitFold(l.base, meta, spark.table(l.floats))
   }
 
   // ---------------------------------------------------------------- SQ8
@@ -2281,192 +2208,148 @@ object AnnIndex {
   private def ivfLayout(c: IvfCodec, spark: SparkSession,
       sourceDir: String) =
     new CodecLayout(spark, c, sourceDir, ivf = true, "lists", "centroid_id",
-      c.modelDirs)
+      c.modelDirs, c.vecsInLists)
 
   /** An IVF layout's operating point as meta entries: the partition's
-    * lists and iters, the codec's own keys, the storage bucketing.
+    * lists and iters, the codec's own keys, the storage bucketing of
+    * its `vecs` (none when the lists keep the vectors).
     */
   private def ivfPoint(c: IvfCodec, lists: Int, iters: Int,
       storageBuckets: Int): Seq[(String, Long)] =
-    Seq("lists" -> lists.toLong, "iters" -> iters.toLong) ++ c.point :+
-      ("buckets" -> storageBuckets.toLong)
+    Seq("lists" -> lists.toLong, "iters" -> iters.toLong) ++ c.point ++
+      (if (c.vecsInLists) Nil else Seq("buckets" -> storageBuckets.toLong))
 
   private def atPoint(meta: Map[String, Long],
       point: Seq[(String, Long)]): Boolean =
     point.forall { case (k, v) => meta.get(k).contains(v) }
 
-  /** The served IVF view (the [[flatHandle]] discipline): when a
-    * tombstone table exists, the lists side anti-joins on (centroid_id,
-    * vec_id) — tombstones are co-keyed by centroid at delete time, so
-    * a probed-list scan prunes its tombstones with it and never pays a
-    * full tombstone pass per probe — and the vecs side anti-joins on
-    * the shared vec_id bucketing (shuffle-free on the index side).
+  /** The served IVF view ([[served]]): with tombstones co-keyed by
+    * centroid at delete time, a probed-list scan prunes its tombstones
+    * with it and never pays a full tombstone pass per probe.
     */
   private def ivfCodesHandle(spark: SparkSession,
       l: CodecLayout): IvfCodesHandle = {
-    val cents = ParquetIO.read(spark, l.centroids)
-    val lists = spark.table(l.scan)
-    val vecs = spark.table(l.vecs)
-    if (spark.catalog.tableExists(l.tombs)) {
-      val tombs = spark.table(l.tombs)
-      IvfCodesHandle(cents,
-        lists.join(tombs, Seq("centroid_id", "vec_id"), "left_anti"),
-        vecs.join(tombs.select("vec_id"), Seq("vec_id"), "left_anti"))
-    } else IvfCodesHandle(cents, lists, vecs)
+    val (lists, vecs) = served(spark, l)
+    IvfCodesHandle(ParquetIO.read(spark, l.centroids), lists, vecs)
   }
 
-  /** Build (or reuse) the persisted composed layout: k-means centroids
-    * train on the float vectors (same deterministic hash-draw + Lloyd
-    * recipe and operating point as [[ensureIvf]]), then any codec model
-    * (the PQ codebook) persists next to them; the inverted lists land
-    * ENCODED with the just-persisted model (one codec projection over
-    * the assignment — the float embedding never reaches the list
-    * layout); the float table lands bucketed by vec_id for the
-    * shuffle-free re-rank join.
-    * Freshness follows the `ensureLsh` discipline (O(1) snapshot-id
-    * trust, content fingerprint fallback, shared `servable` recovery
-    * probe, meta committed after the data); a tombstoned layout no
-    * longer equals assign(source), so it rebuilds, clearing the
-    * deletions.
+  /** Full IVF (re)build: clear the tombstones (a rebuild serves exactly
+    * its source), train the centroids then any codec model, land the
+    * lists assigned and encoded with the just-persisted model and the
+    * float table, then commit the meta.
+    */
+  private def buildIvf(c: IvfCodec, spark: SparkSession, l: CodecLayout,
+      index: DataFrame, lists: Int, iters: Int, storageBuckets: Int,
+      n: Long, fp: Long, snapshotId: Option[String]): Unit = {
+    val rows = index.select("vec_id", "embedding")
+    dropTombs(spark, l.base, l.tombs)
+    SimilaritySearch.kMeansCentroids(rows, lists, iters)
+      .write.mode(SaveMode.Overwrite).parquet(l.centroids)
+    c.train(rows, l.base)
+    spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
+    writeLists(c.assign(rows, ParquetIO.read(spark, l.centroids), l.base),
+      l.scan, Some(s"${l.base}/lists"))
+    l.vecs.foreach { v =>
+      spark.sql(s"DROP TABLE IF EXISTS $v")
+      writeBucketed(rows, v, "vec_id", storageBuckets, Some(s"${l.base}/vecs"))
+    }
+    commitBuilt(l.base, ivfPoint(c, lists, iters, storageBuckets) ++
+      Seq("n_rows" -> n, "checksum" -> fp, "n_base" -> n), Nil, snapshotId)
+  }
+
+  /** Build (or reuse) the persisted IVF layout: k-means centroids train
+    * on the float vectors (the deterministic hash-draw + Lloyd recipe of
+    * [[ensureIvf]]), then any codec model (the PQ codebook) persists
+    * next to them; the inverted lists land ENCODED with the
+    * just-persisted model (one codec projection over the assignment);
+    * the float table lands bucketed by vec_id for the shuffle-free
+    * re-rank join. Freshness follows the `ensureLsh` discipline (O(1)
+    * snapshot-id trust, content fingerprint fallback, shared `servable`
+    * recovery probe, meta committed after the data); a tombstoned
+    * layout no longer equals assign(source), so it rebuilds, clearing
+    * the deletions.
     */
   private def ensureIvfCodes(c: IvfCodec, spark: SparkSession,
       sourceDir: String, index: DataFrame, lists: Int, iters: Int,
       storageBuckets: Int, snapshotId: Option[String]): IvfCodesHandle = {
     val l = ivfLayout(c, spark, sourceDir)
-    val base = l.base
-    val point = ivfPoint(c, lists, iters, storageBuckets)
-    if (snapshotId.exists(id =>
-        layoutFresh(spark, l, point, storageBuckets, Left(id))))
-      return ivfCodesHandle(spark, l)
-    val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
-    val meta = readMeta(base)
-    val metaFresh = layoutFresh(spark, l, point, storageBuckets,
-      Right((n, fp)))
-    if (!metaFresh) {
-      dropTombs(spark, base, l.tombs)
-      val cents = SimilaritySearch.kMeansCentroids(
-        index.select("vec_id", "embedding"), lists, iters)
-      cents.write.mode(SaveMode.Overwrite).parquet(l.centroids)
-      c.train(index.select("vec_id", "embedding"), base)
-      val encoded = c.assign(index.select("vec_id", "embedding"),
-        ParquetIO.read(spark, l.centroids), base)
-      spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
-      writeLists(encoded, l.scan, Some(s"$base/lists"))
-      spark.sql(s"DROP TABLE IF EXISTS ${l.vecs}")
-      writeBucketed(index.select("vec_id", "embedding"), l.vecs, "vec_id",
-        storageBuckets, Some(s"$base/vecs"))
-    }
-    if (!metaFresh || snapshotId.isDefined)
-      commitBuilt(base, point ++ Seq("n_rows" -> n, "checksum" -> fp,
-        "n_base" -> (if (metaFresh) meta.getOrElse("n_base", n) else n)),
-        Nil, snapshotId)
+    ensureLayout(spark, l, ivfPoint(c, lists, iters, storageBuckets),
+      storageBuckets, index, snapshotId)(
+      buildIvf(c, spark, l, index, lists, iters, storageBuckets, _, _,
+        snapshotId))
     ivfCodesHandle(spark, l)
   }
 
-  /** Incremental add into an existing persisted composed index: new
-    * vectors are assigned to the STORED centroids and appended encoded
-    * with the STORED codec model into the partitioned lists (plus float
-    * rows into `vecs`) — O(new) per batch. Inherits BOTH parents'
-    * contracts: [[upsertIvf]]'s drift gate ([[driftGate]] — the
-    * centroids and any codec model are distribution-bound) and
-    * [[upsertFlat]]'s tombstone refusal and batchId replay-skip; the
-    * meta checksum xor-composes. `at` (lists, iters, buckets) is the
-    * operating point the caller expects; without one the stored point
-    * is trusted. Any stored snapshot id is dropped (the layout moves
-    * ahead of the snapshot that id named).
+  /** Incremental add into an existing persisted IVF index: new vectors
+    * are assigned to the STORED centroids and appended encoded with the
+    * STORED codec model into the partitioned lists (plus float rows into
+    * `vecs`) — O(new) per batch. Inherits BOTH parents' contracts:
+    * [[upsertIvf]]'s drift gate ([[driftGate]] — the centroids and any
+    * codec model are distribution-bound) and [[upsertFlat]]'s tombstone
+    * refusal and batchId replay-skip; the meta checksum xor-composes.
+    * `at` (lists, iters, buckets) is the operating point the caller
+    * expects; without one the stored point is trusted. `known`: the new
+    * rows' fingerprint when the caller already took it. Any stored
+    * snapshot id is dropped (the layout moves ahead of the snapshot
+    * that id named).
     */
   private def upsertIvfCodes(c: IvfCodec, spark: SparkSession,
       sourceDir: String, newVecs: DataFrame, at: Option[(Int, Int, Int)],
-      batchId: Option[Long]): IvfCodesHandle = {
+      batchId: Option[Long],
+      known: Option[(Long, Long)] = None): IvfCodesHandle = {
     val l = ivfLayout(c, spark, sourceDir)
-    val meta = readMeta(l.base)
-    at match {
-      case Some((lists, iters, sb)) =>
-        require(atPoint(meta, ivfPoint(c, lists, iters, sb)),
-          s"upsert${l.verb} needs an existing index at the same operating " +
-            s"point (lists=$lists iters=$iters buckets=$sb); found $meta")
-      case None =>
-        require(l.built(meta),
-          s"upsert${l.verb} needs an existing persisted ${l.label} index " +
-            s"for '$sourceDir' — run ensure${l.verb} first")
+    upsertLayout(spark, l, sourceDir,
+      at.map { case (lists, iters, sb) => ivfPoint(c, lists, iters, sb) },
+      m => ivfPoint(c, m("lists").toInt, m("iters").toInt, l.buckets(m)),
+      newVecs, batchId, known, Nil) { (meta, n) =>
+      val nBase = driftGate(spark, l.verb, meta, n)
+      val rows = newVecs.select("vec_id", "embedding")
+      writeLists(c.assign(rows, ParquetIO.read(spark, l.centroids), l.base),
+        l.scan)
+      l.vecs.foreach(writeBucketed(rows, _, "vec_id", l.buckets(meta)))
+      Seq("n_base" -> nBase)
     }
-    val storageBuckets = meta("buckets").toInt
-    l.requireReadable(" before upserting")
-    if (!l.registered) l.attach(storageBuckets)
-    if (batchId.exists(id => meta.get("last_batch_id").exists(id <= _)))
-      return ivfCodesHandle(spark, l)
-    refuseTombstoned(spark, l.base, l.tombs, l.verb, meta, newVecs,
-      storageBuckets)
-    val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
-    val nBase = driftGate(spark, l.verb, meta, nNew)
-    writeLists(c.assign(newVecs.select("vec_id", "embedding"),
-      ParquetIO.read(spark, l.centroids), l.base), l.scan)
-    writeBucketed(newVecs.select("vec_id", "embedding"), l.vecs, "vec_id",
-      storageBuckets)
-    writeMetaFull(l.base,
-      ivfPoint(c, meta("lists").toInt, meta("iters").toInt,
-        storageBuckets) ++
-        Seq("n_rows" -> (meta("n_rows") + nNew),
-          "checksum" -> (meta("checksum") ^ fpNew),
-          "n_base" -> nBase) ++
-        batchId.orElse(meta.get("last_batch_id"))
-          .map("last_batch_id" -> _).toSeq ++
-        meta.get("tomb_rows").map("tomb_rows" -> _).toSeq ++
-        meta.get("last_del_batch_id").map("last_del_batch_id" -> _).toSeq,
-      Nil)
     ivfCodesHandle(spark, l)
   }
 
-  /** Delete by id from the persisted composed index — [[deleteFlat]]'s
-    * twin, the verb the 100 TB serving layout needs (a production user
-    * must remove vectors without an ensure-rebuild). Merge-on-read
-    * tombstones CO-KEYED BY CENTROID: the batch of ids joins the
-    * bucketed float `vecs` table (O(batch), shuffle-free on the index
-    * side) to fetch embeddings, re-derives each id's nearest stored
-    * centroid — the SAME deterministic assignment that placed its list
-    * row, so (centroid_id, vec_id) names exactly the stored row — and
-    * appends to a tombstone table. The served handle anti-joins the
-    * probed lists on (centroid_id, vec_id), so a probe prunes its
-    * tombstones together with its lists, and the vecs side on the
-    * shared vec_id bucketing.
+  /** Delete by id from the persisted IVF index — [[deleteFlat]]'s twin,
+    * the verb the 100 TB serving layout needs (a production user must
+    * remove vectors without an ensure-rebuild). Merge-on-read
+    * tombstones CO-KEYED BY CENTROID ([[deleteLayout]]): the batch's
+    * live float rows are read from the bucketed `vecs` (an id filter
+    * the bucketing prunes) and each id's nearest stored centroid is
+    * re-derived — the SAME deterministic assignment that placed its
+    * list row, so (centroid_id, vec_id) names exactly the stored row.
+    * The served handle anti-joins the probed lists on those keys, so a
+    * probe prunes its tombstones together with its lists, and the vecs
+    * side on the shared vec_id bucketing. A layout whose lists keep
+    * the vectors reads them from the lists and keeps vec_id-only
+    * tombstones, served through a broadcast ([[served]]).
     *
-    * Same contracts as [[deleteFlat]]: absent ids are a semantic no-op;
-    * [[compactIvfCodes]] folds; re-inserting a deleted id fails loudly
-    * in [[upsertIvfCodes]] until then; the stored `snapshot_id` drops
-    * and `ensure*` over the original source rebuilds; `batchId`
-    * replay-skips on its own counter (`last_del_batch_id`).
+    * Same contracts as [[deleteFlat]]: absent and already-deleted ids
+    * leave `tomb_rows` unchanged; [[compactIvfCodes]] folds;
+    * re-inserting a deleted id fails loudly in [[upsertIvfCodes]]
+    * until then; the stored `snapshot_id` drops and `ensure*` over the
+    * original source rebuilds; `batchId` replay-skips on its own
+    * counter (`last_del_batch_id`).
     */
   private def deleteIvfCodes(c: IvfCodec, spark: SparkSession,
       sourceDir: String, ids: DataFrame,
       batchId: Option[Long]): IvfCodesHandle = {
     val l = ivfLayout(c, spark, sourceDir)
-    val meta = readMeta(l.base)
-    require(l.built(meta),
-      s"delete${l.verb} needs an existing persisted ${l.label} index for " +
-        s"'$sourceDir' — run ensure${l.verb} first")
-    val storageBuckets = meta("buckets").toInt
-    l.requireReadable(" before deleting")
-    if (!l.registered) l.attach(storageBuckets)
-    if (batchId.exists(id => meta.get("last_del_batch_id").exists(id <= _)))
-      return ivfCodesHandle(spark, l)
-    // co-key each deleted id by its stored centroid: embeddings come
-    // from the bucketed vecs table (batch-sized semi-ish join), the
-    // assignment is the same NearestCentroidCosF kernel that placed the
-    // list row (same cosine arithmetic, lowest-id tie rule) — identical
-    // input, identical tie-break, identical centroid_id
-    val batch = SimilaritySearch.assignWithVecs(
-        spark.table(l.vecs)
-          .join(ids.select("vec_id").distinct(), Seq("vec_id"),
-            "left_semi"),
-        ParquetIO.read(spark, l.centroids))
-      .select("centroid_id", "vec_id")
-    val nDel = batch.count()
-    writeTombs(spark, l.base, l.tombs, batch, storageBuckets)
-    commitDelete(l.base, meta, nDel, batchId)
+    deleteLayout(spark, l, sourceDir, ids, batchId) { p =>
+      val h = ivfCodesHandle(spark, l)
+      // tombstones keyed by list: the kernel that placed each live row
+      // (same cosine arithmetic, lowest-id tie rule) re-derives its
+      // stored centroid_id from the same vector
+      if (l.tombKeys.contains(l.key))
+        SimilaritySearch.assignWithVecs(h.vecs.filter(p), h.centroids)
+      else h.vecs.filter(p)
+    }
     ivfCodesHandle(spark, l)
   }
 
-  /** True iff a persisted composed layout exists for `sourceDir` AT the
+  /** True iff a persisted IVF layout exists for `sourceDir` AT the
     * given operating point (meta check only — no readability or
     * freshness probe; the [[existsFlat]] contract). Lets callers branch
     * build-vs-open explicitly — the delete-serving lifecycle needs
@@ -2487,39 +2370,25 @@ object AnnIndex {
     ivfCodesHandle(spark, l)
   }
 
-  /** Compact the persisted composed layout: streamed upserts append one
+  /** Compact the persisted IVF layout: streamed upserts append one
     * file set per micro-batch into every probed PARTITION of the lists
     * table (and into the bucketed vecs table) — after thousands of
     * triggers the per-partition small files erode exactly the pruned
-    * scan the layout exists to serve. Rewrites the encoded lists at the
-    * same partitioning and the vecs at the same bucketing; meta
-    * untouched without tombstones (the [[compactLsh]]/[[compactFlat]]
-    * crash-safety recipe — side dir, rename swap, stale sweep;
-    * unreadable mid-window layouts read as STALE by `ensure*` and
-    * rebuild). Tombstone FOLD as [[compactFlat]]: every crash window
-    * either keeps serving correctly (tombs still present) or triggers a
-    * rebuild (stale tomb_rows meta over folded data). Not safe
-    * concurrent with a writer.
+    * scan the layout exists to serve. Rewrites the lists at the same
+    * partitioning and the vecs at the same bucketing, as served — so
+    * any tombstones fold; meta untouched without tombstones (the
+    * [[compactLsh]]/[[compactFlat]] crash-safety recipe — side dir,
+    * rename swap, stale sweep; unreadable mid-window layouts read as
+    * STALE by `ensure*` and rebuild). Tombstone FOLD as [[compactFlat]]:
+    * every crash window either keeps serving correctly (tombs still
+    * present) or triggers a rebuild (stale tomb_rows meta over folded
+    * data). Not safe concurrent with a writer.
     */
   private def compactIvfCodes(c: IvfCodec, spark: SparkSession,
       sourceDir: String): IvfCodesHandle = {
     val l = ivfLayout(c, spark, sourceDir)
-    val base = l.base
-    l.open() // validates meta + attaches + refreshes
-    val meta = readMeta(base)
-    val sb = meta("buckets").toInt
-    val folding = meta.get("tomb_rows").exists(_ > 0L) &&
-      spark.catalog.tableExists(l.tombs)
-    val tombs = if (folding) Some(spark.table(l.tombs)) else None
-    compactPartitioned(spark, base, l.scan, "lists",
-      tombs.map(t => spark.table(l.scan)
-        .join(t, Seq("centroid_id", "vec_id"), "left_anti")))
-    compactBucketed(spark, base, l.vecs, "vecs", "vec_id", sb,
-      tombs.map(t => spark.table(l.vecs)
-        .join(t.select("vec_id"), Seq("vec_id"), "left_anti")))
-    if (folding) dropTombs(spark, base, l.tombs)
-    l.attach(sb)
-    if (folding) commitFold(base, meta, spark.table(l.vecs))
+    compactLayout(spark, l)((lists, _) =>
+      compactPartitioned(spark, l.base, l.scan, "lists", Some(lists)))
     ivfCodesHandle(spark, l)
   }
 
@@ -2608,12 +2477,13 @@ object AnnIndex {
   }
 
   /** Append a tombstone batch to `table` at `$base/tombs` (creating the
-    * layout on first delete) — shared by the vec_id-bucketed layouts'
-    * delete verbs. Rows land bucketed by vec_id so the float-table
-    * anti-join stays shuffle-free on the index side.
+    * layout on first delete) — shared by the vector layouts' delete
+    * verbs. Rows land `clusteredBy` (vec_id, buckets) when given, so the
+    * float-table anti-join stays shuffle-free on the index side.
     */
-  private[sources] def writeTombs(spark: SparkSession, base: String, table: String,
-      batch: DataFrame, storageBuckets: Int): Unit = {
+  private[sources] def writeTombs(spark: SparkSession, base: String,
+      table: String, batch: DataFrame,
+      clusteredBy: Option[(String, Int)]): Unit = {
     // meta is the tombstone commit point: sweep any orphan dir a
     // crashed delete left (appended but never committed) before this
     // batch commits, so tomb_rows counts exactly what is on disk
@@ -2621,47 +2491,18 @@ object AnnIndex {
     // tombs COMMITTED by another session must attach BEFORE the
     // exists-check: the create-new branch would otherwise overwrite
     // (lose) their rows
-    registerCommittedTombs(spark, base, table, storageBuckets)
-    writeBucketed(batch, table, "vec_id", storageBuckets,
-      if (spark.catalog.tableExists(table)) None else Some(s"$base/tombs"))
-  }
-
-  /** [[compactIvfSq8]]'s float-IVF twin: rewrites the partitioned
-    * inverted lists of an [[ensureIvf]] layout into few files per
-    * partition; centroids (tiny plain parquet) untouched, meta
-    * untouched.
-    */
-  def compactIvf(spark: SparkSession, sourceDir: String): IvfHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = ivfBase(spark, tag)
-    val listsTable = s"graft_ivf_lists_$tag"
-    val meta = readMeta(base)
-    require(meta.contains("lists"),
-      s"no persisted IVF index for '$sourceDir' ($base)")
-    require(parquetReadable(spark, s"$base/lists"),
-      s"persisted IVF layout for '$sourceDir' is unreadable — run " +
-        "ensureIvf to rebuild")
-    if (!spark.catalog.tableExists(listsTable))
-      registerExternal(spark, listsTable, s"$base/lists",
-        partitionedBy = Some("centroid_id"))
-    else spark.catalog.refreshTable(listsTable)
-    // tombstone FOLD (the compactSq8 discipline)
-    val folding = meta.get("tomb_rows").exists(_ > 0L) &&
-      ivfTombsRegistered(spark, tag)
-    compactPartitioned(spark, base, listsTable, "lists",
-      if (folding)
-        Some(spark.table(listsTable).join(
-          broadcast(spark.table(s"graft_ivf_tombs_$tag")), Seq("vec_id"),
-          "left_anti"))
-      else None)
-    if (folding) dropTombs(spark, base, s"graft_ivf_tombs_$tag")
-    spark.sql(s"DROP TABLE IF EXISTS $listsTable")
-    registerExternal(spark, listsTable, s"$base/lists",
-      partitionedBy = Some("centroid_id"))
-    // the folded lists carry (vec_id, embedding): the rows ensure
-    // fingerprints
-    if (folding) commitFold(base, meta, spark.table(listsTable))
-    ivfServedHandle(spark, tag)
+    registerCommittedTombs(spark, base, table, clusteredBy)
+    val path =
+      if (spark.catalog.tableExists(table)) None else Some(s"$base/tombs")
+    clusteredBy match {
+      case Some((key, buckets)) =>
+        writeBucketed(batch, table, key, buckets, path)
+      case None =>
+        val w = batch.write.format("parquet")
+        path.fold(w.mode(SaveMode.Append))(p =>
+            w.mode(SaveMode.Overwrite).option("path", p))
+          .saveAsTable(table)
+    }
   }
 
   /** One inverted-list table's compaction step (side-dir + swap):

@@ -397,7 +397,7 @@ object GraphIndex {
     if (nDel == 0) return meta.getOrElse("tomb_rows", 0L)
     val storageBuckets = meta.getOrElse("buckets", 8L).toInt
     AnnIndex.writeTombs(spark, base, s"graft_graph_tombs_$tag", del,
-      storageBuckets)
+      Some(("vec_id", storageBuckets)))
     val total = meta.getOrElse("tomb_rows", 0L) + nDel
     // snapshot_id DROPPED (the deleteLsh rule): the layout moved past
     // the snapshot, and a later compact-fold makes it source-minus-

@@ -38,6 +38,8 @@ class AnnIndexSpec extends AnyFunSuite {
   private case class FlatCodec(label: String, stem: String,
       rows: () => DataFrame, qs: () => DataFrame,
       ensure: (String, DataFrame, Option[String]) => AnnIndex.CodesHandle,
+      upsert: (String, DataFrame) => AnnIndex.CodesHandle,
+      delete: (String, DataFrame) => AnnIndex.CodesHandle,
       open: String => AnnIndex.CodesHandle,
       query: (DataFrame, AnnIndex.CodesHandle) => DataFrame)
 
@@ -45,11 +47,15 @@ class AnnIndexSpec extends AnyFunSuite {
     FlatCodec("SQ8", "sq8", () => emb, () => queries,
       (src, rows, snap) => AnnIndex.ensureSq8(spark, src, rows,
         snapshotId = snap),
+      (src, rows) => AnnIndex.upsertSq8(spark, src, rows),
+      (src, ids) => AnnIndex.deleteSq8(spark, src, ids),
       src => AnnIndex.openSq8(spark, src),
       (q, h) => AnnIndex.querySq8(q, h, k = 4, m = 32)),
     FlatCodec("BQ", "bq", () => tiled1536, () => tQueries,
       (src, rows, snap) => AnnIndex.ensureBq(spark, src, rows,
         snapshotId = snap),
+      (src, rows) => AnnIndex.upsertBq(spark, src, rows),
+      (src, ids) => AnnIndex.deleteBq(spark, src, ids),
       src => AnnIndex.openBq(spark, src),
       (q, h) => AnnIndex.queryBq(q, h, k = 4, m = 256)))
 
@@ -61,6 +67,7 @@ class AnnIndexSpec extends AnyFunSuite {
       encoding: String, rows: () => DataFrame, qs: () => DataFrame,
       ensure: (String, DataFrame) => AnnIndex.IvfCodesHandle,
       upsert: (String, DataFrame, Option[Long]) => AnnIndex.IvfCodesHandle,
+      delete: (String, DataFrame) => AnnIndex.IvfCodesHandle,
       open: String => AnnIndex.IvfCodesHandle,
       compact: String => AnnIndex.IvfCodesHandle,
       query: (DataFrame, AnnIndex.IvfCodesHandle) => DataFrame,
@@ -77,6 +84,7 @@ class AnnIndexSpec extends AnyFunSuite {
         iters = 3),
       (src, rows, b) => AnnIndex.upsertIvfSq8(spark, src, rows, lists = 8,
         iters = 3, batchId = b),
+      (src, ids) => AnnIndex.deleteIvfSq8(spark, src, ids),
       src => AnnIndex.openIvfSq8(spark, src),
       src => AnnIndex.compactIvfSq8(spark, src),
       (q, h) => AnnIndex.queryIvfSq8(q, h, k = 4, nProbe = 3, m = 16),
@@ -93,6 +101,7 @@ class AnnIndexSpec extends AnyFunSuite {
         iters = 3),
       (src, rows, b) => AnnIndex.upsertIvfBq(spark, src, rows, lists = 8,
         iters = 3, batchId = b),
+      (src, ids) => AnnIndex.deleteIvfBq(spark, src, ids),
       src => AnnIndex.openIvfBq(spark, src),
       src => AnnIndex.compactIvfBq(spark, src),
       (q, h) => AnnIndex.queryIvfBq(q, h, k = 4, nProbe = 3, m = 256),
@@ -508,7 +517,17 @@ class AnnIndexSpec extends AnyFunSuite {
       (src: String) => AnnIndex.openIvfPq(spark, src),
       (src: String) => AnnIndex.upsertIvfPq(spark, src,
         emb.filter(col("vec_id") === 0L)
-          .select((col("vec_id") + 990000L).as("vec_id"), col("embedding")))))
+          .select((col("vec_id") + 990000L).as("vec_id"),
+            col("embedding"))))) :+
+    (("IVF", "ivf", Seq("lists"),
+      (src: String) => hits(AnnIndex.queryIvf(queries,
+        AnnIndex.ensureIvf(spark, src, emb, lists = 8, iters = 2),
+        k = 4, nProbe = 3)),
+      (src: String) => AnnIndex.openIvf(spark, src),
+      (src: String) => AnnIndex.upsertIvf(spark, src,
+        emb.filter(col("vec_id") === 0L)
+          .select((col("vec_id") + 990000L).as("vec_id"), col("embedding")),
+        lists = 8, iters = 2)))
   ).foreach { case (label, stem, lost, serve, open, upsert) =>
     test(s"a crashed $label layout (${lost.mkString(" + ")} missing under " +
         "a matching meta) fails open and upsert loudly and is recovered " +
@@ -525,6 +544,52 @@ class AnnIndexSpec extends AnyFunSuite {
       assert(serve(src) === expected)
       lost.foreach(d =>
         assert(java.nio.file.Files.exists(java.nio.file.Paths.get(base, d))))
+    }
+  }
+
+  // a delete tombstones only ids its layout still serves: an id never
+  // indexed and an id already deleted leave tomb_rows at the live rows
+  // deleted, and the never-indexed id stays insertable
+  (flatCodecs.map(c => (c.label, c.stem, c.rows,
+      (src: String) => c.ensure(src, c.rows(), None), c.delete, c.upsert)) ++
+    ivfCodecs.map(c => (c.label, c.stem, c.rows,
+      (src: String) => c.ensure(src, c.rows()), c.delete,
+      (src: String, rows: DataFrame) => c.upsert(src, rows, None))) ++
+    Seq(("LSH", "lsh", () => emb,
+      (src: String) => AnnIndex.ensureLsh(spark, src, emb, tables = 4,
+        bits = 4),
+      (src: String, ids: DataFrame) => AnnIndex.deleteLsh(spark, src, ids),
+      (src: String, rows: DataFrame) => AnnIndex.upsertLsh(spark, src, rows,
+        tables = 4, bits = 4)),
+    ("IVF-PQ", "ivfpq", () => emb,
+      (src: String) => AnnIndex.ensureIvfPq(spark, src, emb, lists = 8,
+        iters = 2, numSub = 16, ksub = 16),
+      (src: String, ids: DataFrame) => AnnIndex.deleteIvfPq(spark, src, ids),
+      (src: String, rows: DataFrame) => AnnIndex.upsertIvfPq(spark, src,
+        rows)),
+    ("IVF", "ivf", () => emb,
+      (src: String) => AnnIndex.ensureIvf(spark, src, emb, lists = 8,
+        iters = 2),
+      (src: String, ids: DataFrame) => AnnIndex.deleteIvf(spark, src, ids),
+      (src: String, rows: DataFrame) => AnnIndex.upsertIvf(spark, src, rows,
+        lists = 8, iters = 2)))
+  ).foreach { case (label, stem, rows, ensure, delete, upsert) =>
+    test(s"$label delete tombstones only live ids: a never-indexed and an " +
+        "already-deleted id leave tomb_rows at the rows deleted, and the " +
+        "never-indexed id upserts cleanly") {
+      import spark.implicits._
+      val src = s"spec-$runTag-${stem}live"
+      val at = s"/tmp/graft_ann_${stem}_${IndexStore.pathTag(src)}"
+      val absent = 987654321L
+      ensure(src)
+      delete(src, Seq(1L, 2L).toDF("vec_id"))
+      delete(src, Seq(2L, absent, absent).toDF("vec_id"))
+      val meta = AnnIndex.readMeta(at)
+      assert(meta.get("tomb_rows").contains(2L), meta)
+      upsert(src, rows().filter(col("vec_id") === 0L)
+        .select(lit(absent).as("vec_id"), col("embedding")))
+      assert(AnnIndex.readMeta(at).get("n_rows")
+        .contains(meta("n_rows") + 1L))
     }
   }
 
@@ -1562,12 +1627,24 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(added(vecs, filesByDir(s"$pq/vecs")).values.sum <= buckets)
   }
 
-  // the on-disk meta is the format every later session reads back: each
-  // lifecycle verb must leave exactly these key→value maps behind
-  test("flat-layout meta format across ensure(snapshotId) → " +
-      "upsert(batchId) → delete(batchId) → compact: LSH and SQ8") {
+  /** One layout of the meta-format pins: its meta keys beside n_rows
+    * and checksum after a build over `nb` base rows (`built`) and those
+    * its upsert adds (`upserted`), its string meta over the given
+    * source paths, and its verbs over (source key, rows).
+    */
+  private case class MetaLayout(stem: String, built: Long => Map[String, Long],
+      upserted: Map[String, Long], paths: String => Map[String, String],
+      ensure: (String, DataFrame) => Any, upsert: (String, DataFrame) => Any,
+      delete: (String, DataFrame) => Any, compact: String => Any)
+
+  /** Pin the exact numeric and string meta maps each layout leaves after
+    * ensure (snapshot id "v1") over the base rows, upsert of the tail,
+    * delete (batch 3) of three live ids and one never indexed, and
+    * compact.
+    */
+  private def pinMetaFormat(name: String, layouts: Seq[MetaLayout]): Unit = {
     import spark.implicits._
-    val dir = s"/tmp/graft_spec_meta_$runTag"
+    val dir = s"/tmp/graft_spec_meta_${runTag}_$name"
     emb.filter(col("vec_id") % 5 =!= 0).write.parquet(s"$dir/base")
     emb.filter(col("vec_id") % 5 === 0).write.parquet(s"$dir/tail")
     val base = spark.read.parquet(s"$dir/base")
@@ -1578,28 +1655,6 @@ class AnnIndexSpec extends AnyFunSuite {
     val (ns, fs) = AnnIndex.fingerprint(
       base.union(tail).filter(!col("vec_id").isin(gone: _*)))
     val both = s"$dir/base;$dir/tail"
-    case class Layout(stem: String, point: Map[String, Long],
-        paths: String => Map[String, String], ensure: String => Any,
-        upsert: String => Any, delete: String => Any,
-        compact: String => Any)
-    val layouts = Seq(
-      Layout("lsh", Map("tables" -> 16L, "bits" -> 6L, "buckets" -> 4L),
-        p => Map("source_paths" -> p),
-        src => AnnIndex.ensureLsh(spark, src, base, tables = 16, bits = 6,
-          storageBuckets = 4, snapshotId = Some("v1")),
-        src => AnnIndex.upsertLsh(spark, src, tail, tables = 16, bits = 6,
-          storageBuckets = 4, batchId = Some(7L)),
-        src => AnnIndex.deleteLsh(spark, src, gone.toDF("vec_id"),
-          batchId = Some(3L)),
-        src => AnnIndex.compactLsh(spark, src)),
-      Layout("sq8", Map("buckets" -> 4L), _ => Map.empty,
-        src => AnnIndex.ensureSq8(spark, src, base, storageBuckets = 4,
-          snapshotId = Some("v1")),
-        src => AnnIndex.upsertSq8(spark, src, tail, storageBuckets = 4,
-          batchId = Some(7L)),
-        src => AnnIndex.deleteSq8(spark, src, gone.toDF("vec_id"),
-          batchId = Some(3L)),
-        src => AnnIndex.compactSq8(spark, src)))
     layouts.foreach { l =>
       val src = s"spec-$runTag-meta-${l.stem}"
       val at = s"/tmp/graft_ann_${l.stem}_${IndexStore.pathTag(src)}"
@@ -1608,19 +1663,64 @@ class AnnIndexSpec extends AnyFunSuite {
         assert(AnnIndex.readMeta(at) === num, s"${l.stem} $verb")
         assert(AnnIndex.readMetaStrs(at) === str, s"${l.stem} $verb")
       }
-      l.ensure(src)
-      pin("ensure", l.point ++ Map("n_rows" -> nb, "checksum" -> fb),
+      val kept = l.built(nb) ++ l.upserted
+      l.ensure(src, base)
+      pin("ensure", l.built(nb) ++ Map("n_rows" -> nb, "checksum" -> fb),
         l.paths(s"$dir/base") ++ Map("snapshot_id" -> "v1"))
-      l.upsert(src)
-      val upserted = l.point ++ Map("n_rows" -> (nb + nt),
-        "checksum" -> (fb ^ ft), "last_batch_id" -> 7L)
+      l.upsert(src, tail)
+      val upserted = kept ++ Map("n_rows" -> (nb + nt),
+        "checksum" -> (fb ^ ft))
       pin("upsert", upserted, l.paths(both))
-      l.delete(src)
-      pin("delete", upserted ++ Map("tomb_rows" -> 4L,
+      // 987654321 was never indexed: three live rows are deleted
+      l.delete(src, gone.toDF("vec_id"))
+      pin("delete", upserted ++ Map("tomb_rows" -> 3L,
         "last_del_batch_id" -> 3L), l.paths(both))
       l.compact(src)
-      pin("compact", l.point ++ Map("n_rows" -> ns, "checksum" -> fs,
-        "last_batch_id" -> 7L, "last_del_batch_id" -> 3L), l.paths(both))
+      pin("compact", kept ++ Map("n_rows" -> ns, "checksum" -> fs,
+        "last_del_batch_id" -> 3L), l.paths(both))
     }
+  }
+
+  // the on-disk meta is the format every later session reads back: each
+  // lifecycle verb must leave exactly these key→value maps behind
+  test("flat-layout meta format across ensure(snapshotId) → " +
+      "upsert(batchId) → delete(batchId) → compact: LSH and SQ8") {
+    val lsh = Map("tables" -> 16L, "bits" -> 6L, "buckets" -> 4L)
+    pinMetaFormat("flat", Seq(
+      MetaLayout("lsh", _ => lsh, Map("last_batch_id" -> 7L),
+        p => Map("source_paths" -> p),
+        (src, rows) => AnnIndex.ensureLsh(spark, src, rows, tables = 16,
+          bits = 6, storageBuckets = 4, snapshotId = Some("v1")),
+        (src, rows) => AnnIndex.upsertLsh(spark, src, rows, tables = 16,
+          bits = 6, storageBuckets = 4, batchId = Some(7L)),
+        (src, ids) => AnnIndex.deleteLsh(spark, src, ids,
+          batchId = Some(3L)),
+        src => AnnIndex.compactLsh(spark, src)),
+      MetaLayout("sq8", _ => Map("buckets" -> 4L),
+        Map("last_batch_id" -> 7L), _ => Map.empty,
+        (src, rows) => AnnIndex.ensureSq8(spark, src, rows,
+          storageBuckets = 4, snapshotId = Some("v1")),
+        (src, rows) => AnnIndex.upsertSq8(spark, src, rows,
+          storageBuckets = 4, batchId = Some(7L)),
+        (src, ids) => AnnIndex.deleteSq8(spark, src, ids,
+          batchId = Some(3L)),
+        src => AnnIndex.compactSq8(spark, src))))
+  }
+
+  // float IVF keeps its own format: no buckets, the trained base n_base
+  // kept through upsert and fold, no upsert replay window
+  test("float-IVF meta format across ensure(snapshotId) → upsert → " +
+      "delete(batchId) → compact") {
+    pinMetaFormat("ivf", Seq(
+      MetaLayout("ivf",
+        nb => Map("lists" -> 4L, "iters" -> 2L, "n_base" -> nb), Map.empty,
+        _ => Map.empty,
+        (src, rows) => AnnIndex.ensureIvf(spark, src, rows, lists = 4,
+          iters = 2, snapshotId = Some("v1")),
+        (src, rows) => AnnIndex.upsertIvf(spark, src, rows, lists = 4,
+          iters = 2),
+        (src, ids) => AnnIndex.deleteIvf(spark, src, ids,
+          batchId = Some(3L)),
+        src => AnnIndex.compactIvf(spark, src))))
   }
 }

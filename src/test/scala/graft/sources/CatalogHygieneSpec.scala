@@ -214,8 +214,9 @@ class CatalogHygieneSpec extends AnyFunSuite {
     }
   }
 
-  /** The IVF codec layouts: label, stem, and ensure / delete / upsert /
-    * open verbs over a 64-row fixture (the upsert re-adds deleted id 5).
+  /** The IVF codec layouts and float IVF: label, stem, and ensure /
+    * delete / upsert / open verbs over a 64-row fixture (the upsert
+    * re-adds deleted id 5).
     */
   private val ivfCodecs = Seq[(String, String, String => Any, String => Any,
       String => Any, String => Any)](
@@ -239,7 +240,13 @@ class CatalogHygieneSpec extends AnyFunSuite {
       key => AnnIndex.deleteIvfPq(spark, key, Seq(5L).toDF("vec_id")),
       key => AnnIndex.upsertIvfPq(spark, key,
         vecs(64).filter(col("vec_id") === 5L)),
-      key => AnnIndex.openIvfPq(spark, key)))
+      key => AnnIndex.openIvfPq(spark, key)),
+    ("IVF", "ivf",
+      key => AnnIndex.ensureIvf(spark, key, vecs(64), lists = 4, iters = 2),
+      key => AnnIndex.deleteIvf(spark, key, Seq(5L).toDF("vec_id")),
+      key => AnnIndex.upsertIvf(spark, key,
+        vecs(64).filter(col("vec_id") === 5L), lists = 4, iters = 2),
+      key => AnnIndex.openIvf(spark, key)))
 
   // the IVF upserts re-derive the tombs registration before their
   // tombstone clash check: a delete another session committed while
@@ -271,21 +278,25 @@ class CatalogHygieneSpec extends AnyFunSuite {
     assert(e2.isEmpty, s"got: ${e2.mkString(", ")}")
   }
 
-  // the IVF codec layouts share one open path: zero DDL on a clean
-  // layout, and again once a delete's tombs registration has settled
+  // the IVF layouts share one open path: zero DDL and no Spark job on a
+  // clean layout, and again once a delete's tombs registration has
+  // settled
   ivfCodecs.foreach { case (label, layout, ensure, delete, _, open) =>
     test(s"second open of the $label layout issues zero catalog DDL — " +
         "clean AND tombstoned layouts") {
       val key = s"hyg-$runTag-$layout-o"
       ensure(key)
       open(key)
-      val evs = ddlDuring { open(key) }
+      var jobs = -1
+      val evs = ddlDuring { jobs = jobsDuring(open(key)) }
       assert(evs.isEmpty, s"expected zero DDL, got: ${evs.mkString(", ")}")
+      assert(jobs === 0)
       delete(key)
       open(key)
-      val evs2 = ddlDuring { open(key) }
+      val evs2 = ddlDuring { jobs = jobsDuring(open(key)) }
       assert(evs2.isEmpty,
         s"tombstoned open did not stabilize: ${evs2.mkString(", ")}")
+      assert(jobs === 0)
     }
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** Driver of `tools/layoutcompat.py`: lays out (`build`) or drives
-  * (`ops`) a persisted LSH and a persisted SQ8 layout under `store`,
+  * (`ops`) a persisted LSH, SQ8 and float-IVF layout under `store`,
   * printing after every verb one `JOBS` line (Spark jobs the verb ran),
   * one `META` line (the layout's meta map, keys sorted) and one `ANS`
   * line (a fixed query batch's answers over the returned handle).
@@ -59,10 +59,11 @@ object LayoutCompat {
     val del = Seq(0L, 1L, 2L, 3L, 205L, 999L).toDF("vec_id")
     val lshKey = "layoutcompat-lsh"
     val sq8Key = "layoutcompat-sq8"
+    val ivfKey = "layoutcompat-ivf"
+    val keys = Map("lsh" -> lshKey, "sq8" -> sq8Key, "ivf" -> ivfKey)
     def meta(stem: String): Unit = {
       val dir = Paths.get(store,
-        s"graft_ann_${stem}_${graft.sources.IndexStore.pathTag(
-          if (stem == "lsh") lshKey else sq8Key)}")
+        s"graft_ann_${stem}_${graft.sources.IndexStore.pathTag(keys(stem))}")
       val kv = "\"([a-zA-Z_]+)\"\\s*:\\s*(-?\\d+|\"[^\"]*\")".r
         .findAllMatchIn(Files.readString(dir.resolve("_ann_meta.json")))
         .map(m => s"${m.group(1)}=${m.group(2)}").toSeq.sorted
@@ -85,6 +86,19 @@ object LayoutCompat {
       println(s"ANS sq8-$name vecs=${r.vecs.count()} " +
         s"codes=${r.codes.count()} ${rows.mkString(" ")}")
     }
+    def ivf(name: String)(h: => AnnIndex.IvfHandle): Unit = {
+      val r = step(s"ivf-$name")(h)
+      meta("ivf")
+      val rows = AnnIndex.queryIvf(queries, r, k = 4, nProbe = 2).collect()
+        .map(_.toString).sorted
+      println(s"ANS ivf-$name lists=${r.lists.count()} " +
+        s"centroids=${r.centroids.count()} ${rows.mkString(" ")}")
+    }
+    def ensureIvf(rows: DataFrame, snap: Option[String]) =
+      AnnIndex.ensureIvf(spark, ivfKey, rows, lists = 4, iters = 2,
+        snapshotId = snap)
+    def upsertIvf(rows: DataFrame) =
+      AnnIndex.upsertIvf(spark, ivfKey, rows, lists = 4, iters = 2)
     def ensureLsh(rows: DataFrame, snap: Option[String]) =
       AnnIndex.ensureLsh(spark, lshKey, rows, tables = 8, bits = 4,
         storageBuckets = 4, snapshotId = snap)
@@ -95,6 +109,7 @@ object LayoutCompat {
       lsh("build")(ensureLsh(base, Some("s1")))
       sq8("build")(AnnIndex.ensureSq8(spark, sq8Key, base,
         storageBuckets = 4, snapshotId = Some("s1")))
+      ivf("build")(ensureIvf(base, Some("s1")))
     } else {
       lsh("open")(AnnIndex.openLsh(spark, lshKey))
       lsh("open-again")(AnnIndex.openLsh(spark, lshKey))
@@ -131,6 +146,27 @@ object LayoutCompat {
       sq8("compact")(AnnIndex.compactSq8(spark, sq8Key))
       sq8("ensure-rebuild")(AnnIndex.ensureSq8(spark, sq8Key, base,
         storageBuckets = 4))
+      ivf("open")(AnnIndex.openIvf(spark, ivfKey))
+      ivf("open-again")(AnnIndex.openIvf(spark, ivfKey))
+      ivf("ensure-fresh-snapshot")(ensureIvf(base, Some("s1")))
+      ivf("ensure-fresh-fingerprint")(ensureIvf(base, Some("s2")))
+      ivf("upsert")(upsertIvf(tail))
+      ivf("delete")(AnnIndex.deleteIvf(spark, ivfKey, del, Some(1L)))
+      ivf("delete-replay")(AnnIndex.deleteIvf(spark, ivfKey, del, Some(1L)))
+      ivf("open-tombstoned")(AnnIndex.openIvf(spark, ivfKey))
+      println("EXISTS ivf " + AnnIndex.ivfExists(spark, ivfKey, lists = 4,
+        iters = 2) + " " + AnnIndex.ivfExists(spark, ivfKey, lists = 8,
+        iters = 2))
+      println("CLASH ivf " + scala.util.Try(upsertIvf(
+        base.filter(col("vec_id") === 1L))).failed
+        .map(_.getMessage).getOrElse("none"))
+      ivf("compact")(AnnIndex.compactIvf(spark, ivfKey))
+      ivf("compact-clean")(AnnIndex.compactIvf(spark, ivfKey))
+      ivf("ensure-rebuild")(ensureIvf(base, None))
+      ivf("ensure-upserted-rebuild")(AnnIndex.ensureIvfUpserted(spark,
+        ivfKey, base, tail, lists = 4, iters = 2))
+      ivf("ensure-upserted-fresh")(AnnIndex.ensureIvfUpserted(spark,
+        ivfKey, base, tail, lists = 4, iters = 2))
     }
     spark.stop()
   }
