@@ -15,13 +15,17 @@ import scala.jdk.CollectionConverters._
   * the entire point of an index. This module stores:
   *
   *  - Codec layouts, two lifecycles written once over a private
-  *    `Codec`. The FLAT one (one scan table of per-row codec rows)
-  *    serves SQ8 and BQ (`codes` bucketed by vec_id) and LSH, a flat
-  *    codec whose rows are bucket ids: `buckets` holds `(tb, vec_id)`
-  *    with `tb = table * 2^bits + bucket`, bucketed and sorted by `tb`.
-  *    Queries broadcast their probed bucket ids and equi-join it on
-  *    `tb` — no signature is recomputed over the index side, and the
-  *    index scan is one pass over a narrow (long, long) relation. The
+  *    `Codec`. The FLAT one (one scan table of codec rows) serves SQ8
+  *    and BQ (`codes` bucketed by vec_id), LSH, a flat codec whose
+  *    rows are bucket ids: `buckets` holds `(tb, vec_id)` with
+  *    `tb = table * 2^bits + bucket`, bucketed and sorted by `tb` —
+  *    queries broadcast their probed bucket ids and equi-join it on
+  *    `tb`, so no signature is recomputed over the index side and the
+  *    index scan is one pass over a narrow (long, long) relation —
+  *    and the TRAINED flat PQ and OPQ codecs, whose model (PQ:
+  *    `codebook`; OPQ: `rotation`, then `codebook` over the rotated
+  *    vectors) is plain parquet written at build and read back to
+  *    encode; they get no upsert, delete or compact verb. The
   *    IVF one (Lloyd-refined centroids, tiny plain parquet, plus the
   *    inverted `lists` partitioned by centroid_id — probing nProbe
   *    lists per query is partition pruning, the classic inverted-file
@@ -30,7 +34,9 @@ import scala.jdk.CollectionConverters._
   *    and float IVF, whose lists `(vec_id, embedding, centroid_id)`
   *    carry the vectors themselves. Every other layout keeps the float
   *    vectors bucketed by vec_id for the exact re-rank; all keep
-  *    merge-on-read tombstones.
+  *    merge-on-read tombstones. A rebuild un-names the stored content
+  *    before it replaces any dir, so an interrupted one is rebuilt by
+  *    the next ensure and refused by the other verbs.
   *
   * Freshness contract: `ensure*` rebuilds when the stored meta (operating
   * point + row count) no longer matches the source frame; the layout is
@@ -76,9 +82,10 @@ object AnnIndex {
   private def metaPath(base: String) = Paths.get(base, "_ann_meta.json")
 
   /** Meta lands via temp-file + atomic rename, and is written only AFTER
-    * the index tables are fully materialized — a crashed or concurrent
-    * build leaves either the old meta (→ next ensure* rebuilds) or the
-    * new complete state, never a half-readable meta pointing at
+    * the index tables are fully materialized — a rebuild un-names the
+    * old content first ([[unnameContent]]), so a crashed or concurrent
+    * build leaves either a meta naming no content (→ next ensure*
+    * rebuilds) or the new complete state, never a meta pointing at
     * half-written tables. (Two concurrent builders over the SAME
     * immutable fixture write identical content, so last-writer-wins is
     * benign; a production deployment over mutable sources would key the
@@ -159,14 +166,13 @@ object AnnIndex {
   private[sources] def registerExternal(spark: SparkSession, table: String,
       path: String, clusteredBy: Option[(String, Int)] = None,
       partitionedBy: Option[String] = None): Unit = {
-    // footer-schema DDL for the unpartitioned layouts (no inference
-    // job); partitioned ones keep the inference read — their DDL needs
-    // the discovered partition column and its inferred type
-    val schema =
-      if (partitionedBy.isEmpty)
-        ParquetIO.footerSchema(spark, path)
-          .getOrElse(spark.read.parquet(path).schema)
-      else spark.read.parquet(path).schema
+    // footer-schema DDL (no inference job); a partitioned table appends
+    // its partition column at the type discovery infers from the dir
+    // names — any other shape keeps the inference read
+    val schema = ParquetIO.footerSchema(spark, path).flatMap(s =>
+        partitionedBy.fold(Option(s))(c =>
+          ParquetIO.partitionType(spark, path, c).map(s.add(c, _))))
+      .getOrElse(spark.read.parquet(path).schema)
     val colsDdl = schema.fields
       .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
     val partDdl = partitionedBy
@@ -462,7 +468,8 @@ object AnnIndex {
   def lshExists(spark: SparkSession, sourceDir: String,
       tables: Int = 64, bits: Int = 12,
       storageBuckets: Int = 8): Boolean =
-    existsFlat(Lsh(tables, bits), spark, sourceDir, Some(storageBuckets))
+    existsFlat(Lsh(tables, bits), spark, sourceDir,
+      flatPoint(Lsh(tables, bits), storageBuckets))
 
   /** Open an existing persisted LSH index read-only, WITHOUT a
     * freshness probe — the reader's path while a writer (e.g. a
@@ -803,17 +810,22 @@ object AnnIndex {
       * committed next to the layout's (buckets; IVF: lists/iters).
       */
     def point: Seq[(String, Long)] = Nil
+    /** The layout's trained-model dirs: plain parquet, read by path. */
+    def modelDirs: Seq[String] = Nil
+    /** Train the model on the build's (vec_id, embedding) and persist
+      * it under `base` — a build step, run before any row is encoded.
+      */
+    def train(index: DataFrame, base: String): Unit = ()
   }
 
-  /** The flat role: a per-row encoding into the scan table `scanDir`,
-    * bucketed by `scanKey`. Encoding reads no global statistics (unlike
-    * IVF centroids or a trained product-quantizer codebook), so
-    * encoding new rows is EXACTLY a rebuild restricted to them — every
-    * upsert ≡ rebuild argument of the flat lifecycle rests on this.
+  /** The flat role: an encoding into the scan table `scanDir`, bucketed
+    * by `scanKey`, with any model persisted under the layout dir. The
+    * upsert ≡ rebuild argument holds for untrained ([[PerRowCodec]])
+    * codecs only: a trained one is rebuilt, never upserted into.
     */
   private sealed trait FlatCodec extends Codec {
     /** (vec_id, embedding) → the scan table's rows. */
-    def encode(index: DataFrame): DataFrame
+    def encode(index: DataFrame, base: String): DataFrame
     def scanDir: String = "codes"
     def scanKey: String = "vec_id"
     /** The codec's own string meta once `rows` have joined a layout
@@ -823,6 +835,13 @@ object AnnIndex {
         prior: Map[String, String]): Seq[(String, String)] = Nil
   }
 
+  /** A flat codec whose encoding reads no global statistics (unlike
+    * IVF centroids or a trained product-quantizer codebook), so
+    * encoding new rows is EXACTLY a rebuild restricted to them — every
+    * upsert ≡ rebuild argument of the flat lifecycle rests on this.
+    */
+  private sealed trait PerRowCodec extends FlatCodec
+
   /** The IVF role: vectors assigned to stored centroids and encoded
     * with a model the codec may train at build time.
     */
@@ -831,12 +850,6 @@ object AnnIndex {
       * layout then has no `vecs` table (see [[CodecLayout]]).
       */
     def vecsInLists: Boolean = false
-    /** The dirs under the layout dir that hold the trained model. */
-    def modelDirs: Seq[String] = Nil
-    /** Train the model on the build's (vec_id, embedding) and persist
-      * it under `base` — a build step, run after the centroids land.
-      */
-    def train(index: DataFrame, base: String): Unit = ()
     /** (vec_id, embedding) → the IVF layout's `lists` rows: each vector
       * assigned to its nearest of `centroids` and encoded with the
       * model persisted under `base`.
@@ -850,8 +863,8 @@ object AnnIndex {
     * saves at 100 TB.
     */
   private case object Sq8 extends Codec("sq8", "Sq8", "SQ8")
-      with FlatCodec with IvfCodec {
-    def encode(index: DataFrame): DataFrame =
+      with PerRowCodec with IvfCodec {
+    def encode(index: DataFrame, base: String): DataFrame =
       SimilaritySearch.quantizeIndex(index)
     def assign(index: DataFrame, centroids: DataFrame,
         base: String): DataFrame =
@@ -862,8 +875,8 @@ object AnnIndex {
     * under float32 and 8× under SQ8.
     */
   private case object Bq extends Codec("bq", "Bq", "BQ")
-      with FlatCodec with IvfCodec {
-    def encode(index: DataFrame): DataFrame =
+      with PerRowCodec with IvfCodec {
+    def encode(index: DataFrame, base: String): DataFrame =
       SimilaritySearch.binarizeIndex(index)
     def assign(index: DataFrame, centroids: DataFrame,
         base: String): DataFrame =
@@ -876,24 +889,57 @@ object AnnIndex {
     * assignment encodes with that persisted model read back (faiss's
     * `add()`-after-`train()` contract), so codes and stored model can
     * never diverge. The model is distribution-bound like the centroids:
-    * the drift gate covers both.
+    * the drift gate covers both. The rounds' meta key: IVF `pq_iters`
+    * (beside its own `iters`), flat `iters`.
     */
-  private final case class Pq(numSub: Int, ksub: Int, pqIters: Int)
-      extends Codec("pq", "Pq", "PQ") with IvfCodec {
+  private final case class Pq(numSub: Int, ksub: Int, pqIters: Int,
+      itersKey: String = "pq_iters")
+      extends Codec("pq", "Pq", "PQ") with FlatCodec with IvfCodec {
     override def point: Seq[(String, Long)] =
       Seq("num_sub" -> numSub.toLong, "ksub" -> ksub.toLong,
-        "pq_iters" -> pqIters.toLong)
+        itersKey -> pqIters.toLong)
     override def modelDirs: Seq[String] = Seq("codebook")
     override def train(index: DataFrame, base: String): Unit =
       SimilaritySearch.pqCodebooks(index, numSub, ksub, pqIters)
         .write.mode(SaveMode.Overwrite).parquet(s"$base/codebook")
+    private def codebook(spark: SparkSession, base: String): Array[Double] =
+      SimilaritySearch.collectCodebook(
+        ParquetIO.read(spark, s"$base/codebook"), numSub, ksub)
+    def encode(index: DataFrame, base: String): DataFrame = {
+      import graft.functions.expressions.PqExpressions.pq_encode
+      index.select(col("vec_id"),
+        pq_encode(col("embedding"), codebook(index.sparkSession, base),
+          numSub, ksub).as("pqcodes"),
+        graft.functions.VectorOps.l2Norm(col("embedding")).as("pnorm"))
+    }
     def assign(index: DataFrame, centroids: DataFrame,
         base: String): DataFrame =
       SimilaritySearch.assignPqEncoded(index, centroids,
-        SimilaritySearch.collectCodebook(
-          ParquetIO.read(centroids.sparkSession, s"$base/codebook"),
-          numSub, ksub),
-        numSub, ksub)
+        codebook(index.sparkSession, base), numSub, ksub)
+  }
+
+  /** The PQ point stored in `meta` (zeros, refused by `built`, if none). */
+  private def storedPq(meta: Map[String, Long], itersKey: String): Pq = {
+    def at(k: String) = meta.getOrElse(k, 0L).toInt
+    Pq(at("num_sub"), at("ksub"), at(itersKey), itersKey)
+  }
+
+  /** OPQ: the balanced rotation ([[writeRotation]]) trains into
+    * `rotation`, then flat [[Pq]] trains and encodes over the vectors
+    * rotated by that persisted model (codes carry the rotated norm).
+    */
+  private final case class Opq(pq: Pq)
+      extends Codec("opq", "Opq", "OPQ") with FlatCodec {
+    override def point: Seq[(String, Long)] = pq.point
+    override def modelDirs: Seq[String] = "rotation" +: pq.modelDirs
+    override def train(index: DataFrame, base: String): Unit = {
+      writeRotation(index, pq.numSub, s"$base/rotation")
+      pq.train(rotatedAt(index, base), base)
+    }
+    def encode(index: DataFrame, base: String): DataFrame =
+      pq.encode(rotatedAt(index, base), base)
+    private def rotatedAt(index: DataFrame, base: String): DataFrame =
+      rotated(index, ParquetIO.read(index.sparkSession, s"$base/rotation"))
   }
 
   /** Float IVF: each list row carries its vector, `(vec_id, embedding,
@@ -915,12 +961,12 @@ object AnnIndex {
     * served from the combined index.
     */
   private final case class Lsh(tables: Int, bits: Int)
-      extends Codec("lsh", "Lsh", "LSH") with FlatCodec {
+      extends Codec("lsh", "Lsh", "LSH") with PerRowCodec {
     override def point: Seq[(String, Long)] =
       Seq("tables" -> tables.toLong, "bits" -> bits.toLong)
     override def scanDir: String = "buckets"
     override def scanKey: String = "tb"
-    def encode(index: DataFrame): DataFrame = {
+    def encode(index: DataFrame, base: String): DataFrame = {
       import graft.functions.expressions.VectorExpressions.lsh_buckets
       index.select(col("vec_id"),
         posexplode(lsh_buckets(col("embedding"), tables, bits))
@@ -981,8 +1027,9 @@ object AnnIndex {
     def tombsBy(storageBuckets: Int): Option[(String, Int)] =
       vecs.map(_ => ("vec_id", storageBuckets))
 
+    /** Built and naming its content ([[unnameContent]]). */
     def built(meta: Map[String, Long]): Boolean =
-      (!ivf || meta.contains("lists")) &&
+      meta.contains("checksum") && (!ivf || meta.contains("lists")) &&
         (vecs.isEmpty || meta.contains("buckets")) &&
         c.point.forall { case (k, _) => meta.contains(k) }
 
@@ -1181,7 +1228,7 @@ object AnnIndex {
   private def flatLayout(c: FlatCodec, spark: SparkSession,
       sourceDir: String) =
     new CodecLayout(spark, c, sourceDir, ivf = false, c.scanDir, c.scanKey,
-      Nil, vecsInScan = false)
+      c.modelDirs, vecsInScan = false)
 
   private def flatPoint(c: FlatCodec,
       storageBuckets: Int): Seq[(String, Long)] =
@@ -1249,19 +1296,22 @@ object AnnIndex {
       strs ++ snapshotId.map("snapshot_id" -> _).toSeq)
   }
 
-  /** Full (re)build: overwrite both tables, clear the tombstones (a
-    * rebuild serves exactly its source), then commit the meta.
+  /** Full (re)build: clear the tombstones (a rebuild serves exactly
+    * its source), train any model, overwrite both tables (the scan
+    * table encoded with the just-persisted model), commit the meta.
     */
   private def buildFlat(c: FlatCodec, spark: SparkSession, l: CodecLayout,
       index: DataFrame, storageBuckets: Int, n: Long, fp: Long,
       snapshotId: Option[String]): Unit = {
+    val rows = index.select("vec_id", "embedding")
     dropTombs(spark, l.base, l.tombs)
+    c.train(rows, l.base)
     spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
-    writeBucketed(c.encode(index.select("vec_id", "embedding")), l.scan,
-      l.key, storageBuckets, Some(s"${l.base}/${l.sub}"))
+    writeBucketed(c.encode(rows, l.base), l.scan, l.key, storageBuckets,
+      Some(s"${l.base}/${l.sub}"))
     spark.sql(s"DROP TABLE IF EXISTS ${l.floats}")
-    writeBucketed(index.select("vec_id", "embedding"), l.floats, "vec_id",
-      storageBuckets, Some(s"${l.base}/vecs"))
+    writeBucketed(rows, l.floats, "vec_id", storageBuckets,
+      Some(s"${l.base}/vecs"))
     commitBuilt(l.base, flatPoint(c, storageBuckets) ++
       Seq("n_rows" -> n, "checksum" -> fp), c.strMeta(index, Map.empty),
       snapshotId)
@@ -1300,9 +1350,10 @@ object AnnIndex {
         layoutFresh(spark, l, point, storageBuckets, Left(id)))) {
       val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
       val meta = readMeta(l.base)
-      if (!layoutFresh(spark, l, point, storageBuckets, Right((n, fp))))
+      if (!layoutFresh(spark, l, point, storageBuckets, Right((n, fp)))) {
+        unnameContent(l.base)
         build(n, fp)
-      else if (snapshotId.isDefined)
+      } else if (snapshotId.isDefined)
         // content unchanged under a new snapshot name: record the id so
         // the NEXT ensure at this snapshot skips the scan entirely
         commitBuilt(l.base, point ++ Seq("n_rows" -> n, "checksum" -> fp) ++
@@ -1327,10 +1378,22 @@ object AnnIndex {
     val (nt, ft) = fingerprint(tailRows.select("vec_id", "embedding"))
     if (!layoutFresh(spark, l, point, storageBuckets,
         Right((nb + nt, fb ^ ft)))) {
+      unnameContent(l.base)
       build(nb, fb)
       upsert((nt, ft))
     }
   }
+
+  /** Before a rebuild replaces any dir of the layout at `base`, commit
+    * a meta that names no content (`n_rows`, `checksum`, `snapshot_id`
+    * drop; the point, `tomb_rows` and replay windows stay): an
+    * interrupted rebuild is then stale to `ensure*` and unbuilt to the
+    * other verbs, never the old meta over new dirs. No meta, no write.
+    */
+  private def unnameContent(base: String): Unit =
+    if (Files.exists(metaPath(base)))
+      writeMetaFull(base, (readMeta(base) - "n_rows" - "checksum").toSeq,
+        (readMetaStrs(base) - "snapshot_id").toSeq)
 
   /** Incremental add into an existing persisted flat index: the codec
     * is per-row, so an upsert is EXACTLY a rebuild restricted to the new
@@ -1341,7 +1404,7 @@ object AnnIndex {
     * [[upsertLsh]]; a stored snapshot id is dropped. `known`: the new
     * rows' fingerprint when the caller already took it.
     */
-  private def upsertFlat(c: FlatCodec, spark: SparkSession,
+  private def upsertFlat(c: PerRowCodec, spark: SparkSession,
       sourceDir: String, newVecs: DataFrame, storageBuckets: Int,
       batchId: Option[Long],
       known: Option[(Long, Long)] = None): CodesHandle = {
@@ -1350,7 +1413,7 @@ object AnnIndex {
     upsertLayout(spark, l, sourceDir, Some(point), _ => point, newVecs,
       batchId, known, c.strMeta(newVecs, readMetaStrs(l.base))) { (_, _) =>
       val rows = newVecs.select("vec_id", "embedding")
-      writeBucketed(c.encode(rows), l.scan, l.key, storageBuckets)
+      writeBucketed(c.encode(rows, l.base), l.scan, l.key, storageBuckets)
       writeBucketed(rows, l.floats, "vec_id", storageBuckets)
       Nil
     }
@@ -1375,17 +1438,14 @@ object AnnIndex {
       strs: => Seq[(String, String)])(
       append: (Map[String, Long], Long) => Seq[(String, Long)]): Unit = {
     val meta = readMeta(l.base)
-    expected match {
-      case Some(at) =>
-        require(atPoint(meta, at),
-          s"upsert${l.verb} needs an existing index at the same operating " +
-            s"point (${at.map { case (k, v) => s"$k=$v" }.mkString(" ")})" +
-            s"; found $meta")
-      case None =>
-        require(l.built(meta),
-          s"upsert${l.verb} needs an existing persisted ${l.label} index " +
-            s"for '$sourceDir' — run ensure${l.verb} first")
-    }
+    expected.foreach(at =>
+      require(atPoint(meta, at),
+        s"upsert${l.verb} needs an existing index at the same operating " +
+          s"point (${at.map { case (k, v) => s"$k=$v" }.mkString(" ")})" +
+          s"; found $meta"))
+    require(l.built(meta),
+      s"upsert${l.verb} needs an existing persisted ${l.label} index " +
+        s"for '$sourceDir' — run ensure${l.verb} first")
     l.requireReadable(" before upserting")
     if (!l.registered) l.attach(l.buckets(meta))
     if (batchId.exists(id => meta.get("last_batch_id").exists(id <= _)))
@@ -1435,19 +1495,17 @@ object AnnIndex {
     flatHandle(spark, l)
   }
 
-  /** True iff a persisted flat layout exists for `sourceDir` — at
-    * `storageBuckets` and the codec's point when given (meta check only
-    * — no readability or freshness probe). Lets callers branch
-    * build-vs-open explicitly instead of catching the open verb's
-    * deliberately fail-loud errors, which must keep distinguishing
-    * "never built" from "unreadable crashed layout".
+  /** True iff a persisted flat layout exists for `sourceDir` — at the
+    * meta entries `at` (meta check only — no readability or freshness
+    * probe). Lets callers branch build-vs-open explicitly instead of
+    * catching the open verb's deliberately fail-loud errors, which must
+    * keep distinguishing "never built" from "unreadable crashed layout".
     */
   private def existsFlat(c: FlatCodec, spark: SparkSession,
-      sourceDir: String, storageBuckets: Option[Int] = None): Boolean = {
+      sourceDir: String, at: Seq[(String, Long)] = Nil): Boolean = {
     val l = flatLayout(c, spark, sourceDir)
     val meta = readMeta(l.base)
-    l.built(meta) &&
-      storageBuckets.forall(sb => atPoint(meta, flatPoint(c, sb)))
+    l.built(meta) && atPoint(meta, at)
   }
 
   private def openFlat(c: FlatCodec, spark: SparkSession,
@@ -1552,6 +1610,8 @@ object AnnIndex {
     compactFlat(Sq8, spark, sourceDir)
 
   // ----------------------------------------------------------------- PQ
+  // the flat lifecycle at the trained [[Pq]] codec, with no upsert,
+  // delete or compact verb: the model IS the storage format
 
   /** Persisted product-quantized layout (q115's serving form, q120):
     * `codebook` is the trained model artifact (numSub · ksub rows —
@@ -1565,36 +1625,23 @@ object AnnIndex {
   final case class PqHandle(codebook: DataFrame, codes: DataFrame,
       vecs: DataFrame, numSub: Int, ksub: Int)
 
-  private def pqBase(spark: SparkSession, tag: String) =
-    s"${annBase(spark)}/graft_ann_pq_$tag"
+  /** The stored point of the flat layout `c` names (by stem alone). */
+  private def storedFlatPq(spark: SparkSession, sourceDir: String,
+      c: FlatCodec): Pq =
+    storedPq(readMeta(flatLayout(c, spark, sourceDir).base), "iters")
 
-  private def pqRegistered(spark: SparkSession, tag: String): Boolean =
-    spark.catalog.tableExists(s"graft_pq_codebook_$tag") &&
-      spark.catalog.tableExists(s"graft_pq_codes_$tag") &&
-      spark.catalog.tableExists(s"graft_pq_vecs_$tag")
-
-  private def attachPq(spark: SparkSession, tag: String,
-      storageBuckets: Int): Unit = {
-    val base = pqBase(spark, tag)
-    Seq("codebook", "codes", "vecs").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_pq_${t}_$tag"))
-    registerExternal(spark, s"graft_pq_codebook_$tag", s"$base/codebook")
-    registerExternal(spark, s"graft_pq_codes_$tag", s"$base/codes",
-      clusteredBy = Some(("vec_id", storageBuckets)))
-    registerExternal(spark, s"graft_pq_vecs_$tag", s"$base/vecs",
-      clusteredBy = Some(("vec_id", storageBuckets)))
+  /** `verb`'s flat handle at `c`, with the stored codebook. */
+  private def servedPq(spark: SparkSession, sourceDir: String, c: Pq)(
+      verb: Pq => CodesHandle): PqHandle = {
+    val h = verb(c)
+    PqHandle(ParquetIO.read(spark,
+        s"${flatLayout(c, spark, sourceDir).base}/codebook"),
+      h.codes, h.vecs, c.numSub, c.ksub)
   }
-
-  private def pqHandle(spark: SparkSession, tag: String,
-      meta: Map[String, Long]): PqHandle =
-    PqHandle(spark.table(s"graft_pq_codebook_$tag"),
-      spark.table(s"graft_pq_codes_$tag"),
-      spark.table(s"graft_pq_vecs_$tag"),
-      meta("num_sub").toInt, meta("ksub").toInt)
 
   /** Build (or reuse) the persisted PQ layout: train per-subspace
     * codebooks ([[SimilaritySearch.pqCodebooks]]), encode every vector
-    * to `numSub` bytes with the trained model (per-row native
+    * to `numSub` bytes with the trained model read back (per-row native
     * projection), land codes and float vectors co-bucketed by vec_id.
     * Freshness follows the `ensureSq8` discipline (O(1) snapshot-id
     * trust / content fingerprint / `servable` recovery; meta committed
@@ -1612,77 +1659,35 @@ object AnnIndex {
       ksub: Int = 64,
       iters: Int = 2,
       storageBuckets: Int = 8,
-      snapshotId: Option[String] = None): PqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = pqBase(spark, tag)
-    val dirs = Seq(s"$base/codebook", s"$base/codes", s"$base/vecs")
-    def opFresh(meta: Map[String, Long]): Boolean =
-      meta.get("buckets").contains(storageBuckets.toLong) &&
-        meta.get("num_sub").contains(numSub.toLong) &&
-        meta.get("ksub").contains(ksub.toLong) &&
-        meta.get("iters").contains(iters.toLong)
-    val snapFresh = snapshotId.exists { id =>
-      readMetaStrs(base).get("snapshot_id").contains(id) &&
-        opFresh(readMeta(base))
-    }
-    if (snapFresh && servable(spark, dirs, pqRegistered(spark, tag),
-        () => attachPq(spark, tag, storageBuckets)))
-      return pqHandle(spark, tag, readMeta(base))
-    val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
-    val metaFresh = {
-      val meta = readMeta(base)
-      opFresh(meta) && meta.get("n_rows").contains(n) &&
-        meta.get("checksum").contains(fp)
-    } && servable(spark, dirs, pqRegistered(spark, tag),
-      () => attachPq(spark, tag, storageBuckets))
-    if (!metaFresh) {
-      import graft.functions.expressions.PqExpressions.pq_encode
-      val cb = SimilaritySearch.pqCodebooks(
-        index.select("vec_id", "embedding"), numSub, ksub, iters)
-      spark.sql(s"DROP TABLE IF EXISTS graft_pq_codebook_$tag")
-      cb.write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/codebook")
-        .format("parquet").saveAsTable(s"graft_pq_codebook_$tag")
-      // encode with the JUST-PERSISTED codebook so codes and stored
-      // model can never diverge (a re-trained in-memory cb after a
-      // crash would otherwise silently mismatch)
-      val flat = SimilaritySearch.collectCodebook(
-        spark.table(s"graft_pq_codebook_$tag"), numSub, ksub)
-      spark.sql(s"DROP TABLE IF EXISTS graft_pq_codes_$tag")
-      writeBucketed(index.select(col("vec_id"),
-          pq_encode(col("embedding"), flat, numSub, ksub).as("pqcodes"),
-          graft.functions.VectorOps.l2Norm(col("embedding")).as("pnorm")),
-        s"graft_pq_codes_$tag", "vec_id", storageBuckets, Some(s"$base/codes"))
-      spark.sql(s"DROP TABLE IF EXISTS graft_pq_vecs_$tag")
-      writeBucketed(index.select("vec_id", "embedding"),
-        s"graft_pq_vecs_$tag", "vec_id", storageBuckets, Some(s"$base/vecs"))
-    }
-    if (!metaFresh || snapshotId.isDefined)
-      writeMetaFull(base,
-        Seq("buckets" -> storageBuckets.toLong, "num_sub" -> numSub.toLong,
-          "ksub" -> ksub.toLong, "iters" -> iters.toLong,
-          "n_rows" -> n, "checksum" -> fp),
-        snapshotId.map("snapshot_id" -> _).toSeq)
-    pqHandle(spark, tag, readMeta(base))
-  }
+      snapshotId: Option[String] = None): PqHandle =
+    servedPq(spark, sourceDir, Pq(numSub, ksub, iters, "iters"))(
+      ensureFlat(_, spark, sourceDir, index, storageBuckets, snapshotId))
 
   /** Open an existing persisted PQ index read-only (no freshness probe
     * — the `openSq8` contract). */
-  def openPq(spark: SparkSession, sourceDir: String): PqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = pqBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("num_sub"),
-      s"no persisted PQ index for '$sourceDir' ($base)")
-    require(Seq("codebook", "codes", "vecs")
-        .forall(d => parquetReadable(spark, s"$base/$d")),
-      s"persisted PQ layout for '$sourceDir' is unreadable — run " +
-        "ensurePq to rebuild")
-    if (!pqRegistered(spark, tag))
-      attachPq(spark, tag, meta("buckets").toInt)
-    else Seq("codebook", "codes", "vecs").foreach(t =>
-      spark.catalog.refreshTable(s"graft_pq_${t}_$tag"))
-    pqHandle(spark, tag, meta)
+  def openPq(spark: SparkSession, sourceDir: String): PqHandle =
+    servedPq(spark, sourceDir, storedFlatPq(spark, sourceDir, Pq(0, 0, 0)))(
+      openFlat(_, spark, sourceDir))
+
+  /** The ADC candidate stage of [[queryPq]] and [[queryOpq]]: the `m`
+    * best (query_id, vec_id) per query by lookup-sums over the codes.
+    */
+  private def adcCandidates(queries: DataFrame, codebook: DataFrame,
+      codes: DataFrame, numSub: Int, ksub: Int, m: Int): DataFrame = {
+    import graft.functions.expressions.PqExpressions.{pq_adc_dot, pq_table}
+    import graft.functions.expressions.TopKAgg.top_k
+    val flat = SimilaritySearch.collectCodebook(codebook, numSub, ksub)
+    val qt = broadcast(queries.select(col("query_id"),
+      pq_table(col("query_vec"), flat, numSub, ksub).as("adc"),
+      graft.functions.VectorOps.l2Norm(col("query_vec")).as("qqnorm")))
+    codes.crossJoin(qt)
+      .withColumn("ascore",
+        when(col("pnorm") * col("qqnorm") === 0.0, lit(0.0))
+          .otherwise(pq_adc_dot(col("pqcodes"), col("adc"))
+            / (col("pnorm") * col("qqnorm"))))
+      .groupBy("query_id")
+      .agg(top_k(col("ascore"), col("vec_id"), m).as("topk"))
+      .select(col("query_id"), explode(col("topk.id")).as("vec_id"))
   }
 
   /** Query the persisted PQ index: the stored codebook (numSub · ksub
@@ -1699,24 +1704,9 @@ object AnnIndex {
       handle: PqHandle,
       k: Int = 4,
       m: Int = 64): DataFrame = {
-    import graft.functions.expressions.PqExpressions.{pq_adc_dot, pq_table}
-    import graft.functions.expressions.TopKAgg.top_k
     require(m >= k, s"candidate count m ($m) must be >= k ($k)")
-    val flat = SimilaritySearch.collectCodebook(handle.codebook,
-      handle.numSub, handle.ksub)
-    val qt = broadcast(queries.select(col("query_id"),
-      pq_table(col("query_vec"), flat, handle.numSub, handle.ksub)
-        .as("adc"),
-      graft.functions.VectorOps.l2Norm(col("query_vec")).as("qqnorm")))
-    val cand = handle.codes.crossJoin(qt)
-      .withColumn("ascore",
-        when(col("pnorm") * col("qqnorm") === 0.0, lit(0.0))
-          .otherwise(pq_adc_dot(col("pqcodes"), col("adc"))
-            / (col("pnorm") * col("qqnorm"))))
-      .groupBy("query_id")
-      .agg(top_k(col("ascore"), col("vec_id"), m).as("topk"))
-      .select(col("query_id"), explode(col("topk.id")).as("vec_id"))
-    SimilaritySearch.rerank(cand, queries, handle.vecs, k)
+    SimilaritySearch.rerank(adcCandidates(queries, handle.codebook,
+      handle.codes, handle.numSub, handle.ksub, m), queries, handle.vecs, k)
   }
 
   // ---------------------------------------------------------------- OPQ
@@ -1739,33 +1729,15 @@ object AnnIndex {
   final case class OpqHandle(rotation: DataFrame, codebook: DataFrame,
       codes: DataFrame, vecs: DataFrame, numSub: Int, ksub: Int)
 
-  private def opqBase(spark: SparkSession, tag: String) =
-    s"${annBase(spark)}/graft_ann_opq_$tag"
-
-  private def opqRegistered(spark: SparkSession, tag: String): Boolean =
-    Seq("rotation", "codebook", "codes", "vecs").forall(t =>
-      spark.catalog.tableExists(s"graft_opq_${t}_$tag"))
-
-  private def attachOpq(spark: SparkSession, tag: String,
-      storageBuckets: Int): Unit = {
-    val base = opqBase(spark, tag)
-    Seq("rotation", "codebook", "codes", "vecs").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_opq_${t}_$tag"))
-    registerExternal(spark, s"graft_opq_rotation_$tag", s"$base/rotation")
-    registerExternal(spark, s"graft_opq_codebook_$tag", s"$base/codebook")
-    registerExternal(spark, s"graft_opq_codes_$tag", s"$base/codes",
-      clusteredBy = Some(("vec_id", storageBuckets)))
-    registerExternal(spark, s"graft_opq_vecs_$tag", s"$base/vecs",
-      clusteredBy = Some(("vec_id", storageBuckets)))
+  /** `verb`'s flat handle at `c`, with the stored rotation and codebook. */
+  private def servedOpq(spark: SparkSession, sourceDir: String, c: Opq)(
+      verb: Opq => CodesHandle): OpqHandle = {
+    val h = verb(c)
+    val base = flatLayout(c, spark, sourceDir).base
+    OpqHandle(ParquetIO.read(spark, s"$base/rotation"),
+      ParquetIO.read(spark, s"$base/codebook"), h.codes, h.vecs,
+      c.pq.numSub, c.pq.ksub)
   }
-
-  private def opqHandle(spark: SparkSession, tag: String,
-      meta: Map[String, Long]): OpqHandle =
-    OpqHandle(spark.table(s"graft_opq_rotation_$tag"),
-      spark.table(s"graft_opq_codebook_$tag"),
-      spark.table(s"graft_opq_codes_$tag"),
-      spark.table(s"graft_opq_vecs_$tag"),
-      meta("num_sub").toInt, meta("ksub").toInt)
 
   /** The stored rotation as a [[SimilaritySearch.RotationModel]] —
     * d rows collected (bounded model artifact, the collectCodebook
@@ -1786,12 +1758,36 @@ object AnnIndex {
       rows.map(_.getDouble(2)), d)
   }
 
-  /** Build (or reuse) the persisted OPQ layout: fit the rotation (ONE
-    * second-moment pass + driver Jacobi), persist it FIRST, then train
-    * and encode PQ over vectors rotated by the JUST-PERSISTED model
-    * (the ensurePq crash-consistency rule: codes and stored model can
-    * never diverge). Codes carry the rotated norm; `vecs` stores the
-    * original floats.
+  /** Fit OPQ's rotation on `index` (ONE second-moment pass + driver
+    * Jacobi) and write it to `dir`, one file, its rows permuted by
+    * parametric-OPQ eigenvalue allocation so per-subspace variance
+    * balances — a bare PCA rotation CONCENTRATES energy into subspace
+    * 0 and makes PQ worse (Ge et al. §4; AnnTune `opq` measures both).
+    */
+  private def writeRotation(index: DataFrame, numSub: Int,
+      dir: String): Unit = {
+    import index.sparkSession.implicits._
+    val model = SimilaritySearch.rotationModel(index)
+    val d = model.dim
+    val order = SimilaritySearch.balancedOrder(model.eigvals, numSub)
+    (0 until d).map { r =>
+      val src = order(r)
+      (r, model.rot.slice(src * d, (src + 1) * d).toSeq, model.eigvals(src))
+    }.toDF("row_idx", "vals", "eig")
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
+  }
+
+  /** `df` with `vecCol` rotated by the stored `rotation`, as floats. */
+  private def rotated(df: DataFrame, rotation: DataFrame,
+      vecCol: String = "embedding"): DataFrame =
+    SimilaritySearch.rotate(df, loadRotation(rotation), vecCol)
+      .withColumn(vecCol, col(vecCol).cast("array<float>"))
+
+  /** Build (or reuse) the persisted OPQ layout: fit the rotation,
+    * persist it FIRST, then train and encode PQ over vectors rotated by
+    * the JUST-PERSISTED model (the ensurePq crash-consistency rule:
+    * codes and stored model can never diverge). Codes carry the rotated
+    * norm; `vecs` stores the original floats.
     */
   def ensureOpq(
       spark: SparkSession,
@@ -1801,113 +1797,25 @@ object AnnIndex {
       ksub: Int = 64,
       iters: Int = 2,
       storageBuckets: Int = 8,
-      snapshotId: Option[String] = None): OpqHandle = {
-    import graft.operators.SimilaritySearch
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = opqBase(spark, tag)
-    val dirs = Seq(s"$base/rotation", s"$base/codebook", s"$base/codes",
-      s"$base/vecs")
-    def opFresh(meta: Map[String, Long]): Boolean =
-      meta.get("buckets").contains(storageBuckets.toLong) &&
-        meta.get("num_sub").contains(numSub.toLong) &&
-        meta.get("ksub").contains(ksub.toLong) &&
-        meta.get("iters").contains(iters.toLong)
-    val snapFresh = snapshotId.exists { id =>
-      readMetaStrs(base).get("snapshot_id").contains(id) &&
-        opFresh(readMeta(base))
-    }
-    if (snapFresh && servable(spark, dirs, opqRegistered(spark, tag),
-        () => attachOpq(spark, tag, storageBuckets)))
-      return opqHandle(spark, tag, readMeta(base))
-    val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
-    val metaFresh = {
-      val meta = readMeta(base)
-      opFresh(meta) && meta.get("n_rows").contains(n) &&
-        meta.get("checksum").contains(fp)
-    } && servable(spark, dirs, opqRegistered(spark, tag),
-      () => attachOpq(spark, tag, storageBuckets))
-    if (!metaFresh) {
-      import graft.functions.expressions.PqExpressions.pq_encode
-      import spark.implicits._
-      val model = SimilaritySearch.rotationModel(
-        index.select("vec_id", "embedding"))
-      val d = model.dim
-      // parametric-OPQ eigenvalue allocation: permute the rotation's
-      // rows so per-subspace variance balances — a bare PCA rotation
-      // CONCENTRATES energy into subspace 0 and makes PQ worse (Ge et
-      // al. §4; AnnTune `opq` measures both variants)
-      val order = SimilaritySearch.balancedOrder(model.eigvals, numSub)
-      spark.sql(s"DROP TABLE IF EXISTS graft_opq_rotation_$tag")
-      (0 until d).map { r =>
-        val src = order(r)
-        (r, model.rot.slice(src * d, (src + 1) * d).toSeq,
-          model.eigvals(src))
-      }
-        .toDF("row_idx", "vals", "eig")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/rotation")
-        .format("parquet").saveAsTable(s"graft_opq_rotation_$tag")
-      // rotate with the JUST-PERSISTED model; train + encode on the
-      // rotated frame
-      val stored = loadRotation(spark.table(s"graft_opq_rotation_$tag"))
-      val rotated = SimilaritySearch.rotate(
-          index.select("vec_id", "embedding"), stored)
-        .withColumn("embedding", col("embedding").cast("array<float>"))
-        .localCheckpoint(true)
-      val cb = SimilaritySearch.pqCodebooks(rotated, numSub, ksub, iters)
-      spark.sql(s"DROP TABLE IF EXISTS graft_opq_codebook_$tag")
-      cb.write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/codebook")
-        .format("parquet").saveAsTable(s"graft_opq_codebook_$tag")
-      val flat = SimilaritySearch.collectCodebook(
-        spark.table(s"graft_opq_codebook_$tag"), numSub, ksub)
-      spark.sql(s"DROP TABLE IF EXISTS graft_opq_codes_$tag")
-      writeBucketed(rotated.select(col("vec_id"),
-          pq_encode(col("embedding"), flat, numSub, ksub).as("pqcodes"),
-          graft.functions.VectorOps.l2Norm(col("embedding")).as("pnorm")),
-        s"graft_opq_codes_$tag", "vec_id", storageBuckets, Some(s"$base/codes"))
-      spark.sql(s"DROP TABLE IF EXISTS graft_opq_vecs_$tag")
-      writeBucketed(index.select("vec_id", "embedding"),
-        s"graft_opq_vecs_$tag", "vec_id", storageBuckets, Some(s"$base/vecs"))
-    }
-    if (!metaFresh || snapshotId.isDefined)
-      writeMetaFull(base,
-        Seq("buckets" -> storageBuckets.toLong, "num_sub" -> numSub.toLong,
-          "ksub" -> ksub.toLong, "iters" -> iters.toLong,
-          "n_rows" -> n, "checksum" -> fp),
-        snapshotId.map("snapshot_id" -> _).toSeq)
-    opqHandle(spark, tag, readMeta(base))
-  }
+      snapshotId: Option[String] = None): OpqHandle =
+    servedOpq(spark, sourceDir, Opq(Pq(numSub, ksub, iters, "iters")))(
+      ensureFlat(_, spark, sourceDir, index, storageBuckets, snapshotId))
 
   /** True iff a persisted OPQ layout exists at the operating point
     * (meta check only — the ivfExists contract).
     */
   def opqExists(spark: SparkSession, sourceDir: String,
-      numSub: Int = 16, ksub: Int = 64): Boolean = {
-    val meta = readMeta(opqBase(spark, IndexStore.pathTag(sourceDir)))
-    meta.get("num_sub").contains(numSub.toLong) &&
-      meta.get("ksub").contains(ksub.toLong)
-  }
+      numSub: Int = 16, ksub: Int = 64): Boolean =
+    existsFlat(Opq(Pq(numSub, ksub, 0, "iters")), spark, sourceDir,
+      Seq("num_sub" -> numSub.toLong, "ksub" -> ksub.toLong))
 
   /** Open an existing persisted OPQ index read-only (no freshness
     * probe — the openSq8 contract).
     */
-  def openOpq(spark: SparkSession, sourceDir: String): OpqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = opqBase(spark, tag)
-    val meta = readMeta(base)
-    require(meta.contains("num_sub"),
-      s"no persisted OPQ index for '$sourceDir' ($base)")
-    require(Seq("rotation", "codebook", "codes", "vecs")
-        .forall(d => parquetReadable(spark, s"$base/$d")),
-      s"persisted OPQ layout for '$sourceDir' is unreadable — run " +
-        "ensureOpq to rebuild")
-    if (!opqRegistered(spark, tag))
-      attachOpq(spark, tag, meta("buckets").toInt)
-    else Seq("rotation", "codebook", "codes", "vecs").foreach(t =>
-      spark.catalog.refreshTable(s"graft_opq_${t}_$tag"))
-    opqHandle(spark, tag, meta)
-  }
+  def openOpq(spark: SparkSession, sourceDir: String): OpqHandle =
+    servedOpq(spark, sourceDir,
+      Opq(storedFlatPq(spark, sourceDir, Opq(Pq(0, 0, 0)))))(
+      openFlat(_, spark, sourceDir))
 
   /** Query the persisted OPQ index: queries rotate through the STORED
     * model (per-row mat-vec, model as literal — the serve-time half of
@@ -1921,28 +1829,10 @@ object AnnIndex {
       handle: OpqHandle,
       k: Int = 4,
       m: Int = 64): DataFrame = {
-    import graft.functions.expressions.PqExpressions.{pq_adc_dot, pq_table}
-    import graft.functions.expressions.TopKAgg.top_k
-    import graft.operators.SimilaritySearch
     require(m >= k, s"candidate count m ($m) must be >= k ($k)")
-    val model = loadRotation(handle.rotation)
-    val rq = SimilaritySearch.rotate(queries, model, "query_vec")
-      .withColumn("query_vec", col("query_vec").cast("array<float>"))
-    val flat = SimilaritySearch.collectCodebook(handle.codebook,
-      handle.numSub, handle.ksub)
-    val qt = broadcast(rq.select(col("query_id"),
-      pq_table(col("query_vec"), flat, handle.numSub, handle.ksub)
-        .as("adc"),
-      graft.functions.VectorOps.l2Norm(col("query_vec")).as("qqnorm")))
-    val cand = handle.codes.crossJoin(qt)
-      .withColumn("ascore",
-        when(col("pnorm") * col("qqnorm") === 0.0, lit(0.0))
-          .otherwise(pq_adc_dot(col("pqcodes"), col("adc"))
-            / (col("pnorm") * col("qqnorm"))))
-      .groupBy("query_id")
-      .agg(top_k(col("ascore"), col("vec_id"), m).as("topk"))
-      .select(col("query_id"), explode(col("topk.id")).as("vec_id"))
-    SimilaritySearch.rerank(cand, queries, handle.vecs, k)
+    SimilaritySearch.rerank(adcCandidates(
+      rotated(queries, handle.rotation, "query_vec"), handle.codebook,
+      handle.codes, handle.numSub, handle.ksub, m), queries, handle.vecs, k)
   }
 
   /** Persisted OPQ∘IVF-PQ — the full faiss production factory string
@@ -1959,8 +1849,8 @@ object AnnIndex {
   final case class OpqIvfPqHandle(rotation: DataFrame,
       inner: IvfPqHandle, innerKey: String)
 
-  private def opqIvfPqBase(spark: SparkSession, tag: String) =
-    s"${annBase(spark)}/graft_ann_opqivfpq_$tag"
+  private def opqIvfPqBase(spark: SparkSession, sourceDir: String) =
+    s"${annBase(spark)}/graft_ann_opqivfpq_${IndexStore.pathTag(sourceDir)}"
 
   /** The derived key the inner rotated IVF-PQ layout lives under. */
   def opqIvfPqInnerKey(sourceDir: String): String = s"$sourceDir#opqrot"
@@ -1975,10 +1865,7 @@ object AnnIndex {
       ksub: Int = 64,
       pqIters: Int = 2,
       storageBuckets: Int = 8): OpqIvfPqHandle = {
-    import graft.operators.SimilaritySearch
-    import spark.implicits._
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = opqIvfPqBase(spark, tag)
+    val base = opqIvfPqBase(spark, sourceDir)
     val innerKey = opqIvfPqInnerKey(sourceDir)
     val (n, fp) = fingerprint(index.select("vec_id", "embedding"))
     val meta = readMeta(base)
@@ -1998,42 +1885,28 @@ object AnnIndex {
       // corpus would reuse a layout serving survivors only
       ivfPqMeta(spark, innerKey).get("tomb_rows").forall(_ == 0L)
     if (!fresh) {
-      val model = SimilaritySearch.rotationModel(
-        index.select("vec_id", "embedding"))
-      val d = model.dim
-      val order = SimilaritySearch.balancedOrder(model.eigvals, numSub)
-      val side = s"$base/rotation__build_${ProcessHandle.current.pid}"
-      (0 until d).map { r =>
-        val src = order(r)
-        (r, model.rot.slice(src * d, (src + 1) * d).toSeq,
-          model.eigvals(src))
-      }.toDF("row_idx", "vals", "eig")
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(side)
-      val rotDir = Paths.get(base, "rotation")
-      if (Files.exists(rotDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(rotDir.toFile)
-      Files.move(Paths.get(side), rotDir)
-      val stored = loadRotation(ParquetIO.read(spark, s"$base/rotation"))
-      val rotated = SimilaritySearch.rotate(
-          index.select("vec_id", "embedding"), stored)
-        .withColumn("embedding", col("embedding").cast("array<float>"))
+      // un-name the outer (its checksum, as upsertOpqIvfPq does) and
+      // inner content before the rotation is replaced
+      if (meta.nonEmpty) writeMetaFull(base, (meta - "checksum").toSeq, Nil)
+      unnameContent(ivfLayout(Pq(0, 0, 0), spark, innerKey).base)
+      val rows = index.select("vec_id", "embedding")
+      writeRotation(rows, numSub, s"$base/rotation")
+      val rot = rotated(rows, ParquetIO.read(spark, s"$base/rotation"))
         .localCheckpoint(true)
-      ensureIvfPq(spark, innerKey, rotated, lists = lists,
+      ensureIvfPq(spark, innerKey, rot, lists = lists,
         iters = iters, numSub = numSub, ksub = ksub, pqIters = pqIters,
         storageBuckets = storageBuckets)
       writeMetaFull(base,
         Seq("lists" -> lists.toLong, "num_sub" -> numSub.toLong,
           "ksub" -> ksub.toLong, "n_rows" -> n, "checksum" -> fp), Nil)
     }
-    OpqIvfPqHandle(ParquetIO.read(spark, s"$base/rotation"),
-      openIvfPq(spark, innerKey), innerKey)
+    openOpqIvfPq(spark, sourceDir)
   }
 
   /** Open without a freshness probe (the openSq8 contract). */
   def openOpqIvfPq(spark: SparkSession,
       sourceDir: String): OpqIvfPqHandle = {
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = opqIvfPqBase(spark, tag)
+    val base = opqIvfPqBase(spark, sourceDir)
     require(readMeta(base).contains("num_sub") &&
       parquetReadable(spark, s"$base/rotation"),
       s"no persisted OPQ-IVF-PQ index for '$sourceDir' ($base)")
@@ -2046,7 +1919,7 @@ object AnnIndex {
       lists: Int = 64, numSub: Int = 16, ksub: Int = 64,
       iters: Int = 5, pqIters: Int = 2,
       storageBuckets: Int = 8): Boolean = {
-    val meta = readMeta(opqIvfPqBase(spark, IndexStore.pathTag(sourceDir)))
+    val meta = readMeta(opqIvfPqBase(spark, sourceDir))
     meta.get("lists").contains(lists.toLong) &&
       meta.get("num_sub").contains(numSub.toLong) &&
       meta.get("ksub").contains(ksub.toLong) &&
@@ -2070,13 +1943,9 @@ object AnnIndex {
       handle: OpqIvfPqHandle,
       k: Int = 4,
       nProbe: Int = 24,
-      m: Int = 64): DataFrame = {
-    import graft.operators.SimilaritySearch
-    val model = loadRotation(handle.rotation)
-    val rq = SimilaritySearch.rotate(queries, model, "query_vec")
-      .withColumn("query_vec", col("query_vec").cast("array<float>"))
-    queryIvfPq(rq, handle.inner, k, nProbe, m)
-  }
+      m: Int = 64): DataFrame =
+    queryIvfPq(rotated(queries, handle.rotation, "query_vec"), handle.inner,
+      k, nProbe, m)
 
   /** Incremental add through the COMPOSED layout (round-15 — it was
     * the one accumulating family without an outer upsert verb, so
@@ -2107,9 +1976,7 @@ object AnnIndex {
       sourceDir: String,
       newVecs: DataFrame,
       batchId: Option[Long] = None): OpqIvfPqHandle = {
-    import graft.operators.SimilaritySearch
-    val tag = IndexStore.pathTag(sourceDir)
-    val base = opqIvfPqBase(spark, tag)
+    val base = opqIvfPqBase(spark, sourceDir)
     val meta = readMeta(base)
     require(meta.contains("num_sub") &&
       parquetReadable(spark, s"$base/rotation"),
@@ -2119,11 +1986,8 @@ object AnnIndex {
     val replayed = batchId.exists(id =>
       ivfPqMeta(spark, innerKey).get("last_batch_id").exists(id <= _))
     if (replayed) return openOpqIvfPq(spark, sourceDir)
-    val model = loadRotation(ParquetIO.read(spark, s"$base/rotation"))
-    val rotated = SimilaritySearch.rotate(
-        newVecs.select("vec_id", "embedding"), model)
-      .withColumn("embedding", col("embedding").cast("array<float>"))
-      .localCheckpoint(true)
+    val rot = rotated(newVecs.select("vec_id", "embedding"),
+      ParquetIO.read(spark, s"$base/rotation")).localCheckpoint(true)
     val (nNew, fpNew) = fingerprint(newVecs.select("vec_id", "embedding"))
     // invalidate-before-append: a checksum-less outer meta is
     // un-matchable by ensure, so every crash point below forces the
@@ -2131,7 +1995,7 @@ object AnnIndex {
     // the outer fingerprint
     val fpOld = meta.get("checksum")
     writeMetaFull(base, (meta - "checksum").toSeq, Nil)
-    upsertIvfPq(spark, innerKey, rotated, batchId)
+    upsertIvfPq(spark, innerKey, rot, batchId)
     writeMetaFull(base,
       (meta - "n_rows" - "checksum").toSeq ++
         Seq("n_rows" -> (meta("n_rows") + nNew)) ++
@@ -2162,7 +2026,7 @@ object AnnIndex {
       sourceDir: String,
       ids: DataFrame,
       batchId: Option[Long] = None): OpqIvfPqHandle = {
-    val base = opqIvfPqBase(spark, IndexStore.pathTag(sourceDir))
+    val base = opqIvfPqBase(spark, sourceDir)
     val meta = readMeta(base)
     require(meta.contains("num_sub"),
       s"deleteOpqIvfPq needs an existing OPQ-IVF-PQ layout for " +
@@ -2359,9 +2223,11 @@ object AnnIndex {
     */
   private def existsIvfCodes(c: IvfCodec, spark: SparkSession,
       sourceDir: String, lists: Int, iters: Int,
-      storageBuckets: Int): Boolean =
-    atPoint(readMeta(ivfLayout(c, spark, sourceDir).base),
-      ivfPoint(c, lists, iters, storageBuckets))
+      storageBuckets: Int): Boolean = {
+    val l = ivfLayout(c, spark, sourceDir)
+    val meta = readMeta(l.base)
+    l.built(meta) && atPoint(meta, ivfPoint(c, lists, iters, storageBuckets))
+  }
 
   private def openIvfCodes(c: IvfCodec, spark: SparkSession,
       sourceDir: String): IvfCodesHandle = {
@@ -2737,9 +2603,7 @@ object AnnIndex {
     */
   private def atStoredPq(spark: SparkSession, sourceDir: String)(
       verb: Pq => IvfCodesHandle): IvfPqHandle = {
-    val meta = ivfPqMeta(spark, sourceDir)
-    def at(k: String) = meta.getOrElse(k, 0L).toInt
-    val c = Pq(at("num_sub"), at("ksub"), at("pq_iters"))
+    val c = storedPq(ivfPqMeta(spark, sourceDir), "pq_iters")
     ivfPqServed(spark, c, sourceDir, verb(c))
   }
 

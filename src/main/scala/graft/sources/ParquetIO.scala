@@ -2,7 +2,9 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
+  StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Driver-side parquet schema plumbing for the engine's OWN store
   * layouts (guide §6: metadata work is driver-side, single-process —
@@ -108,6 +110,31 @@ private[graft] object ParquetIO {
         spark.read.schema(StructType(s.fields ++ partCols)).parquet(dir)
       case None => spark.read.parquet(dir)
     }
+  }
+
+  /** The type partition discovery infers for the partition column
+    * `column` of the layout at `dir`, from its `column=value` dir names
+    * alone (no job): int when every value parses as one, else long when
+    * every value does — discovery's first two tries, widened across
+    * dirs the same way. None for any other value shape, for no such dir
+    * and with type inference off; the caller then reads the schema the
+    * inferring way.
+    */
+  private[sources] def partitionType(spark: SparkSession, dir: String,
+      column: String): Option[DataType] = {
+    val d = Paths.get(AnnIndex.normalizePath(dir))
+    if (!spark.sessionState.conf.partitionColumnTypeInferenceEnabled ||
+        !Files.isDirectory(d)) return None
+    val s = Files.list(d)
+    val values =
+      try s.iterator.asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(s"$column=")).map(_.drop(column.length + 1))
+        .toList
+      finally s.close()
+    if (values.isEmpty) None
+    else if (values.forall(_.toIntOption.isDefined)) Some(IntegerType)
+    else if (values.forall(_.toLongOption.isDefined)) Some(LongType)
+    else None
   }
 
   /** True iff `dir` holds at least one readable parquet footer — the

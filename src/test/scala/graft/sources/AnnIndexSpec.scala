@@ -503,41 +503,51 @@ class AnnIndexSpec extends AnyFunSuite {
 
   // the IVF codec layouts' crash window: per layout the dirs a crashed
   // compaction (or a lost model dir) leaves missing, and its ensure +
-  // query reduced to the answers served
+  // query reduced to the answers served; flat PQ and OPQ (no upsert
+  // verb) lose their model dirs
   (ivfCodecs.map(c => (c.label, c.stem, Seq("lists"),
       (src: String) => hits(c.query(c.qs(), c.ensure(src, c.rows()))),
       (src: String) => c.open(src),
-      (src: String) => c.upsert(src, c.rows().filter(col("vec_id") === 0L)
+      Option((src: String) => c.upsert(src, c.rows()
+        .filter(col("vec_id") === 0L)
         .select((col("vec_id") + 990000L).as("vec_id"), col("embedding")),
-        None))) :+
+        None)))) :+
     (("IVF-PQ", "ivfpq", Seq("lists", "codebook"),
       (src: String) => hits(AnnIndex.queryIvfPq(queries,
         AnnIndex.ensureIvfPq(spark, src, emb, lists = 8, iters = 2),
         k = 4, nProbe = 3, m = 64)),
       (src: String) => AnnIndex.openIvfPq(spark, src),
-      (src: String) => AnnIndex.upsertIvfPq(spark, src,
+      Option((src: String) => AnnIndex.upsertIvfPq(spark, src,
         emb.filter(col("vec_id") === 0L)
           .select((col("vec_id") + 990000L).as("vec_id"),
-            col("embedding"))))) :+
+            col("embedding")))))) :+
     (("IVF", "ivf", Seq("lists"),
       (src: String) => hits(AnnIndex.queryIvf(queries,
         AnnIndex.ensureIvf(spark, src, emb, lists = 8, iters = 2),
         k = 4, nProbe = 3)),
       (src: String) => AnnIndex.openIvf(spark, src),
-      (src: String) => AnnIndex.upsertIvf(spark, src,
+      Option((src: String) => AnnIndex.upsertIvf(spark, src,
         emb.filter(col("vec_id") === 0L)
           .select((col("vec_id") + 990000L).as("vec_id"), col("embedding")),
-        lists = 8, iters = 2)))
+        lists = 8, iters = 2)))) :+
+    (("PQ", "pq", Seq("codebook"),
+      (src: String) => hits(AnnIndex.queryPq(queries,
+        AnnIndex.ensurePq(spark, src, emb, ksub = 16), k = 4, m = 64)),
+      (src: String) => AnnIndex.openPq(spark, src), None)) :+
+    (("OPQ", "opq", Seq("codebook", "rotation"),
+      (src: String) => hits(AnnIndex.queryOpq(queries,
+        AnnIndex.ensureOpq(spark, src, emb, ksub = 16), k = 4, m = 64)),
+      (src: String) => AnnIndex.openOpq(spark, src), None))
   ).foreach { case (label, stem, lost, serve, open, upsert) =>
     test(s"a crashed $label layout (${lost.mkString(" + ")} missing under " +
-        "a matching meta) fails open and upsert loudly and is recovered " +
-        "by ensure as a rebuild") {
+        "a matching meta) fails open" + upsert.fold("")(_ => " and upsert") +
+        " loudly and is recovered by ensure as a rebuild") {
       val src = s"spec-$runTag-${stem}m"
       val expected = serve(src)
       val base = s"/tmp/graft_ann_${stem}_${IndexStore.pathTag(src)}"
       lost.foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(
         java.nio.file.Paths.get(base, d).toFile))
-      Seq(open, upsert).foreach { verb =>
+      (open +: upsert.toSeq).foreach { verb =>
         val e = intercept[IllegalArgumentException] { verb(src) }
         assert(e.getMessage.contains("unreadable"))
       }
@@ -781,8 +791,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // a mismatched operating point is a rebuild, not a silent reuse
     val h3 = AnnIndex.ensurePq(spark, src, half, numSub = 8, ksub = 16)
     assert(h3.numSub === 8)
-    assert(spark.table(s"graft_pq_codebook_${IndexStore.pathTag(src)}")
-      .count() === 8L * 16)
+    assert(h3.codebook.count() === 8L * 16)
   }
 
   test("persisted IVF-PQ equals the in-memory composed path; upsert " +
@@ -1722,5 +1731,122 @@ class AnnIndexSpec extends AnyFunSuite {
         (src, ids) => AnnIndex.deleteIvf(spark, src, ids,
           batchId = Some(3L)),
         src => AnnIndex.compactIvf(spark, src))))
+  }
+
+  // flat PQ and OPQ have no upsert, delete or compact verb: their meta
+  // format is pinned across the ensures alone — a fresh ensure under a
+  // new snapshot id records the id, a rebuild at a new point drops it
+  Seq[(String, (String, Int, Int, Option[String]) => Any)](
+    ("pq", (src, numSub, sb, snap) => AnnIndex.ensurePq(spark, src, emb,
+      numSub = numSub, ksub = 16, storageBuckets = sb, snapshotId = snap)),
+    ("opq", (src, numSub, sb, snap) => AnnIndex.ensureOpq(spark, src, emb,
+      numSub = numSub, ksub = 16, storageBuckets = sb, snapshotId = snap))
+  ).foreach { case (stem, ensure) =>
+    test(s"$stem meta format across ensure(snapshotId) → ensure(same " +
+        "content, new snapshot id) → ensure at a new point") {
+      val src = s"spec-$runTag-meta-$stem"
+      val at = s"/tmp/graft_ann_${stem}_${IndexStore.pathTag(src)}"
+      val (n, fp) = AnnIndex.fingerprint(emb)
+      def pin(verb: String, num: Map[String, Long],
+          str: Map[String, String]): Unit = {
+        assert(AnnIndex.readMeta(at) === num, s"$stem $verb")
+        assert(AnnIndex.readMetaStrs(at) === str, s"$stem $verb")
+      }
+      def point(numSub: Long, sb: Long) = Map("buckets" -> sb,
+        "num_sub" -> numSub, "ksub" -> 16L, "iters" -> 2L, "n_rows" -> n,
+        "checksum" -> fp)
+      ensure(src, 16, 4, Some("v1"))
+      pin("ensure", point(16, 4), Map("snapshot_id" -> "v1"))
+      ensure(src, 16, 4, Some("v2"))
+      pin("ensure-fresh", point(16, 4), Map("snapshot_id" -> "v2"))
+      ensure(src, 8, 2, None)
+      pin("ensure-rebuild", point(8, 2), Map.empty)
+    }
+  }
+
+  /** Run `body`, cancelling every Spark job it starts once `dir` holds a
+    * `.parquet` file it did not hold before: a build interrupted right
+    * after it replaced that dir. `body` must fail.
+    */
+  private def interruptedAfterReplacing(dir: String)(body: => Any): Unit = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    def files: Set[String] = {
+      val d = java.nio.file.Paths.get(dir)
+      if (!java.nio.file.Files.isDirectory(d)) Set.empty
+      else {
+        val s = java.nio.file.Files.list(d)
+        try s.iterator.asScala.map(_.getFileName.toString)
+          .filter(_.endsWith(".parquet")).toSet
+        finally s.close()
+      }
+    }
+    val before = files
+    val sc = spark.sparkContext
+    val mark = java.util.UUID.randomUUID.toString
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.torn") ==
+            mark) && (files -- before).nonEmpty) sc.cancelJob(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.torn", mark)
+    try intercept[Exception](body)
+    finally {
+      sc.setLocalProperty("graft.torn", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  // a rebuild interrupted right after it replaced a model dir: until the
+  // rebuild commits, the stored meta must not name the content it held
+  // before, or an ensure over that earlier source reuses the new model
+  // over the old data — and open must refuse the torn layout
+  Seq[(String, String, String, (String, DataFrame) => Any, String => Any)](
+    ("IVF", "ivf", "centroids",
+      (src, rows) => AnnIndex.ensureIvf(spark, src, rows, lists = 8,
+        iters = 2),
+      src => AnnIndex.openIvf(spark, src)),
+    ("IVF-SQ8", "ivfsq8", "centroids",
+      (src, rows) => AnnIndex.ensureIvfSq8(spark, src, rows, lists = 8,
+        iters = 2),
+      src => AnnIndex.openIvfSq8(spark, src)),
+    ("IVF-BQ", "ivfbq", "centroids",
+      (src, rows) => AnnIndex.ensureIvfBq(spark, src, rows, lists = 8,
+        iters = 2),
+      src => AnnIndex.openIvfBq(spark, src)),
+    ("IVF-PQ", "ivfpq", "codebook",
+      (src, rows) => AnnIndex.ensureIvfPq(spark, src, rows, lists = 8,
+        iters = 2, ksub = 16),
+      src => AnnIndex.openIvfPq(spark, src)),
+    ("PQ", "pq", "codebook",
+      (src, rows) => AnnIndex.ensurePq(spark, src, rows, ksub = 16),
+      src => AnnIndex.openPq(spark, src)),
+    ("OPQ", "opq", "rotation",
+      (src, rows) => AnnIndex.ensureOpq(spark, src, rows, ksub = 16),
+      src => AnnIndex.openOpq(spark, src)),
+    ("OPQ∘IVF-PQ", "opqivfpq", "rotation",
+      (src, rows) => AnnIndex.ensureOpqIvfPq(spark, src, rows, lists = 8,
+        iters = 2, ksub = 16),
+      src => AnnIndex.openOpqIvfPq(spark, src))
+  ).foreach { case (label, stem, model, ensure, open) =>
+    test(s"$label: a rebuild interrupted after it replaced `$model` is " +
+        "not reused as fresh by an ensure over the earlier source, and " +
+        "open refuses it") {
+      val src = s"spec-$runTag-torn-$stem"
+      val dir = s"/tmp/graft_ann_${stem}_${IndexStore.pathTag(src)}/$model"
+      def stored = spark.read.parquet(dir).collect().map(_.toString)
+        .sorted.toSeq
+      ensure(src, emb)
+      val trained = stored
+      interruptedAfterReplacing(dir)(
+        ensure(src, emb.filter(col("vec_id") % 2 === 0)))
+      val torn = scala.util.Try(open(src))
+      ensure(src, emb)
+      assert(stored === trained,
+        s"the $model of the interrupted rebuild was reused")
+      assert(torn.failed.toOption.exists(
+        _.isInstanceOf[IllegalArgumentException]), torn)
+    }
   }
 }

@@ -155,33 +155,42 @@ class CatalogHygieneSpec extends AnyFunSuite {
 
   /** The flat codec layouts: label, stem, and ensure / delete / upsert /
     * open verbs over a 64-row fixture (the upsert re-adds deleted id 5).
+    * PQ and OPQ have no delete or upsert verb.
     */
   private val flatCodecs = Seq[(String, String, String => Any,
-      String => Any, String => Any, String => Any)](
+      Option[String => Any], Option[String => Any], String => Any)](
     ("SQ8", "sq8",
       key => AnnIndex.ensureSq8(spark, key, vecs(64), storageBuckets = 2),
-      key => AnnIndex.deleteSq8(spark, key, Seq(5L).toDF("vec_id")),
-      key => AnnIndex.upsertSq8(spark, key,
-        vecs(64).filter(col("vec_id") === 5L), storageBuckets = 2),
+      Some(key => AnnIndex.deleteSq8(spark, key, Seq(5L).toDF("vec_id"))),
+      Some(key => AnnIndex.upsertSq8(spark, key,
+        vecs(64).filter(col("vec_id") === 5L), storageBuckets = 2)),
       key => AnnIndex.openSq8(spark, key)),
     ("BQ", "bq",
       key => AnnIndex.ensureBq(spark, key, vecs(64), storageBuckets = 2),
-      key => AnnIndex.deleteBq(spark, key, Seq(5L).toDF("vec_id")),
-      key => AnnIndex.upsertBq(spark, key,
-        vecs(64).filter(col("vec_id") === 5L), storageBuckets = 2),
+      Some(key => AnnIndex.deleteBq(spark, key, Seq(5L).toDF("vec_id"))),
+      Some(key => AnnIndex.upsertBq(spark, key,
+        vecs(64).filter(col("vec_id") === 5L), storageBuckets = 2)),
       key => AnnIndex.openBq(spark, key)),
     ("LSH", "lsh",
       key => AnnIndex.ensureLsh(spark, key, vecs(64), tables = 2, bits = 2,
         storageBuckets = 2),
-      key => AnnIndex.deleteLsh(spark, key, Seq(5L).toDF("vec_id")),
-      key => AnnIndex.upsertLsh(spark, key,
+      Some(key => AnnIndex.deleteLsh(spark, key, Seq(5L).toDF("vec_id"))),
+      Some(key => AnnIndex.upsertLsh(spark, key,
         vecs(64).filter(col("vec_id") === 5L), tables = 2, bits = 2,
+        storageBuckets = 2)),
+      key => AnnIndex.openLsh(spark, key)),
+    ("PQ", "pq",
+      key => AnnIndex.ensurePq(spark, key, vecs(64), numSub = 2, ksub = 4,
         storageBuckets = 2),
-      key => AnnIndex.openLsh(spark, key)))
+      None, None, key => AnnIndex.openPq(spark, key)),
+    ("OPQ", "opq",
+      key => AnnIndex.ensureOpq(spark, key, vecs(64), numSub = 2, ksub = 4,
+        storageBuckets = 2),
+      None, None, key => AnnIndex.openOpq(spark, key)))
 
   // the flat upserts re-derive the tombs registration before their
   // tombstone clash check, like the IVF ones below
-  flatCodecs.foreach { case (label, layout, ensure, delete, upsert, _) =>
+  for ((label, layout, ensure, Some(delete), Some(upsert), _) <- flatCodecs)
     test(s"$label upsert refuses an id tombstoned by another session") {
       val key = s"hyg-$runTag-$layout-fx"
       ensure(key)
@@ -191,13 +200,14 @@ class CatalogHygieneSpec extends AnyFunSuite {
       val e = intercept[IllegalArgumentException] { upsert(key) }
       assert(e.getMessage.contains("tombstoned"))
     }
-  }
 
   // the flat layouts share one open path: no DDL and no Spark job once
-  // the registration matches the store, tombstoned or not
+  // the registration matches the store, tombstoned or not (PQ and OPQ
+  // have no delete verb)
   flatCodecs.foreach { case (label, layout, ensure, delete, _, open) =>
     test(s"second open of the $label layout issues zero catalog DDL and " +
-        "runs zero Spark jobs — clean AND tombstoned") {
+        "runs zero Spark jobs — clean" +
+        delete.fold("")(_ => " AND tombstoned")) {
       val key = s"hyg-$runTag-$layout-fo"
       ensure(key)
       open(key)
@@ -205,12 +215,14 @@ class CatalogHygieneSpec extends AnyFunSuite {
       val evs = ddlDuring { jobs = jobsDuring(open(key)) }
       assert(evs.isEmpty, s"expected zero DDL, got: ${evs.mkString(", ")}")
       assert(jobs === 0)
-      delete(key)
-      open(key)
-      val evs2 = ddlDuring { jobs = jobsDuring(open(key)) }
-      assert(evs2.isEmpty,
-        s"tombstoned open did not stabilize: ${evs2.mkString(", ")}")
-      assert(jobs === 0)
+      delete.foreach { d =>
+        d(key)
+        open(key)
+        val evs2 = ddlDuring { jobs = jobsDuring(open(key)) }
+        assert(evs2.isEmpty,
+          s"tombstoned open did not stabilize: ${evs2.mkString(", ")}")
+        assert(jobs === 0)
+      }
     }
   }
 
@@ -297,6 +309,34 @@ class CatalogHygieneSpec extends AnyFunSuite {
       assert(evs2.isEmpty,
         s"tombstoned open did not stabilize: ${evs2.mkString(", ")}")
       assert(jobs === 0)
+    }
+  }
+
+  // a partitioned table re-attaches from the footer schema plus its
+  // partition column typed from the dir names (no inference job): the
+  // DDL must give the schema inference gives
+  Seq[(String, String, String, String => Any, String => Any)](
+    ("IVF", "graft_ann_ivf_%s/lists", "graft_ivf_lists_%s",
+      key => AnnIndex.ensureIvf(spark, key, vecs(64), lists = 4, iters = 2),
+      key => AnnIndex.openIvf(spark, key)),
+    ("IVF-PQ", "graft_ann_ivfpq_%s/lists", "graft_ivfpq_lists_%s",
+      key => AnnIndex.ensureIvfPq(spark, key, vecs(64), lists = 4,
+        iters = 2, numSub = 2, ksub = 4),
+      key => AnnIndex.openIvfPq(spark, key)),
+    ("PLAID", "graft_plaid_%s/lists", "graft_plaid_lists_%s",
+      key => PlaidIndex.ensurePlaid(spark, key, vecs(48)
+        .select((col("vec_id") / 3).cast("long").as("doc_id"), col("vec_id"),
+          col("embedding")), lists = 4, iters = 2),
+      key => PlaidIndex.openPlaid(spark, key))
+  ).foreach { case (label, dir, table, ensure, open) =>
+    test(s"the re-attached $label lists table has the inferred schema") {
+      val key = s"hyg-$runTag-$label-schema"
+      val tag = IndexStore.pathTag(key)
+      ensure(key)
+      spark.sql(s"DROP TABLE ${table.format(tag)}")
+      open(key)
+      assert(spark.table(table.format(tag)).schema === spark.read.parquet(
+        s"${AnnIndex.annBase(spark)}/${dir.format(tag)}").schema)
     }
   }
 }

@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** Driver of `tools/layoutcompat.py`: lays out (`build`) or drives
-  * (`ops`) a persisted LSH, SQ8 and float-IVF layout under `store`,
-  * printing after every verb one `JOBS` line (Spark jobs the verb ran),
-  * one `META` line (the layout's meta map, keys sorted) and one `ANS`
-  * line (a fixed query batch's answers over the returned handle).
+  * (`ops`) a persisted LSH, SQ8, float-IVF, PQ and OPQ layout under
+  * `store`, printing after every verb one `JOBS` line (Spark jobs the
+  * verb ran), one `META` line (the layout's meta map, keys sorted) and
+  * one `ANS` line (a fixed query batch's answers over the returned
+  * handle).
   *
   *     LayoutCompat {build|ops} <store dir> <data dir>
   *
@@ -60,7 +61,10 @@ object LayoutCompat {
     val lshKey = "layoutcompat-lsh"
     val sq8Key = "layoutcompat-sq8"
     val ivfKey = "layoutcompat-ivf"
-    val keys = Map("lsh" -> lshKey, "sq8" -> sq8Key, "ivf" -> ivfKey)
+    val pqKey = "layoutcompat-pq"
+    val opqKey = "layoutcompat-opq"
+    val keys = Map("lsh" -> lshKey, "sq8" -> sq8Key, "ivf" -> ivfKey,
+      "pq" -> pqKey, "opq" -> opqKey)
     def meta(stem: String): Unit = {
       val dir = Paths.get(store,
         s"graft_ann_${stem}_${graft.sources.IndexStore.pathTag(keys(stem))}")
@@ -94,6 +98,31 @@ object LayoutCompat {
       println(s"ANS ivf-$name lists=${r.lists.count()} " +
         s"centroids=${r.centroids.count()} ${rows.mkString(" ")}")
     }
+    def pq(name: String)(h: => AnnIndex.PqHandle): Unit = {
+      val r = step(s"pq-$name")(h)
+      meta("pq")
+      val rows = AnnIndex.queryPq(queries, r, k = 4, m = 32).collect()
+        .map(_.toString).sorted
+      println(s"ANS pq-$name vecs=${r.vecs.count()} " +
+        s"codes=${r.codes.count()} codebook=${r.codebook.count()} " +
+        s"numSub=${r.numSub} ksub=${r.ksub} ${rows.mkString(" ")}")
+    }
+    def opq(name: String)(h: => AnnIndex.OpqHandle): Unit = {
+      val r = step(s"opq-$name")(h)
+      meta("opq")
+      val rows = AnnIndex.queryOpq(queries, r, k = 4, m = 32).collect()
+        .map(_.toString).sorted
+      println(s"ANS opq-$name vecs=${r.vecs.count()} " +
+        s"codes=${r.codes.count()} codebook=${r.codebook.count()} " +
+        s"rotation=${r.rotation.count()} numSub=${r.numSub} " +
+        s"ksub=${r.ksub} ${rows.mkString(" ")}")
+    }
+    def ensurePq(numSub: Int, snap: Option[String]) =
+      AnnIndex.ensurePq(spark, pqKey, base, numSub = numSub, ksub = 16,
+        storageBuckets = 4, snapshotId = snap)
+    def ensureOpq(numSub: Int, snap: Option[String]) =
+      AnnIndex.ensureOpq(spark, opqKey, base, numSub = numSub, ksub = 16,
+        storageBuckets = 4, snapshotId = snap)
     def ensureIvf(rows: DataFrame, snap: Option[String]) =
       AnnIndex.ensureIvf(spark, ivfKey, rows, lists = 4, iters = 2,
         snapshotId = snap)
@@ -110,6 +139,8 @@ object LayoutCompat {
       sq8("build")(AnnIndex.ensureSq8(spark, sq8Key, base,
         storageBuckets = 4, snapshotId = Some("s1")))
       ivf("build")(ensureIvf(base, Some("s1")))
+      pq("build")(ensurePq(4, Some("s1")))
+      opq("build")(ensureOpq(4, Some("s1")))
     } else {
       lsh("open")(AnnIndex.openLsh(spark, lshKey))
       lsh("open-again")(AnnIndex.openLsh(spark, lshKey))
@@ -167,6 +198,19 @@ object LayoutCompat {
         ivfKey, base, tail, lists = 4, iters = 2))
       ivf("ensure-upserted-fresh")(AnnIndex.ensureIvfUpserted(spark,
         ivfKey, base, tail, lists = 4, iters = 2))
+      pq("open")(AnnIndex.openPq(spark, pqKey))
+      pq("open-again")(AnnIndex.openPq(spark, pqKey))
+      pq("ensure-fresh-snapshot")(ensurePq(4, Some("s1")))
+      pq("ensure-fresh-fingerprint")(ensurePq(4, Some("s2")))
+      pq("ensure-rebuild")(ensurePq(8, None))
+      opq("open")(AnnIndex.openOpq(spark, opqKey))
+      opq("open-again")(AnnIndex.openOpq(spark, opqKey))
+      opq("ensure-fresh-snapshot")(ensureOpq(4, Some("s1")))
+      opq("ensure-fresh-fingerprint")(ensureOpq(4, Some("s2")))
+      println("EXISTS opq " + AnnIndex.opqExists(spark, opqKey, numSub = 4,
+        ksub = 16) + " " + AnnIndex.opqExists(spark, opqKey, numSub = 8,
+        ksub = 16))
+      opq("ensure-rebuild")(ensureOpq(8, None))
     }
     spark.stop()
   }

@@ -1,24 +1,26 @@
 #!/usr/bin/env python3
-"""Layout compatibility of persisted LSH, SQ8 and float-IVF layouts.
+"""Layout compatibility of persisted LSH, SQ8, float-IVF, PQ and OPQ layouts.
 
     python3 tools/layoutcompat.py --parent HEAD
 
 Exports the parent's committed files with `git archive` into a work
 directory and compiles both sides with `perfbench/build.py`, then compiles
 the driver `tools/LayoutCompat.scala` against each. The parent's classes
-build an LSH, an SQ8 and a float-IVF layout; on two copies of that store
-the same verb sequence (open, ensure fresh by snapshot id and by
-fingerprint, upsert and its replay, delete and its replay, exists, a
-tombstone clash, compact, ensure rebuild, and ensureLshUpserted /
-ensureIvfUpserted, rebuild and fresh) runs once with the parent's classes
-and once with this tree's. After each verb `LayoutCompat` prints the
-Spark jobs it ran, the layout's meta map and the answers of a fixed query
-batch.
+build an LSH, an SQ8, a float-IVF, a PQ and an OPQ layout; on two copies
+of that store the same verb sequence runs once with the parent's classes
+and once with this tree's: for LSH, SQ8 and float IVF open, ensure fresh
+by snapshot id and by fingerprint, upsert and its replay, delete and its
+replay, exists, a tombstone clash, compact, ensure rebuild, and
+ensureLshUpserted / ensureIvfUpserted, rebuild and fresh; for PQ and OPQ
+(no upsert, delete or compact verb) open, ensure fresh by snapshot id and
+by fingerprint, opqExists and an ensure that rebuilds at a new point.
+After each verb `LayoutCompat` prints the Spark jobs it ran, the layout's
+meta map and the answers of a fixed query batch.
 
 Prints the jobs per verb of both sides and exits 0 when the two outputs are
 identical, else prints their unified diff and exits 1. No benchmark
-workload runs LSH or float IVF, so this is the end-to-end check for a
-change to their store verbs or to the shared codec lifecycles. `--keep
+workload runs LSH, float IVF, PQ or OPQ, so this is the end-to-end check
+for a change to their store verbs or to the shared codec lifecycles. `--keep
 DIR` works in DIR and keeps it (stores, outputs); by default a temporary
 directory is removed afterwards.
 """
