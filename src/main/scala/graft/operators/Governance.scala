@@ -35,10 +35,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one bounded `ids` set drives every leg; ANN deletes
   * append id-only tombstones (no layout rewrite), the store rewrites
-  * touch only the victims' hash buckets or ride the house side-dir
-  * swap. Nothing here scans a layout more than once, and the audit's
-  * membership checks are semi-joins of 8-byte ids against the served
-  * views.
+  * touch only the victims' hash buckets or ride a
+  * [[graft.sources.StoreFiles.swap]]. Nothing here scans a layout more
+  * than once, and the audit's membership checks are semi-joins of
+  * 8-byte ids against the served views.
   */
 object Governance {
 
@@ -390,13 +390,11 @@ object Governance {
       batchId: Long): DataFrame = {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
+    import graft.sources.StoreFiles
     val metaP = Paths.get(logDir, "_purgelog_meta.json")
-    val committed =
-      if (!Files.exists(metaP)) -1L
-      else "\"last_batch_id\"\\s*:\\s*(-?\\d+)".r
-        .findFirstMatchIn(Files.readString(metaP))
-        .map(_.group(1).toLong).getOrElse(throw new IllegalStateException(
-          s"purge log '$logDir': unparseable meta"))
+    val committed = StoreFiles.read(metaP).fold(-1L)(t =>
+      StoreFiles.required(StoreFiles.nums(t), "last_batch_id",
+        "purge log meta", metaP))
     if (batchId <= committed)
       return graft.sources.ParquetIO.read(spark, s"$logDir/audit")
         .filter(col("batch_id") === batchId)
@@ -422,13 +420,7 @@ object Governance {
     appendOnce(receipt, s"$logDir/receipt")
     appendOnce(auditDf.withColumn("batch_id", lit(batchId)),
       s"$logDir/audit")
-    Files.createDirectories(Paths.get(logDir))
-    val tmp = Paths.get(logDir,
-      s"_purgelog_meta.json.tmp${ProcessHandle.current.pid}")
-    Files.writeString(tmp, s"""{"last_batch_id": $batchId}""")
-    Files.move(tmp, metaP,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    StoreFiles.commit(metaP, "last_batch_id" -> batchId)
     auditDf
   }
 
@@ -611,10 +603,10 @@ object Governance {
   }
 
   /** Fold the one-file-set-per-batch append history of the purge log
-    * into few files per table — the [[graft.sources.DedupStore]]
-    * compactSeen recipe (side dir + rename swap; a crash inside a
-    * rename window loses that table's dir, which [[readPurgeLog]]
-    * fails loudly on — never a silently emptied audit trail).
+    * into few files per table, one [[graft.sources.StoreFiles.swap]]
+    * per table (a crash inside its rename window loses that table's
+    * dir, which [[readPurgeLog]] fails loudly on — never a silently
+    * emptied audit trail).
     * Compaction rewrites FILES, never records (the dropDuplicates
     * fold it applies is exactly what [[readPurgeLog]] applies on every
     * read); the meta and replay windows are untouched. Not safe
@@ -622,23 +614,17 @@ object Governance {
     */
   def compactPurgeLog(spark: SparkSession, logDir: String,
       numFiles: Int = 4): Unit = {
-    import java.nio.file.{Files, Paths}
-    def rm(p: String): Unit =
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
+    import graft.sources.StoreFiles
     Seq("roster", "receipt", "audit").foreach { t =>
       val live = s"$logDir/$t"
-      if (Files.exists(Paths.get(live))) {
+      if (java.nio.file.Files.exists(java.nio.file.Paths.get(live))) {
         val side = s"${live}__compact"
-        val garbage = s"$live" +
-          s"__garbage_${ProcessHandle.current.pid}"
-        rm(side)
+        StoreFiles.rm(side)
         graft.sources.ParquetIO.read(spark, live).dropDuplicates()
           .coalesce(numFiles)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(side)
-        Files.move(Paths.get(live), Paths.get(garbage))
-        Files.move(Paths.get(side), Paths.get(live))
-        rm(garbage)
+        StoreFiles.swap(live, side)
       }
     }
   }

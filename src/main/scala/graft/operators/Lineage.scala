@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.StoreFiles
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -69,23 +70,18 @@ object Lineage {
   private def readManifestFull(storeDir: String)
       : (Long, BigInt, Long, Long, BigInt) = {
     val p = metaPath(storeDir)
-    if (!java.nio.file.Files.exists(p))
-      return (0L, BigInt(0), -1L, 0L, BigInt(0))
-    val s = java.nio.file.Files.readString(p)
-    // a manifest documented as EXACT provenance must fail LOUDLY on a
-    // missing/garbled field — defaulting to "0" would silently re-fold
-    // earlier batches (last_batch_id=0) and corrupt the running totals
-    def field(k: String): String = {
-      val m = ("\"" + k + "\"\\s*:\\s*\"?([-0-9]+)\"?").r
-      m.findFirstMatchIn(s).map(_.group(1)).getOrElse(
-        throw new IllegalStateException(
-          s"manifest store '$storeDir': _manifest.json is present but " +
-            s"field '$k' is missing or unparseable — corrupt manifest; " +
-            "restore it or start a fresh store"))
+    StoreFiles.read(p).fold((0L, BigInt(0), -1L, 0L, BigInt(0))) { s =>
+      // a manifest documented as EXACT provenance must fail LOUDLY on
+      // a missing/garbled field — defaulting to "0" would silently
+      // re-fold earlier batches (last_batch_id=0) and corrupt the
+      // running totals
+      val (num, str) = (StoreFiles.nums(s), StoreFiles.strs(s))
+      def n(k: String): Long = StoreFiles.required(num, k, "manifest", p)
+      def cs(k: String): BigInt =
+        BigInt(StoreFiles.required(str, k, "manifest", p))
+      (n("n_rows"), cs("checksum"), n("last_batch_id"),
+        n("last_batch_n"), cs("last_batch_cs"))
     }
-    (field("n_rows").toLong, BigInt(field("checksum")),
-      field("last_batch_id").toLong,
-      field("last_batch_n").toLong, BigInt(field("last_batch_cs")))
   }
 
   /** Fold one batch into the incremental manifest — the streaming form
@@ -115,21 +111,12 @@ object Lineage {
           "fresh batchId or a fresh store")
       return (n0, cs0)
     }
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(storeDir))
     val out = (n0 + n, cs0 + cs)
-    // temp-file + ATOMIC_MOVE (the AnnIndex meta discipline): a crash
-    // mid-write must leave the old complete manifest, never a truncated
-    // file that would parse as zeros
-    val tmp = java.nio.file.Paths.get(storeDir,
-      s"_manifest.json.tmp${ProcessHandle.current.pid}")
-    java.nio.file.Files.writeString(tmp,
-      s"""{"n_rows": ${out._1}, "checksum": "${out._2}", """ +
-        s""""last_batch_id": $batchId, "last_batch_n": $n, """ +
-        s""""last_batch_cs": "$cs"}""")
-    java.nio.file.Files.move(tmp, metaPath(storeDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // a StoreFiles commit: a crash mid-write leaves the old complete
+    // manifest, never a truncated file that would parse as zeros
+    StoreFiles.commit(metaPath(storeDir), "n_rows" -> out._1,
+      "checksum" -> out._2.toString, "last_batch_id" -> batchId,
+      "last_batch_n" -> n, "last_batch_cs" -> cs.toString)
     out
   }
 }

@@ -81,27 +81,19 @@ object AnnIndex {
 
   private def metaPath(base: String) = Paths.get(base, "_ann_meta.json")
 
-  /** Meta lands via temp-file + atomic rename, and is written only AFTER
-    * the index tables are fully materialized — a rebuild un-names the
-    * old content first ([[unnameContent]]), so a crashed or concurrent
-    * build leaves either a meta naming no content (→ next ensure*
-    * rebuilds) or the new complete state, never a meta pointing at
-    * half-written tables. (Two concurrent builders over the SAME
-    * immutable fixture write identical content, so last-writer-wins is
-    * benign; a production deployment over mutable sources would key the
-    * layout on a table snapshot id instead.)
+  /** Meta is a [[StoreFiles.commit]] written only AFTER the index
+    * tables are fully materialized — a rebuild un-names the old content
+    * first ([[unnameContent]]), so a crashed or concurrent build leaves
+    * either a meta naming no content (→ next ensure* rebuilds) or the
+    * new complete state, never a meta pointing at half-written tables.
+    * (Two concurrent builders over the SAME immutable fixture write
+    * identical content, so last-writer-wins is benign; a production
+    * deployment over mutable sources would key the layout on a table
+    * snapshot id instead.)
     */
   private[sources] def writeMetaFull(base: String, num: Seq[(String, Long)],
-      str: Seq[(String, String)]): Unit = {
-    Files.createDirectories(Paths.get(base))
-    val tmp = Paths.get(base, s"_ann_meta.json.tmp${ProcessHandle.current.pid}")
-    val fields = num.map { case (k, v) => s""""$k": $v""" } ++
-      str.map { case (k, v) => s""""$k": "$v"""" }
-    Files.writeString(tmp, fields.mkString("{", ", ", "}"))
-    Files.move(tmp, metaPath(base),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+      str: Seq[(String, String)]): Unit =
+    StoreFiles.commit(metaPath(base), num ++ str: _*)
 
   /** Normalized form used for index-vs-scan path identity: scheme
     * prefix stripped, `.` / `..` segments resolved, no trailing slash.
@@ -131,13 +123,8 @@ object AnnIndex {
     }.flatten.distinct.sorted
   }
 
-  private[sources] def readMetaStrs(base: String): Map[String, String] = {
-    val p = metaPath(base)
-    if (!Files.exists(p)) Map.empty
-    else "\"([a-zA-Z_]+)\"\\s*:\\s*\"([^\"]*)\"".r
-      .findAllMatchIn(Files.readString(p))
-      .map(m => m.group(1) -> m.group(2)).toMap
-  }
+  private[sources] def readMetaStrs(base: String): Map[String, String] =
+    StoreFiles.readStrs(metaPath(base))
 
   private def joinPaths(paths: Seq[String]): String = paths.mkString(";")
   private def splitPaths(s: String): Seq[String] =
@@ -185,13 +172,8 @@ object AnnIndex {
     if (partitionedBy.isDefined) spark.sql(s"MSCK REPAIR TABLE $table")
   }
 
-  private[sources] def readMeta(base: String): Map[String, Long] = {
-    val p = metaPath(base)
-    if (!Files.exists(p)) Map.empty
-    else "\"([a-zA-Z_]+)\"\\s*:\\s*(-?\\d+)".r
-      .findAllMatchIn(Files.readString(p))
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-  }
+  private[sources] def readMeta(base: String): Map[String, Long] =
+    StoreFiles.readNums(metaPath(base))
 
   /** Meta is the COMMIT POINT for tombstones: a tombs dir is SERVED
     * only when the committed meta records `tomb_rows > 0`. A crash
@@ -259,29 +241,10 @@ object AnnIndex {
     if (!tombsCommitted(base)) dropTombs(spark, base, table)
 
   /** Drop a layout's tombstones: the registration and the dir. */
-  private def dropTombs(spark: SparkSession, base: String,
+  private[sources] def dropTombs(spark: SparkSession, base: String,
       table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    val d = Paths.get(base, "tombs")
-    if (Files.exists(d))
-      org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
-  }
-
-  /** The compaction swap, shared by [[compactBucketed]],
-    * [[compactPartitioned]] and [[KeywordIndex.compactPostings]]: live
-    * → pid-suffixed old, side → live, delete old. A crash before the
-    * first rename leaves the live layout intact; inside the two-rename
-    * window the live dir is missing, which the next attach throws on
-    * and the `ensure*` paths treat as STALE (rebuild) rather than
-    * unrecoverable.
-    */
-  private[sources] def swapDir(liveDir: String, sideDir: String): Unit = {
-    val live = Paths.get(liveDir)
-    val old = live.getParent.resolve(
-      s"${live.getFileName}_old_${ProcessHandle.current.pid}")
-    Files.move(live, old)
-    Files.move(Paths.get(sideDir), live)
-    org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
+    StoreFiles.rm(s"$base/tombs")
   }
 
   /** True iff `path` holds a readable parquet layout — one footer/schema
@@ -318,26 +281,6 @@ object AnnIndex {
       (isRegistered ||
         (try { attachFn(); true }
         catch { case scala.util.control.NonFatal(_) => false }))
-
-  /** Sweep the garbage a CRASHED earlier compaction left behind —
-    * `<name>_old_*` / `<name>_compact_*` dirs under `baseDir`, whatever
-    * pid wrote them. Without this each crashed compaction permanently
-    * doubles the table's footprint, and a recycled pid could collide
-    * with a leftover mid-swap.
-    */
-  private[sources] def sweepStaleCompaction(baseDir: String,
-      name: String): Unit = {
-    val b = Paths.get(baseDir)
-    if (Files.exists(b)) {
-      val it = Files.list(b)
-      try it.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith(s"${name}_old_") ||
-            n.startsWith(s"${name}_compact_"))
-          org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-      } finally it.close()
-    }
-  }
 
   // ------------------------------------------------------ LSH lifecycle
   // the flat lifecycle ([[ensureFlat]] … [[compactFlat]]) at [[Lsh]]
@@ -2242,10 +2185,10 @@ object AnnIndex {
     * triggers the per-partition small files erode exactly the pruned
     * scan the layout exists to serve. Rewrites the lists at the same
     * partitioning and the vecs at the same bucketing, as served — so
-    * any tombstones fold; meta untouched without tombstones (the
-    * [[compactLsh]]/[[compactFlat]] crash-safety recipe — side dir,
-    * rename swap, stale sweep; unreadable mid-window layouts read as
-    * STALE by `ensure*` and rebuild). Tombstone FOLD as [[compactFlat]]:
+    * any tombstones fold; meta untouched without tombstones (one
+    * [[StoreFiles.swap]] per table; unreadable mid-window layouts read
+    * as STALE by `ensure*` and rebuild). Tombstone FOLD as
+    * [[compactFlat]]:
     * every crash window either keeps serving correctly (tombs still
     * present) or triggers a rebuild (stale tomb_rows meta over folded
     * data). Not safe concurrent with a writer.
@@ -2371,7 +2314,7 @@ object AnnIndex {
     }
   }
 
-  /** One inverted-list table's compaction step (side-dir + swap):
+  /** One inverted-list table's compaction step (a [[StoreFiles.swap]]):
     * shared by [[compactIvf]], [[compactIvfSq8]], [[compactIvfPq]] and
     * PLAID. `content` overrides what gets written (default: the table's
     * current rows).
@@ -2379,14 +2322,13 @@ object AnnIndex {
   private[sources] def compactPartitioned(spark: SparkSession, base: String,
       table: String, sub: String,
       content: Option[DataFrame] = None): Unit = {
-    sweepStaleCompaction(base, sub)
     val side = s"$base/${sub}_compact_${ProcessHandle.current.pid}"
     val tmp = s"${table}_compact"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
     writeLists(content.getOrElse(spark.table(table)), tmp, Some(side))
     spark.sql(s"DROP TABLE $tmp") // external: catalog entry only
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    swapDir(s"$base/$sub", side)
+    StoreFiles.swap(s"$base/$sub", side)
   }
 
   /** Rewrite one bucketed table's content into a side dir at the same
@@ -2398,7 +2340,6 @@ object AnnIndex {
   private[sources] def compactBucketed(spark: SparkSession, base: String,
       table: String, sub: String, key: String, buckets: Int,
       content: Option[DataFrame] = None): Unit = {
-    sweepStaleCompaction(base, sub)
     val side = s"$base/${sub}_compact_${ProcessHandle.current.pid}"
     val tmp = s"${table}_compact"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
@@ -2418,7 +2359,7 @@ object AnnIndex {
     }
     spark.sql(s"DROP TABLE $tmp")
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    swapDir(s"$base/$sub", side)
+    StoreFiles.swap(s"$base/$sub", side)
   }
 
   /** Query the persisted IVF-SQ8 index: rank centroids per query

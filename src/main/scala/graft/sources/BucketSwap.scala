@@ -51,38 +51,24 @@ private[sources] object BucketSwap {
       .parquet(sideDir)
     val emptied = touched.filterNot(v =>
       Files.exists(Paths.get(sideDir, s"$partCol=$v")))
-    val tmp = Paths.get(b,
-      s"_swap_journal_$liveName.json.tmp${ProcessHandle.current.pid}")
-    Files.writeString(tmp,
-      s"""{"side": "$sideName", "part_col": "$partCol", """ +
-        s""""buckets": [${touched.mkString(", ")}], """ +
-        s""""emptied": [${emptied.mkString(", ")}]}""")
-    Files.move(tmp, journalPath(b, liveName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    swapBuckets(b, liveName, sideName, partCol, touched, emptied.toSet)
+    StoreFiles.commit(journalPath(b, liveName), "side" -> sideName,
+      "part_col" -> partCol, "buckets" -> touched, "emptied" -> emptied)
+    swapBuckets(b, liveName, sideName, partCol, touched.map(_.toLong),
+      emptied.map(_.toLong).toSet)
   }
 
   private def swapBuckets(b: String, liveName: String, sideName: String,
-      partCol: String, touched: Seq[Int], emptied: Set[Int]): Unit = {
+      partCol: String, touched: Seq[Long], emptied: Set[Long]): Unit = {
     val liveDir = Paths.get(b, liveName)
     Files.createDirectories(liveDir)
     touched.foreach { v =>
       val side = Paths.get(b, sideName, s"$partCol=$v")
       val live = liveDir.resolve(s"$partCol=$v")
-      if (Files.exists(side)) {
-        if (Files.exists(live))
-          org.apache.commons.io.FileUtils.deleteDirectory(live.toFile)
-        Files.move(side, live,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } else if (emptied.contains(v) && Files.exists(live)) {
-        org.apache.commons.io.FileUtils.deleteDirectory(live.toFile)
-      }
+      if (Files.exists(side)) StoreFiles.replace(live, side)
+      else if (emptied.contains(v)) StoreFiles.rm(live)
     }
     Files.deleteIfExists(journalPath(b, liveName))
-    val sd = Paths.get(b, sideName)
-    if (Files.exists(sd))
-      org.apache.commons.io.FileUtils.deleteDirectory(sd.toFile)
+    StoreFiles.rm(Paths.get(b, sideName))
   }
 
   /** Roll an interrupted swap forward and sweep orphan side dirs.
@@ -91,32 +77,18 @@ private[sources] object BucketSwap {
     */
   def recover(b: String, liveName: String): Unit = {
     val jp = journalPath(b, liveName)
-    if (Files.exists(jp)) {
-      val txt = Files.readString(jp)
-      def str(field: String): String =
-        (s""""$field"""" + "\\s*:\\s*\"([^\"]+)\"").r
-          .findFirstMatchIn(txt).map(_.group(1))
-          .getOrElse(throw new IllegalStateException(
-            s"corrupt swap journal at $jp (missing $field)"))
-      def ints(field: String): Seq[Int] = "\\d+".r.findAllIn(
-        (s""""$field"""" + "\\s*:\\s*\\[([^\\]]*)\\]").r
-          .findFirstMatchIn(txt).map(_.group(1)).getOrElse(""))
-        .map(_.toInt).toSeq
-      swapBuckets(b, liveName, str("side"), str("part_col"),
-        ints("buckets"), ints("emptied").toSet)
+    StoreFiles.read(jp).foreach { txt =>
+      val (str, ints) = (StoreFiles.strs(txt), StoreFiles.lists(txt))
+      def field(f: String): String =
+        StoreFiles.required(str, f, "swap journal", jp)
+      swapBuckets(b, liveName, field("side"), field("part_col"),
+        ints.getOrElse("buckets", Nil),
+        ints.getOrElse("emptied", Nil).toSet)
     }
     sweepOrphans(b, liveName)
   }
 
-  private def sweepOrphans(b: String, liveName: String): Unit = {
-    val root = Paths.get(b)
-    if (Files.exists(root) && !Files.exists(journalPath(b, liveName))) {
-      val s = Files.list(root)
-      try s.filter(p =>
-          p.getFileName.toString.startsWith(s"${liveName}__side_"))
-        .forEach(p =>
-          org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
-      finally s.close()
-    }
-  }
+  private def sweepOrphans(b: String, liveName: String): Unit =
+    if (!Files.exists(journalPath(b, liveName)))
+      StoreFiles.rmPrefixed(Paths.get(b), s"${liveName}__side_")
 }

@@ -12,8 +12,8 @@ import java.nio.file.{Files, Paths}
   *
   * Layout: `fps/` parquet partitioned by `hb` (hash bucket, hash mod
   * `HashDirs`) holding (h, doc id, batch_id); `_dedup_meta.json`
-  * written AFTER data via temp-file + atomic rename (the AnnIndex
-  * meta discipline). A batch probe reads ONLY its hash-bucket
+  * committed AFTER data through [[StoreFiles.commit]]. A batch probe
+  * reads ONLY its hash-bucket
   * partitions (static pruning — the batch's distinct `hb` set is ≤
   * `HashDirs`, collected bounded), so the store is never scanned
   * whole; the anti-join exchange carries 8-byte hashes.
@@ -54,25 +54,10 @@ object DedupStore {
     ParquetIO.read(spark, dir, partCols)
   }
 
-  private def metaPath(b: String) = Paths.get(b, "_dedup_meta.json")
+  private def metaFile(b: String) = Paths.get(b, "_dedup_meta.json")
 
-  private def readMeta(b: String): Map[String, Long] = {
-    val p = metaPath(b)
-    if (!Files.exists(p)) Map.empty
-    else "\"([a-zA-Z_]+)\"\\s*:\\s*(-?\\d+)".r
-      .findAllMatchIn(Files.readString(p))
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-  }
-
-  private def writeMeta(b: String, kv: (String, Long)*): Unit = {
-    Files.createDirectories(Paths.get(b))
-    val tmp = Paths.get(b, s"_dedup_meta.json.tmp${ProcessHandle.current.pid}")
-    Files.writeString(tmp,
-      kv.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}"))
-    Files.move(tmp, metaPath(b),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def nRows(b: String): Long =
+    StoreFiles.readNums(metaFile(b)).getOrElse("n_rows", 0L)
 
   /** Rows of `batch` kept under incremental dedup, with the store
     * updated (or replayed — see object doc). Returns full batch rows.
@@ -82,7 +67,7 @@ object DedupStore {
       textCol: String = "text"): DataFrame = {
     import spark.implicits._
     val b = base(spark, storeKey)
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     val fpsDir = s"$b/fps"
     // a gutted layout (crashed compaction's rename window) must not be
     // silently treated as "store empty" — every past fingerprint would
@@ -159,7 +144,7 @@ object DedupStore {
       .select(col("h"), col(idCol), col("batch_id"), col("hb"))
       .write.mode(SaveMode.Append).partitionBy("hb")
       .parquet(fpsDir)
-    writeMeta(b,
+    StoreFiles.commit(metaFile(b),
       "n_rows" -> (meta.getOrElse("n_rows", 0L) + pinned.count()),
       "last_batch_id" -> batchId)
     batch.join(pinned.select(idCol), Seq(idCol), "left_semi")
@@ -167,7 +152,7 @@ object DedupStore {
 
   /** Store size per meta (not a scan). */
   def seenCount(spark: SparkSession, storeKey: String): Long =
-    readMeta(base(spark, storeKey)).getOrElse("n_rows", 0L)
+    nRows(base(spark, storeKey))
 
   /** The recorded fingerprint frame (h, idCol, batch_id, hb) — exactly
     * what [[dedupBatch]] probes; the [[graft.operators.Governance]]
@@ -177,7 +162,7 @@ object DedupStore {
   def readSeen(spark: SparkSession, storeKey: String): DataFrame = {
     val b = base(spark, storeKey)
     val fpsDir = s"$b/fps"
-    require(readMeta(b).getOrElse("n_rows", 0L) == 0L ||
+    require(nRows(b) == 0L ||
       Files.exists(Paths.get(fpsDir)),
       s"dedup store '$storeKey' meta claims fingerprints but the fps " +
         "dir is missing (crashed compaction?) — drop() and re-ingest")
@@ -250,7 +235,7 @@ object DedupStore {
     require(maxDf >= 1, s"maxDf must be >= 1: $maxDf")
     val b = lineBase(spark, storeKey)
     recoverLinePurge(b) // an interrupted erasure completes before any read
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     val dfDir = s"$b/linedf"
     require(meta.getOrElse("n_rows", 0L) == 0L ||
       Files.exists(Paths.get(dfDir)),
@@ -325,11 +310,11 @@ object DedupStore {
       .parquet(dfDir)
     // meta counts the FULL batch frame (dfb), not the post-exclusion
     // toAppend set: rows a crashed attempt already committed are on
-    // disk but were never counted (it died before writeMeta), so
+    // disk but were never counted (it died before its meta commit), so
     // counting only `pinned` would permanently undercount after a
     // crash-retry — and dedupBatch's convention counts
     // pinned-before-exclusion too
-    writeMeta(b,
+    StoreFiles.commit(metaFile(b),
       "n_rows" -> (meta.getOrElse("n_rows", 0L) + dfb.count()),
       "last_batch_id" -> batchId)
     out
@@ -378,7 +363,7 @@ object DedupStore {
     val dfDir = s"$b/linedf"
     recoverLinePurge(b)
     if (!Files.exists(Paths.get(dfDir))) return 0L
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     if (meta.get("last_purge_batch_id").exists(purgeBatchId <= _))
       return 0L // replay: already applied (or out of order) — skip
     val dec = Dedup.lineRows(docs, textCol, idCol)
@@ -390,10 +375,9 @@ object DedupStore {
       commitLinePurge(b, purgeBatchId)
       return 0L
     }
-    def rm(p: String): Unit =
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
-    val side = s"$b/linedf__purge_${ProcessHandle.current.pid}"
-    rm(side)
+    val sideName = s"linedf__purge_${ProcessHandle.current.pid}"
+    val side = s"$b/$sideName"
+    StoreFiles.rm(side)
     // earliest-first decrement: row covers units (prefix, prefix+df];
     // it loses its overlap with the removed prefix [0, dec)
     val w = Window.partitionBy("lh").orderBy("batch_id")
@@ -412,23 +396,17 @@ object DedupStore {
     val nKept = kept.count()
     // journal commits the purge atomically: from here recovery rolls
     // FORWARD (swap + counter), never re-derives the decrement
-    val tmp = Paths.get(b,
-      s"_purge_journal.json.tmp${ProcessHandle.current.pid}")
-    Files.createDirectories(Paths.get(b))
-    Files.writeString(tmp,
-      s"""{"side": "${Paths.get(side).getFileName}", """ +
-        s""""purge_batch_id": $purgeBatchId, "n_kept": $nKept}""")
-    Files.move(tmp, Paths.get(b, "_purge_journal.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    StoreFiles.commit(Paths.get(b, "_purge_journal.json"),
+      "side" -> sideName,
+      "purge_batch_id" -> purgeBatchId, "n_kept" -> nKept)
     recoverLinePurge(b) // the writer IS the first recoverer
     nDec
   }
 
   private def commitLinePurge(b: String, id: Long): Unit = {
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     if (!meta.get("last_purge_batch_id").exists(id <= _))
-      writeMeta(b, ("last_purge_batch_id" -> id) +:
+      StoreFiles.commit(metaFile(b), ("last_purge_batch_id" -> id) +:
         meta.filterNot(_._1 == "last_purge_batch_id").toSeq: _*)
   }
 
@@ -440,43 +418,26 @@ object DedupStore {
     */
   private[sources] def recoverLinePurge(b: String): Unit = {
     val jp = Paths.get(b, "_purge_journal.json")
-    def rm(p: java.nio.file.Path): Unit =
-      if (Files.exists(p))
-        org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-    if (Files.exists(jp)) {
-      val txt = Files.readString(jp)
-      def field(f: String): String =
-        (s""""$f"""" + "\\s*:\\s*\"?([^\",}]+)\"?").r
-          .findFirstMatchIn(txt).map(_.group(1).trim)
-          .getOrElse(throw new IllegalStateException(
-            s"corrupt line-purge journal at $jp (missing $f)"))
-      val side = Paths.get(b, field("side"))
-      val id = field("purge_batch_id").toLong
-      val nKept = field("n_kept").toLong
-      val live = Paths.get(b, "linedf")
-      if (Files.exists(side)) {
-        rm(live)
-        if (nKept > 0)
-          Files.move(side, live,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        else rm(side) // absent dir IS the empty-store state
-      }
-      val meta = readMeta(b)
-      writeMeta(b, Seq("n_rows" -> nKept, "last_purge_batch_id" -> id)
+    StoreFiles.read(jp).foreach { txt =>
+      val (num, str) = (StoreFiles.nums(txt), StoreFiles.strs(txt))
+      def field[V](m: Map[String, V], f: String): V =
+        StoreFiles.required(m, f, "line-purge journal", jp)
+      val side = Paths.get(b, field(str, "side"))
+      val id = field(num, "purge_batch_id")
+      val nKept = field(num, "n_kept")
+      // an absent side dir: the swap already completed
+      if (Files.exists(side))
+        StoreFiles.replace(Paths.get(b, "linedf"), side, keep = nKept > 0)
+      val meta = StoreFiles.readNums(metaFile(b))
+      StoreFiles.commit(metaFile(b),
+        Seq("n_rows" -> nKept, "last_purge_batch_id" -> id)
         ++ meta.filterNot(kv =>
           kv._1 == "n_rows" || kv._1 == "last_purge_batch_id").toSeq: _*)
       Files.deleteIfExists(jp)
     }
     // orphan side dirs: a crash before the journal committed
-    val root = Paths.get(b)
-    if (Files.exists(root) && !Files.exists(jp)) {
-      val s = Files.list(root)
-      try s.filter(p =>
-          p.getFileName.toString.startsWith("linedf__purge_"))
-        .forEach(p =>
-          org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
-      finally s.close()
-    }
+    if (!Files.exists(jp))
+      StoreFiles.rmPrefixed(Paths.get(b), "linedf__purge_")
   }
 
   /** The recorded line-df frame (lh, df, batch_id, hb) — what
@@ -494,12 +455,11 @@ object DedupStore {
 
   /** Remove the line-df store (tests / re-ingest). */
   def dropLines(spark: SparkSession, storeKey: String): Unit =
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(lineBase(spark, storeKey)))
+    StoreFiles.rm(lineBase(spark, storeKey))
 
   /** Line-store size per meta (not a scan). */
   def lineCount(spark: SparkSession, storeKey: String): Long =
-    readMeta(lineBase(spark, storeKey)).getOrElse("n_rows", 0L)
+    nRows(lineBase(spark, storeKey))
 
   // ------------------------------------------------------- near-dup twin
 
@@ -531,7 +491,7 @@ object DedupStore {
       textCol: String = "text"): DataFrame = {
     import graft.operators.Dedup
     val b = nearBase(spark, storeKey)
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     val bandsDir = s"$b/bands"
     val sigsDir = s"$b/sigs"
     require(meta.getOrElse("n_rows", 0L) == 0L ||
@@ -640,7 +600,7 @@ object DedupStore {
     }
     sigRows.withColumn("batch_id", lit(batchId))
       .write.mode(SaveMode.Append).parquet(sigsDir)
-    writeMeta(b,
+    StoreFiles.commit(metaFile(b),
       "n_rows" -> (meta.getOrElse("n_rows", 0L) + pinned.count()),
       "last_batch_id" -> batchId)
     batch.join(pinned.select(col("doc_id").as(idCol)), Seq(idCol),
@@ -649,15 +609,14 @@ object DedupStore {
 
   /** Drop the near-dup store. */
   def dropNear(spark: SparkSession, storeKey: String): Unit =
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(nearBase(spark, storeKey)))
+    StoreFiles.rm(nearBase(spark, storeKey))
 
   /** [[compactSeen]]'s near-dup twin: fold the many-batch bands layout
     * into one file per bucket dir and the sigs layout into few files —
     * thousands of streaming micro-batches each append a file per
     * touched band bucket plus a sigs file, and the cross-batch probe
-    * becomes a small-files scan. Same side-dir + rename recipe per
-    * table; bands swap first, and a crash between the two swaps leaves
+    * becomes a small-files scan. One [[StoreFiles.swap]] per table;
+    * bands swap first, and a crash between the two swaps leaves
     * both tables logically intact (compaction changes files, not
     * rows). Meta untouched. Not safe concurrent with a writer.
     * `sigFiles` is the sigs fold width — [[graft.operators.Governance
@@ -670,30 +629,22 @@ object DedupStore {
       sigFiles: Int = 8): Unit = {
     require(sigFiles >= 1, s"sigFiles must be positive: $sigFiles")
     val b = nearBase(spark, storeKey)
-    def rm(p: String): Unit =
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
-    def swap(live: String, side: String): Unit = {
-      val garbage = s"${live}__garbage_${ProcessHandle.current.pid}"
-      Files.move(Paths.get(live), Paths.get(garbage))
-      Files.move(Paths.get(side), Paths.get(live))
-      rm(garbage)
-    }
     val bandsDir = s"$b/bands"
     if (Files.exists(Paths.get(bandsDir))) {
       val side = s"$b/bands__compact"
-      rm(side)
+      StoreFiles.rm(side)
       readStoreDir(spark, bandsDir)
         .repartition(col("bb"))
         .write.mode(SaveMode.Overwrite).partitionBy("bb").parquet(side)
-      swap(bandsDir, side)
+      StoreFiles.swap(bandsDir, side)
     }
     val sigsDir = s"$b/sigs"
     if (Files.exists(Paths.get(sigsDir))) {
       val side = s"$b/sigs__compact"
-      rm(side)
+      StoreFiles.rm(side)
       readStoreDir(spark, sigsDir).coalesce(sigFiles)
         .write.mode(SaveMode.Overwrite).parquet(side)
-      swap(sigsDir, side)
+      StoreFiles.swap(sigsDir, side)
     }
   }
 
@@ -710,65 +661,51 @@ object DedupStore {
     val b = nearBase(spark, storeKey)
     val sigsDir = s"$b/sigs"
     if (!Files.exists(Paths.get(sigsDir))) return
-    val meta = readMeta(b)
-    def rm(p: String): Unit =
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
-    def swapOrDrop(live: String, side: String, nKept: Long): Unit = {
-      val garbage = s"${live}__garbage_${ProcessHandle.current.pid}"
-      Files.move(Paths.get(live), Paths.get(garbage))
-      if (nKept > 0) Files.move(Paths.get(side), Paths.get(live))
-      else rm(side) // absent dir IS the empty-store state (expireSeen)
-      rm(garbage)
-    }
+    val meta = StoreFiles.readNums(metaFile(b))
     val bandsDir = s"$b/bands"
     if (Files.exists(Paths.get(bandsDir))) {
       val side = s"$b/bands__compact"
-      rm(side)
+      StoreFiles.rm(side)
       val keptBands = readStoreDir(spark, bandsDir)
         .filter(col("batch_id") >= keepFromBatchId)
         .localCheckpoint(true)
       keptBands.repartition(col("bb"))
         .write.mode(SaveMode.Overwrite).partitionBy("bb").parquet(side)
-      swapOrDrop(bandsDir, side, keptBands.count())
+      StoreFiles.swap(bandsDir, side, keep = keptBands.count() > 0)
     }
     val sideS = s"$b/sigs__compact"
-    rm(sideS)
+    StoreFiles.rm(sideS)
     val keptSigs = readStoreDir(spark, sigsDir)
       .filter(col("batch_id") >= keepFromBatchId)
       .localCheckpoint(true)
     keptSigs.coalesce(8)
       .write.mode(SaveMode.Overwrite).parquet(sideS)
     val nKept = keptSigs.count()
-    swapOrDrop(sigsDir, sideS, nKept)
-    writeMeta(b,
+    StoreFiles.swap(sigsDir, sideS, keep = nKept > 0)
+    StoreFiles.commit(metaFile(b),
       "n_rows" -> nKept,
       "last_batch_id" -> meta.getOrElse("last_batch_id", 0L))
   }
 
-  /** Fold a many-batch fps layout into one file per hash bucket (the
-    * compactLsh side-dir recipe): thousands of streaming micro-batches
-    * each append a file per touched bucket, and the store probe
-    * becomes a small-files scan. Writes the compacted layout to a side
-    * dir, swaps it in by rename, sweeps the old one; meta untouched
-    * (n_rows / last_batch_id state is append-only truth). The rename
-    * window (fps missing) is caught loudly by [[dedupBatch]]'s layout
-    * guard, never read as an empty store.
+  /** Fold a many-batch fps layout into one file per hash bucket:
+    * thousands of streaming micro-batches each append a file per
+    * touched bucket, and the store probe becomes a small-files scan.
+    * Writes the compacted layout to a side dir and swaps it in with
+    * [[StoreFiles.swap]]; meta untouched (n_rows / last_batch_id state
+    * is append-only truth). The rename window (fps missing) is caught
+    * loudly by [[dedupBatch]]'s layout guard, never read as an empty
+    * store.
     */
   def compactSeen(spark: SparkSession, storeKey: String): Unit = {
     val b = base(spark, storeKey)
     val fpsDir = s"$b/fps"
     if (!Files.exists(Paths.get(fpsDir))) return
     val side = s"$b/fps__compact"
-    val garbage = s"$b/fps__garbage_${ProcessHandle.current.pid}"
-    def rm(p: String): Unit =
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
-    rm(side)
+    StoreFiles.rm(side)
     readStoreDir(spark, fpsDir)
       .repartition(col("hb"))
       .write.mode(SaveMode.Overwrite).partitionBy("hb").parquet(side)
-    Files.move(Paths.get(fpsDir), Paths.get(garbage))
-    Files.move(Paths.get(side), Paths.get(fpsDir))
-    rm(garbage)
+    StoreFiles.swap(fpsDir, side)
   }
 
   /** [[compactSeen]]'s line-store twin (round-14 — the last
@@ -777,8 +714,8 @@ object DedupStore {
     * so a long-running stream erodes the probe into a small-files
     * scan. Rewrites FILES only — every (lh, df, batch_id, hb) row
     * survives verbatim, so the batch-keyed replay verification and the
-    * prior-batch df sums are bit-identical across the fold. Same
-    * side-dir + rename swap; the rename window (linedf missing under a
+    * prior-batch df sums are bit-identical across the fold. A
+    * [[StoreFiles.swap]]; the rename window (linedf missing under a
     * non-zero meta) is caught loudly by [[lineDedupBatch]]'s layout
     * guard, never read as an empty store. Completes any interrupted
     * erasure first (the [[readLineDf]] discipline); not safe
@@ -790,22 +727,17 @@ object DedupStore {
     val dfDir = s"$b/linedf"
     if (!Files.exists(Paths.get(dfDir))) return
     val side = s"$b/linedf__compact"
-    val garbage = s"$b/linedf__garbage_${ProcessHandle.current.pid}"
-    def rm(p: String): Unit =
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
-    rm(side)
+    StoreFiles.rm(side)
     readStoreDir(spark, dfDir)
       .repartition(col("hb"))
       .write.mode(SaveMode.Overwrite).partitionBy("hb").parquet(side)
-    Files.move(Paths.get(dfDir), Paths.get(garbage))
-    Files.move(Paths.get(side), Paths.get(dfDir))
-    rm(garbage)
+    StoreFiles.swap(dfDir, side)
   }
 
   /** Retention: forget fingerprints recorded BEFORE `keepFromBatchId`
     * (the sliding-window dedup production stores run — "dedup against
-    * the last N days", not all of history). Same side-dir + rename
-    * swap as [[compactSeen]]; meta's n_rows shrinks to the surviving
+    * the last N days", not all of history). A [[StoreFiles.swap]] as
+    * in [[compactSeen]]; meta's n_rows shrinks to the surviving
     * count and last_batch_id is untouched (the replay contract keeps
     * working for retained batches. A replay of an EXPIRED batch id
     * returns an empty kept set (its fingerprints are gone, and an
@@ -819,24 +751,19 @@ object DedupStore {
     val b = base(spark, storeKey)
     val fpsDir = s"$b/fps"
     if (!Files.exists(Paths.get(fpsDir))) return
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     val side = s"$b/fps__compact"
-    val garbage = s"$b/fps__garbage_${ProcessHandle.current.pid}"
-    def rm(p: String): Unit =
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
-    rm(side)
+    StoreFiles.rm(side)
     val kept = readStoreDir(spark, fpsDir)
       .filter(col("batch_id") >= keepFromBatchId)
       .localCheckpoint(true)
     kept.repartition(col("hb"))
       .write.mode(SaveMode.Overwrite).partitionBy("hb").parquet(side)
     val nKept = kept.count()
-    Files.move(Paths.get(fpsDir), Paths.get(garbage))
-    if (nKept > 0) Files.move(Paths.get(side), Paths.get(fpsDir))
-    else rm(side) // a zero-row parquet dir has no inferable schema —
-                  // an absent dir IS the empty-store state
-    rm(garbage)
-    writeMeta(b,
+    // a zero-row parquet dir has no inferable schema — an absent dir
+    // IS the empty-store state
+    StoreFiles.swap(fpsDir, side, keep = nKept > 0)
+    StoreFiles.commit(metaFile(b),
       "n_rows" -> nKept,
       "last_batch_id" -> meta.getOrElse("last_batch_id", 0L))
   }
@@ -847,7 +774,7 @@ object DedupStore {
     * the store retains NOTHING derived from the purged documents (not
     * even the 8-byte content hash, which is derived data under an
     * erasure request). [[expireSeen]]'s identity-predicate twin — same
-    * side-dir + rename swap, n_rows shrinks by the purged count,
+    * [[StoreFiles.swap]], n_rows shrinks by the purged count,
     * last_batch_id untouched. Consequence, documented: content whose
     * only recorded representative was purged is RE-ADMITTED if it
     * arrives again (the store has honestly forgotten it) — the erasure
@@ -858,12 +785,9 @@ object DedupStore {
     val b = base(spark, storeKey)
     val fpsDir = s"$b/fps"
     if (!Files.exists(Paths.get(fpsDir))) return 0L
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     val side = s"$b/fps__compact"
-    val garbage = s"$b/fps__garbage_${ProcessHandle.current.pid}"
-    def rm(p: String): Unit =
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
-    rm(side)
+    StoreFiles.rm(side)
     val victims = ids.select(ids(idCol).as(idCol)).distinct()
     // bounded no-op probe: a purge of already-absent ids (the
     // crash-retry / replayed-trigger case) must not pay the store
@@ -878,11 +802,8 @@ object DedupStore {
     kept.repartition(col("hb"))
       .write.mode(SaveMode.Overwrite).partitionBy("hb").parquet(side)
     val nKept = kept.count()
-    Files.move(Paths.get(fpsDir), Paths.get(garbage))
-    if (nKept > 0) Files.move(Paths.get(side), Paths.get(fpsDir))
-    else rm(side) // absent dir IS the empty-store state (expireSeen)
-    rm(garbage)
-    writeMeta(b,
+    StoreFiles.swap(fpsDir, side, keep = nKept > 0)
+    StoreFiles.commit(metaFile(b),
       "n_rows" -> nKept,
       "last_batch_id" -> meta.getOrElse("last_batch_id", 0L))
     meta.getOrElse("n_rows", 0L) - nKept
@@ -900,16 +821,7 @@ object DedupStore {
     val b = nearBase(spark, storeKey)
     val sigsDir = s"$b/sigs"
     if (!Files.exists(Paths.get(sigsDir))) return 0L
-    val meta = readMeta(b)
-    def rm(p: String): Unit =
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
-    def swapOrDrop(live: String, side: String, nKept: Long): Unit = {
-      val garbage = s"${live}__garbage_${ProcessHandle.current.pid}"
-      Files.move(Paths.get(live), Paths.get(garbage))
-      if (nKept > 0) Files.move(Paths.get(side), Paths.get(live))
-      else rm(side)
-      rm(garbage)
-    }
+    val meta = StoreFiles.readNums(metaFile(b))
     val victims = ids.select(ids(idCol).as("doc_id")).distinct()
     val bandsDir = s"$b/bands"
     // bounded no-op probe (both tables — a crash can strand victims
@@ -923,24 +835,24 @@ object DedupStore {
     if (!present) return 0L
     if (Files.exists(Paths.get(bandsDir))) {
       val side = s"$b/bands__compact"
-      rm(side)
+      StoreFiles.rm(side)
       val keptBands = readStoreDir(spark, bandsDir)
         .join(victims, Seq("doc_id"), "left_anti")
         .localCheckpoint(true)
       keptBands.repartition(col("bb"))
         .write.mode(SaveMode.Overwrite).partitionBy("bb").parquet(side)
-      swapOrDrop(bandsDir, side, keptBands.count())
+      StoreFiles.swap(bandsDir, side, keep = keptBands.count() > 0)
     }
     val sideS = s"$b/sigs__compact"
-    rm(sideS)
+    StoreFiles.rm(sideS)
     val keptSigs = readStoreDir(spark, sigsDir)
       .join(victims, Seq("doc_id"), "left_anti")
       .localCheckpoint(true)
     keptSigs.coalesce(8)
       .write.mode(SaveMode.Overwrite).parquet(sideS)
     val nKept = keptSigs.count()
-    swapOrDrop(sigsDir, sideS, nKept)
-    writeMeta(b,
+    StoreFiles.swap(sigsDir, sideS, keep = nKept > 0)
+    StoreFiles.commit(metaFile(b),
       "n_rows" -> nKept,
       "last_batch_id" -> meta.getOrElse("last_batch_id", 0L))
     meta.getOrElse("n_rows", 0L) - nKept
@@ -948,6 +860,5 @@ object DedupStore {
 
   /** Drop the store (tests / rebuild-from-scratch). */
   def drop(spark: SparkSession, storeKey: String): Unit =
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(base(spark, storeKey)))
+    StoreFiles.rm(base(spark, storeKey))
 }

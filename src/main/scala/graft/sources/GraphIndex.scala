@@ -3,7 +3,6 @@ package graft.sources
 import graft.operators.KnnGraph
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
 
 /** Persisted GRAPH-ANN layout — the kNN graph promoted to a served
   * index with the engine's store lifecycle (the LSH/IVF/SQ8 discipline
@@ -31,9 +30,9 @@ import java.nio.file.{Files, Paths}
   * forces that rebuild, which clears tombstones, the ensureSq8 rule.
   */
 object GraphIndex {
-  import AnnIndex.{annBase, fingerprint, readMeta, readMetaStrs,
-    registerExternal, servable, sweepOrphanTombs, tombsServable,
-    writeMetaFull}
+  import AnnIndex.{annBase, dropTombs, fingerprint, readMeta,
+    readMetaStrs, registerExternal, servable, sweepOrphanTombs,
+    tombsServable, writeMetaFull}
 
   final case class GraphHandle(edges: DataFrame, vecs: DataFrame, k: Int)
 
@@ -160,10 +159,7 @@ object GraphIndex {
     val base = gBase(spark, tag)
     val priorBatch = readMeta(base).get("last_batch_id")
     // a rebuild serves exactly its source: tombstones cleared
-    spark.sql(s"DROP TABLE IF EXISTS graft_graph_tombs_$tag")
-    val tombDir = Paths.get(base, "tombs")
-    if (Files.exists(tombDir))
-      org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
+    dropTombs(spark, base, s"graft_graph_tombs_$tag")
     val g = KnnGraph.nnDescent(index, k, rounds = rounds,
       blockSize = blockSize, maxDegreeOpt = Some(maxDegree))
       .select("src", "dst", "score")
@@ -316,9 +312,9 @@ object GraphIndex {
   /** Compact the persisted graph layout: fold committed tombstones
     * physically (vecs minus victims; edges minus ANY row touching a
     * victim at either endpoint) and rewrite both tables' accumulated
-    * per-trigger file sets at the same bucketing — the compactLsh
-    * recipe (side dir + atomic swap, crash leaves the live layout or a
-    * missing dir the ensure path treats as stale). After the fold the
+    * per-trigger file sets at the same bucketing — one
+    * [[StoreFiles.swap]] per table (a crash leaves the live layout or
+    * a missing dir the ensure path treats as stale). After the fold the
     * layout is tombFree: previously-deleted ids may honestly RE-ADMIT
     * via upsert (the DedupStore re-admission rule), and ensure's
     * freshness contract sees a clean layout again.
@@ -350,12 +346,7 @@ object GraphIndex {
     compactBucketed(spark, base, s"graft_graph_vecs_$tag", "vecs",
       "vec_id", sb,
       Some(foldVecs(spark.table(s"graft_graph_vecs_$tag"))))
-    if (folding) {
-      spark.sql(s"DROP TABLE IF EXISTS graft_graph_tombs_$tag")
-      val tombDir = Paths.get(base, "tombs")
-      if (Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
-    }
+    if (folding) dropTombs(spark, base, s"graft_graph_tombs_$tag")
     attach(spark, tag, sb)
     if (folding) {
       val (n, fp) = fingerprint(spark.table(s"graft_graph_vecs_$tag")

@@ -181,10 +181,7 @@ object ImpactIndex {
       snapshotId: Option[String]): Unit = {
     val base = bmwBase(spark, tag)
     // a rebuild serves exactly its source: the poison clears
-    spark.sql(s"DROP TABLE IF EXISTS ${tombsName(tag)}")
-    val tombDir = java.nio.file.Paths.get(base, "tombs")
-    if (java.nio.file.Files.exists(tombDir))
-      org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
+    AnnIndex.dropTombs(spark, base, tombsName(tag))
     val postings = KeywordSearch.bm25Postings(docs, idCol, textCol)
       .localCheckpoint(true)
     val statsRow = postings.groupBy("doc_id").agg(first("dl").as("dl"))

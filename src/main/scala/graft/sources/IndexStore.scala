@@ -35,23 +35,21 @@ object IndexStore {
     java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(sourceDir).toLong & 0xffffffffL)
 
+  /** DDL: commit the `_index_meta.json` sidecar through
+    * [[StoreFiles.commit]] — a crash mid-write leaves no meta or the
+    * previous one, never a truncated file read back as "no index".
+    */
   def create(spark: SparkSession, path: String, dim: Int,
-      metric: String = "cosine"): Unit = {
-    Files.createDirectories(Paths.get(path))
-    Files.writeString(Paths.get(path, "_index_meta.json"),
-      s"""{"dim": $dim, "metric": "$metric"}""")
-  }
+      metric: String = "cosine"): Unit =
+    StoreFiles.commit(Paths.get(path, "_index_meta.json"),
+      "dim" -> dim, "metric" -> metric)
 
-  def readMeta(path: String): Option[Meta] = {
-    val p = Paths.get(path, "_index_meta.json")
-    if (!Files.exists(p)) None
-    else {
-      val s = Files.readString(p)
-      val dim = "\"dim\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toInt)
-      val metric = "\"metric\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(s).map(_.group(1))
-      dim.map(d => Meta(d, metric.getOrElse("cosine")))
+  def readMeta(path: String): Option[Meta] =
+    StoreFiles.read(Paths.get(path, "_index_meta.json")).flatMap { s =>
+      StoreFiles.nums(s).get("dim").map(d => Meta(d.toInt,
+        StoreFiles.strs(s).get("metric").filter(_.nonEmpty)
+          .getOrElse("cosine")))
     }
-  }
 
   /** S4: write (overwrite) the index rows: (doc_id, chunk_id, text,
     * embedding, doc_hash).
@@ -68,11 +66,11 @@ object IndexStore {
   /** ERASE the given documents' rows from the simple index layout —
     * [[graft.operators.Governance.purge]]'s leg for the flagship
     * chunk-index sink (every chunk row, text and embedding included,
-    * is the purged document's content). Side-dir + rename swap (the
-    * DedupStore recipe: a crash inside the rename window leaves the
-    * dir absent, which [[read]] fails loudly on — never a silently
-    * emptied index); idempotent, with a bounded any-victim probe so a
-    * replayed purge skips the rewrite. Returns rows removed.
+    * is the purged document's content). A [[StoreFiles.swap]] (a crash
+    * inside its rename window leaves the dir absent, which [[read]]
+    * fails loudly on — never a silently emptied index); idempotent,
+    * with a bounded any-victim probe so a replayed purge skips the
+    * rewrite. Returns rows removed.
     */
   def purge(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String = "doc_id"): Long = {
@@ -83,21 +81,16 @@ object IndexStore {
         .join(victims, Seq(idCol), "left_semi").limit(1)
         .collect().isEmpty)
       return 0L
-    def rm(p: String): Unit =
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
     val side = s"$path/data__compact"
-    val garbage = s"$path/data__garbage_${ProcessHandle.current.pid}"
-    rm(side)
+    StoreFiles.rm(side)
     val before = ParquetIO.read(spark, live).count()
     val kept = ParquetIO.read(spark, live)
       .join(victims, Seq(idCol), "left_anti")
       .localCheckpoint(true)
     kept.write.mode(SaveMode.Overwrite).parquet(side)
     val nKept = kept.count()
-    Files.move(Paths.get(live), Paths.get(garbage))
-    if (nKept > 0) Files.move(Paths.get(side), Paths.get(live))
-    else rm(side) // absent dir IS the empty state (the expireSeen rule)
-    rm(garbage)
+    // absent dir IS the empty state (the expireSeen rule)
+    StoreFiles.swap(live, side, keep = nKept > 0)
     before - nKept
   }
 
@@ -129,15 +122,7 @@ object IndexStore {
     // write to a temp subdir first, then swap — the source parquet can't
     // be overwritten while a plan is still reading it
     fresh.write.mode(SaveMode.Overwrite).parquet(s"$path/data_new")
-    val dataPath = Paths.get(path, "data")
-    if (Files.exists(dataPath)) {
-      val tmp = Paths.get(path, "data_old")
-      Files.move(dataPath, tmp)
-      Files.move(Paths.get(path, "data_new"), dataPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-    } else {
-      Files.move(Paths.get(path, "data_new"), dataPath)
-    }
+    StoreFiles.swap(s"$path/data", s"$path/data_new")
     read(spark, path)
   }
 

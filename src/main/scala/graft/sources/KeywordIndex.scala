@@ -102,10 +102,7 @@ object KeywordIndex {
     val priorDelBatch = AnnIndex.readMeta(base).get("last_del_batch_id")
     // a rebuild serves exactly its source: tombstones are cleared (the
     // ensureSq8 discipline) — the delete replay-skip window survives
-    spark.sql(s"DROP TABLE IF EXISTS ${tombsName(tag)}")
-    val tombDir = java.nio.file.Paths.get(base, "tombs")
-    if (java.nio.file.Files.exists(tombDir))
-      org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
+    AnnIndex.dropTombs(spark, base, tombsName(tag))
     spark.sql(s"DROP TABLE IF EXISTS ${tableName(tag)}")
     KeywordSearch.bm25Postings(docs, idCol, textCol)
       .write.mode(SaveMode.Overwrite)
@@ -148,9 +145,7 @@ object KeywordIndex {
     val nStat = statsRow.getLong(0)
     val sumDl = statsRow.getDouble(1).toLong
     spark.sql(s"DROP TABLE IF EXISTS ${dfsName(tag)}")
-    val dfsDir = java.nio.file.Paths.get(s"$base/dfs")
-    if (java.nio.file.Files.exists(dfsDir))
-      org.apache.commons.io.FileUtils.deleteDirectory(dfsDir.toFile)
+    StoreFiles.rm(s"$base/dfs")
     stored.groupBy("term").agg(count(lit(1)).as("df"))
       .write.mode(SaveMode.Overwrite)
       .option("path", s"$base/dfs")
@@ -519,18 +514,12 @@ object KeywordIndex {
     val meta = AnnIndex.readMeta(base)
     val folding = meta.get("tomb_rows").exists(_ > 0L) &&
       spark.catalog.tableExists(tombsName(tag))
-    AnnIndex.sweepStaleCompaction(base, "postings")
     val sidePath = s"$base/postings_compact_${ProcessHandle.current.pid}"
     rows.repartition(numFiles, org.apache.spark.sql.functions.col("doc_id"))
       .write.mode(SaveMode.Overwrite).parquet(sidePath)
     spark.sql(s"DROP TABLE IF EXISTS ${tableName(tag)}")
-    AnnIndex.swapDir(s"$base/postings", sidePath)
-    if (folding) {
-      spark.sql(s"DROP TABLE IF EXISTS ${tombsName(tag)}")
-      val tombDir = java.nio.file.Paths.get(base, "tombs")
-      if (java.nio.file.Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
-    }
+    StoreFiles.swap(s"$base/postings", sidePath)
+    if (folding) AnnIndex.dropTombs(spark, base, tombsName(tag))
     attach(spark, tag)
     // the stats side table re-derives from the (possibly folded) live
     // rows — compaction rewrites the whole layout anyway, so the
@@ -541,16 +530,11 @@ object KeywordIndex {
     // serving then falls back to the derived-stats path (never wrong
     // numbers, just the slower plan) until the next compact/ensure.
     val live = spark.table(tableName(tag))
-    AnnIndex.sweepStaleCompaction(base, "dfs")
     val dfsSide = s"$base/dfs_compact_${ProcessHandle.current.pid}"
     live.groupBy("term").agg(count(lit(1)).as("df"))
       .write.mode(SaveMode.Overwrite).parquet(dfsSide)
     spark.sql(s"DROP TABLE IF EXISTS ${dfsName(tag)}")
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/dfs")))
-      AnnIndex.swapDir(s"$base/dfs", dfsSide)
-    else
-      java.nio.file.Files.move(java.nio.file.Paths.get(dfsSide),
-        java.nio.file.Paths.get(s"$base/dfs"))
+    StoreFiles.swap(s"$base/dfs", dfsSide)
     AnnIndex.registerExternal(spark, dfsName(tag), s"$base/dfs")
     val liveStats = live.groupBy("doc_id").agg(first("dl").as("dl"))
       .agg(count(lit(1)).as("nd"), coalesce(sum("dl"), lit(0.0)).as("sdl"))

@@ -165,10 +165,7 @@ object PlaidIndex {
         registered(spark, tag), () => attach(spark, tag))
     if (!metaFresh) {
       // a rebuild serves exactly its source: tombstones cleared
-      spark.sql(s"DROP TABLE IF EXISTS ${tombsName(tag)}")
-      val tombDir = java.nio.file.Paths.get(base, "tombs")
-      if (java.nio.file.Files.exists(tombDir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tombDir.toFile)
+      AnnIndex.dropTombs(spark, base, tombsName(tag))
       val cents = SimilaritySearch.kMeansCentroids(
         docVectors.select("vec_id", "embedding"), lists, iters)
       cents.write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")
@@ -592,7 +589,6 @@ object PlaidIndex {
     AnnIndex.compactPartitioned(spark, base, listsName(tag), "lists",
       content = Some(spark.table(listsName(tag))
         .dropDuplicates("doc_id", "vec_id")))
-    AnnIndex.sweepStaleCompaction(base, "doccent")
     val side = s"$base/doccent_compact_${ProcessHandle.current.pid}"
     val tmp = s"${doccentName(tag)}_compact"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
@@ -607,7 +603,7 @@ object PlaidIndex {
       .format("parquet").saveAsTable(tmp)
     spark.sql(s"DROP TABLE $tmp")
     spark.sql(s"DROP TABLE IF EXISTS ${doccentName(tag)}")
-    AnnIndex.swapDir(s"$base/doccent", side)
+    StoreFiles.swap(s"$base/doccent", side)
     attach(spark, tag)
     handle(spark, tag)
   }

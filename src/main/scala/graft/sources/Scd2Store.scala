@@ -15,9 +15,8 @@ import java.nio.file.{Files, Paths}
   *
   * Layout: `dim/` parquet partitioned by `kb` (key hash bucket,
   * `pmod(xxhash64(key), KeyDirs)`) holding
-  * (key, attrs..., valid_from, valid_to); `_scd2_meta.json` written
-  * AFTER data via temp-file + atomic rename (the AnnIndex meta
-  * discipline). A merge rewrites ONLY the batch's touched buckets, so
+  * (key, attrs..., valid_from, valid_to); `_scd2_meta.json` committed
+  * AFTER data through [[StoreFiles.commit]]. A merge rewrites ONLY the batch's touched buckets, so
   * the cost is O(touched buckets), not O(dimension): the 100 TB shape.
   *
   * Merge derivation: each stored interval's (valid_from, attrs) IS its
@@ -73,25 +72,7 @@ object Scd2Store {
   private def base(spark: SparkSession, storeKey: String): String =
     s"${AnnIndex.annBase(spark)}/graft_scd2store_${IndexStore.pathTag(storeKey)}"
 
-  private def metaPath(b: String) = Paths.get(b, "_scd2_meta.json")
-
-  private def readMeta(b: String): Map[String, Long] = {
-    val p = metaPath(b)
-    if (!Files.exists(p)) Map.empty
-    else "\"([a-zA-Z_]+)\"\\s*:\\s*(-?\\d+)".r
-      .findAllMatchIn(Files.readString(p))
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-  }
-
-  private def writeMeta(b: String, kv: (String, Long)*): Unit = {
-    Files.createDirectories(Paths.get(b))
-    val tmp = Paths.get(b, s"_scd2_meta.json.tmp${ProcessHandle.current.pid}")
-    Files.writeString(tmp,
-      kv.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}"))
-    Files.move(tmp, metaPath(b),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def metaFile(b: String) = Paths.get(b, "_scd2_meta.json")
 
   private def kbCol(keyCol: String) =
     pmod(xxhash64(col(keyCol)), lit(KeyDirs.toLong)).cast("int").as("kb")
@@ -139,7 +120,7 @@ object Scd2Store {
     */
   def readDim(spark: SparkSession, storeKey: String): DataFrame = {
     val b = base(spark, storeKey)
-    require(readMeta(b).contains("last_batch_id"),
+    require(StoreFiles.readNums(metaFile(b)).contains("last_batch_id"),
       s"no persisted SCD2 dimension for '$storeKey' ($b) — merge a " +
         "first change batch")
     recover(b)
@@ -167,7 +148,7 @@ object Scd2Store {
   def lookupPruned(spark: SparkSession, storeKey: String,
       probes: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     val b = base(spark, storeKey)
-    require(readMeta(b).contains("last_batch_id"),
+    require(StoreFiles.readNums(metaFile(b)).contains("last_batch_id"),
       s"no persisted SCD2 dimension for '$storeKey' ($b) — merge a " +
         "first change batch")
     recover(b)
@@ -198,7 +179,7 @@ object Scd2Store {
       checkHistory: Boolean = true): DataFrame = {
     require(attrCols.nonEmpty, "merge: no attribute columns")
     val b = base(spark, storeKey)
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     val dimDir = s"$b/dim"
     if (meta.get("last_batch_id").exists(batchId <= _))
       return readDim(spark, storeKey)
@@ -216,7 +197,7 @@ object Scd2Store {
       require(hasStore,
         s"Scd2Store '$storeKey': first merge batch is empty — nothing " +
           "to build a dimension from")
-      writeMeta(b, ("last_batch_id" -> batchId) +:
+      StoreFiles.commit(metaFile(b), ("last_batch_id" -> batchId) +:
         meta.filterNot(_._1 == "last_batch_id").toSeq: _*)
       return readDim(spark, storeKey)
     }
@@ -274,7 +255,7 @@ object Scd2Store {
     else
       merged.write.mode(SaveMode.Overwrite).partitionBy("kb")
         .parquet(dimDir)
-    writeMeta(b, ("last_batch_id" -> batchId) +:
+    StoreFiles.commit(metaFile(b), ("last_batch_id" -> batchId) +:
       meta.filterNot(_._1 == "last_batch_id").toSeq: _*)
     readDim(spark, storeKey)
   }
@@ -297,7 +278,7 @@ object Scd2Store {
       keyCol: String,
       batchId: Option[Long] = None): DataFrame = {
     val b = base(spark, storeKey)
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     require(meta.contains("last_batch_id"),
       s"no persisted SCD2 dimension for '$storeKey' ($b) — nothing to " +
         "purge")
@@ -316,7 +297,7 @@ object Scd2Store {
         .join(probe, Seq(keyCol), "left_anti")
       stageAndSwap(spark, b, survivors, touched.toSeq)
     }
-    writeMeta(b,
+    StoreFiles.commit(metaFile(b),
       (meta - "last_purge_batch_id").toSeq ++
         batchId.orElse(meta.get("last_purge_batch_id"))
           .map("last_purge_batch_id" -> _).toSeq: _*)
@@ -324,9 +305,6 @@ object Scd2Store {
   }
 
   /** Remove the persisted layout (test/ops hygiene). */
-  def drop(spark: SparkSession, storeKey: String): Unit = {
-    val b = Paths.get(base(spark, storeKey))
-    if (Files.exists(b))
-      org.apache.commons.io.FileUtils.deleteDirectory(b.toFile)
-  }
+  def drop(spark: SparkSession, storeKey: String): Unit =
+    StoreFiles.rm(base(spark, storeKey))
 }

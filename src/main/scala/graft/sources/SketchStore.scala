@@ -12,8 +12,7 @@ import java.nio.file.{Files, Paths}
   *
   * Layout: `panes/batch_id=N/` parquet (grp, kmv) — one bounded pane
   * per ingested batch — plus `_sketch_meta.json` (last_batch_id, k,
-  * seed) written AFTER data via temp-file + atomic rename (the
-  * AnnIndex/DedupStore meta discipline).
+  * seed) committed AFTER data through [[StoreFiles.commit]].
   *
   * Exactly-once is STRUCTURAL here, not protocol-deep: a KMV pane is a
   * pure function of the batch's item SET, and reading merges panes
@@ -46,34 +45,10 @@ object SketchStore {
     ParquetIO.read(spark, dir, Seq(org.apache.spark.sql.types
       .StructField("batch_id", org.apache.spark.sql.types.LongType)))
 
-  private def metaPath(b: String) = Paths.get(b, "_sketch_meta.json")
+  private def metaFile(b: String) = Paths.get(b, "_sketch_meta.json")
 
-  private def readMeta(b: String): Map[String, Long] = {
-    val p = metaPath(b)
-    if (!Files.exists(p)) Map.empty
-    else "\"([a-zA-Z_]+)\"\\s*:\\s*(-?\\d+)".r
-      .findAllMatchIn(Files.readString(p))
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-  }
-
-  private def writeMeta(b: String, kv: (String, Long)*): Unit = {
-    Files.createDirectories(Paths.get(b))
-    val tmp = Paths.get(b, s"_sketch_meta.json.tmp${ProcessHandle.current.pid}")
-    Files.writeString(tmp,
-      kv.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}"))
-    Files.move(tmp, metaPath(b),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  def drop(spark: SparkSession, storeKey: String): Unit = {
-    val b = Paths.get(base(spark, storeKey))
-    if (Files.exists(b)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(b).iterator().asScala.toSeq.reverse
-        .foreach(Files.deleteIfExists(_))
-    }
-  }
+  def drop(spark: SparkSession, storeKey: String): Unit =
+    StoreFiles.rm(base(spark, storeKey))
 
   /** Ingest one batch: sketch its (group, item) rows and commit the
     * pane. Idempotent under crash-retry AND under batch replay
@@ -84,7 +59,7 @@ object SketchStore {
       groupCol: String, item: Column, batchId: Long, k: Int,
       seed: Long): Unit = {
     val b = base(spark, storeKey)
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     meta.get("k").foreach(k0 => require(k0 == k && meta("seed") == seed,
       s"sketch store '$storeKey' was built with (k=$k0, seed=" +
         s"${meta("seed")}), got (k=$k, seed=$seed) — sketches under " +
@@ -130,8 +105,8 @@ object SketchStore {
     // batch ids whose original panes no longer exist — the first
     // ingest after a compaction would make a later TRUE replay of a
     // folded id fail loudly instead of no-opping
-    writeMeta(b, Seq("last_batch_id" -> batchId, "k" -> k.toLong,
-      "seed" -> seed) ++
+    StoreFiles.commit(metaFile(b), Seq("last_batch_id" -> batchId,
+      "k" -> k.toLong, "seed" -> seed) ++
       meta.get("verify_floor").map("verify_floor" -> _): _*)
   }
 
@@ -140,13 +115,14 @@ object SketchStore {
     * a scoped-but-MISSING one fails loudly in [[read]]).
     */
   def exists(spark: SparkSession, storeKey: String): Boolean =
-    readMeta(base(spark, storeKey)).contains("last_batch_id")
+    StoreFiles.readNums(metaFile(base(spark, storeKey)))
+      .contains("last_batch_id")
 
   /** Fold every committed pane into ONE pane carrying batch_id =
     * last_batch_id — the pane COUNT is the only thing that grows in
     * this store (each pane is already ≤ G·k longs), and reads are
-    * unchanged by mergeability. Side-dir + atomic rename swap (the
-    * DedupStore compaction discipline); meta's verify_floor rises to
+    * unchanged by mergeability. A [[StoreFiles.swap]]; meta's
+    * verify_floor rises to
     * last_batch_id — EVERY committed batch's original pane is gone
     * after the fold, including the last one's (the surviving
     * batch_id=last pane holds the MERGED sketch, not that batch's own;
@@ -161,23 +137,18 @@ object SketchStore {
   def compactPanes(spark: SparkSession, storeKey: String,
       numFiles: Int = 1): Unit = {
     val b = base(spark, storeKey)
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     if (!meta.contains("last_batch_id")) return
     val last = meta("last_batch_id")
     val side = s"$b/panes__compact"
-    val garbage = s"$b/panes__garbage_${ProcessHandle.current.pid}"
-    def rm(p: String): Unit =
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
-    rm(side)
+    StoreFiles.rm(side)
     read(spark, storeKey).withColumn("batch_id", lit(last))
       .coalesce(numFiles)
       .write.mode(SaveMode.Overwrite).partitionBy("batch_id")
       .parquet(side)
-    Files.move(Paths.get(s"$b/panes"), Paths.get(garbage))
-    Files.move(Paths.get(side), Paths.get(s"$b/panes"))
-    rm(garbage)
-    writeMeta(b, "last_batch_id" -> last, "k" -> meta("k"),
-      "seed" -> meta("seed"), "verify_floor" -> last)
+    StoreFiles.swap(s"$b/panes", side)
+    StoreFiles.commit(metaFile(b), "last_batch_id" -> last,
+      "k" -> meta("k"), "seed" -> meta("seed"), "verify_floor" -> last)
   }
 
   /** Retention: drop panes with batch_id < `keepFromBatchId` — the
@@ -189,7 +160,7 @@ object SketchStore {
   def expirePanes(spark: SparkSession, storeKey: String,
       keepFromBatchId: Long): Unit = {
     val b = base(spark, storeKey)
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     if (!meta.contains("last_batch_id")) return
     require(keepFromBatchId <= meta("last_batch_id"),
       s"expirePanes: keepFrom $keepFromBatchId would drop every pane " +
@@ -203,10 +174,10 @@ object SketchStore {
           n.startsWith("batch_id=") &&
             n.stripPrefix("batch_id=").toLong < keepFromBatchId
         }
-        .foreach(p => org.apache.commons.io.FileUtils
-          .deleteDirectory(p.toFile))
+        .foreach(p => StoreFiles.rm(p))
     }
-    writeMeta(b, "last_batch_id" -> meta("last_batch_id"),
+    StoreFiles.commit(metaFile(b),
+      "last_batch_id" -> meta("last_batch_id"),
       "k" -> meta("k"), "seed" -> meta("seed"),
       "verify_floor" -> math.max(meta.getOrElse("verify_floor", -1L),
         keepFromBatchId - 1))
@@ -222,7 +193,8 @@ object SketchStore {
     // before the k lookup, or an absent store reads as a bare
     // key-not-found instead of the documented message
     val panes = panesDf(spark, storeKey)
-    val k = readMeta(base(spark, storeKey))("k").toInt
+    val k =
+      StoreFiles.readNums(metaFile(base(spark, storeKey)))("k").toInt
     panes.groupBy("grp")
       .agg(Sketches.kmvMergeAgg(col("kmv"), k).as("kmv"))
   }
@@ -235,7 +207,7 @@ object SketchStore {
   private[graft] def panesDf(spark: SparkSession,
       storeKey: String): DataFrame = {
     val b = base(spark, storeKey)
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     require(meta.contains("last_batch_id"),
       s"sketch store '$storeKey' has no committed batches")
     readPanesDir(spark, s"$b/panes")

@@ -38,9 +38,9 @@ import java.nio.file.{Files, Paths}
   * seen: re-submitting it after the conflict is resolved (fresh store,
   * or the linking evidence gone) assigns it normally.
   *
-  * Store discipline (the [[DedupStore]] recipe): `assign/` parquet +
-  * `_split_meta.json` written AFTER data via temp-file + atomic
-  * rename; `batchId` replay-skip; crash-retry idempotent because a
+  * Store discipline (the [[DedupStore]] one): `assign/` parquet +
+  * `_split_meta.json` committed AFTER data through
+  * [[StoreFiles.commit]]; `batchId` replay-skip; crash-retry idempotent because a
   * retry first drops already-assigned docs from the batch (the
   * re-derivation assigns nothing twice and appends nothing new).
   * [[compact]] folds the one-file-set-per-batch append history;
@@ -51,31 +51,12 @@ object SplitStore {
   private def base(spark: SparkSession, storeKey: String): String =
     s"${AnnIndex.annBase(spark)}/graft_splitstore_${IndexStore.pathTag(storeKey)}"
 
-  private def metaPath(b: String) = Paths.get(b, "_split_meta.json")
-
-  private def readMeta(b: String): Map[String, Long] = {
-    val p = metaPath(b)
-    if (!Files.exists(p)) Map.empty
-    else "\"([a-zA-Z_]+)\"\\s*:\\s*(-?\\d+)".r
-      .findAllMatchIn(Files.readString(p))
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-  }
-
-  private def writeMeta(b: String, kv: (String, Long)*): Unit = {
-    Files.createDirectories(Paths.get(b))
-    val tmp = Paths.get(b,
-      s"_split_meta.json.tmp${ProcessHandle.current.pid}")
-    Files.writeString(tmp,
-      kv.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}"))
-    Files.move(tmp, metaPath(b),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def metaFile(b: String) = Paths.get(b, "_split_meta.json")
 
   /** All committed assignments: (doc_id, rep_id, split). */
   def read(spark: SparkSession, storeKey: String): DataFrame = {
     val b = base(spark, storeKey)
-    require(readMeta(b).contains("last_batch_id"),
+    require(StoreFiles.readNums(metaFile(b)).contains("last_batch_id"),
       s"no persisted split store for '$storeKey' ($b) — assign a " +
         "first batch")
     // a crash between the append and the meta commit can leave one
@@ -123,7 +104,7 @@ object SplitStore {
       s"assign: onConflict must be 'refuse' or 'quarantine', got " +
         s"'$onConflict'")
     val b = base(spark, storeKey)
-    val meta = readMeta(b)
+    val meta = StoreFiles.readNums(metaFile(b))
     if (meta.get("last_batch_id").exists(batchId <= _))
       return read(spark, storeKey)
     val hasStore = Files.exists(Paths.get(s"$b/assign"))
@@ -228,13 +209,12 @@ object SplitStore {
             buckets, trainBuckets, valBuckets)).as("split"))
     if (!rows.isEmpty)
       rows.write.mode(SaveMode.Append).parquet(s"$b/assign")
-    writeMeta(b, "last_batch_id" -> batchId) // meta-after-data
+    StoreFiles.commit(metaFile(b), "last_batch_id" -> batchId) // after data
     read(spark, storeKey)
   }
 
   /** Fold the one-file-set-per-batch append history of `assign/` into
-    * few files — the [[DedupStore.compactSeen]] recipe (side dir +
-    * rename swap; the rename window is caught loudly by [[read]]'s
+    * few files with a [[StoreFiles.swap]] (the rename window is caught loudly by [[read]]'s
     * meta-then-missing-dir state, never read as an empty store).
     * Compaction rewrites FILES, never assignments: [[read]] is
     * byte-identical before and after (write-once contract intact),
@@ -247,19 +227,14 @@ object SplitStore {
     val aDir = s"$b/assign"
     if (!Files.exists(Paths.get(aDir))) return
     val side = s"$b/assign__compact"
-    val garbage = s"$b/assign__garbage_${ProcessHandle.current.pid}"
-    def rm(p: String): Unit =
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
-    rm(side)
+    StoreFiles.rm(side)
     // dropDuplicates folds the one recoverable anomaly (a crash
     // between a batch's append and its meta commit duplicates that
     // batch's rows) — exactly what read() folds on every scan
     ParquetIO.read(spark, aDir).dropDuplicates("doc_id")
       .repartition(numFiles, col("rep_id"))
       .write.mode(SaveMode.Overwrite).parquet(side)
-    Files.move(Paths.get(aDir), Paths.get(garbage))
-    Files.move(Paths.get(side), Paths.get(aDir))
-    rm(garbage)
+    StoreFiles.swap(aDir, side)
   }
 
   /** ERASE the given documents' assignment rows — the
@@ -268,7 +243,7 @@ object SplitStore {
     * rows are untouched (write-once intact — a purged doc that was a
     * cluster's rep leaves its id standing as the survivors' stable
     * cluster LABEL, an identifier the store already held for them,
-    * not the purged doc's content). Same side-dir + rename swap as
+    * not the purged doc's content). A [[StoreFiles.swap]] as in
     * [[compact]]; quarantined conflict rows for the purged ids are
     * erased too. Consequence, documented: re-submitting a purged doc
     * later re-assigns it fresh (the store has honestly forgotten it)
@@ -297,41 +272,29 @@ object SplitStore {
       .join(victims, Seq("doc_id"), "left_semi")
       .limit(1).collect().nonEmpty
     if (!present) return 0L
-    def rm(p: String): Unit =
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
-    def swapOrDrop(live: String, side: String, nKept: Long): Unit = {
-      val garbage = s"${live}__garbage_${ProcessHandle.current.pid}"
-      Files.move(Paths.get(live), Paths.get(garbage))
-      if (nKept > 0) Files.move(Paths.get(side), Paths.get(live))
-      else rm(side) // absent dir IS the empty state (expireSeen rule)
-      rm(garbage)
-    }
     val was = ParquetIO.read(spark, aDir).dropDuplicates("doc_id").count()
     val side = s"$b/assign__compact"
-    rm(side)
+    StoreFiles.rm(side)
     val kept = ParquetIO.read(spark, aDir).dropDuplicates("doc_id")
       .join(victims, Seq("doc_id"), "left_anti")
       .localCheckpoint(true)
     kept.write.mode(SaveMode.Overwrite).parquet(side)
     val nKept = kept.count()
-    swapOrDrop(aDir, side, nKept)
+    StoreFiles.swap(aDir, side, keep = nKept > 0)
     val cDir = s"$b/conflicts"
     if (Files.exists(Paths.get(cDir))) {
       val sideC = s"$b/conflicts__compact"
-      rm(sideC)
+      StoreFiles.rm(sideC)
       val keptC = ParquetIO.read(spark, cDir)
         .join(victims, Seq("doc_id"), "left_anti")
         .localCheckpoint(true)
       keptC.write.mode(SaveMode.Overwrite).parquet(sideC)
-      swapOrDrop(cDir, sideC, keptC.count())
+      StoreFiles.swap(cDir, sideC, keep = keptC.count() > 0)
     }
     was - nKept
   }
 
   /** Remove the persisted layout (test/ops hygiene). */
-  def drop(spark: SparkSession, storeKey: String): Unit = {
-    val b = Paths.get(base(spark, storeKey))
-    if (Files.exists(b))
-      org.apache.commons.io.FileUtils.deleteDirectory(b.toFile)
-  }
+  def drop(spark: SparkSession, storeKey: String): Unit =
+    StoreFiles.rm(base(spark, storeKey))
 }

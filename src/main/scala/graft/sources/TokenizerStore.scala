@@ -3,7 +3,6 @@ package graft.sources
 import graft.operators.CorpusOps
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
 
 /** PERSISTED TOKENIZER ARTIFACTS — train-once/serve-many for the two
   * trainer families (public art: every production pipeline ships its
@@ -136,10 +135,7 @@ object TokenizerStore {
   /** Remove the persisted artifacts (test/ops hygiene). */
   def drop(spark: SparkSession, sourceDir: String): Unit = {
     val tag = IndexStore.pathTag(sourceDir)
-    Seq(bpeBase(spark, tag), uniBase(spark, tag)).foreach { b =>
-      val p = Paths.get(b)
-      if (Files.exists(p))
-        org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-    }
+    StoreFiles.rm(bpeBase(spark, tag))
+    StoreFiles.rm(uniBase(spark, tag))
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.sources.StoreFiles
 import java.sql.Timestamp
 
 /** Structured-Streaming operators over the `events` table (SURVEY.md §2.9
@@ -1243,28 +1244,18 @@ object StreamOps {
         }
       }
 
+  private def gateMeta(auditDir: String) =
+    java.nio.file.Paths.get(auditDir, "_gate_meta.json")
+
   /** The gate's committed trigger high-water mark (−1 when absent). */
   private def gateCommittedBatch(auditDir: String): Long = {
-    val p = java.nio.file.Paths.get(auditDir, "_gate_meta.json")
-    if (!java.nio.file.Files.exists(p)) -1L
-    else "\"last_batch_id\"\\s*:\\s*(-?\\d+)".r
-      .findFirstMatchIn(java.nio.file.Files.readString(p))
-      .map(_.group(1).toLong).getOrElse(throw new IllegalStateException(
-        s"contract gate '$auditDir': _gate_meta.json is present but " +
-          "unparseable — corrupt meta; restore it or start fresh"))
+    val p = gateMeta(auditDir)
+    StoreFiles.read(p).fold(-1L)(t => StoreFiles.required(
+      StoreFiles.nums(t), "last_batch_id", "gate meta", p))
   }
 
-  private def gateCommitBatch(auditDir: String, id: Long): Unit = {
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(auditDir))
-    val tmp = java.nio.file.Paths.get(auditDir,
-      s"_gate_meta.json.tmp${ProcessHandle.current.pid}")
-    java.nio.file.Files.writeString(tmp, s"""{"last_batch_id": $id}""")
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(auditDir, "_gate_meta.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def gateCommitBatch(auditDir: String, id: Long): Unit =
+    StoreFiles.commit(gateMeta(auditDir), "last_batch_id" -> id)
 
   /** Incrementally-maintained dataset manifest — the streaming closure
     * of [[graft.operators.Lineage.manifest]]: each micro-batch folds
