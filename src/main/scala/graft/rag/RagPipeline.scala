@@ -737,7 +737,11 @@ object RagPipeline {
     * surfacing through BM25 fusion (the round-9 gap). One id batch,
     * two merge-on-read tombstone appends ([[graft.sources.AnnIndex
     * .deleteSq8]] + [[graft.sources.KeywordIndex.deletePostings]]),
-    * each O(batch) with its own `last_del_batch_id` replay-skip.
+    * each O(batch) with its own `last_del_batch_id` replay-skip; the
+    * two run concurrently and commit independently. When one half
+    * fails, the other still finishes (and commits) before the failure
+    * is thrown: re-running the call with the same `batchId` skips the
+    * half already applied.
     * Serve through [[hybridRetrieveQuantizedOpen]] afterwards —
     * `ensure*` treats a tombstoned layout as stale ("serve exactly
     * this source") and would rebuild it, clearing the deletions.
@@ -747,10 +751,12 @@ object RagPipeline {
       sourceDir: String,
       chunkIds: DataFrame,
       batchId: Option[Long] = None): Unit = {
-    graft.sources.AnnIndex.deleteSq8(spark, sourceDir,
-      chunkIds.select(col("chunk_id").as("vec_id")), batchId = batchId)
-    graft.sources.KeywordIndex.deletePostings(spark, sourceDir,
-      chunkIds, idCol = "chunk_id", batchId = batchId)
+    import graft.sources.Passes.pass
+    graft.sources.Passes.run(spark, "hybrid.delete")(
+      pass("sq8")(graft.sources.AnnIndex.deleteSq8(spark, sourceDir,
+        chunkIds.select(col("chunk_id").as("vec_id")), batchId = batchId)),
+      pass("postings")(graft.sources.KeywordIndex.deletePostings(spark,
+        sourceDir, chunkIds, idCol = "chunk_id", batchId = batchId)))
   }
 
   /** [[hybridRetrieveQuantized]] served from the OPENED persisted pair

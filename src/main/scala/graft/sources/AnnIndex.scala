@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.operators.SimilaritySearch
+import graft.sources.Passes.pass
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -939,7 +940,10 @@ object AnnIndex {
   private final class CodecLayout(spark: SparkSession, c: Codec,
       sourceDir: String, ivf: Boolean, val sub: String, val key: String,
       modelDirs: Seq[String], vecsInScan: Boolean) {
-    private val stem = (if (ivf) "ivf" else "") + c.stem
+    /** The layout's name stem (`sq8`, `ivfpq`, …): its dirs, tables and
+      * job descriptions start with it.
+      */
+    val stem = (if (ivf) "ivf" else "") + c.stem
     private val tag = IndexStore.pathTag(sourceDir)
     val verb = (if (ivf) "Ivf" else "") + c.verb
     val label = Seq(if (ivf) "IVF" else "", c.label).filter(_.nonEmpty)
@@ -1240,21 +1244,27 @@ object AnnIndex {
   }
 
   /** Full (re)build: clear the tombstones (a rebuild serves exactly
-    * its source), train any model, overwrite both tables (the scan
-    * table encoded with the just-persisted model), commit the meta.
+    * its source), then overwrite both tables concurrently — the scan
+    * table trains any model and encodes with the just-persisted one —
+    * and commit the meta.
     */
   private def buildFlat(c: FlatCodec, spark: SparkSession, l: CodecLayout,
       index: DataFrame, storageBuckets: Int, n: Long, fp: Long,
       snapshotId: Option[String]): Unit = {
     val rows = index.select("vec_id", "embedding")
     dropTombs(spark, l.base, l.tombs)
-    c.train(rows, l.base)
-    spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
-    writeBucketed(c.encode(rows, l.base), l.scan, l.key, storageBuckets,
-      Some(s"${l.base}/${l.sub}"))
-    spark.sql(s"DROP TABLE IF EXISTS ${l.floats}")
-    writeBucketed(rows, l.floats, "vec_id", storageBuckets,
-      Some(s"${l.base}/vecs"))
+    Passes.run(spark, s"${l.stem}.build")(
+      pass(l.sub) {
+        c.train(rows, l.base)
+        spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
+        writeBucketed(c.encode(rows, l.base), l.scan, l.key, storageBuckets,
+          Some(s"${l.base}/${l.sub}"))
+      },
+      pass("vecs") {
+        spark.sql(s"DROP TABLE IF EXISTS ${l.floats}")
+        writeBucketed(rows, l.floats, "vec_id", storageBuckets,
+          Some(s"${l.base}/vecs"))
+      })
     commitBuilt(l.base, flatPoint(c, storageBuckets) ++
       Seq("n_rows" -> n, "checksum" -> fp), c.strMeta(index, Map.empty),
       snapshotId)
@@ -1340,7 +1350,7 @@ object AnnIndex {
 
   /** Incremental add into an existing persisted flat index: the codec
     * is per-row, so an upsert is EXACTLY a rebuild restricted to the new
-    * rows — encode the new vectors, append to both tables, xor-compose
+    * rows — encode the new vectors, append to both tables at once, xor-compose
     * the checksum: O(new) per batch, upsert ≡ rebuild row-identically
     * by construction. Append-only contract (a tombstoned id is refused,
     * see [[refuseTombstoned]]) and `batchId` replay-skip as in
@@ -1356,8 +1366,10 @@ object AnnIndex {
     upsertLayout(spark, l, sourceDir, Some(point), _ => point, newVecs,
       batchId, known, c.strMeta(newVecs, readMetaStrs(l.base))) { (_, _) =>
       val rows = newVecs.select("vec_id", "embedding")
-      writeBucketed(c.encode(rows, l.base), l.scan, l.key, storageBuckets)
-      writeBucketed(rows, l.floats, "vec_id", storageBuckets)
+      Passes.run(spark, s"${l.stem}.upsert")(
+        pass(l.sub)(writeBucketed(c.encode(rows, l.base), l.scan, l.key,
+          storageBuckets)),
+        pass("vecs")(writeBucketed(rows, l.floats, "vec_id", storageBuckets)))
       Nil
     }
     flatHandle(spark, l)
@@ -1494,9 +1506,10 @@ object AnnIndex {
   }
 
   /** The compaction of both lifecycles: `rewriteScan` rewrites the scan
-    * table from its served rows at the stored bucketing, then `vecs`
-    * is rewritten likewise — so any tombstones fold — and swapped in;
-    * a fold drops the tombstones and commits ([[commitFold]]).
+    * table from its served rows at the stored bucketing while `vecs` is
+    * rewritten likewise — so any tombstones fold — and swapped in, the
+    * two concurrently under one bucketed-scan pin; a fold then drops
+    * the tombstones and commits ([[commitFold]]).
     */
   private def compactLayout(spark: SparkSession, l: CodecLayout)(
       rewriteScan: (DataFrame, Int) => Unit): Unit = {
@@ -1506,9 +1519,10 @@ object AnnIndex {
     val folding = meta.get("tomb_rows").exists(_ > 0L) &&
       spark.catalog.tableExists(l.tombs)
     val (scan, floats) = served(spark, l)
-    rewriteScan(scan, sb)
-    l.vecs.foreach(compactBucketed(spark, l.base, _, "vecs", "vec_id", sb,
-      Some(floats)))
+    withBucketedScanPinned(spark)(Passes.run(spark, s"${l.stem}.compact")(
+      pass(l.sub)(rewriteScan(scan, sb)) +: l.vecs.toSeq.map(v =>
+        pass("vecs")(compactBucketed(spark, l.base, v, "vecs", "vec_id", sb,
+          Some(floats)))): _*))
     if (folding) dropTombs(spark, l.base, l.tombs)
     l.attach(sb)
     if (folding) commitFold(l.base, meta, spark.table(l.floats))
@@ -2041,25 +2055,28 @@ object AnnIndex {
   }
 
   /** Full IVF (re)build: clear the tombstones (a rebuild serves exactly
-    * its source), train the centroids then any codec model, land the
-    * lists assigned and encoded with the just-persisted model and the
-    * float table, then commit the meta.
+    * its source); train the centroids, train any codec model and land
+    * the float table, the three concurrently; then land the lists
+    * assigned and encoded with the just-persisted models and commit the
+    * meta.
     */
   private def buildIvf(c: IvfCodec, spark: SparkSession, l: CodecLayout,
       index: DataFrame, lists: Int, iters: Int, storageBuckets: Int,
       n: Long, fp: Long, snapshotId: Option[String]): Unit = {
     val rows = index.select("vec_id", "embedding")
     dropTombs(spark, l.base, l.tombs)
-    SimilaritySearch.kMeansCentroids(rows, lists, iters)
-      .write.mode(SaveMode.Overwrite).parquet(l.centroids)
-    c.train(rows, l.base)
+    Passes.run(spark, s"${l.stem}.build")(Seq(
+      pass("centroids")(SimilaritySearch.kMeansCentroids(rows, lists, iters)
+        .write.mode(SaveMode.Overwrite).parquet(l.centroids)),
+      pass("model")(c.train(rows, l.base))) ++
+      l.vecs.map(v => pass("vecs") {
+        spark.sql(s"DROP TABLE IF EXISTS $v")
+        writeBucketed(rows, v, "vec_id", storageBuckets,
+          Some(s"${l.base}/vecs"))
+      }): _*)
     spark.sql(s"DROP TABLE IF EXISTS ${l.scan}")
     writeLists(c.assign(rows, ParquetIO.read(spark, l.centroids), l.base),
       l.scan, Some(s"${l.base}/lists"))
-    l.vecs.foreach { v =>
-      spark.sql(s"DROP TABLE IF EXISTS $v")
-      writeBucketed(rows, v, "vec_id", storageBuckets, Some(s"${l.base}/vecs"))
-    }
     commitBuilt(l.base, ivfPoint(c, lists, iters, storageBuckets) ++
       Seq("n_rows" -> n, "checksum" -> fp, "n_base" -> n), Nil, snapshotId)
   }
@@ -2089,8 +2106,8 @@ object AnnIndex {
 
   /** Incremental add into an existing persisted IVF index: new vectors
     * are assigned to the STORED centroids and appended encoded with the
-    * STORED codec model into the partitioned lists (plus float rows into
-    * `vecs`) — O(new) per batch. Inherits BOTH parents' contracts:
+    * STORED codec model into the partitioned lists (plus, at once, float
+    * rows into `vecs`) — O(new) per batch. Inherits BOTH parents' contracts:
     * [[upsertIvf]]'s drift gate ([[driftGate]] — the centroids and any
     * codec model are distribution-bound) and [[upsertFlat]]'s tombstone
     * refusal and batchId replay-skip; the meta checksum xor-composes.
@@ -2111,9 +2128,11 @@ object AnnIndex {
       newVecs, batchId, known, Nil) { (meta, n) =>
       val nBase = driftGate(spark, l.verb, meta, n)
       val rows = newVecs.select("vec_id", "embedding")
-      writeLists(c.assign(rows, ParquetIO.read(spark, l.centroids), l.base),
-        l.scan)
-      l.vecs.foreach(writeBucketed(rows, _, "vec_id", l.buckets(meta)))
+      Passes.run(spark, s"${l.stem}.upsert")(
+        pass(l.sub)(writeLists(c.assign(rows,
+          ParquetIO.read(spark, l.centroids), l.base), l.scan)) +:
+          l.vecs.toSeq.map(v => pass("vecs")(writeBucketed(rows, v, "vec_id",
+            l.buckets(meta)))): _*)
       Seq("n_base" -> nBase)
     }
     ivfCodesHandle(spark, l)
@@ -2336,6 +2355,7 @@ object AnnIndex {
     * overrides what gets written (default: the table's current rows) —
     * the tombstone FOLD path passes the anti-joined live set, which is
     * materialized while the old dir is still in place, then swapped.
+    * Callers run it under [[withBucketedScanPinned]].
     */
   private[sources] def compactBucketed(spark: SparkSession, base: String,
       table: String, sub: String, key: String, buckets: Int,
@@ -2343,23 +2363,35 @@ object AnnIndex {
     val side = s"$base/${sub}_compact_${ProcessHandle.current.pid}"
     val tmp = s"${table}_compact"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    // the rewrite reads a table bucketed the same way, so writeBucketed's
-    // repartition collapses to the scan's own partitioning — but the
-    // planner's auto-disable then reverts the scan to per-file partitions
-    // with the exchange already elided, resurrecting the tasks × buckets
-    // fan-out; pinning the bucketed scan on keeps partitions ≡ buckets
+    writeBucketed(content.getOrElse(spark.table(table)), tmp, key, buckets,
+      Some(side))
+    spark.sql(s"DROP TABLE $tmp")
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    StoreFiles.swap(s"$base/$sub", side)
+  }
+
+  /** Run `body` with the planner's auto-disable of bucketed scans off,
+    * then restore the setting exactly as found (unset stays unset). A
+    * [[compactBucketed]] rewrite reads a table bucketed the same way, so
+    * writeBucketed's repartition collapses to the scan's own
+    * partitioning — but the auto-disable then reverts the scan to
+    * per-file partitions with the exchange already elided, resurrecting
+    * the tasks × buckets fan-out; pinning the bucketed scan on keeps
+    * partitions ≡ buckets. Set once around a whole group of concurrent
+    * rewrites: a pass that set and restored it itself would restore
+    * over another pass's setting.
+    */
+  private[sources] def withBucketedScanPinned[T](spark: SparkSession)(
+      body: => T): T = {
     val autoScanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val priorAutoScan = spark.conf.getOption(autoScanKey)
+    // the explicit setting, not getOption's default: unset stays unset
+    val priorAutoScan = spark.conf.getAll.get(autoScanKey)
     spark.conf.set(autoScanKey, "false")
-    try writeBucketed(content.getOrElse(spark.table(table)), tmp, key,
-      buckets, Some(side))
+    try body
     finally priorAutoScan match {
       case Some(v) => spark.conf.set(autoScanKey, v)
       case None => spark.conf.unset(autoScanKey)
     }
-    spark.sql(s"DROP TABLE $tmp")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    StoreFiles.swap(s"$base/$sub", side)
   }
 
   /** Query the persisted IVF-SQ8 index: rank centroids per query

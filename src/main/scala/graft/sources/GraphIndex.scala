@@ -320,7 +320,7 @@ object GraphIndex {
     * freshness contract sees a clean layout again.
     */
   def compactGraph(spark: SparkSession, sourceDir: String): GraphHandle = {
-    import AnnIndex.compactBucketed
+    import AnnIndex.{compactBucketed, withBucketedScanPinned}
     val tag = IndexStore.pathTag(sourceDir)
     val base = gBase(spark, tag)
     openGraph(spark, sourceDir) // validates meta + attaches + refreshes
@@ -341,11 +341,13 @@ object GraphIndex {
           .join(broadcast(t.select(col("vec_id").as("dst"))), Seq("dst"),
             "left_anti")
       } else df
-    compactBucketed(spark, base, s"graft_graph_edges_$tag", "edges",
-      "src", sb, Some(foldEdges(spark.table(s"graft_graph_edges_$tag"))))
-    compactBucketed(spark, base, s"graft_graph_vecs_$tag", "vecs",
-      "vec_id", sb,
-      Some(foldVecs(spark.table(s"graft_graph_vecs_$tag"))))
+    withBucketedScanPinned(spark) {
+      compactBucketed(spark, base, s"graft_graph_edges_$tag", "edges",
+        "src", sb, Some(foldEdges(spark.table(s"graft_graph_edges_$tag"))))
+      compactBucketed(spark, base, s"graft_graph_vecs_$tag", "vecs",
+        "vec_id", sb,
+        Some(foldVecs(spark.table(s"graft_graph_vecs_$tag"))))
+    }
     if (folding) dropTombs(spark, base, s"graft_graph_tombs_$tag")
     attach(spark, tag, sb)
     if (folding) {

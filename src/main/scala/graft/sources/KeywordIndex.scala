@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.operators.KeywordSearch
 import graft.operators.KeywordSearch.Bm25Stats
+import graft.sources.Passes.pass
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -139,23 +140,30 @@ object KeywordIndex {
     // cardinality in meta n_docs: a token-less document produces no
     // postings rows, and serving the inflated count would silently
     // shift every idf/avgdl off the derived path's values
-    val statsRow = stored.groupBy("doc_id").agg(first("dl").as("dl"))
-      .agg(count(lit(1)).as("nd"), coalesce(sum("dl"), lit(0.0)).as("sdl"))
-      .head()
+    val Seq(statsRow: Row, _) = Passes.run(spark, "postings.seed")(
+      pass("stats")(docStats(stored)),
+      pass("dfs") {
+        spark.sql(s"DROP TABLE IF EXISTS ${dfsName(tag)}")
+        StoreFiles.rm(s"$base/dfs")
+        stored.groupBy("term").agg(count(lit(1)).as("df"))
+          .write.mode(SaveMode.Overwrite)
+          .option("path", s"$base/dfs")
+          .format("parquet").saveAsTable(dfsName(tag))
+      })
     val nStat = statsRow.getLong(0)
     val sumDl = statsRow.getDouble(1).toLong
-    spark.sql(s"DROP TABLE IF EXISTS ${dfsName(tag)}")
-    StoreFiles.rm(s"$base/dfs")
-    stored.groupBy("term").agg(count(lit(1)).as("df"))
-      .write.mode(SaveMode.Overwrite)
-      .option("path", s"$base/dfs")
-      .format("parquet").saveAsTable(dfsName(tag))
     val meta = AnnIndex.readMeta(base)
     AnnIndex.writeMetaFull(base,
       (meta - "sum_dl" - "n_docs_stat").toSeq ++
         Seq("sum_dl" -> sumDl, "n_docs_stat" -> nStat),
       AnnIndex.readMetaStrs(base).toSeq)
   }
+
+  /** (documents, Σ dl) of a postings frame: one row (nd, sdl). */
+  private def docStats(postings: DataFrame): Row =
+    postings.groupBy("doc_id").agg(first("dl").as("dl"))
+      .agg(count(lit(1)).as("nd"), coalesce(sum("dl"), lit(0.0)).as("sdl"))
+      .head()
 
   /** Build (or reuse) the persisted postings over `docs`. Freshness is
     * the [[AnnIndex.ensureLsh]] contract: `snapshotId` match ⇒ O(1)
@@ -309,8 +317,6 @@ object KeywordIndex {
         s"upsertPostings: $clash incoming doc id(s) are tombstoned — " +
           "run compactPostings to fold deletions before re-inserting")
     }
-    val (nNew, fpNew) = AnnIndex.fingerprint(
-      newDocs.select(newDocs(idCol), newDocs(textCol)))
     // incremental stats (the round-12 verdict's per-call-scan fix): df
     // DELTAS append to the side table (the read side sums per term) and
     // Σ dl bumps in the meta — O(batch vocabulary) per upsert, and the
@@ -333,21 +339,28 @@ object KeywordIndex {
         AnnIndex.readMetaStrs(base).toSeq)
     }
     // one deterministic postings frame feeds the append AND the stats
-    // deltas (materialized so the two passes agree byte-for-byte)
-    val newPost = KeywordSearch.bm25Postings(newDocs, idCol, textCol)
-      .localCheckpoint(true)
-    newPost.write.mode(SaveMode.Append).format("parquet")
-      .saveAsTable(tableName(tag))
+    // deltas (materialized so the passes agree byte-for-byte), taken
+    // while the batch is fingerprinted
+    val Seq((nNew: Long, fpNew: Long), newPost: DataFrame @unchecked) =
+      Passes.run(spark, "postings.upsert")(
+        pass("fingerprint")(AnnIndex.fingerprint(
+          newDocs.select(newDocs(idCol), newDocs(textCol)))),
+        pass("checkpoint")(KeywordSearch.bm25Postings(newDocs, idCol, textCol)
+          .localCheckpoint(true)))
+    val append = pass("append")(newPost.write.mode(SaveMode.Append)
+      .format("parquet").saveAsTable(tableName(tag)))
     val (sumDlNew, nStatNew) =
       if (statsKept) {
-        newPost.groupBy("term").agg(count(lit(1)).as("df"))
-          .write.mode(SaveMode.Append).format("parquet")
-          .saveAsTable(dfsName(tag))
-        val r = newPost.groupBy("doc_id").agg(first("dl").as("dl"))
-          .agg(count(lit(1)).as("nd"),
-            coalesce(sum("dl"), lit(0.0)).as("sdl")).head()
+        val Seq(_, _, r: Row) = Passes.run(spark, "postings.upsert")(append,
+          pass("dfs")(newPost.groupBy("term").agg(count(lit(1)).as("df"))
+            .write.mode(SaveMode.Append).format("parquet")
+            .saveAsTable(dfsName(tag))),
+          pass("stats")(docStats(newPost)))
         (r.getDouble(1).toLong, r.getLong(0))
-      } else (0L, 0L)
+      } else {
+        Passes.run(spark, "postings.upsert")(append)
+        (0L, 0L)
+      }
     // any stored snapshot_id is deliberately dropped — the layout is now
     // ahead of the snapshot that id named (the upsertLsh rule)
     AnnIndex.writeMetaFull(base,
@@ -451,19 +464,22 @@ object KeywordIndex {
         (gone.groupMapReduce(_.getString(1))(_ => -1L)(_ + _),
           dls.size.toLong, dls.values.sum.toLong)
       } else (Map.empty[String, Long], 0L, 0L)
-    if (spark.catalog.tableExists(tombsName(tag)))
-      batch.write.mode(SaveMode.Append).format("parquet")
-        .saveAsTable(tombsName(tag))
-    else
-      batch.write.mode(SaveMode.Overwrite)
-        .option("path", s"$base/tombs")
-        .format("parquet").saveAsTable(tombsName(tag))
-    if (dfDeltas.nonEmpty)
-      spark.createDataFrame(
+    val tombs = pass("tombs") {
+      if (spark.catalog.tableExists(tombsName(tag)))
+        batch.write.mode(SaveMode.Append).format("parquet")
+          .saveAsTable(tombsName(tag))
+      else
+        batch.write.mode(SaveMode.Overwrite)
+          .option("path", s"$base/tombs")
+          .format("parquet").saveAsTable(tombsName(tag))
+    }
+    val dfs = pass("dfs")(spark.createDataFrame(
         dfDeltas.toSeq.map { case (t, d) => Row(t, d) }.asJava,
         spark.table(dfsName(tag)).schema)
-        .coalesce(1).write.mode(SaveMode.Append).format("parquet")
-        .saveAsTable(dfsName(tag))
+      .coalesce(1).write.mode(SaveMode.Append).format("parquet")
+      .saveAsTable(dfsName(tag)))
+    Passes.run(spark, "postings.delete")(
+      tombs +: (if (dfDeltas.nonEmpty) Seq(dfs) else Nil): _*)
     val tombRows = meta.getOrElse("tomb_rows", 0L) + nDel
     AnnIndex.writeMetaFull(base,
       (meta - "tomb_rows" - "last_del_batch_id" - "sum_dl" - "n_docs_stat"
@@ -531,32 +547,31 @@ object KeywordIndex {
     // numbers, just the slower plan) until the next compact/ensure.
     val live = spark.table(tableName(tag))
     val dfsSide = s"$base/dfs_compact_${ProcessHandle.current.pid}"
-    live.groupBy("term").agg(count(lit(1)).as("df"))
-      .write.mode(SaveMode.Overwrite).parquet(dfsSide)
-    spark.sql(s"DROP TABLE IF EXISTS ${dfsName(tag)}")
-    StoreFiles.swap(s"$base/dfs", dfsSide)
-    AnnIndex.registerExternal(spark, dfsName(tag), s"$base/dfs")
-    val liveStats = live.groupBy("doc_id").agg(first("dl").as("dl"))
-      .agg(count(lit(1)).as("nd"), coalesce(sum("dl"), lit(0.0)).as("sdl"))
-      .head()
+    val Seq(_, liveStats: Row) = Passes.run(spark, "postings.compact")(
+      pass("dfs") {
+        live.groupBy("term").agg(count(lit(1)).as("df"))
+          .write.mode(SaveMode.Overwrite).parquet(dfsSide)
+        spark.sql(s"DROP TABLE IF EXISTS ${dfsName(tag)}")
+        StoreFiles.swap(s"$base/dfs", dfsSide)
+        AnnIndex.registerExternal(spark, dfsName(tag), s"$base/dfs")
+      },
+      pass("stats")(docStats(live)))
     val nStatLive = liveStats.getLong(0)
     val sumDlLive = liveStats.getDouble(1).toLong
     if (folding) {
       // the tombstone FOLD physically removed documents. Unlike the
       // ANN folds there is no stored source text to re-fingerprint
       // from, so the (doc_id, text) checksum CANNOT be re-derived:
-      // n_docs is recounted from the surviving postings and the
+      // n_docs is the surviving postings' document count and the
       // checksum is DROPPED — upsert/open/delete keep working off
       // n_docs, while the next ensurePostings over any source finds no
       // matching checksum and rebuilds (re-seeding it). Documented
       // cost: one rebuild-sized ensure after a fold, never a silently
       // wrong reuse. Replay-skip windows survive; tomb_rows resets.
-      val nLive = spark.table(tableName(tag))
-        .select("doc_id").distinct().count()
       AnnIndex.writeMetaFull(base,
         (meta - "n_docs" - "checksum" - "tomb_rows" - "sum_dl"
           - "n_docs_stat" - "stats_tomb_rows").toSeq ++
-          Seq("n_docs" -> nLive, "sum_dl" -> sumDlLive,
+          Seq("n_docs" -> nStatLive, "sum_dl" -> sumDlLive,
             "n_docs_stat" -> nStatLive),
         AnnIndex.readMetaStrs(base).toSeq)
     } else

@@ -364,6 +364,13 @@ class KeywordIndexSpec extends AnyFunSuite {
     assert(folded.join(victims, Seq("doc_id"), "left_semi").count() === 0)
     assert(hits(KeywordSearch.bm25TopKFromPostings(queries, folded,
       k = 5)) === expected)
+    // the fold counts the surviving documents once: meta n_docs is the
+    // stats' document count, and both are the live distinct doc ids
+    val foldedMeta = AnnIndex.readMeta(
+      s"/tmp/graft_kw_${IndexStore.pathTag(src)}")
+    val liveDocs = folded.select("doc_id").distinct().count()
+    assert(foldedMeta("n_docs") === foldedMeta("n_docs_stat"))
+    assert(foldedMeta("n_docs") === liveDocs)
     // post-fold re-add via plain upsert restores the full corpus
     val back = KeywordIndex.upsertPostings(spark, src,
       docs.join(victims, Seq("doc_id"), "left_semi"))

@@ -17,12 +17,16 @@ side's median and quartiles, how many pairs the change won and lost
   is worse than the parent's by more than the metric's relative bound;
 - "unresolved": anything else.
 
-Every run lasts BENCHMARK.json's `run_seconds`. The parent's committed
-files are exported with `git archive` into a temporary directory (the
-same files the benchmark compares, with no checkout registered in this
-repository) that is removed afterwards. Both sides build their own
-`.bench_build/` on the first run. `--out FILE` also writes every run and
-every verdict as JSON.
+Every run lasts BENCHMARK.json's `run_seconds`. Both sides run from
+sibling temporary directories that are removed afterwards, so that both
+build, write and read on the same filesystem: the parent's committed
+files are exported with `git archive` (the same files the benchmark
+compares, with no checkout registered in this repository), and the
+change side is a copy of this tree's files as they are now: the tracked
+and the untracked-but-not-ignored ones, uncommitted edits included,
+`.bench_build/` left out. Both sides build their own `.bench_build/` on
+the first run. `--out FILE` also writes every run and every verdict as
+JSON.
 
 `--layers SEED` adds, after a workload's pairs, one `--trace 1` run per side
 at SEED and prints every per-layer metric BENCHMARK.json declares side by
@@ -120,6 +124,24 @@ def export_ref(ref, dest):
         raise RuntimeError(f"could not export {ref} into {dest}")
 
 
+def export_worktree(dest, root=ROOT):
+    """Copy the files of the tree at `root` as they are now into `dest`:
+    tracked (with uncommitted edits) and untracked-but-not-ignored ones,
+    never `.bench_build/`; a tracked file deleted from the tree is left
+    out.
+    """
+    out = subprocess.run(["git", "ls-files", "-z", "--cached", "--others",
+                          "--exclude-standard"], cwd=root,
+                         capture_output=True, check=True).stdout
+    for rel in sorted(set(out.decode().split("\0")) - {""}):
+        src = os.path.join(root, rel)
+        if rel.split("/")[0] == ".bench_build" or not os.path.isfile(src):
+            continue
+        target = os.path.join(dest, rel)
+        os.makedirs(os.path.dirname(target), exist_ok=True)
+        shutil.copy2(src, target)
+
+
 def fmt(x):
     return f"{x:.4g}"
 
@@ -184,16 +206,20 @@ def main(argv=None):
     seeds = parse_seeds(a.seeds)
     bench = load_benchmark(ROOT)
     metrics, seconds = bench["end_to_end"], bench["run_seconds"]
-    parent_dir = tempfile.mkdtemp(prefix="perfpairs-parent-")
+    sides = tempfile.mkdtemp(prefix="perfpairs-")
+    parent_dir = os.path.join(sides, "parent")
+    change_dir = os.path.join(sides, "change")
     result = {"parent": a.parent, "seconds": seconds, "seeds": seeds,
               "workloads": {}}
     try:
+        os.mkdir(parent_dir)
         export_ref(a.parent, parent_dir)
+        export_worktree(change_dir)
         for w in a.workload:
             runs = []
             result["workloads"][w] = {"runs": runs}
             for i, seed in enumerate(seeds):
-                order = [("parent", parent_dir), ("change", ROOT)]
+                order = [("parent", parent_dir), ("change", change_dir)]
                 if i % 2:
                     order.reverse()
                 pair = {"seed": seed, "first": order[0][0]}
@@ -207,13 +233,13 @@ def main(argv=None):
             if a.layers is not None:
                 traced = {side: run_once(cwd, w, a.layers, seconds, trace=1)
                           for side, cwd in (("parent", parent_dir),
-                                            ("change", ROOT))}
+                                            ("change", change_dir))}
                 result["workloads"][w]["layers"] = traced
                 print("\n".join(layer_table(w, a.layers, traced["parent"],
                                              traced["change"],
                                              bench["per_layer"])))
     finally:
-        shutil.rmtree(parent_dir, ignore_errors=True)
+        shutil.rmtree(sides, ignore_errors=True)
         if a.out:
             with open(a.out, "w") as fh:
                 json.dump(result, fh, indent=1)

@@ -4,10 +4,12 @@
 """
 
 import os
+import subprocess
 import tempfile
 import unittest
 
-from perfpairs import export_ref, layer_table, parse_seeds, quartiles, verdict
+from perfpairs import (export_ref, export_worktree, layer_table, parse_seeds,
+                       quartiles, verdict)
 
 
 class VerdictTest(unittest.TestCase):
@@ -117,6 +119,51 @@ class ExportTest(unittest.TestCase):
         with tempfile.TemporaryDirectory() as d:
             with self.assertRaises(RuntimeError):
                 export_ref("no-such-ref-anywhere", d)
+
+
+class WorktreeExportTest(unittest.TestCase):
+    def git(self, root, *args):
+        subprocess.run(["git", "-c", "user.name=t", "-c", "user.email=t@t",
+                        *args], cwd=root, check=True, capture_output=True)
+
+    def write(self, root, rel, text):
+        path = os.path.join(root, rel)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "w") as fh:
+            fh.write(text)
+
+    def read(self, root, rel):
+        with open(os.path.join(root, rel)) as fh:
+            return fh.read()
+
+    def test_export_copies_the_tree_as_it_is_now(self):
+        with tempfile.TemporaryDirectory() as repo, \
+                tempfile.TemporaryDirectory() as dest:
+            self.git(repo, "init", "-q")
+            self.write(repo, ".gitignore", ".bench_build/\nout.log\n")
+            self.write(repo, "src/A.scala", "committed")
+            self.write(repo, "gone.txt", "committed")
+            self.git(repo, "add", "-A")
+            self.git(repo, "commit", "-q", "-m", "base")
+            self.write(repo, "src/A.scala", "edited")       # uncommitted edit
+            self.write(repo, "src/New.scala", "new")        # not yet added
+            os.remove(os.path.join(repo, "gone.txt"))       # deleted, tracked
+            self.write(repo, ".bench_build/classes/X", "b")  # build output
+            self.write(repo, "out.log", "ignored")
+            export_worktree(dest, root=repo)
+            self.assertEqual(self.read(dest, "src/A.scala"), "edited")
+            self.assertEqual(self.read(dest, "src/New.scala"), "new")
+            self.assertTrue(os.path.isfile(os.path.join(dest, ".gitignore")))
+            for absent in ("gone.txt", ".bench_build", "out.log", ".git"):
+                self.assertFalse(os.path.exists(os.path.join(dest, absent)),
+                                 absent)
+
+    def test_export_of_this_tree_can_run_the_benchmark(self):
+        with tempfile.TemporaryDirectory() as d:
+            export_worktree(d)
+            self.assertTrue(os.path.isfile(os.path.join(d, "BENCHMARK.json")))
+            self.assertTrue(os.path.isfile(os.path.join(d, "perfbench", "run.py")))
+            self.assertFalse(os.path.exists(os.path.join(d, ".bench_build")))
 
 
 if __name__ == "__main__":
