@@ -2106,8 +2106,8 @@ object AnnIndex {
 
   /** Incremental add into an existing persisted IVF index: new vectors
     * are assigned to the STORED centroids and appended encoded with the
-    * STORED codec model into the partitioned lists (plus, at once, float
-    * rows into `vecs`) — O(new) per batch. Inherits BOTH parents' contracts:
+    * STORED codec model into the partitioned lists (plus float rows into
+    * `vecs`) — O(new) per batch. Inherits BOTH parents' contracts:
     * [[upsertIvf]]'s drift gate ([[driftGate]] — the centroids and any
     * codec model are distribution-bound) and [[upsertFlat]]'s tombstone
     * refusal and batchId replay-skip; the meta checksum xor-composes.
@@ -2128,11 +2128,9 @@ object AnnIndex {
       newVecs, batchId, known, Nil) { (meta, n) =>
       val nBase = driftGate(spark, l.verb, meta, n)
       val rows = newVecs.select("vec_id", "embedding")
-      Passes.run(spark, s"${l.stem}.upsert")(
-        pass(l.sub)(writeLists(c.assign(rows,
-          ParquetIO.read(spark, l.centroids), l.base), l.scan)) +:
-          l.vecs.toSeq.map(v => pass("vecs")(writeBucketed(rows, v, "vec_id",
-            l.buckets(meta)))): _*)
+      writeLists(c.assign(rows, ParquetIO.read(spark, l.centroids), l.base),
+        l.scan)
+      l.vecs.foreach(writeBucketed(rows, _, "vec_id", l.buckets(meta)))
       Seq("n_base" -> nBase)
     }
     ivfCodesHandle(spark, l)

@@ -140,8 +140,9 @@ object KeywordIndex {
     // cardinality in meta n_docs: a token-less document produces no
     // postings rows, and serving the inflated count would silently
     // shift every idf/avgdl off the derived path's values
-    val Seq(statsRow: Row, _) = Passes.run(spark, "postings.seed")(
-      pass("stats")(docStats(stored)),
+    var statsRow: Row = null
+    Passes.run(spark, "postings.seed")(
+      pass("stats") { statsRow = docStats(stored) },
       pass("dfs") {
         spark.sql(s"DROP TABLE IF EXISTS ${dfsName(tag)}")
         StoreFiles.rm(s"$base/dfs")
@@ -317,6 +318,21 @@ object KeywordIndex {
         s"upsertPostings: $clash incoming doc id(s) are tombstoned — " +
           "run compactPostings to fold deletions before re-inserting")
     }
+    // one deterministic postings frame feeds the append AND the stats
+    // deltas (materialized so the passes agree byte-for-byte), taken
+    // while the batch is fingerprinted
+    var fp: (Long, Long) = null
+    var newPost: DataFrame = null
+    Passes.run(spark, "postings.upsert")(
+      pass("fingerprint") {
+        fp = AnnIndex.fingerprint(
+          newDocs.select(newDocs(idCol), newDocs(textCol)))
+      },
+      pass("checkpoint") {
+        newPost = KeywordSearch.bm25Postings(newDocs, idCol, textCol)
+          .localCheckpoint(true)
+      })
+    val (nNew, fpNew) = fp
     // incremental stats (the round-12 verdict's per-call-scan fix): df
     // DELTAS append to the side table (the read side sums per term) and
     // Σ dl bumps in the meta — O(batch vocabulary) per upsert, and the
@@ -338,29 +354,18 @@ object KeywordIndex {
         (meta - "sum_dl" - "n_docs_stat").toSeq,
         AnnIndex.readMetaStrs(base).toSeq)
     }
-    // one deterministic postings frame feeds the append AND the stats
-    // deltas (materialized so the passes agree byte-for-byte), taken
-    // while the batch is fingerprinted
-    val Seq((nNew: Long, fpNew: Long), newPost: DataFrame @unchecked) =
-      Passes.run(spark, "postings.upsert")(
-        pass("fingerprint")(AnnIndex.fingerprint(
-          newDocs.select(newDocs(idCol), newDocs(textCol)))),
-        pass("checkpoint")(KeywordSearch.bm25Postings(newDocs, idCol, textCol)
-          .localCheckpoint(true)))
-    val append = pass("append")(newPost.write.mode(SaveMode.Append)
-      .format("parquet").saveAsTable(tableName(tag)))
-    val (sumDlNew, nStatNew) =
-      if (statsKept) {
-        val Seq(_, _, r: Row) = Passes.run(spark, "postings.upsert")(append,
+    var batchStats: Row = null
+    Passes.run(spark, "postings.upsert")(
+      pass("append")(newPost.write.mode(SaveMode.Append)
+        .format("parquet").saveAsTable(tableName(tag))) +:
+        (if (statsKept) Seq(
           pass("dfs")(newPost.groupBy("term").agg(count(lit(1)).as("df"))
             .write.mode(SaveMode.Append).format("parquet")
             .saveAsTable(dfsName(tag))),
-          pass("stats")(docStats(newPost)))
-        (r.getDouble(1).toLong, r.getLong(0))
-      } else {
-        Passes.run(spark, "postings.upsert")(append)
-        (0L, 0L)
-      }
+          pass("stats") { batchStats = docStats(newPost) }) else Nil): _*)
+    val (sumDlNew, nStatNew) =
+      if (statsKept) (batchStats.getDouble(1).toLong, batchStats.getLong(0))
+      else (0L, 0L)
     // any stored snapshot_id is deliberately dropped — the layout is now
     // ahead of the snapshot that id named (the upsertLsh rule)
     AnnIndex.writeMetaFull(base,
@@ -547,7 +552,8 @@ object KeywordIndex {
     // numbers, just the slower plan) until the next compact/ensure.
     val live = spark.table(tableName(tag))
     val dfsSide = s"$base/dfs_compact_${ProcessHandle.current.pid}"
-    val Seq(_, liveStats: Row) = Passes.run(spark, "postings.compact")(
+    var liveStats: Row = null
+    Passes.run(spark, "postings.compact")(
       pass("dfs") {
         live.groupBy("term").agg(count(lit(1)).as("df"))
           .write.mode(SaveMode.Overwrite).parquet(dfsSide)
@@ -555,7 +561,7 @@ object KeywordIndex {
         StoreFiles.swap(s"$base/dfs", dfsSide)
         AnnIndex.registerExternal(spark, dfsName(tag), s"$base/dfs")
       },
-      pass("stats")(docStats(live)))
+      pass("stats") { liveStats = docStats(live) })
     val nStatLive = liveStats.getLong(0)
     val sumDlLive = liveStats.getDouble(1).toLong
     if (folding) {

@@ -4,7 +4,7 @@ import java.util.concurrent.{ExecutionException, Executors}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{SparkSession, classic}
 import org.apache.spark.sql.execution.SQLExecution
-import scala.util.{Failure, Success, Try}
+import scala.util.Try
 
 /** The independent passes of one store verb, run concurrently: passes
   * that read and write disjoint tables (a layout's scan table and its
@@ -31,20 +31,23 @@ private[graft] object Passes {
     }
   }
 
-  /** A pass named `name` (its job description's last part). */
-  def pass[T](name: String)(body: => T): (String, () => T) =
+  /** A pass named `name` (its job description's last part). A pass
+    * that produces a value assigns it to a local of its caller, read
+    * once [[run]] has returned.
+    */
+  def pass(name: String)(body: => Unit): (String, () => Unit) =
     name -> (() => body)
 
   /** Run `passes` concurrently, each on a pooled thread with the
     * caller's active session, SQL conf and local properties, its Spark
     * jobs described `<verb>.<name>` (the caller's own description is
-    * untouched). Returns the results in pass order once every pass has
-    * finished. When any failed, every pass is still waited for, then
-    * the first failure in pass order is thrown with the others
-    * attached as suppressed.
+    * untouched). Returns once every pass has finished, so every pass's
+    * effects are visible to the caller. When any failed, every pass is
+    * still waited for, then the first failure in pass order is thrown
+    * with the others attached as suppressed.
     */
-  def run[T](spark: SparkSession, verb: String)(
-      passes: (String, () => T)*): Seq[T] = {
+  def run(spark: SparkSession, verb: String)(
+      passes: (String, () => Unit)*): Unit = {
     val session = spark.asInstanceOf[classic.SparkSession]
     val running = passes.map { case (name, body) =>
       SQLExecution.withThreadLocalCaptured(session, pool) {
@@ -52,14 +55,15 @@ private[graft] object Passes {
         body()
       }
     }
-    val outcomes = running.map(f => Try(f.get()).recoverWith {
-      case e: ExecutionException if e.getCause != null => Failure(e.getCause)
+    val failures = running.flatMap(f => Try(f.get()).failed.toOption.map {
+      case e: ExecutionException if e.getCause != null => e.getCause
+      case e => e
     })
-    outcomes.collect { case Failure(e) => e } match {
+    failures match {
       case first +: rest =>
         rest.filterNot(_ eq first).foreach(first.addSuppressed)
         throw first
-      case _ => outcomes.collect { case Success(v) => v }
+      case _ =>
     }
   }
 }
